@@ -52,15 +52,6 @@ object Hashing {
       transform(sequence(lit(1), size(w) - 2), i => concat_ws(" ", slice(w, i, lit(3)))))
       .otherwise(array().cast("array<string>"))
 
-  /** MinHash signature of `k` string-valued min-hashes: position i is the
-    * lexicographic min of md5(i + "|" + shingle) over all shingles. String
-    * minima avoid any hex→int conversion and are identical across engines.
-    */
-  def minhashSig(shingles: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)), i =>
-      array_min(transform(shingles, s =>
-        md5(concat(i.cast("string"), lit("|"), s)))))
-
   /** One md5 per shingle (materialize this BEFORE deriving signatures). */
   def minhashBase(shingles: Column): Column =
     transform(shingles, s => md5(concat(lit("|"), s)))
@@ -135,11 +126,6 @@ object Hashing {
   def duckShingles(w: String): String =
     s"CASE WHEN len($w) >= 3 THEN list_transform(generate_series(1, len($w) - 2), " +
       s"i -> concat_ws(' ', $w[i], $w[i+1], $w[i+2])) ELSE [] END"
-
-  /** DuckDB: k-position string MinHash signature from shingle list `sh`. */
-  def duckMinhashSig(sh: String, k: Int): String =
-    s"list_transform(generate_series(0, ${k - 1}), i -> " +
-      s"list_min(list_transform($sh, s -> md5(CAST(i AS VARCHAR) || '|' || s))))"
 
   /** DuckDB: base md5 per shingle. */
   def duckMinhashBase(sh: String): String =

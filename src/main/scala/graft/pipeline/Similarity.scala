@@ -60,10 +60,6 @@ object Similarity {
         lit(1L << p)).otherwise(lit(0L))
     }.reduce(_ + _)
 
-  /** DuckDB spelling of the same plane sign for 1-based dimension `d`. */
-  def duckSign(p: String, d: String): String =
-    s"((1103515245 * ($d - 1) + 12345 * $p) >> 16) & 1"
-
   /** Top-k same-or-near-bucket neighbors per query vector by exact
     * quantized dot product. `probeRadius` 0 = single-bucket (r1 behavior),
     * r = probe every bucket within Hamming distance r (flip up to r sign

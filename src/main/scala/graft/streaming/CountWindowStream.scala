@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming._
 
 /** COUNT windows over a keyed stream — Flink's
   * `keyedStream.countWindow(n)` (the trigger-on-size window of the
@@ -9,19 +8,13 @@ import org.apache.spark.sql.streaming._
   * event closes a window and emits its aggregate; the tail stays pending
   * until filled (Flink's count trigger never fires a partial window).
   *
-  * Built on `transformWithState` with ONE tiny ValueState per key
-  * (window ordinal, fill count, first event) — O(1) state regardless of
-  * stream length, no timers, no buffering of window members (the aggregate
-  * here — first/last/count — folds incrementally; a holistic aggregate
-  * would buffer at most n-1 rows in ListState).
-  *
-  * Ordering contract: ACROSS micro-batches, arrival order; WITHIN a
-  * micro-batch, event_id order — Spark's shuffle does not preserve
-  * per-key FIFO inside a batch (unlike Flink's per-channel FIFO), so the
-  * processor imposes the deterministic event_id order on each batch's
-  * slice. When upstream event_ids are arrival-ordered (the normal ingest
-  * case), the result equals the batch `q_window_count` restricted to
-  * complete windows — pinned in `CountWindowStreamSpec`.
+  * A [[KeyedFold]] whose state per key is (window ordinal, fill count,
+  * first event) — no buffering of window members (the aggregate here —
+  * first/last/count — folds incrementally; a holistic aggregate would
+  * buffer at most n-1 rows). Ordering contract is KeyedFold's, sorted by
+  * event_id within a batch: when upstream event_ids are arrival-ordered
+  * (the normal ingest case), the result equals the batch `q_window_count`
+  * restricted to complete windows — pinned in `CountWindowStreamSpec`.
   */
 object CountWindowStream {
 
@@ -33,35 +26,19 @@ object CountWindowStream {
   def windows(ds: Dataset[CwEvent], n: Int): Dataset[CwWindow] = {
     val s = ds.sparkSession
     import s.implicits._
-    ds.groupByKey(_.user_id)
-      .transformWithState(new CountWindowProcessor(n),
-        TimeMode.None(), OutputMode.Append())
-  }
-}
-
-final class CountWindowProcessor(n: Int)
-  extends StatefulProcessor[Long, CountWindowStream.CwEvent, CountWindowStream.CwWindow] {
-  import CountWindowStream._
-
-  @transient private var st: ValueState[CwState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[CwState]("cw", Encoders.product[CwState],
-      TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[CwEvent],
-      timerValues: TimerValues): Iterator[CwWindow] = {
-    var s = if (st.exists()) st.get() else CwState(0L, 0L, -1L)
-    val out = Vector.newBuilder[CwWindow]
-    rows.toVector.sortBy(_.event_id).foreach { e =>
-      val first = if (s.cnt == 0L) e.event_id else s.first
-      val cnt = s.cnt + 1L
-      if (cnt == n) {
-        out += CwWindow(key, s.win, n.toLong, first, e.event_id)
-        s = CwState(s.win + 1L, 0L, -1L)
-      } else s = CwState(s.win, cnt, first)
+    KeyedFold.run(ds)(_.user_id, "cw", Encoders.product[CwState],
+        CwState(0L, 0L, -1L), Some(Ordering.by(_.event_id))) { (key, s0, rows) =>
+      var st = s0
+      val out = Vector.newBuilder[CwWindow]
+      rows.foreach { e =>
+        val first = if (st.cnt == 0L) e.event_id else st.first
+        val cnt = st.cnt + 1L
+        if (cnt == n) {
+          out += CwWindow(key, st.win, n.toLong, first, e.event_id)
+          st = CwState(st.win + 1L, 0L, -1L)
+        } else st = CwState(st.win, cnt, first)
+      }
+      (st, out.result().iterator)
     }
-    st.update(s)
-    out.result().iterator
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming._
 
 import graft.relational.TimeSeries
 
@@ -19,14 +18,10 @@ import graft.relational.TimeSeries
   *
   * Semantics ≡ batch (pinned in `CusumStreamSpec`): on event-time-ordered
   * ingest the final emission per user is bit-identical to the batch fold /
-  * closed form. Ordering contract is [[TransitionStream]]'s: ACROSS
-  * micro-batches arrival order, WITHIN a batch the deterministic
-  * (ts, event_id) sort.
-  *
-  * State contract at scale: one small ValueState per user — a ≤TrainN
+  * closed form. Ordering and state contract are [[KeyedFold]]'s, sorted
+  * by (ts, event_id) within a batch; the state per user is a ≤TrainN
   * calibration buffer that collapses to the 5-long scalar state
-  * (μ, S, s_max, breach, i) the moment calibration completes; O(1) in
-  * stream length thereafter, no timers. */
+  * (μ, S, s_max, breach, i) the moment calibration completes. */
 object CusumStream {
 
   case class PEvent(user_id: Long, ts_ms: Long, event_id: Long, x: Long)
@@ -42,36 +37,18 @@ object CusumStream {
   def monitor(events: DataFrame): Dataset[CusumRow] = {
     val s = events.sparkSession
     import s.implicits._
-    events
+    val ev = events
       .filter($"event_type" === "purchase")
       .select($"user_id",
         (unix_timestamp(date_trunc("second", $"ts")) * 1000L).as("ts_ms"),
         $"event_id",
         floor($"value" * 100).cast("long").as("x"))
       .as[PEvent]
-      .groupByKey(_.user_id)
-      .transformWithState(new CusumProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
-}
-
-final class CusumProcessor
-  extends StatefulProcessor[Long, CusumStream.PEvent, CusumStream.CusumRow] {
-  import CusumStream._
-
-  @transient private var state: ValueState[CuState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    state = getHandle.getValueState[CuState]("cusum",
-      Encoders.product[CuState], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[PEvent],
-      timerValues: TimerValues): Iterator[CusumRow] = {
     val trainN = TimeSeries.CusumTrainN
-    var st = if (state.exists()) state.get()
-      else CuState(Vector.empty, 0L, 0L, 0L, 0L, 0L, 0L)
-    rows.toVector.sortBy(e => (e.ts_ms, e.event_id)).foreach { e =>
-      st =
+    KeyedFold.run(ev)(_.user_id, "cusum", Encoders.product[CuState],
+        CuState(Vector.empty, 0L, 0L, 0L, 0L, 0L, 0L),
+        Some(Ordering.by(e => (e.ts_ms, e.event_id)))) { (key, s0, rows) =>
+      val st = rows.foldLeft(s0) { (st, e) =>
         if (st.n < trainN) {
           val buf = st.buf :+ e.x
           if (buf.size == trainN)
@@ -87,10 +64,10 @@ final class CusumProcessor
               else if (s2 > TimeSeries.CusumHMult * st.mu) i2 else 0L,
             i = i2)
         }
+      }
+      (st,
+        if (st.n > trainN) Iterator.single(CusumRow(key, st.n, st.mu, st.smax, st.b))
+        else Iterator.empty)
     }
-    state.update(st)
-    if (st.n > trainN)
-      Iterator.single(CusumRow(key, st.n, st.mu, st.smax, st.b))
-    else Iterator.empty
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming._
 
 /** Streaming DATA-QUALITY monitor — the live twin of the batch
   * [[graft.pipeline.DataQuality]] verdict suite: per source, RUNNING
@@ -25,14 +24,14 @@ import org.apache.spark.sql.streaming._
   *     cannot be bounded); it belongs to the batch audit or a
   *     Bloom-gated approximation, not a bounded-state monitor.
   *
-  * State per source: SEVEN longs — constant in stream length, the
-  * [[TopKStream]]/[[QuantileStream]] bounded-state discipline. Counters
-  * add exactly, so the final emission ≡ the batch rates under ANY
-  * micro-batch slicing, and a checkpoint restart resumes the counts
-  * bit-for-bit (`DqStreamSpec` pins all three, including parity with
-  * `DataQuality.verdictOf` on the real dirty-orders registry). `n` is
-  * monotone per source, so an unordered emission log folds by max n
-  * (the [[TopKStream]] reader convention).
+  * A [[KeyedFold]] with no within-batch order; state per source: SIX
+  * longs — constant in stream length, the [[TopKStream]]/[[QuantileStream]]
+  * bounded-state discipline. Counters add exactly, so the final emission
+  * ≡ the batch rates under ANY micro-batch slicing, and a checkpoint
+  * restart resumes the counts bit-for-bit (`DqStreamSpec` pins all three,
+  * including parity with `DataQuality.verdictOf` on the real dirty-orders
+  * registry). `n` is monotone per source, so an unordered emission log
+  * folds by max n (the [[TopKStream]] reader convention).
   */
 object DqStream {
 
@@ -53,36 +52,20 @@ object DqStream {
   def monitor(in: Dataset[DqIn]): Dataset[DqOut] = {
     val s = in.sparkSession
     import s.implicits._
-    in.groupByKey(_.src)
-      .transformWithState(new DqProcessor, TimeMode.None(), OutputMode.Append())
-  }
-}
-
-/** Per-source bounded counter state machine. */
-final class DqProcessor
-  extends StatefulProcessor[String, DqStream.DqIn, DqStream.DqOut] {
-  import DqStream._
-
-  @transient private var st: ValueState[DqCounts] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[DqCounts]("counts",
-      Encoders.product[DqCounts], TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[DqIn],
-      timerValues: TimerValues): Iterator[DqOut] = {
-    val c0 = if (st.exists()) st.get() else DqCounts(0L, 0L, 0L, 0L, 0L, 0L)
-    var (n, s1, s2, s3, s4, s5) = (c0.n, c0.st, c0.pri, c0.dt, c0.pos, c0.ri)
-    rows.foreach { r =>
-      n += 1
-      if (r.statusOk) s1 += 1
-      if (r.priOk) s2 += 1
-      if (r.dateOk) s3 += 1
-      if (r.priceOk) s4 += 1
-      if (r.riOk) s5 += 1
+    KeyedFold.run(in)(_.src, "counts", Encoders.product[DqCounts],
+        DqCounts(0L, 0L, 0L, 0L, 0L, 0L)) { (key, c0, rows) =>
+      var (n, s1, s2, s3, s4, s5) = (c0.n, c0.st, c0.pri, c0.dt, c0.pos, c0.ri)
+      rows.foreach { r =>
+        n += 1
+        if (r.statusOk) s1 += 1
+        if (r.priOk) s2 += 1
+        if (r.dateOk) s3 += 1
+        if (r.priceOk) s4 += 1
+        if (r.riOk) s5 += 1
+      }
+      (DqCounts(n, s1, s2, s3, s4, s5),
+        Iterator.single(DqOut(key, n, s1 * 10000L / n, s2 * 10000L / n,
+          s3 * 10000L / n, s4 * 10000L / n, s5 * 10000L / n)))
     }
-    st.update(DqCounts(n, s1, s2, s3, s4, s5))
-    Iterator.single(DqOut(key, n, s1 * 10000L / n, s2 * 10000L / n,
-      s3 * 10000L / n, s4 * 10000L / n, s5 * 10000L / n))
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming._
 
 import graft.relational.TimeSeries
 
@@ -18,14 +17,8 @@ import graft.relational.TimeSeries
   * Semantics ≡ batch (pinned in `EwmaStreamSpec`): on event-time-ordered
   * ingest the final emission per user is bit-identical to the batch
   * fold — floor division at every STEP, micro-cent scaling, purchase
-  * rows only. Ordering contract is [[TransitionStream]]'s: ACROSS
-  * micro-batches arrival order, WITHIN a batch the deterministic
-  * (ts, event_id) sort.
-  *
-  * State contract at scale: ONE small ValueState per user — O(1) in
-  * stream length, no timers, no buffering. Parallelism is the user-key
-  * hash partitioning (Flink's keyed scope, reference
-  * FlinkProcessFunctionExample.scala:90-111's per-key running state).
+  * rows only. Ordering and state contract are [[KeyedFold]]'s, sorted by
+  * (ts, event_id) within a batch; the state is one [[Level]] per user.
   */
 object EwmaStream {
 
@@ -39,34 +32,16 @@ object EwmaStream {
   def levels(events: DataFrame): Dataset[EwmaRow] = {
     val s = events.sparkSession
     import s.implicits._
-    events
+    val ev = events
       .filter($"event_type" === "purchase")
       .select($"user_id",
         (unix_timestamp(date_trunc("second", $"ts")) * 1000L).as("ts_ms"),
         $"event_id",
         (floor($"value" * 100).cast("long") * TimeSeries.EwmaScale).as("x"))
       .as[PEvent]
-      .groupByKey(_.user_id)
-      .transformWithState(new EwmaProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
-}
-
-final class EwmaProcessor
-  extends StatefulProcessor[Long, EwmaStream.PEvent, EwmaStream.EwmaRow] {
-  import EwmaStream._
-
-  @transient private var level: ValueState[Level] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    level = getHandle.getValueState[Level]("level",
-      Encoders.product[Level], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[PEvent],
-      timerValues: TimerValues): Iterator[EwmaRow] = {
-    var st = if (level.exists()) level.get() else null
-    rows.toVector.sortBy(e => (e.ts_ms, e.event_id)).foreach { e =>
-      st =
+    KeyedFold.run(ev)(_.user_id, "level", Encoders.product[Level], null,
+        Some(Ordering.by(e => (e.ts_ms, e.event_id)))) { (key, s0, rows) =>
+      val st = rows.foldLeft(s0) { (st, e) =>
         if (st == null) Level(e.x, 1L, e.x)
         else Level(
           // plain Long division == Spark's `div` (IntegralDivide truncates
@@ -74,12 +49,9 @@ final class EwmaProcessor
           // oracle's flooring `//`
           (e.x + (TimeSeries.EwmaDen - 1L) * st.s) / TimeSeries.EwmaDen,
           st.n + 1L, e.x)
-    }
-    if (st == null) Iterator.empty
-    else {
-      level.update(st)
-      Iterator.single(
-        EwmaRow(key, st.n, st.s, st.lastX / TimeSeries.EwmaScale))
+      }
+      (st, Iterator.single(
+        EwmaRow(key, st.n, st.s, st.lastX / TimeSeries.EwmaScale)))
     }
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming._
 
 /** Streaming sequence packing — the continuous-ingest counterpart of
   * [[graft.pipeline.Curation.pack]]: chunks arrive on a stream and are laid
@@ -10,9 +9,10 @@ import org.apache.spark.sql.streaming._
   * has no global order, so streaming packs PER KEY, each key's offset
   * carried in a ValueState across micro-batches).
   *
-  * Rows within one micro-batch are packed in (doc_id, chunk_id) order so a
-  * replay of the same batches reproduces the same pack ids; across batches
-  * order is arrival order, which is what continuous packing means.
+  * A [[KeyedFold]] whose state is one long; its ordering contract, with
+  * rows sorted by (doc_id, chunk_id) within a micro-batch, makes a replay
+  * of the same batches reproduce the same pack ids, and arrival order
+  * across batches is what continuous packing means.
   */
 object PackStream {
 
@@ -22,34 +22,15 @@ object PackStream {
   def pack(ds: Dataset[Chunk], budget: Int): Dataset[Packed] = {
     implicit val pe = Encoders.product[Packed]
     implicit val se = Encoders.STRING
-    ds.groupByKey(_.key)
-      .transformWithState(
-        new PackProcessor(budget),
-        TimeMode.None(),
-        OutputMode.Append())
-  }
-}
-
-/** Per-key running token offset; the only state is one long. */
-final class PackProcessor(budget: Int)
-  extends StatefulProcessor[String, PackStream.Chunk, PackStream.Packed] {
-
-  @transient private var offset: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    offset = getHandle.getValueState[Long]("off", Encoders.scalaLong, TTLConfig.NONE)
-
-  override def handleInputRows(
-      key: String,
-      rows: Iterator[PackStream.Chunk],
-      timerValues: TimerValues): Iterator[PackStream.Packed] = {
-    var off = if (offset.exists()) offset.get() else 0L
-    val out = rows.toArray.sortBy(c => (c.doc_id, c.chunk_id)).map { c =>
-      val pid = off / budget
-      off += c.n_tok
-      PackStream.Packed(key, c.doc_id, c.chunk_id, pid, c.n_tok)
+    KeyedFold.run(ds)(_.key, "off", Encoders.scalaLong, 0L,
+        Some(Ordering.by(c => (c.doc_id, c.chunk_id)))) { (key, off0, rows) =>
+      var off = off0
+      val out = rows.map { c =>
+        val pid = off / budget
+        off += c.n_tok
+        Packed(key, c.doc_id, c.chunk_id, pid, c.n_tok)
+      }.toVector
+      (off, out.iterator)
     }
-    offset.update(off)
-    out.iterator
   }
 }

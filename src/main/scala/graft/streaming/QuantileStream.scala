@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 
 /** Streaming per-key QUANTILE monitor over a bounded power-of-two
   * histogram — the live twin of the batch length-distribution queries
@@ -36,8 +35,13 @@ object QuantileStream {
   def quantiles(in: Dataset[QIn]): Dataset[QOut] = {
     val s = in.sparkSession
     import s.implicits._
-    in.groupByKey(_.key)
-      .transformWithState(new QuantileProcessor, TimeMode.None(), OutputMode.Append())
+    histFold(in) { (key, n, counts) =>
+      val top = counts.lastIndexWhere(_ > 0)
+      QOut(key, n,
+        rankBucketLo(counts, n, 1L, 2L),
+        rankBucketLo(counts, n, 9L, 10L),
+        if (top < 0) 0L else 1L << top)
+    }
   }
 
   /** The raw per-key SUMMARY emission — same state machine as
@@ -53,8 +57,26 @@ object QuantileStream {
   def histograms(in: Dataset[QIn]): Dataset[QHist] = {
     val s = in.sparkSession
     import s.implicits._
-    in.groupByKey(_.key)
-      .transformWithState(new QuantileHistProcessor, TimeMode.None(), OutputMode.Append())
+    histFold(in)((key, n, counts) => QHist(key, n, counts))
+  }
+
+  /** The one state machine behind [[quantiles]] and [[histograms]]: a
+    * [[KeyedFold]] with no within-batch order over the per-key
+    * histogram, emitting `answer(key, n, counts)` after each batch. Both
+    * forms use the same state name and layout, so they are
+    * interchangeable on one checkpoint. */
+  private def histFold[Out: Encoder](in: Dataset[QIn])(
+      answer: (String, Long, Vector[Long]) => Out): Dataset[Out] = {
+    val s = in.sparkSession
+    import s.implicits._
+    KeyedFold.run(in)(_.key, "hist", Encoders.product[QState],
+        QState(0L, Vector.fill(Buckets)(0L))) { (key, c0, rows) =>
+      var n = c0.n
+      val counts = c0.counts.toArray
+      rows.foreach { r => counts(bucketOf(r.v)) += 1; n += 1 }
+      val v = counts.toVector
+      (QState(n, v), Iterator.single(answer(key, n, v)))
+    }
   }
 
   /** The dashboard READ path (r8 verdict #7): fold an append-log of shard
@@ -120,56 +142,5 @@ object QuantileStream {
       b += 1
     }
     0L
-  }
-}
-
-/** [[QuantileProcessor]] emitting the histogram itself (the mergeable
-  * summary) instead of the answered quantile row. Same state name and
-  * layout, so the two emission forms are interchangeable on one
-  * checkpoint. */
-final class QuantileHistProcessor
-  extends StatefulProcessor[String, QuantileStream.QIn, QuantileStream.QHist] {
-  import QuantileStream._
-
-  @transient private var st: ValueState[QState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[QState]("hist",
-      Encoders.product[QState], TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[QIn],
-      timerValues: TimerValues): Iterator[QHist] = {
-    val c0 = if (st.exists()) st.get() else QState(0L, Vector.fill(Buckets)(0L))
-    var n = c0.n
-    val counts = c0.counts.toArray
-    rows.foreach { r => counts(bucketOf(r.v)) += 1; n += 1 }
-    st.update(QState(n, counts.toVector))
-    Iterator.single(QHist(key, n, counts.toVector))
-  }
-}
-
-/** Per-key bounded-histogram state machine. */
-final class QuantileProcessor
-  extends StatefulProcessor[String, QuantileStream.QIn, QuantileStream.QOut] {
-  import QuantileStream._
-
-  @transient private var st: ValueState[QState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[QState]("hist",
-      Encoders.product[QState], TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[QIn],
-      timerValues: TimerValues): Iterator[QOut] = {
-    val c0 = if (st.exists()) st.get() else QState(0L, Vector.fill(Buckets)(0L))
-    var n = c0.n
-    val counts = c0.counts.toArray
-    rows.foreach { r => counts(bucketOf(r.v)) += 1; n += 1 }
-    st.update(QState(n, counts.toVector))
-    val top = counts.lastIndexWhere(_ > 0)
-    Iterator.single(QOut(key, n,
-      rankBucketLo(counts, n, 1L, 2L),
-      rankBucketLo(counts, n, 9L, 10L),
-      if (top < 0) 0L else 1L << top))
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming._
 
 /** Streaming UNIFORM SAMPLE per key — a bottom-k sketch (Cohen & Kaplan,
   * "Summarizing data using bottom-k sketches", PODC 2007) as a keyed
@@ -19,8 +18,9 @@ import org.apache.spark.sql.streaming._
   * [0, M)), emitted alongside the sample — the live sample doubles as a
   * per-key cardinality monitor.
   *
-  * State per key: ≤ [[SampleStream.K]] (hash, id) pairs + one counter —
-  * constant in stream length, the bounded-state discipline of
+  * A [[KeyedFold]] with no within-batch order; state per key: ≤
+  * [[SampleStream.K]] (hash, id) pairs + one counter — constant in stream
+  * length, the bounded-state discipline of
   * [[TopKStream]]/[[QuantileStream]]/[[DqStream]]. Hashes are computed in
   * the PLAN and MUST be a uniform 64-bit hash reduced to [0, [[HashM]])
   * — `pmod(xxhash64(salt || id), HashM)` — so batch and stream pick
@@ -52,40 +52,24 @@ object SampleStream {
   def sample(in: Dataset[SIn]): Dataset[SOut] = {
     val s = in.sparkSession
     import s.implicits._
-    in.groupByKey(_.key)
-      .transformWithState(new SampleProcessor, TimeMode.None(), OutputMode.Append())
-  }
-}
-
-/** Per-key bottom-k state machine. */
-final class SampleProcessor
-  extends StatefulProcessor[String, SampleStream.SIn, SampleStream.SOut] {
-  import SampleStream._
-
-  @transient private var st: ValueState[SState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[SState]("bottomk",
-      Encoders.product[SState], TTLConfig.NONE)
-
-  override def handleInputRows(key: String, rows: Iterator[SIn],
-      timerValues: TimerValues): Iterator[SOut] = {
-    val c0 = if (st.exists()) st.get() else SState(0L, Vector.empty)
-    var n = c0.n
-    // merge the batch into the k smallest by (h, id); duplicates of one
-    // (h, id) collapse (idempotent under replayed rows)
-    val buf = scala.collection.mutable.TreeSet.from(
-      c0.picks.map(p => (p.h, p.id)))
-    rows.foreach { r =>
-      n += 1
-      buf.add((r.h, r.id))
-      if (buf.size > K) buf.remove(buf.last)
+    KeyedFold.run(in)(_.key, "bottomk", Encoders.product[SState],
+        SState(0L, Vector.empty)) { (key, c0, rows) =>
+      var n = c0.n
+      // merge the batch into the k smallest by (h, id); duplicates of one
+      // (h, id) collapse (idempotent under replayed rows)
+      val buf = scala.collection.mutable.TreeSet.from(
+        c0.picks.map(p => (p.h, p.id)))
+      rows.foreach { r =>
+        n += 1
+        buf.add((r.h, r.id))
+        if (buf.size > K) buf.remove(buf.last)
+      }
+      val picks = buf.toVector
+      val est =
+        if (picks.size < K) picks.size.toLong
+        else (K - 1).toLong * HashM / picks.last._1
+      (SState(n, picks.map { case (h, i) => SPick(h, i) }),
+        Iterator.single(SOut(key, n, est, picks.map(_._2))))
     }
-    val picks = buf.toVector
-    st.update(SState(n, picks.map { case (h, i) => SPick(h, i) }))
-    val est =
-      if (picks.size < K) picks.size.toLong
-      else (K - 1).toLong * HashM / picks.last._1
-    Iterator.single(SOut(key, n, est, picks.map(_._2)))
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming._
 
 /** Streaming HEAVY HITTERS — the SpaceSaving summary (Metwally, Agrawal &
   * El Abbadi, ICDT 2005) as a keyed stateful operator: the live twin of
@@ -20,8 +19,8 @@ import org.apache.spark.sql.streaming._
   *
   * State per shard: at most [[TopKStream.Slots]] (item, est, err) entries
   * — bounded and stream-length-independent, the whole point: a billion-
-  * token shard still holds m slots. Arrival order inside a micro-batch is
-  * pinned to the caller's `seq` so replays are deterministic; SpaceSaving
+  * token shard still holds m slots. A [[KeyedFold]] sorted by the caller's
+  * `seq` within a micro-batch, so replays are deterministic; SpaceSaving
   * itself is order-sensitive only BELOW the guarantee threshold, which is
   * why the spec asserts guarantees (not slot equality) across slicings.
   * Emission: after each batch, the current (est, err) of every item
@@ -48,9 +47,32 @@ object TopKStream {
   def topk(items: Dataset[TItem]): Dataset[TEst] = {
     val s = items.sparkSession
     import s.implicits._
-    items
-      .groupByKey(_.shard)
-      .transformWithState(new TopKProcessor, TimeMode.None(), OutputMode.Append())
+    KeyedFold.run(items)(_.shard, "ss", Encoders.product[SsState],
+        SsState(0L, Vector.empty), Some(Ordering.by(_.seq))) { (key, c0, rows) =>
+      var n = c0.n
+      var slots = c0.slots.toVector
+      val touched = scala.collection.mutable.LinkedHashSet.empty[String]
+      rows.foreach { r =>
+        n += 1
+        touched += r.item
+        val i = slots.indexWhere(_.item == r.item)
+        if (i >= 0) {
+          slots = slots.updated(i, slots(i).copy(est = slots(i).est + 1))
+        } else if (slots.size < Slots) {
+          slots = slots :+ SsSlot(r.item, 1L, 0L)
+        } else {
+          // evict the min-estimate slot (ties → lexicographically smallest
+          // item, so eviction is deterministic); the newcomer inherits the
+          // evicted estimate as its error bound — the SpaceSaving invariant
+          val mi = slots.indices.minBy(j => (slots(j).est, slots(j).item))
+          val m = slots(mi)
+          slots = slots.updated(mi, SsSlot(r.item, m.est + 1L, m.est))
+        }
+      }
+      val byItem = slots.map(sl => sl.item -> sl).toMap
+      (SsState(n, slots), touched.iterator.flatMap(it =>
+        byItem.get(it).map(sl => TEst(key, sl.item, sl.est, sl.err))))
+    }
   }
 
   /** The dashboard READ path (r8 verdict #7): fold an append-log of
@@ -83,46 +105,5 @@ object TopKStream {
       .select($"rnk", $"item", $"est", $"err",
         ($"est" - $"err").as("guaranteed_min"))
       .orderBy($"rnk")
-  }
-}
-
-/** Per-shard SpaceSaving state machine. */
-final class TopKProcessor
-  extends StatefulProcessor[Long, TopKStream.TItem, TopKStream.TEst] {
-  import TopKStream._
-
-  @transient private var st: ValueState[SsState] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    st = getHandle.getValueState[SsState]("ss",
-      Encoders.product[SsState], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[TItem],
-      timerValues: TimerValues): Iterator[TEst] = {
-    val c0 = if (st.exists()) st.get() else SsState(0L, Vector.empty)
-    var n = c0.n
-    var slots = c0.slots.toVector
-    val touched = scala.collection.mutable.LinkedHashSet.empty[String]
-    rows.toVector.sortBy(_.seq).foreach { r =>
-      n += 1
-      touched += r.item
-      val i = slots.indexWhere(_.item == r.item)
-      if (i >= 0) {
-        slots = slots.updated(i, slots(i).copy(est = slots(i).est + 1))
-      } else if (slots.size < Slots) {
-        slots = slots :+ SsSlot(r.item, 1L, 0L)
-      } else {
-        // evict the min-estimate slot (ties → lexicographically smallest
-        // item, so eviction is deterministic); the newcomer inherits the
-        // evicted estimate as its error bound — the SpaceSaving invariant
-        val mi = slots.indices.minBy(j => (slots(j).est, slots(j).item))
-        val m = slots(mi)
-        slots = slots.updated(mi, SsSlot(r.item, m.est + 1L, m.est))
-      }
-    }
-    st.update(SsState(n, slots))
-    val byItem = slots.map(sl => sl.item -> sl).toMap
-    touched.iterator.flatMap(it =>
-      byItem.get(it).map(sl => TEst(key, sl.item, sl.est, sl.err)))
   }
 }

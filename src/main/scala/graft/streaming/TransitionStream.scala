@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming._
 
 import graft.relational.Paths
 
@@ -14,13 +13,10 @@ import graft.relational.Paths
   * (or the batch rollup — `TransitionStreamSpec` pins the PAIR stream
   * against the batch matrix counts).
   *
-  * State contract: ONE tiny ValueState per user (last event's ts, id,
-  * type) — O(1) regardless of stream length, no timers, no buffering
-  * (the [[CountWindowStream]] state shape). Ordering contract is also
-  * CountWindowStream's: ACROSS micro-batches arrival order, WITHIN a
-  * batch the deterministic (ts, event_id) order — when ingest is
-  * event-time ordered (the normal case), the emitted pairs equal the
-  * batch lag-window extraction exactly.
+  * Ordering and state contract are [[KeyedFold]]'s, sorted by
+  * (ts, event_id) within a batch; the state is the user's last event
+  * (ts, id, type). On event-time-ordered ingest the emitted pairs equal
+  * the batch lag-window extraction exactly.
   */
 object TransitionStream {
 
@@ -33,40 +29,24 @@ object TransitionStream {
   def transitions(events: DataFrame): Dataset[Transition] = {
     val s = events.sparkSession
     import s.implicits._
-    events
+    val ev = events
       .select($"user_id",
         (unix_timestamp(date_trunc("second", $"ts")) * 1000L).as("ts_ms"),
         $"event_id", $"event_type")
       .as[PEvent]
-      .groupByKey(_.user_id)
-      .transformWithState(new TransitionProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
-}
-
-final class TransitionProcessor
-  extends StatefulProcessor[Long, TransitionStream.PEvent, TransitionStream.Transition] {
-  import TransitionStream._
-
-  @transient private var last: ValueState[LastEv] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    last = getHandle.getValueState[LastEv]("last",
-      Encoders.product[LastEv], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[PEvent],
-      timerValues: TimerValues): Iterator[Transition] = {
-    var prev = if (last.exists()) last.get() else null
-    val out = Vector.newBuilder[Transition]
-    rows.toVector.sortBy(e => (e.ts_ms, e.event_id)).foreach { e =>
-      if (prev != null) {
-        val gapS = (e.ts_ms - prev.ts_ms) / 1000L
-        if (gapS <= Paths.TransitionGapMin * 60L)
-          out += Transition(key, prev.typ, e.event_type, gapS)
+    KeyedFold.run(ev)(_.user_id, "last", Encoders.product[LastEv], null,
+        Some(Ordering.by(e => (e.ts_ms, e.event_id)))) { (key, s0, rows) =>
+      var prev = s0
+      val out = Vector.newBuilder[Transition]
+      rows.foreach { e =>
+        if (prev != null) {
+          val gapS = (e.ts_ms - prev.ts_ms) / 1000L
+          if (gapS <= Paths.TransitionGapMin * 60L)
+            out += Transition(key, prev.typ, e.event_type, gapS)
+        }
+        prev = LastEv(e.ts_ms, e.event_id, e.event_type)
       }
-      prev = LastEv(e.ts_ms, e.event_id, e.event_type)
+      (prev, out.result().iterator)
     }
-    if (prev != null) last.update(prev)
-    out.result().iterator
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming._
 
 /** Streaming time-weighted average — the live twin of the batch
   * `q_ts_twa` (`graft.relational.TimeSeries.twa`): the holding-interval
@@ -16,12 +15,9 @@ import org.apache.spark.sql.streaming._
   * Semantics ≡ batch (pinned in `TwaStreamSpec`): on event-time-ordered
   * ingest the final emission per user matches the batch lead-window
   * integral exactly, including the exclusion of zero-span users and the
-  * truncating integer division. Ordering contract is
-  * [[TransitionStream]]'s: ACROSS micro-batches arrival order, WITHIN a
-  * batch the deterministic (ts, event_id) sort.
-  *
-  * State contract at scale: one 5-scalar ValueState per user — O(1) in
-  * stream length, no timers, no buffering. */
+  * truncating integer division. Ordering and state contract are
+  * [[KeyedFold]]'s, sorted by (ts, event_id) within a batch; the state is
+  * one 5-scalar [[Pos]] per user. */
 object TwaStream {
 
   case class PEvent(user_id: Long, ts_sec: Long, event_id: Long, cents: Long)
@@ -33,49 +29,28 @@ object TwaStream {
   def levels(events: DataFrame): Dataset[TwaRow] = {
     val s = events.sparkSession
     import s.implicits._
-    events
+    val ev = events
       .filter($"event_type" === "purchase")
       .select($"user_id",
         unix_timestamp(date_trunc("second", $"ts")).as("ts_sec"),
         $"event_id",
         floor($"value" * 100).cast("long").as("cents"))
       .as[PEvent]
-      .groupByKey(_.user_id)
-      .transformWithState(new TwaProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
-}
-
-final class TwaProcessor
-  extends StatefulProcessor[Long, TwaStream.PEvent, TwaStream.TwaRow] {
-  import TwaStream._
-
-  @transient private var pos: ValueState[Pos] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    pos = getHandle.getValueState[Pos]("pos",
-      Encoders.product[Pos], TTLConfig.NONE)
-
-  override def handleInputRows(key: Long, rows: Iterator[PEvent],
-      timerValues: TimerValues): Iterator[TwaRow] = {
-    var st = if (pos.exists()) pos.get() else null
-    rows.toVector.sortBy(e => (e.ts_sec, e.event_id)).foreach { e =>
-      st =
+    KeyedFold.run(ev)(_.user_id, "pos", Encoders.product[Pos], null,
+        Some(Ordering.by(e => (e.ts_sec, e.event_id)))) { (key, s0, rows) =>
+      val st = rows.foldLeft(s0) { (st, e) =>
         if (st == null) Pos(e.ts_sec, e.cents, 0L, 0L, 1L)
         else {
           val dur = e.ts_sec - st.ts_sec
           Pos(e.ts_sec, e.cents,
             st.num + st.cents * dur, st.den + dur, st.n + 1L)
         }
-    }
-    if (st == null) Iterator.empty
-    else {
-      pos.update(st)
+      }
       // zero-span users (all purchases in one second) have no level to
       // average yet — same exclusion as the batch HAVING
-      if (st.den > 0L)
-        Iterator.single(TwaRow(key, st.n, st.den, st.num / st.den))
-      else Iterator.empty
+      (st,
+        if (st.den > 0L) Iterator.single(TwaRow(key, st.n, st.den, st.num / st.den))
+        else Iterator.empty)
     }
   }
 }
