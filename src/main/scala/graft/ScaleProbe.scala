@@ -65,10 +65,10 @@ object ScaleProbe {
     // ---- CEP under SKEW: one key holds ~30% of 10M events, through the ----
     // full EventPatterns.detect operator (the reference's entire runtime,
     // FlinkCEPExample.scala:76). local[32] at sf0.1 never stresses one-hot-
-    // key behavior: the hot key serializes onto ONE task (flatMapSortedGroups
-    // is per-key sequential by contract), so this measures (a) whole-job
-    // throughput under a straggler key and (b) that per-key NFA state stays
-    // bounded by the within horizon, not by key volume (§7.4.7).
+    // key behavior: the hot key's events all hash to ONE task (a key's
+    // runner is fed sequentially by contract), so this measures (a)
+    // whole-job throughput under a straggler key and (b) that per-key NFA
+    // state stays bounded by the within horizon, not by key volume (§7.4.7).
     val kindName = array(lit("error"), lit("view"), lit("click"), lit("view"),
       lit("click"), lit("view"), lit("click"), lit("purchase"),
       lit("search"), lit("idle"))
@@ -91,7 +91,7 @@ object ScaleProbe {
     println(f"""{"probe":"cep_skew","rows":$nEvents,"hot_share":0.3,"out_rows":${skewOut._1},"hot_out":${skewOut._2},"secs":$skewSecs%.1f,"rows_per_sec":${(nEvents / skewSecs).toLong}}""")
 
     // Bounded-state evidence for the hot key itself: replay its first 300k
-    // events (time-sorted, exactly what flatMapSortedGroups feeds the NFA)
+    // events (time-sorted, exactly what the keyed batch driver feeds its runner)
     // through an instrumented NfaRunner, sampling live-partial count every
     // 1000 events. The §7.4.7 contract: state is bounded by the events
     // inside ONE within-horizon (~1h ≈ nEvents·0.3/720 here), never by the

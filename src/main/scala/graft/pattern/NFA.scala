@@ -1,5 +1,6 @@
 package graft.pattern
 
+import scala.collection.mutable
 import scala.collection.mutable.{ArrayBuffer, ListBuffer}
 
 /** NFA machinery for [[Pattern]] over a single key's event-time-ordered
@@ -18,10 +19,11 @@ import scala.collection.mutable.{ArrayBuffer, ListBuffer}
   *     partial match's deadline.
   *
   * [[NfaRunner]] is INCREMENTAL: feed events one at a time (in event-time
-  * order), advance the watermark, snapshot/restore its state — this is what
-  * both the batch adapter (single pass over a sorted iterator, no per-key
-  * buffer) and the Structured Streaming `transformWithState` processor
-  * (state store round-trips between micro-batches) drive.
+  * order), advance the watermark, snapshot/restore its state. Two drivers
+  * feed it: [[NFA.runKeyed]], the batch pass over one partition of many
+  * keys sorted by event time (a runner per key with live state, outputs
+  * emitted as produced), and the Structured Streaming `transformWithState`
+  * processor (state store round-trips between micro-batches).
   *
   * State-size contract (100 TB note): live partials per key are bounded by
   * the `within` horizon — every partial older than `within` is retired at the
@@ -102,9 +104,9 @@ object NFA {
         * preferred live partial to die before it may emit. */
       deferred: List[(Partial[T], Long)] = Nil)
 
-  /** Convenience single-shot run over a sorted iterator: feed every event,
-    * then flush (batch = closed stream → remaining partials time out).
-    */
+  /** Single-key run over a sorted iterator, collected: feed every event,
+    * then flush (batch = closed stream → remaining partials time out). The
+    * reference the batch driver [[runKeyed]] is checked against. */
   def run[T](
       events: Iterator[T],
       ts: T => Long,
@@ -121,6 +123,120 @@ object NFA {
     matches ++= fm
     timeouts ++= ft
     (matches.result(), timeouts.result())
+  }
+
+  /** Batch driver over one partition of many keys: `events` sorted by event
+    * time (any tie order that keeps each key's events in its own order).
+    * Each event goes to its key's [[NfaRunner]], so every key sees the calls
+    * of a per-key [[run]] and produces the same matches, in the same order,
+    * and the same timeouts. Outputs leave as they are produced.
+    *
+    * Memory is the runners with live state. A runner that goes idle is
+    * dropped at once (an idle runner behaves as a fresh one). A runner whose
+    * latest deadline the partition's event time has passed is retired
+    * through `onWatermark(now)`, the call its key's next event would make.
+    * If the key has no later event, per-key [[run]] would `flush` instead;
+    * the two agree unless graph-mode completions are deferred, so a runner
+    * holding those is not retired early and waits for its key's next event
+    * or the partition end. Runners live at the partition end are flushed.
+    * With `within` every live runner belongs to a key with an event inside
+    * the last `within` horizon; a pattern without `within` keeps its
+    * runners until the key goes idle or the partition ends, and a pattern
+    * with physical history (`PREV`) keeps one per key seen. */
+  def runKeyed[K, T, O](
+      events: Iterator[T],
+      keyFn: T => K,
+      tsFn: T => Long,
+      pattern: Pattern[T])(
+      onMatch: (K, PatternMatch[T]) => IterableOnce[O],
+      onTimeout: (K, PatternTimeout[T]) => IterableOnce[O]): KeyedRun[K, T, O] =
+    new KeyedRun(events, keyFn, tsFn, pattern, onMatch, onTimeout)
+
+  /** The iterator [[runKeyed]] returns; `liveRunners` exposes its memory. */
+  final class KeyedRun[K, T, O] private[NFA] (
+      events: Iterator[T],
+      keyFn: T => K,
+      tsFn: T => Long,
+      pattern: Pattern[T],
+      onMatch: (K, PatternMatch[T]) => IterableOnce[O],
+      onTimeout: (K, PatternTimeout[T]) => IterableOnce[O])
+      extends scala.collection.AbstractIterator[O] {
+
+    private final class Live(val runner: NfaRunner[T]) {
+      var scheduled: Long = Long.MinValue // latest deadline queued in `due`
+    }
+    private val live = mutable.HashMap.empty[K, Live]
+    // (deadline, key) in nondecreasing deadline order: a runner's latest
+    // deadline grows only when a partial starts, at the current event time.
+    private val due = mutable.Queue.empty[(Long, K)]
+    // An idle runner, fed the events of keys that have none.
+    private var spare: NfaRunner[T] = null
+    private val out = mutable.Queue.empty[O]
+    private var done = false
+
+    /** Keys holding a runner right now. */
+    def liveRunners: Int = live.size
+
+    def hasNext: Boolean = {
+      while (out.isEmpty && !done) step()
+      out.nonEmpty
+    }
+
+    def next(): O = if (hasNext) out.dequeue() else Iterator.empty.next()
+
+    private def emit(k: K, res: (List[PatternMatch[T]], List[PatternTimeout[T]])): Unit = {
+      res._1.foreach(m => out ++= onMatch(k, m))
+      res._2.foreach(to => out ++= onTimeout(k, to))
+    }
+
+    private def drop(k: K, r: NfaRunner[T]): Unit = {
+      live.remove(k)
+      spare = r
+    }
+
+    private def schedule(k: K, l: Live): Unit = l.runner.latestDeadline match {
+      case Some(d) if d > l.scheduled =>
+        l.scheduled = d
+        due.enqueue((d, k))
+      case _ => ()
+    }
+
+    private def step(): Unit =
+      if (events.hasNext) {
+        val e = events.next()
+        val t = tsFn(e)
+        while (due.nonEmpty && due.head._1 <= t) {
+          val (d, k) = due.dequeue()
+          live.getOrElse(k, null) match {
+            case l: Live if l.scheduled == d && !l.runner.hasDeferred =>
+              emit(k, l.runner.onWatermark(t))
+              if (!l.runner.hasLiveState) drop(k, l.runner)
+            case _ => ()
+          }
+        }
+        val k = keyFn(e)
+        val l = live.getOrElse(k, null)
+        val r =
+          if (l != null) l.runner
+          else {
+            if (spare == null) spare = new NfaRunner[T](pattern, tsFn)
+            spare
+          }
+        emit(k, r.onEvent(e))
+        if (!r.hasLiveState) { if (l != null) drop(k, r) }
+        else if (l != null) schedule(k, l)
+        else {
+          spare = null
+          val nl = new Live(r)
+          live.update(k, nl)
+          schedule(k, nl)
+        }
+      } else {
+        live.foreach { case (k, l) => emit(k, l.runner.flush()) }
+        live.clear()
+        due.clear()
+        done = true
+      }
   }
 }
 
@@ -199,6 +315,24 @@ final class NfaRunner[T](val pattern: Pattern[T], tsFn: T => Long) extends Seria
     within.flatMap(w =>
       (partials.map(_.startTs + w) ++ champion.map(_._1.startTs + w) ++
         deferredCands.map(_._1.startTs + w)).minOption)
+
+  /** Latest pending timeout deadline, if any: a watermark at or past it
+    * leaves no partial, champion or deferred completion alive (batch
+    * driver retirement). */
+  def latestDeadline: Option[Long] = within match {
+    case Some(w) if partials.nonEmpty || champion.isDefined || deferredCands.nonEmpty =>
+      var s = Long.MinValue
+      partials.foreach(p => s = math.max(s, p.startTs))
+      champion.foreach(c => s = math.max(s, c._1.startTs))
+      deferredCands.foreach(c => s = math.max(s, c._1.startTs))
+      Some(s + w)
+    case _ => None
+  }
+
+  /** Graph-mode completions are waiting on a preferred partial. `flush`
+    * replays them with exact resume points and `onWatermark` does not, so
+    * the two may disagree while any wait. */
+  def hasDeferred: Boolean = deferredCands.nonEmpty
 
   /** SQL preference order on derivations: earlier start wins; same start →
     * lexicographic on ranks; equal prefix → the LONGER derivation wins
@@ -391,8 +525,36 @@ final class NfaRunner[T](val pattern: Pattern[T], tsFn: T => Long) extends Seria
         (champ ::: defEmit.toList, dead.distinctBy(_.contentKey).map(toTimeout).toList)
     }
 
+  private val noOutput: (List[PatternMatch[T]], List[PatternTimeout[T]]) = (Nil, Nil)
+  // The initial pseudo-partial's context: no bindings, no history.
+  private val emptyCtx: PatternContext[T] = new PatternContext[T] with Serializable {
+    def apply(stage: String): Vector[T] = Vector.empty
+  }
+
+  // Would an initial entry stage TAKE `e` (the initial step's take test)?
+  private def startsMatch(e: T): Boolean = {
+    var ss = initialEntries
+    while (ss.nonEmpty) {
+      val st = stages(ss.head)
+      val stopped = st.until match {
+        case Some(u) => u(e, emptyCtx)
+        case None => false
+      }
+      if (!stopped && st.pred(e, emptyCtx)) return true
+      ss = ss.tail
+    }
+    false
+  }
+
   /** Feed the next event (must be >= all previously fed event times). */
   def onEvent(e: T): (List[PatternMatch[T]], List[PatternTimeout[T]]) = {
+    // Idle fast path: with no live state, an event no initial entry stage
+    // takes changes nothing but the event index.
+    if (partials.isEmpty && champion.isEmpty && deferredCands.isEmpty &&
+        pattern.historyDepth == 0 && !startsMatch(e)) {
+      nextIdx += 1
+      return noOutput
+    }
     val t = tsFn(e)
     val i = nextIdx
     nextIdx += 1

@@ -46,8 +46,9 @@ import graft.pattern.{AfterMatchSkip, Contiguity, NFA, Pattern, Stage}
   * every `DEFINE` condition is attached to the input as a codegen'd boolean
   * column `__def_V` (Catalyst optimizes and pushes what it can), so the NFA's
   * per-event predicates are plain boolean-column reads; the pattern then runs
-  * through the same [[graft.operators.Cep]] execution shape —
-  * `groupByKey(partition)` + `flatMapSortedGroups(order)` + [[NFA]].
+  * through the same [[graft.operators.Cep]] execution shape — a hash
+  * `repartition(partition)` + `sortWithinPartitions(order)` + the keyed
+  * batch driver [[NFA.runKeyed]].
   * Row-pattern contiguity is STRICT throughout (SQL semantics: every row of
   * the partition between match start and end is consumed by some variable),
   * i.e. `next` + `consecutive` in DSL terms.
@@ -739,8 +740,12 @@ object MatchRecognize {
         val firstRow = m.bindings.valuesIterator.flatten.next()
         Iterator.single(Row.fromSeq(partIdxs.map(firstRow.get) ++ measureVals(m, matchNo)))
       }
+    // Streaming state key: each partition value length-prefixed, NULL
+    // marked apart, so distinct value tuples never share a key.
     def keyOf(r: Row): String =
-      partIdxs.map(i => String.valueOf(r.get(i))).mkString("\u0000")
+      partIdxs.map { i =>
+        if (r.isNullAt(i)) "N" else { val v = String.valueOf(r.get(i)); s"V${v.length}:$v" }
+      }.mkString
 
     if (prepared.isStreaming) {
       // Streaming row-pattern query: the SAME lowered pattern runs through
@@ -755,17 +760,24 @@ object MatchRecognize {
         Encoders.STRING, Encoders.row(schema), rowEnc,
         scala.reflect.ClassTag(classOf[Row]))
     } else {
-      // All ORDER BY columns feed the in-partition sort: ties on the event
-      // time column are broken deterministically by the tiebreak columns,
-      // so match selection is stable across runs and partitionings.
-      prepared
-        .groupByKey(keyOf _)
-        .flatMapSortedGroups(spec.orderBy.map(col): _*) { (_, rows) =>
-          val (matches, _) = NFA.run(rows, tsOf, pattern)
-          matches.iterator.zipWithIndex.flatMap { case (m, i) =>
-            outputRows(m, i + 1L)
-          }
-        }
+      // One hash exchange on the partition values, then each partition in
+      // ORDER BY order (tiebreak columns make match selection stable across
+      // runs and partitionings) through the keyed batch driver, keyed on the
+      // partition values themselves. Without PARTITION BY the input is one
+      // partition.
+      val byKey =
+        if (spec.partitionBy.isEmpty) prepared.repartition(1)
+        else prepared.repartition(spec.partitionBy.map(col): _*)
+      val numbered = spec.measures.exists(_.fn == "MATCH_NUMBER")
+      byKey.sortWithinPartitions(spec.orderBy.map(col): _*).mapPartitions { rows =>
+        val matchNos = scala.collection.mutable.HashMap.empty[Row, Long]
+        def matchNo(k: Row): Long =
+          if (!numbered) 0L
+          else { val no = matchNos.getOrElse(k, 0L) + 1; matchNos.update(k, no); no }
+        NFA.runKeyed(rows, (r: Row) => Row.fromSeq(partIdxs.map(r.get)), tsOf, pattern)(
+          (k, m) => outputRows(m, matchNo(k)),
+          (_, _) => Iterator.empty)
+      }
     }
   }
 

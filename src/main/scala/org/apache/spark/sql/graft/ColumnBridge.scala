@@ -33,4 +33,19 @@ object ColumnBridge {
       org.apache.spark.sql.catalyst.expressions.ScalarSubquery(
         df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
           .queryExecution.analyzed))
+
+  /** The `AppendColumns` plan `groupByKey(f)` builds, as a DataFrame, with
+    * its appended key columns and the input's data columns, both as
+    * attributes (a data column may share the key's name, e.g. `value`).
+    * `KeyValueGroupedDataset.queryExecution` is `private[sql]`. */
+  def appendedKey(kv: org.apache.spark.sql.KeyValueGroupedDataset[_, _])
+      : (org.apache.spark.sql.DataFrame, Seq[Column], Seq[Column]) = {
+    val qe = kv.asInstanceOf[org.apache.spark.sql.classic.KeyValueGroupedDataset[_, _]]
+      .queryExecution
+    qe.analyzed match {
+      case a: org.apache.spark.sql.catalyst.plans.logical.AppendColumns =>
+        (ofRows(qe.sparkSession, a), a.newColumns.map(column), a.child.output.map(column))
+      case p => throw new IllegalStateException(s"groupByKey did not append a key: $p")
+    }
+  }
 }

@@ -60,10 +60,11 @@ class PlanSpec extends AnyFunSuite {
 
   test("CEP plan: single exchange on the key, sort satisfied by the shuffle") {
     val p = plan("q_cep_low_balance")
-    // one hashpartitioning exchange for groupByKey; sort within partitions for
-    // flatMapSortedGroups rides it (no extra exchange)
+    // one hashpartitioning exchange on the key; the event-time sort within
+    // partitions rides it (no extra exchange), and the keyed batch driver
+    // walks each partition once (no per-key groups)
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 1, p)
-    assert(p.contains("MapGroups") || p.contains("FlatMapGroups"), p)
+    assert(p.contains("MapPartitions") && !p.contains("MapGroups"), p)
   }
 
   test("q_agg_unpivot: Expand over ONE aggregate, no extra shuffle") {

@@ -32,4 +32,19 @@ class PatternStreamSpec extends AnyFunSuite {
       ("2", "match", "2020-05-01 11:00:00"),
       ("1", "timeout", "2020-05-01 11:00:00")))
   }
+
+  test("Cep.matchPattern keys a Dataset whose data column is named like the key") {
+    import spark.implicits._
+    // a Dataset[Long] has one column `value`; groupByKey appends its Long
+    // key as `value` too, so the data column must be taken back by attribute
+    val evs = Seq(1L, 3L, 2L, 5L, 4L, 7L).toDS()
+    val pairs = graft.pattern.Pattern
+      .begin[Long]("A", graft.pattern.AfterMatchSkip.SkipPastLastEvent).where(_ => true)
+      .next("B").where(_ => true)
+    val got = Cep.matchPattern[Long, Long, (Long, Long, Long)](
+      evs, _ % 2, identity, pairs, Seq($"value"))(
+      (k, m) => Some((k, m.first("A").get, m.first("B").get)), (_, _) => None)
+      .collect().toSet
+    assert(got == Set((1L, 1L, 3L), (1L, 5L, 7L), (0L, 2L, 4L)))
+  }
 }
