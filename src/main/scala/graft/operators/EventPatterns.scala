@@ -82,9 +82,9 @@ object EventPatterns {
   def absence(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     // No .distinct(): the NFA already emits one timeout per distinct partial
-    // content (`NFA.onWatermark` distinctBy(contentKey)), so the projection
-    // is duplicate-free — verified equal counts at sf0.01 — and the extra
-    // shuffle would be pure cost.
+    // content (`NFA.distinctContent`), so the projection is duplicate-free
+    // — verified equal counts at sf0.01 — and the extra shuffle would be
+    // pure cost.
     detect(spark, sfDir)
       .filter($"kind" === "timeout")
       .select($"user_id", $"alarm_ts")

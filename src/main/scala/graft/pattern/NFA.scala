@@ -25,6 +25,14 @@ import scala.collection.mutable.{ArrayBuffer, ListBuffer}
   * emitted as produced), and the Structured Streaming `transformWithState`
   * processor (state store round-trips between micro-batches).
   *
+  * A pattern's pure structure (entry chains, the entry/proceed/initial
+  * position lists, where acceptance is reachable) is built once per
+  * [[Pattern]] instance as immutable [[NfaStructure]] arrays that every
+  * runner of it shares, so a runner costs only its own state. An idle
+  * event, or one that every live partial ignores where it stands,
+  * allocates nothing: the runner reuses its step buffers, dedup table and
+  * predicate context between events.
+  *
   * State-size contract (100 TB note): live partials per key are bounded by
   * the `within` horizon — every partial older than `within` is retired at the
   * next event/watermark — and `SkipPastLastEvent` prunes all overlap after
@@ -80,13 +88,60 @@ object NFA {
         * smaller = preferred (leftmost alternation branch, greedy loop).
         * Empty in linear mode — legacy resolution never reads it. */
       ranks: Vector[Int] = Vector.empty) {
-    /** Cached: computed once per Partial instead of per HashSet probe /
-      * champion-liveness scan (the per-event hot path allocates one List
-      * per call otherwise; ignored by SnapshotCodec, which writes fields). */
-    lazy val dedupKey: (Int, Int, List[(Int, Long)], Set[Int]) =
-      (stage, taken, consumed.map(c => (c.stage, c.idx)), tripped)
-    def contentKey: List[(Int, Long)] = consumed.map(c => (c.stage, c.idx))
+    /** Hash of the dedup identity ([[sameState]]) from its O(1) parts: the
+      * resident position, the newest consumed (stage, idx) and the start
+      * (every partial starts at its oldest consumed event, so equal
+      * content means equal start). */
+    private[pattern] def dedupHash: Int = {
+      var h = stage * 0x01000193 ^ taken
+      if (consumed.nonEmpty) {
+        val c = consumed.head
+        h = h * 31 + c.stage
+        h = h * 31 + java.lang.Long.hashCode(c.idx)
+      }
+      h = h * 31 + java.lang.Long.hashCode(startIdx)
+      if (tripped.isEmpty) h else h * 31 + tripped.hashCode
+    }
+
+    /** One NFA state: same resident position, tripped guards and consumed
+      * (stage, idx) sequence; ranks, times and the events themselves are
+      * not compared. Branches kept once per state. */
+    private[pattern] def sameState(o: Partial[T]): Boolean =
+      (this eq o) || (stage == o.stage && taken == o.taken &&
+        tripped == o.tripped && sameContent(o))
+
+    /** Same consumed (stage, idx) sequence, compared in place; branches
+      * usually share their list tails, which ends the walk early. */
+    private[pattern] def sameContent(o: Partial[T]): Boolean = {
+      var a = consumed
+      var b = o.consumed
+      while (a ne b) {
+        if (a.isEmpty || b.isEmpty) return false
+        val x = a.head
+        val y = b.head
+        if (x.stage != y.stage || x.idx != y.idx) return false
+        a = a.tail
+        b = b.tail
+      }
+      true
+    }
   }
+
+  /** A partial's consumed (stage, idx) sequence as a hash key. */
+  private final class ContentKey[T](val p: Partial[T]) {
+    override def hashCode: Int =
+      if (p.consumed.isEmpty) 0
+      else p.consumed.head.stage * 31 + java.lang.Long.hashCode(p.consumed.head.idx)
+    override def equals(o: Any): Boolean = o match {
+      case k: ContentKey[_] => p.sameContent(k.p.asInstanceOf[Partial[T]])
+      case _ => false
+    }
+  }
+
+  /** One partial per distinct consumed content: branch partials may share
+    * it, differing only in resident NFA position. */
+  private[pattern] def distinctContent[T](ps: Iterable[Partial[T]]): Iterable[Partial[T]] =
+    if (ps.sizeIs <= 1) ps else ps.iterator.distinctBy(new ContentKey(_)).to(Iterable)
 
   /** Serializable snapshot of a runner's mutable state (streaming state store).
     * `champion` is a completed-but-still-extendable maximal-match candidate
@@ -104,6 +159,9 @@ object NFA {
         * preferred live partial to die before it may emit. */
       deferred: List[(Partial[T], Long)] = Nil)
 
+  // What a runner call returns when it emits nothing (shared: its lists are empty).
+  private[pattern] val NoOutput: (List[Nothing], List[Nothing]) = (Nil, Nil)
+
   /** Single-key run over a sorted iterator, collected: feed every event,
     * then flush (batch = closed stream → remaining partials time out). The
     * reference the batch driver [[runKeyed]] is checked against. */
@@ -114,10 +172,10 @@ object NFA {
     val runner = new NfaRunner[T](pattern, ts)
     val matches = Vector.newBuilder[PatternMatch[T]]
     val timeouts = Vector.newBuilder[PatternTimeout[T]]
-    events.foreach { e =>
-      val (ms, tos) = runner.onEvent(e)
-      matches ++= ms
-      timeouts ++= tos
+    while (events.hasNext) {
+      val out = runner.onEvent(events.next())
+      if (out._1.nonEmpty) matches ++= out._1
+      if (out._2.nonEmpty) timeouts ++= out._2
     }
     val (fm, ft) = runner.flush()
     matches ++= fm
@@ -185,8 +243,10 @@ object NFA {
     def next(): O = if (hasNext) out.dequeue() else Iterator.empty.next()
 
     private def emit(k: K, res: (List[PatternMatch[T]], List[PatternTimeout[T]])): Unit = {
-      res._1.foreach(m => out ++= onMatch(k, m))
-      res._2.foreach(to => out ++= onTimeout(k, to))
+      var ms = res._1
+      while (ms.nonEmpty) { out ++= onMatch(k, ms.head); ms = ms.tail }
+      var tos = res._2
+      while (tos.nonEmpty) { out ++= onTimeout(k, tos.head); tos = tos.tail }
     }
 
     private def drop(k: K, r: NfaRunner[T]): Unit = {
@@ -194,11 +254,12 @@ object NFA {
       spare = r
     }
 
-    private def schedule(k: K, l: Live): Unit = l.runner.latestDeadline match {
-      case Some(d) if d > l.scheduled =>
+    private def schedule(k: K, l: Live): Unit = {
+      val d = l.runner.latestDeadlineMs
+      if (d > l.scheduled) {
         l.scheduled = d
         due.enqueue((d, k))
-      case _ => ()
+      }
     }
 
     private def step(): Unit =
@@ -206,7 +267,9 @@ object NFA {
         val e = events.next()
         val t = tsFn(e)
         while (due.nonEmpty && due.head._1 <= t) {
-          val (d, k) = due.dequeue()
+          val dk = due.dequeue()
+          val d = dk._1
+          val k = dk._2
           live.getOrElse(k, null) match {
             case l: Live if l.scheduled == d && !l.runner.hasDeferred =>
               emit(k, l.runner.onWatermark(t))
@@ -222,7 +285,7 @@ object NFA {
             if (spare == null) spare = new NfaRunner[T](pattern, tsFn)
             spare
           }
-        emit(k, r.onEvent(e))
+        emit(k, r.onEventAt(e, t))
         if (!r.hasLiveState) { if (l != null) drop(k, r) }
         else if (l != null) schedule(k, l)
         else {
@@ -240,7 +303,65 @@ object NFA {
   }
 }
 
-/** Incremental NFA executor for one key. NOT thread-safe. */
+/** The pure structure of one [[Pattern]], as arrays indexed by stage: entry
+  * chains, the positions a partial steps through (entry, proceed, initial)
+  * and where acceptance is reachable. Built once per `Pattern` instance
+  * ([[Pattern.structure]]) and only read afterwards, so every runner of
+  * the pattern, on any thread, shares one copy. */
+private[pattern] final class NfaStructure[T](pattern: Pattern[T]) extends Serializable {
+  val stages: Array[Stage[T]] = pattern.stages.toArray
+  val n: Int = stages.length
+
+  // Successor stages in preference order (index n = accepting sentinel);
+  // linear chain unless the pattern carries an explicit graph.
+  private val succ: Array[List[Int]] =
+    Array.tabulate(n)(i => pattern.graph.fold(List(i + 1))(_.edges(i)))
+
+  /** Stages reachable for ENTRY from `s` (inclusive) by epsilon-skipping
+    * optional stages, in preference order, for s in 0..n; includes the
+    * accepting sentinel `n` when the remainder is fully skippable.
+    * Cycle-safe (group loops can route back through optional stages). */
+  val entryChain: Array[Array[Int]] = Array.tabulate(n + 1) { s =>
+    val out = mutable.ArrayBuffer.empty[Int]
+    val seen = mutable.HashSet.empty[Int]
+    def go(u: Int): Unit = if (seen.add(u)) {
+      out += u
+      if (u < n && stages(u).optionalEntry) succ(u).foreach(go)
+    }
+    go(s)
+    out.toArray
+  }
+
+  // Entry positions following `from` stages, deduped keeping preference order.
+  private def entriesAfter(from: List[Int]): Array[Int] = {
+    val seen = mutable.HashSet.empty[Int]
+    from.iterator.flatMap(entryChain(_)).filter(u => u < n && seen.add(u)).toArray
+  }
+
+  /** Stages the implicit initial state may enter (taken 0). */
+  val initial: Array[Int] = entriesAfter(pattern.graph.fold(List(0))(_.starts))
+  /** Stages a partial waiting to enter `s` (taken 0) may take into. */
+  val entryPos: Array[Array[Int]] = Array.tabulate(n)(s => entryChain(s).filter(_ < n))
+  /** Stages a partial inside `s` proceeds to once its minimum is met. */
+  val proceedPos: Array[Array[Int]] = Array.tabulate(n)(s => entriesAfter(succ(s)))
+  /** Leaving `s` (minimum met) can epsilon-reach the accepting state. */
+  val acceptsAfter: Array[Boolean] =
+    Array.tabulate(n)(s => succ(s).exists(entryChain(_).contains(n)))
+  /** The negative guard preceding each stage, or null. */
+  val guardAt: Array[Guard[T]] = Array.tabulate(n)(pattern.guards.getOrElse(_, null))
+
+  // Greedy (default): longest simultaneous completion wins under
+  // single-winner skip modes; any reluctant loop flips to shortest.
+  val preferLongest: Boolean = stages.filter(_.isLoop).forall(_.greedy)
+
+  /** Distinct stage names, and each stage's index into them: a graph
+    * pattern may bind one variable through several stage occurrences. */
+  val names: Array[String] = stages.map(_.name).distinct
+  val nameId: Array[Int] = stages.map(s => names.indexOf(s.name))
+}
+
+/** Incremental NFA executor for one key. NOT thread-safe; the pattern
+  * structure it reads ([[NfaStructure]]) is shared and immutable. */
 final class NfaRunner[T](val pattern: Pattern[T], tsFn: T => Long) extends Serializable {
   import NFA._
 
@@ -249,21 +370,10 @@ final class NfaRunner[T](val pattern: Pattern[T], tsFn: T => Long) extends Seria
   require(pattern.graph.isEmpty || pattern.guards.isEmpty,
     "graph patterns do not support negative guards")
 
-  private val stages = pattern.stages
-  private val n = stages.length
+  private val shape = pattern.structure
+  private val stages = shape.stages
   private val within = pattern.withinMs
-  private val guards = pattern.guards
-  // Successor stages in preference order (index n = accepting sentinel);
-  // linear chain unless the pattern carries an explicit graph.
-  private val succ: Int => List[Int] = pattern.graph match {
-    case Some(g) => i => g.edges(i)
-    case None => i => List(i + 1)
-  }
-  private val starts: List[Int] = pattern.graph.map(_.starts).getOrElse(List(0))
-  // Greedy (default): longest simultaneous completion wins under
-  // single-winner skip modes; any reluctant loop flips to shortest.
-  private val lenPref: Int => Int =
-    if (stages.filter(_.isLoop).forall(_.greedy)) len => -len else len => len
+  private val guarded = pattern.guards.nonEmpty
 
   // Maximal-match deferral (SQL greedy semantics): when the pattern ENDS in
   // a greedy loop under a single-winner skip mode, a completion that can
@@ -271,7 +381,6 @@ final class NfaRunner[T](val pattern: Pattern[T], tsFn: T => Long) extends Seria
   // emitted; it is replaced by longer completions of the same attempt and
   // emitted only when the attempt can no longer grow (branch death, within
   // horizon, or end of input).
-  private val preferLongest = stages.filter(_.isLoop).forall(_.greedy)
   private var champion: Option[(Partial[T], Long)] = None
 
   // Graph mode: SQL:2016 lexicographic preference (leftmost start, then
@@ -282,13 +391,43 @@ final class NfaRunner[T](val pattern: Pattern[T], tsFn: T => Long) extends Seria
   private val graphMode = pattern.graph.isDefined
   private var deferredCands: List[(Partial[T], Long)] = Nil
 
-  private var partials = ArrayBuffer.empty[Partial[T]]
+  private var partials = new ArrayBuffer[Partial[T]](1)
   private var minStartIdx = 0L // SkipPastLastEvent: no starts at or before this
   private var nextIdx = 0L
 
   // Physical-history ring for PatternContext.recent (PREV navigation);
   // bounded by the pattern's declared historyDepth, zero-cost when unused.
   private var history: Vector[T] = Vector.empty
+
+  // Per-event scratch, kept between events so that an event which changes
+  // nothing allocates nothing: `next` gathers the partials surviving the
+  // event and then swaps with `partials` (the old buffer waits in `spare`);
+  // `completed` and `matched` hold the event's completions and emitted
+  // matches (`matched` is handed out, so it is made afresh when needed).
+  private var next: ArrayBuffer[Partial[T]] = null
+  private var spare: ArrayBuffer[Partial[T]] = null
+  private var completed: ArrayBuffer[Partial[T]] = null
+  private var matched: ListBuffer[PatternMatch[T]] = null
+  // Dedup of `next`: open addressing over the partials added this event,
+  // filled from the second add on and emptied after the step.
+  private var slots: Array[AnyRef] = null
+  private var indexed = 0
+
+  /** The one predicate context, re-pointed at each partial as it steps;
+    * its bindings view is built only if an iterative condition asks. */
+  private final class Ctx extends PatternContext[T] with Serializable {
+    private var consumed: List[Consumed[T]] = Nil
+    private var bound: Map[String, Vector[T]] = null
+    def reset(c: List[Consumed[T]]): Unit = { consumed = c; bound = null }
+    def apply(stage: String): Vector[T] = {
+      if (bound == null) bound = toBindings(consumed)
+      bound.getOrElse(stage, Vector.empty)
+    }
+    // history excludes the current candidate (appended AFTER stepping)
+    override def recent(n: Int): Option[T] =
+      if (n >= 1 && n <= history.length) Some(history(history.length - n)) else None
+  }
+  private val ctx = new Ctx
 
   def snapshot(): Snapshot[T] =
     Snapshot(partials.toList, minStartIdx, nextIdx, champion, history.toList,
@@ -319,20 +458,33 @@ final class NfaRunner[T](val pattern: Pattern[T], tsFn: T => Long) extends Seria
   /** Latest pending timeout deadline, if any: a watermark at or past it
     * leaves no partial, champion or deferred completion alive (batch
     * driver retirement). */
-  def latestDeadline: Option[Long] = within match {
+  def latestDeadline: Option[Long] = latestDeadlineMs match {
+    case Long.MinValue => None
+    case d => Some(d)
+  }
+
+  /** [[latestDeadline]], `Long.MinValue` for none. */
+  private[pattern] def latestDeadlineMs: Long = within match {
     case Some(w) if partials.nonEmpty || champion.isDefined || deferredCands.nonEmpty =>
       var s = Long.MinValue
-      partials.foreach(p => s = math.max(s, p.startTs))
-      champion.foreach(c => s = math.max(s, c._1.startTs))
-      deferredCands.foreach(c => s = math.max(s, c._1.startTs))
-      Some(s + w)
-    case _ => None
+      var k = 0
+      while (k < partials.length) { s = math.max(s, partials(k).startTs); k += 1 }
+      champion match {
+        case Some((c, _)) => s = math.max(s, c.startTs)
+        case None => ()
+      }
+      var d = deferredCands
+      while (d.nonEmpty) { s = math.max(s, d.head._1.startTs); d = d.tail }
+      s + w
+    case _ => Long.MinValue
   }
 
   /** Graph-mode completions are waiting on a preferred partial. `flush`
     * replays them with exact resume points and `onWatermark` does not, so
     * the two may disagree while any wait. */
   def hasDeferred: Boolean = deferredCands.nonEmpty
+
+  private def lenPref(len: Int): Int = if (shape.preferLongest) -len else len
 
   /** SQL preference order on derivations: earlier start wins; same start →
     * lexicographic on ranks; equal prefix → the LONGER derivation wins
@@ -395,70 +547,20 @@ final class NfaRunner[T](val pattern: Pattern[T], tsFn: T => Long) extends Seria
   private def toMatch(p: Partial[T], endTs: Long): PatternMatch[T] =
     PatternMatch(toBindings(p.consumed), p.startTs, endTs, toEvents(p.consumed))
 
-  // Stages reachable for ENTRY from `s` (inclusive) by epsilon-skipping
-  // optional stages, in preference order; includes the accepting sentinel
-  // `n` when the remainder is fully skippable. Cycle-safe (group loops can
-  // route back through optional stages) and memoized — the walk is pure
-  // graph structure.
-  private val entryChainMemo = scala.collection.mutable.HashMap.empty[Int, List[Int]]
-  private def entryChain(s: Int): List[Int] = entryChainMemo.getOrElseUpdate(s, {
-    val out = ListBuffer.empty[Int]
-    val seen = scala.collection.mutable.HashSet.empty[Int]
-    def go(u: Int): Unit = if (seen.add(u)) {
-      out += u
-      if (u < n && stages(u).optionalEntry) succ(u).foreach(go)
-    }
-    go(s)
-    out.toList
-  })
-
-  // Entry positions following `from` stages, deduped keeping preference order.
-  private def entriesAfter(from: List[Int]): List[Int] = {
-    val seen = scala.collection.mutable.HashSet.empty[Int]
-    from.flatMap(entryChain).filter(u => u < n && seen.add(u))
+  // Flink `until` stop condition of a stage, if any, fires on `e`.
+  private def stops(st: Stage[T], e: T): Boolean = st.until match {
+    case Some(u) => u(e, ctx)
+    case None => false
   }
 
-  private val initialEntries: List[Int] = entriesAfter(starts)
-
-  // Per-stage position-list caches: positions() runs twice per partial per
-  // event (step + liveness check on the successor), and everything except
-  // the loop-self element is a pure function of the stage — memoized lists
-  // make the hot path allocation-free but behavior-identical.
-  private val posEntryMemo = scala.collection.mutable.HashMap.empty[Int, List[(Int, Int)]]
-  private def posEntry(s: Int): List[(Int, Int)] =
-    posEntryMemo.getOrElseUpdate(s, entryChain(s).filter(_ < n).map(u => (u, 0)))
-  private val posProceedMemo = scala.collection.mutable.HashMap.empty[Int, List[(Int, Int)]]
-  private def posProceed(s: Int): List[(Int, Int)] =
-    posProceedMemo.getOrElseUpdate(s, entriesAfter(succ(s)).map(u => (u, 0)))
-
-  private def positions(p: Partial[T]): List[(Int, Int)] =
-    if (p.taken == 0) posEntry(p.stage)
-    else {
-      val proceed =
-        if (p.taken >= stages(p.stage).min) posProceed(p.stage) else Nil
-      if (p.taken < stages(p.stage).max) (p.stage, p.taken) :: proceed else proceed
-    }
-
-  // Lazy bindings view for iterative conditions (simple conditions never
-  // force it, so the common path allocates nothing but the closure).
-  private def ctxOf(p: Partial[T]): PatternContext[T] = new PatternContext[T] {
-    private lazy val b = toBindings(p.consumed)
-    def apply(stage: String): Vector[T] = b.getOrElse(stage, Vector.empty)
-    // history excludes the current candidate (appended AFTER stepping)
-    override def recent(n: Int): Option[T] =
-      if (n >= 1 && n <= history.length) Some(history(history.length - n)) else None
-  }
-
-  private def ignoreAllowed(stage: Int, taken: Int, e: T, ctx: PatternContext[T]): Boolean = {
-    if (stage >= n) return false
-    val st = stages(stage)
+  private def ignoreAllowed(st: Stage[T], taken: Int, e: T): Boolean = {
     // Flink `until` stop condition: a partial INSIDE the loop (taken > 0)
     // may not ignore past a stop event — its only moves are proceeding to
     // a later stage (separate entry positions) or dying. A partial merely
     // WAITING to enter (taken == 0) ignores per the between-stage
     // contiguity; the stop condition governs loop consumption, not the gap
     // before the loop.
-    if (taken > 0 && st.until.exists(_(e, ctx))) return false
+    if (taken > 0 && stops(st, e)) return false
     val c = if (taken == 0) st.contiguity else st.internal
     c match {
       case Contiguity.Strict => false
@@ -467,19 +569,36 @@ final class NfaRunner[T](val pattern: Pattern[T], tsFn: T => Long) extends Seria
     }
   }
 
-  // Can `(stage, taken)` epsilon-reach the accepting state?
-  private def accepting(stage: Int, taken: Int): Boolean =
-    if (stage >= n) true
-    else if (taken == 0) entryChain(stage).contains(n)
-    else taken >= stages(stage).min && succ(stage).exists(entryChain(_).contains(n))
-
   // Keyed by stage NAME: a graph pattern may bind the same variable through
   // several stage occurrences (PERMUTE expansion, repeated variables) — all
-  // merge into one vector in consumption order.
-  private def toBindings(consumed: List[Consumed[T]]): Map[String, Vector[T]] =
-    consumed.reverse
-      .groupBy(c => stages(c.stage).name)
-      .map { case (nm, evs) => nm -> evs.map(_.ev).toVector }
+  // merge into one vector in consumption order. `consumed` is newest first,
+  // so each name's events fill an array of its count from the back.
+  private def toBindings(consumed: List[Consumed[T]]): Map[String, Vector[T]] = {
+    val ids = shape.nameId
+    val left = new Array[Int](shape.names.length)
+    var c = consumed
+    while (c.nonEmpty) { left(ids(c.head.stage)) += 1; c = c.tail }
+    val evs = new Array[Array[Any]](left.length)
+    var id = 0
+    while (id < left.length) {
+      if (left(id) > 0) evs(id) = new Array[Any](left(id))
+      id += 1
+    }
+    c = consumed
+    while (c.nonEmpty) {
+      val id = ids(c.head.stage)
+      left(id) -= 1
+      evs(id)(left(id)) = c.head.ev
+      c = c.tail
+    }
+    var m = Map.empty[String, Vector[T]]
+    id = 0
+    while (id < evs.length) {
+      if (evs(id) != null) m = m.updated(shape.names(id), evs(id).toVector.asInstanceOf[Vector[T]])
+      id += 1
+    }
+    m
+  }
 
   private def toEvents(consumed: List[Consumed[T]]): Vector[(String, T)] =
     consumed.reverseIterator.map(c => (stages(c.stage).name, c.ev)).toVector
@@ -492,8 +611,7 @@ final class NfaRunner[T](val pattern: Pattern[T], tsFn: T => Long) extends Seria
     * completed match that merely could not extend further). */
   def onWatermark(w: Long): (List[PatternMatch[T]], List[PatternTimeout[T]]) =
     within match {
-      case None => (Nil, Nil)
-      case Some(h) =>
+      case Some(h) if anyExpired(w, h) =>
         val champ = champion match {
           case Some((ch, endTs)) if w >= ch.startTs + h =>
             minStartIdx = math.max(minStartIdx, lastIdxOf(ch) + 1)
@@ -518,253 +636,364 @@ final class NfaRunner[T](val pattern: Pattern[T], tsFn: T => Long) extends Seria
             deferredCands = kept.filter(_._1.startIdx >= minStartIdx)
           }
         }
-        val (dead, alive) = partials.partition(p => w >= p.startTs + h)
-        partials = alive
-        // Branch partials may share an identical consumed set (they differ
-        // only in resident NFA position); one timeout per distinct content.
-        (champ ::: defEmit.toList, dead.distinctBy(_.contentKey).map(toTimeout).toList)
+        val dead = partials.filter(p => w >= p.startTs + h)
+        if (dead.nonEmpty) partials.filterInPlace(p => w < p.startTs + h)
+        (champ ::: defEmit.toList, distinctContent(dead).map(toTimeout).toList)
+      case _ => NoOutput
     }
 
-  private val noOutput: (List[PatternMatch[T]], List[PatternTimeout[T]]) = (Nil, Nil)
-  // The initial pseudo-partial's context: no bindings, no history.
-  private val emptyCtx: PatternContext[T] = new PatternContext[T] with Serializable {
-    def apply(stage: String): Vector[T] = Vector.empty
+  // Has the horizon of any partial, the champion or a deferred completion
+  // passed at `w`? Most events retire nothing, and then skip the above.
+  private def anyExpired(w: Long, h: Long): Boolean = {
+    champion match {
+      case Some((ch, _)) if w >= ch.startTs + h => return true
+      case _ => ()
+    }
+    var d = deferredCands
+    while (d.nonEmpty) {
+      if (w >= d.head._1.startTs + h) return true
+      d = d.tail
+    }
+    var k = 0
+    while (k < partials.length) {
+      if (w >= partials(k).startTs + h) return true
+      k += 1
+    }
+    false
   }
 
   // Would an initial entry stage TAKE `e` (the initial step's take test)?
   private def startsMatch(e: T): Boolean = {
-    var ss = initialEntries
-    while (ss.nonEmpty) {
-      val st = stages(ss.head)
-      val stopped = st.until match {
-        case Some(u) => u(e, emptyCtx)
-        case None => false
-      }
-      if (!stopped && st.pred(e, emptyCtx)) return true
-      ss = ss.tail
+    ctx.reset(Nil)
+    val ss = shape.initial
+    var k = 0
+    while (k < ss.length) {
+      val st = stages(ss(k))
+      if (!stops(st, e) && st.pred(e, ctx)) return true
+      k += 1
     }
     false
   }
 
   /** Feed the next event (must be >= all previously fed event times). */
-  def onEvent(e: T): (List[PatternMatch[T]], List[PatternTimeout[T]]) = {
-    // Idle fast path: with no live state, an event no initial entry stage
-    // takes changes nothing but the event index.
-    if (partials.isEmpty && champion.isEmpty && deferredCands.isEmpty &&
-        pattern.historyDepth == 0 && !startsMatch(e)) {
-      nextIdx += 1
-      return noOutput
-    }
-    val t = tsFn(e)
+  def onEvent(e: T): (List[PatternMatch[T]], List[PatternTimeout[T]]) =
+    if (idleSkip(e)) NoOutput else advance(e, tsFn(e))
+
+  /** [[onEvent]] for a caller that has read the event time `t` already. */
+  private[pattern] def onEventAt(e: T, t: Long): (List[PatternMatch[T]], List[PatternTimeout[T]]) =
+    if (idleSkip(e)) NoOutput else advance(e, t)
+
+  // Idle fast path: with no live state, an event no initial entry stage
+  // takes changes nothing but the event index.
+  private def idleSkip(e: T): Boolean = {
+    val skip = partials.isEmpty && champion.isEmpty && deferredCands.isEmpty &&
+      pattern.historyDepth == 0 && !startsMatch(e)
+    if (skip) nextIdx += 1
+    skip
+  }
+
+  private def advance(e: T, t: Long): (List[PatternMatch[T]], List[PatternTimeout[T]]) = {
     val i = nextIdx
     nextIdx += 1
 
     // 1. The event's own time is a watermark: horizons at or before it fire first.
-    val (wmMatches, timeouts) = onWatermark(t)
+    val wm = onWatermark(t)
 
     // 2. Advance every live partial plus the implicit initial state.
-    val matches = ListBuffer.empty[PatternMatch[T]]
-    val next = ArrayBuffer.empty[Partial[T]]
-    val completed = ArrayBuffer.empty[Partial[T]]
-    val seen = scala.collection.mutable.HashSet.empty[(Int, Int, List[(Int, Long)], Set[Int])]
-    def add(p: Partial[T]): Unit = if (seen.add(p.dedupKey)) next += p
-
-    def step(p: Partial[T], isInitial: Boolean): Unit = {
-      val ctx = ctxOf(p)
-      val posns = if (isInitial) initialEntries.map((_, 0)) else positions(p)
-      // Stages whose preceding negative guard fires on THIS event (the gap
-      // between the previous take and a future entry now contains a
-      // forbidden event). Taking a stage on this same event still wins: the
-      // forbidden range is exclusive of the event that anchors the entry.
-      val trippedNow: Set[Int] =
-        if (isInitial || guards.isEmpty) Set.empty
-        else posns.iterator.collect { case (s, 0) => s }.flatMap { s =>
-          guards.get(s) match {
-            case Some(g: Guard.NotFollowed[T]) if g.pred(e, ctx) => Some(s)
-            case Some(g: Guard.NotNext[T])
-              if p.consumed.nonEmpty && i == p.consumed.head.idx + 1 &&
-                g.pred(e, ctx) => Some(s)
-            case _ => None
-          }
-        }.toSet
-      posns.iterator.zipWithIndex.foreach { case ((s, taken), posIdx) =>
-        if (s < n) {
-          val st = stages(s)
-          // TAKE (blocked into a stage whose guard tripped earlier in the
-          // gap, or by the stage's `until` stop condition — a stop event is
-          // never accepted into the loop, first take included)
-          if (taken < st.max && !(taken == 0 && p.tripped(s)) &&
-              !st.until.exists(_(e, ctx)) && st.pred(e, ctx)) {
-            if (!isInitial || i >= minStartIdx) {
-              val newTaken = taken + 1
-              // residency stays at (s, newTaken); positions() derives the
-              // successor entries from the graph, so no single "next stage"
-              // need exist (alternation fan-out, loop-backs)
-              val np = Partial(s, newTaken, Consumed(s, i, e) :: p.consumed,
-                if (isInitial) i else p.startIdx,
-                if (isInitial) t else p.startTs,
-                Set.empty, // tripped resets: a take opens a new gap
-                if (graphMode) p.ranks :+ posIdx else p.ranks)
-              if (accepting(s, newTaken)) completed += np
-              // Keep branches that can still advance alive (emit-and-continue
-              // for trailing loops); fully-final completions are done.
-              if (positions(np).nonEmpty) add(np)
-            }
-          }
-          // IGNORE (not for the initial pseudo-partial: it is always present)
-          if (!isInitial && ignoreAllowed(s, taken, e, ctx)) {
-            val tr = p.tripped ++ trippedNow
-            add(if (s == p.stage && taken == p.taken && tr == p.tripped) p
-                else Partial(s, taken, p.consumed, p.startIdx, p.startTs, tr))
-          }
-        }
-      }
+    next = if (spare != null) spare else new ArrayBuffer[Partial[T]](1)
+    spare = null
+    var k = 0
+    while (k < partials.length) { step(partials(k), e, i); k += 1 }
+    stepInitial(e, i, t)
+    if (indexed > 0) {
+      java.util.Arrays.fill(slots, null)
+      indexed = 0
     }
-
-    partials.foreach(step(_, isInitial = false))
-    step(Partial(0, 0, Nil, i, t), isInitial = true)
 
     // 3. Emit completions per the after-match skip strategy.
-    def emitAllAndPruneBefore(v: String, first: Boolean): Unit = {
-      var bound = Long.MaxValue
-      completed.foreach { p =>
-        matches += toMatch(p, t)
-        val idxs = p.consumed.filter(c => stages(c.stage).name == v).map(_.idx)
-        if (idxs.nonEmpty) bound = math.min(bound, if (first) idxs.min else idxs.max)
-      }
-      if (bound != Long.MaxValue)
-        next.filterInPlace(p => p.startIdx >= bound)
-    }
-
-    // Sequential MATCH_RECOGNIZE semantics under SkipPastLastEvent: the
-    // earliest-starting, then greediest, match wins and everything
-    // overlapping is pruned. A winning completion that can still EXTEND
-    // (trailing greedy loop) is deferred as `champion` — the maximal match
-    // emits when the attempt can no longer grow.
-    def resolveSkipPast(comp: Seq[Partial[T]]): Unit =
-      if (comp.nonEmpty) {
-        val win = comp.minBy(p => (p.startIdx, lenPref(p.consumed.length)))
-        // Deferral applies only when the WINNING completion itself remains
-        // live (trailing-loop/optional-tail position re-added to `next`) —
-        // a completion whose resident position is final emits eagerly, the
-        // sequential first-complete-wins semantics the fixtures pin.
-        val extendable = preferLongest && next.exists(_.dedupKey == win.dedupKey)
-        if (extendable) {
-          champion = Some((win, t))
-          // keep the winning attempt's family + attempts past its current end
-          next.filterInPlace(p =>
-            p.startIdx == win.startIdx || p.startIdx > lastIdxOf(win))
-        } else {
-          matches += toMatch(win, t)
-          next.clear()
-          minStartIdx = i + 1
-        }
-      }
-
-    // Graph-mode after-match resolution: full SQL:2016 preference, for every
-    // skip strategy. The best candidate (previously deferred or completed
-    // now) emits only when no live partial is preferred over it (earlier
-    // start, preferred branch, or a greedy continuation of the candidate
-    // itself); otherwise it waits in `deferredCands`. On emit the sequential
-    // scan resumes at `resumeOf` (PAST LAST ROW → after the match; TO NEXT
-    // ROW → after the match's first row; TO FIRST/LAST v → at v's row —
-    // overlapping later matches are then legal, so pruning keeps every
-    // attempt starting at or after the resume point, not just attempts past
-    // the match's end. Candidate ends only grow (completions arrive in end
-    // order), so the keep-chain below is final.
-    def resolveGraph(): Unit = {
-      var cands = (deferredCands ::: completed.iterator.map(p => (p, t)).toList)
-        .sortWith((a, b) => prefCmp(a._1, b._1) < 0)
-      deferredCands = Nil
-      var waiting = false
-      while (!waiting && cands.nonEmpty) {
-        val best = cands.head
-        if (next.exists(p => prefCmp(p, best._1) <= 0)) {
-          // a preferred derivation is still live: defer the best candidate
-          // and every later candidate the sequential scan could still reach
-          // (start ≥ the previous keep's resume point)
-          val keep = ListBuffer(best)
-          var bound = resumeOf(best._1, strict = false)
-          cands.tail.foreach { c =>
-            if (c._1.startIdx >= bound) {
-              keep += c; bound = resumeOf(c._1, strict = false)
-            }
-          }
-          deferredCands = keep.toList
-          next.filterInPlace(p =>
-            prefCmp(p, best._1) <= 0 ||
-              p.startIdx >= resumeOf(best._1, strict = false))
-          waiting = true
-        } else {
-          matches += toMatch(best._1, best._2)
-          minStartIdx = math.max(minStartIdx, resumeOf(best._1, strict = true))
-          next.filterInPlace(_.startIdx >= minStartIdx)
-          cands = cands.tail.filter(_._1.startIdx >= minStartIdx)
-        }
-      }
-    }
-
-    if (completed.nonEmpty || champion.isDefined ||
+    if ((completed != null && completed.nonEmpty) || champion.isDefined ||
         (graphMode && deferredCands.nonEmpty)) {
-      pattern.skip match {
-        // Graph mode: every single-winner skip strategy routes through the
-        // SQL:2016 sequential resolution; only the resume point differs
-        // (resumeOf). NoSkip keeps the emit-every-completion semantics of
-        // the flat branch below.
-        case AfterMatchSkip.SkipPastLastEvent | AfterMatchSkip.SkipToNext |
-            _: AfterMatchSkip.SkipToFirst | _: AfterMatchSkip.SkipToLast
-            if graphMode => resolveGraph()
-        case AfterMatchSkip.SkipPastLastEvent =>
-          champion match {
-            case Some((ch, chEnd)) =>
-              val ext = completed.filter(c =>
-                c.startIdx == ch.startIdx && c.consumed.length > ch.consumed.length)
-              if (ext.nonEmpty) {
-                val w2 = ext.minBy(c => lenPref(c.consumed.length))
-                champion = Some((w2, t))
-                next.filterInPlace(p =>
-                  p.startIdx == w2.startIdx || p.startIdx > lastIdxOf(w2))
-              } else if (!next.exists(_.startIdx == ch.startIdx)) {
-                // attempt family died: the deferred match is maximal — emit,
-                // then resume after its last row
-                matches += toMatch(ch, chEnd)
-                minStartIdx = math.max(minStartIdx, lastIdxOf(ch) + 1)
-                next.filterInPlace(_.startIdx >= minStartIdx)
-                champion = None
-                resolveSkipPast(completed.filter(_.startIdx >= minStartIdx).toSeq)
-              }
-            // else: champion alive — later-starting completions overlap the
-            // still-growing maximal match and are suppressed
-            case None => resolveSkipPast(completed.toSeq)
-          }
-        case AfterMatchSkip.NoSkip =>
-          completed.foreach { p => matches += toMatch(p, t) }
-        case AfterMatchSkip.SkipToNext =>
-          val starts = completed.map(_.startIdx).toSet
-          completed.groupBy(_.startIdx).toSeq.sortBy(_._1).foreach { case (_, ps) =>
-            val win = ps.minBy(p => lenPref(p.consumed.length))
-            matches += toMatch(win, t)
-          }
-          next.filterInPlace(p => !starts.contains(p.startIdx))
-        case AfterMatchSkip.SkipToFirst(v) => emitAllAndPruneBefore(v, first = true)
-        case AfterMatchSkip.SkipToLast(v) => emitAllAndPruneBefore(v, first = false)
-      }
+      if (completed == null) completed = ArrayBuffer.empty
+      resolve(i, t)
+      completed.clear()
     }
 
     // A waiting partial whose every reachable entry stage is guard-blocked
     // can never advance: drop it now so it doesn't linger as state (matters
     // for unbounded-horizon patterns under NoSkip).
-    if (guards.nonEmpty)
+    if (guarded)
       next.filterInPlace(p =>
-        !(p.taken == 0 && p.consumed.nonEmpty && entryChain(p.stage).forall(p.tripped)))
+        !(p.taken == 0 && p.consumed.nonEmpty && shape.entryChain(p.stage).forall(p.tripped)))
 
     if (pattern.historyDepth > 0) {
       history = history :+ e
       if (history.length > pattern.historyDepth) history = history.takeRight(pattern.historyDepth)
     }
 
+    val old = partials
     partials = next
-    (wmMatches ++ matches.toList, timeouts)
+    next = null
+    old.clear()
+    spare = old
+    val ms = if (matched == null) Nil else matched.toList
+    matched = null
+    if (ms.isEmpty) wm else (wm._1 ::: ms, wm._2)
+  }
+
+  /** One live partial's moves on event `e` (index `i`) at each of its
+    * positions: the loop itself while below its maximum (rank 0), then
+    * the stages it may enter or proceed to, in preference order. */
+  private def step(p: Partial[T], e: T, i: Long): Unit = {
+    ctx.reset(p.consumed)
+    val st = stages(p.stage)
+    val entries =
+      if (p.taken == 0) shape.entryPos(p.stage)
+      else if (p.taken >= st.min) shape.proceedPos(p.stage)
+      else Array.emptyIntArray
+    // Stages whose preceding negative guard fires on THIS event (the gap
+    // between the previous take and a future entry now contains a
+    // forbidden event). Taking a stage on this same event still wins: the
+    // forbidden range is exclusive of the event that anchors the entry.
+    val trippedNow = if (guarded) tripsOf(p, entries, e, i) else Set.empty[Int]
+    var rank = 0
+    if (p.taken > 0 && p.taken < st.max) {
+      visit(p, p.stage, p.taken, rank, trippedNow, e, i)
+      rank += 1
+    }
+    var k = 0
+    while (k < entries.length) {
+      visit(p, entries(k), 0, rank, trippedNow, e, i)
+      rank += 1
+      k += 1
+    }
+  }
+
+  private def tripsOf(p: Partial[T], entries: Array[Int], e: T, i: Long): Set[Int] = {
+    var out = Set.empty[Int]
+    var k = 0
+    while (k < entries.length) {
+      val s = entries(k)
+      shape.guardAt(s) match {
+        case g: Guard.NotFollowed[T] if g.pred(e, ctx) => out += s
+        case g: Guard.NotNext[T]
+          if p.consumed.nonEmpty && i == p.consumed.head.idx + 1 &&
+            g.pred(e, ctx) => out += s
+        case _ => ()
+      }
+      k += 1
+    }
+    out
+  }
+
+  // Partial `p` at position (`s`, `taken`), rank `rank` in its position list.
+  private def visit(p: Partial[T], s: Int, taken: Int, rank: Int,
+      trippedNow: Set[Int], e: T, i: Long): Unit = {
+    val st = stages(s)
+    // TAKE (blocked into a stage whose guard tripped earlier in the gap, or
+    // by the stage's `until` stop condition — a stop event is never
+    // accepted into the loop, first take included). Residency stays at
+    // (s, taken + 1); the structure derives the successor entries from the
+    // graph, so no single "next stage" need exist (alternation fan-out,
+    // loop-backs).
+    if (taken < st.max && !(taken == 0 && p.tripped(s)) && !stops(st, e) &&
+        st.pred(e, ctx))
+      took(Partial(s, taken + 1, Consumed(s, i, e) :: p.consumed, p.startIdx, p.startTs,
+        Set.empty, // tripped resets: a take opens a new gap
+        if (graphMode) p.ranks :+ rank else p.ranks))
+    // IGNORE
+    if (ignoreAllowed(st, taken, e)) {
+      val tr = if (trippedNow.isEmpty) p.tripped else p.tripped ++ trippedNow
+      add(if (s == p.stage && taken == p.taken && tr == p.tripped) p
+          else Partial(s, taken, p.consumed, p.startIdx, p.startTs, tr))
+    }
+  }
+
+  /** The implicit initial state's moves on `e`: a take into each initial
+    * entry stage (it never ignores: it is always present). */
+  private def stepInitial(e: T, i: Long, t: Long): Unit = {
+    ctx.reset(Nil)
+    val ss = shape.initial
+    var k = 0
+    while (k < ss.length) {
+      val s = ss(k)
+      val st = stages(s)
+      if (0 < st.max && !stops(st, e) && st.pred(e, ctx) && i >= minStartIdx)
+        took(Partial(s, 1, Consumed(s, i, e) :: Nil, i, t, Set.empty,
+          if (graphMode) Vector(k) else Vector.empty))
+      k += 1
+    }
+  }
+
+  // A fresh take: a completion if acceptance is reachable; kept while it
+  // can still advance (emit-and-continue for trailing loops), while a
+  // fully-final completion is done.
+  private def took(np: Partial[T]): Unit = {
+    val st = stages(np.stage)
+    val minMet = np.taken >= st.min
+    if (minMet && shape.acceptsAfter(np.stage)) {
+      if (completed == null) completed = ArrayBuffer.empty
+      completed += np
+    }
+    if (np.taken < st.max || (minMet && shape.proceedPos(np.stage).nonEmpty)) add(np)
+  }
+
+  // Into `next`, unless a partial in the same state is already there.
+  private def add(p: Partial[T]): Unit = {
+    if (next.nonEmpty) {
+      if (indexed == 0) index(next(0))
+      if (!index(p)) return
+    }
+    next += p
+  }
+
+  private def index(p: Partial[T]): Boolean = {
+    if (slots == null || 2 * (indexed + 1) > slots.length) {
+      val old = slots
+      slots = new Array[AnyRef](if (old == null) 16 else old.length * 2)
+      indexed = 0
+      if (old != null) old.foreach(q => if (q != null) index(q.asInstanceOf[Partial[T]]))
+    }
+    val mask = slots.length - 1
+    val h0 = p.dedupHash * 0x9E3779B9
+    var h = (h0 ^ (h0 >>> 16)) & mask
+    var q = slots(h)
+    while (q != null) {
+      if (q.asInstanceOf[Partial[T]].sameState(p)) return false
+      h = (h + 1) & mask
+      q = slots(h)
+    }
+    slots(h) = p
+    indexed += 1
+    true
+  }
+
+  private def emitMatch(p: Partial[T], endTs: Long): Unit = {
+    if (matched == null) matched = ListBuffer.empty
+    matched += toMatch(p, endTs)
+  }
+
+  /** Step 3 of [[onEvent]] on event `i` at `t`: `completed` holds the
+    * event's completions, `next` the surviving partials. */
+  private def resolve(i: Long, t: Long): Unit = pattern.skip match {
+    // Graph mode: every single-winner skip strategy routes through the
+    // SQL:2016 sequential resolution; only the resume point differs
+    // (resumeOf). NoSkip keeps the emit-every-completion semantics of
+    // the flat branch below.
+    case AfterMatchSkip.SkipPastLastEvent | AfterMatchSkip.SkipToNext |
+        _: AfterMatchSkip.SkipToFirst | _: AfterMatchSkip.SkipToLast
+        if graphMode => resolveGraph(t)
+    case AfterMatchSkip.SkipPastLastEvent =>
+      champion match {
+        case Some((ch, chEnd)) =>
+          val ext = completed.filter(c =>
+            c.startIdx == ch.startIdx && c.consumed.length > ch.consumed.length)
+          if (ext.nonEmpty) {
+            val w2 = ext.minBy(c => lenPref(c.consumed.length))
+            champion = Some((w2, t))
+            next.filterInPlace(p =>
+              p.startIdx == w2.startIdx || p.startIdx > lastIdxOf(w2))
+          } else if (!next.exists(_.startIdx == ch.startIdx)) {
+            // attempt family died: the deferred match is maximal — emit,
+            // then resume after its last row
+            emitMatch(ch, chEnd)
+            minStartIdx = math.max(minStartIdx, lastIdxOf(ch) + 1)
+            next.filterInPlace(_.startIdx >= minStartIdx)
+            champion = None
+            resolveSkipPast(completed.filter(_.startIdx >= minStartIdx).toSeq, i, t)
+          }
+        // else: champion alive — later-starting completions overlap the
+        // still-growing maximal match and are suppressed
+        case None => resolveSkipPast(completed.toSeq, i, t)
+      }
+    case AfterMatchSkip.NoSkip =>
+      completed.foreach(emitMatch(_, t))
+    case AfterMatchSkip.SkipToNext =>
+      val starts = completed.map(_.startIdx).toSet
+      completed.groupBy(_.startIdx).toSeq.sortBy(_._1).foreach { case (_, ps) =>
+        emitMatch(ps.minBy(p => lenPref(p.consumed.length)), t)
+      }
+      next.filterInPlace(p => !starts.contains(p.startIdx))
+    case AfterMatchSkip.SkipToFirst(v) => emitAllAndPruneBefore(v, first = true, t)
+    case AfterMatchSkip.SkipToLast(v) => emitAllAndPruneBefore(v, first = false, t)
+  }
+
+  private def emitAllAndPruneBefore(v: String, first: Boolean, t: Long): Unit = {
+    var bound = Long.MaxValue
+    completed.foreach { p =>
+      emitMatch(p, t)
+      val idxs = p.consumed.filter(c => stages(c.stage).name == v).map(_.idx)
+      if (idxs.nonEmpty) bound = math.min(bound, if (first) idxs.min else idxs.max)
+    }
+    if (bound != Long.MaxValue)
+      next.filterInPlace(p => p.startIdx >= bound)
+  }
+
+  // Sequential MATCH_RECOGNIZE semantics under SkipPastLastEvent: the
+  // earliest-starting, then greediest, match wins and everything
+  // overlapping is pruned. A winning completion that can still EXTEND
+  // (trailing greedy loop) is deferred as `champion` — the maximal match
+  // emits when the attempt can no longer grow.
+  private def resolveSkipPast(comp: Seq[Partial[T]], i: Long, t: Long): Unit =
+    if (comp.nonEmpty) {
+      val win = comp.minBy(p => (p.startIdx, lenPref(p.consumed.length)))
+      // Deferral applies only when the WINNING completion itself remains
+      // live (trailing-loop/optional-tail position re-added to `next`) —
+      // a completion whose resident position is final emits eagerly, the
+      // sequential first-complete-wins semantics the fixtures pin.
+      val extendable = shape.preferLongest && next.exists(_.sameState(win))
+      if (extendable) {
+        champion = Some((win, t))
+        // keep the winning attempt's family + attempts past its current end
+        next.filterInPlace(p =>
+          p.startIdx == win.startIdx || p.startIdx > lastIdxOf(win))
+      } else {
+        emitMatch(win, t)
+        next.clear()
+        minStartIdx = i + 1
+      }
+    }
+
+  // Graph-mode after-match resolution: full SQL:2016 preference, for every
+  // skip strategy. The best candidate (previously deferred or completed
+  // now) emits only when no live partial is preferred over it (earlier
+  // start, preferred branch, or a greedy continuation of the candidate
+  // itself); otherwise it waits in `deferredCands`. On emit the sequential
+  // scan resumes at `resumeOf` (PAST LAST ROW → after the match; TO NEXT
+  // ROW → after the match's first row; TO FIRST/LAST v → at v's row —
+  // overlapping later matches are then legal, so pruning keeps every
+  // attempt starting at or after the resume point, not just attempts past
+  // the match's end. Candidate ends only grow (completions arrive in end
+  // order), so the keep-chain below is final.
+  private def resolveGraph(t: Long): Unit = {
+    var cands = (deferredCands ::: completed.iterator.map(p => (p, t)).toList)
+      .sortWith((a, b) => prefCmp(a._1, b._1) < 0)
+    deferredCands = Nil
+    var waiting = false
+    while (!waiting && cands.nonEmpty) {
+      val best = cands.head
+      if (next.exists(p => prefCmp(p, best._1) <= 0)) {
+        // a preferred derivation is still live: defer the best candidate
+        // and every later candidate the sequential scan could still reach
+        // (start ≥ the previous keep's resume point)
+        val keep = ListBuffer(best)
+        var bound = resumeOf(best._1, strict = false)
+        cands.tail.foreach { c =>
+          if (c._1.startIdx >= bound) {
+            keep += c; bound = resumeOf(c._1, strict = false)
+          }
+        }
+        deferredCands = keep.toList
+        next.filterInPlace(p =>
+          prefCmp(p, best._1) <= 0 ||
+            p.startIdx >= resumeOf(best._1, strict = false))
+        waiting = true
+      } else {
+        emitMatch(best._1, best._2)
+        minStartIdx = math.max(minStartIdx, resumeOf(best._1, strict = true))
+        next.filterInPlace(_.startIdx >= minStartIdx)
+        cands = cands.tail.filter(_._1.startIdx >= minStartIdx)
+      }
+    }
   }
 
   /** End of input (batch only): deferred matches emit (every live partial
@@ -784,7 +1013,7 @@ final class NfaRunner[T](val pattern: Pattern[T], tsFn: T => Long) extends Seria
     }
     champion = None
     deferredCands = Nil
-    val out = partials.distinctBy(_.contentKey).map(toTimeout).toList
+    val out = distinctContent(partials).map(toTimeout).toList
     partials.clear()
     (ms, out)
   }

@@ -149,6 +149,10 @@ final case class Pattern[T](
       * row-pattern SQL, which has no notFollowedBy). */
     graph: Option[NfaGraph] = None) {
 
+  /** The NFA structure of this instance, built on first use and shared by
+    * all its runners on any thread; a deserialized copy builds its own. */
+  @transient private[pattern] lazy val structure: NfaStructure[T] = new NfaStructure(this)
+
   /** Enable physical `recent(n)` navigation up to offset `n` in conditions. */
   def withHistory(n: Int): Pattern[T] = copy(historyDepth = math.max(historyDepth, n))
 

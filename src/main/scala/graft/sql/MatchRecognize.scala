@@ -554,7 +554,8 @@ object MatchRecognize {
           }
       }
       val iterPreds = navPreds ++ aggPreds ++ prevPreds
-      (r, ctx) => !r.isNullAt(di) && r.getBoolean(di) && iterPreds.forall(_(r, ctx))
+      if (iterPreds.isEmpty) (r, _) => !r.isNullAt(di) && r.getBoolean(di)
+      else (r, ctx) => !r.isNullAt(di) && r.getBoolean(di) && iterPreds.forall(_(r, ctx))
     }
     val preds: Map[String, (Row, graft.pattern.PatternContext[Row]) => Boolean] =
       (defVars ++ spec.altGroups.keys).map(v => v -> stagePred(v)).toMap
@@ -769,16 +770,42 @@ object MatchRecognize {
         if (spec.partitionBy.isEmpty) prepared.repartition(1)
         else prepared.repartition(spec.partitionBy.map(col): _*)
       val numbered = spec.measures.exists(_.fn == "MATCH_NUMBER")
+      val keyFn = partitionKey(partIdxs)
       byKey.sortWithinPartitions(spec.orderBy.map(col): _*).mapPartitions { rows =>
-        val matchNos = scala.collection.mutable.HashMap.empty[Row, Long]
-        def matchNo(k: Row): Long =
+        val matchNos = scala.collection.mutable.HashMap.empty[Any, Long]
+        def matchNo(k: Any): Long =
           if (!numbered) 0L
           else { val no = matchNos.getOrElse(k, 0L) + 1; matchNos.update(k, no); no }
-        NFA.runKeyed(rows, (r: Row) => Row.fromSeq(partIdxs.map(r.get)), tsOf, pattern)(
+        NFA.runKeyed(rows, keyFn, tsOf, pattern)(
           (k, m) => outputRows(m, matchNo(k)),
           (_, _) => Iterator.empty)
       }
     }
+  }
+
+  /** The batch driver's key for a row's PARTITION BY values (columns
+    * `idxs`), equal exactly when the `Row`s of those values are equal: NULL
+    * apart from 'null', NaN equal to NaN, binary by content. One column
+    * keys on the value itself and no column on one constant, so neither
+    * allocates per event; several columns key on a `Row` of their values. */
+  private def partitionKey(idxs: Seq[Int]): Row => Any = idxs.length match {
+    case 0 => _ => ()
+    case 1 => val i = idxs(0); r => keyValue(r.get(i))
+    case _ => r => Row.fromSeq(idxs.map(r.get))
+  }
+
+  private case object NullValue
+  private case object DoubleNaN
+  private case object FloatNaN
+
+  // A partition value as a hash key with `Row`'s equality (`Row.equals`
+  // compares values with `==` but NaN to NaN and binary by content).
+  private def keyValue(v: Any): Any = v match {
+    case null => NullValue
+    case d: Double if d.isNaN => DoubleNaN
+    case f: Float if f.isNaN => FloatNaN
+    case b: Array[Byte] => scala.collection.immutable.ArraySeq.unsafeWrapArray(b)
+    case _ => v
   }
 
   /** Full-statement helper: `SELECT * FROM <table> MATCH_RECOGNIZE (<body>)`. */

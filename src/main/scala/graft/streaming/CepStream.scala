@@ -199,9 +199,9 @@ final class CepProcessor[K, T, O](
       out ++= emitMatch(key, m, seq)
     }
     ready.sortBy(tsFn).foreach { e =>
-      val (ms, tos) = runner.onEvent(e)
-      tos.foreach(t => out ++= emitTimeout(key, t))
-      ms.foreach(numbered)
+      val res = runner.onEvent(e)
+      res._2.foreach(t => out ++= emitTimeout(key, t))
+      res._1.foreach(numbered)
     }
     val (wmMatches, wmTimeouts) = runner.onWatermark(watermarkMs)
     wmMatches.foreach(numbered)

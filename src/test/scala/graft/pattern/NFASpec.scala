@@ -438,4 +438,14 @@ class NFASpec extends AnyFunSuite {
     val (ms, _) = NFA.run(events.iterator, (x: (Int, Ev)) => x._2.ts, lifted)
     assert(ms.size == 1 && ms.head("C").map(_._2.tag) == Vector("c1"))
   }
+  test("branches that reach one NFA state are kept once") {
+    // After `a`, every ignored `x` sends the partial waiting at optional B
+    // on to C as well; each such branch is the state already waiting at C.
+    val p = Pattern.begin[Ev]("A").where(is("a"))
+      .followedBy("B").where(is("b")).optional
+      .followedBy("C").where(is("c"))
+    val r = new NfaRunner[Ev](p, _.ts)
+    evs(Seq("a") ++ Seq.fill(50)("x"): _*).foreach(r.onEvent)
+    assert(r.snapshot().partials.map(q => (q.stage, q.taken)) == List((1, 0), (2, 0)))
+  }
 }

@@ -50,6 +50,17 @@ class MatchRecognizeNullKeySpec extends AnyFunSuite {
     assert(got == Seq(("s", "t", 3L, 4L)))
   }
 
+  test("batch: NaN partition values are one partition, as Row compares them") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    Seq((Double.NaN, 1L, "a"), (Double.NaN, 2L, "b"), (1.0, 3L, "a"), (2.0, 4L, "b"))
+      .toDF("k", "t", "v").withColumn("ts", to_timestamp(from_unixtime($"t" * 60)))
+      .createOrReplaceTempView("nan_key_batch")
+    val got = MatchRecognize.sql(spark, statement("nan_key_batch", "k")).collect()
+      .map(r => (r.getDouble(0).isNaN, r.getLong(1), r.getLong(2))).toSeq
+    assert(got == Seq((true, 1L, 2L)))
+  }
+
   test("streaming: a NULL partition value is not the string 'null'") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
