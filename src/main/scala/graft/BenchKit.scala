@@ -267,7 +267,9 @@ object BenchKit {
     * offset (seconds from run start) and `minis` the interleaved
     * mini-canary readings — together they localize contention per query:
     * over-budget queries whose covering mini reading is inflated land in
-    * `contended` instead of `budget_warn`. */
+    * `contended` instead of `budget_warn`. `builds` are the one-time
+    * artifact build seconds per detail key, in order ([[Harness.warm]]),
+    * and `artifactErrors` the builds that failed. */
   def detailJson(
       results: Map[String, Double],
       errors: collection.Map[String, String],
@@ -277,12 +279,8 @@ object BenchKit {
       canariesMem: Seq[Double],
       t0s: Map[String, Double] = Map.empty,
       minis: Seq[MiniReading] = Seq.empty,
-      ivfBuildSec: Double,
-      mhBuildSec: Double,
-      clfBuildSec: Double = 0.0,
-      pqBuildSec: Double = 0.0,
-      curBuildSec: Double = 0.0,
-      tokBuildSec: Double = 0.0,
+      builds: Seq[(String, Double)],
+      artifactErrors: Seq[(String, String)] = Seq.empty,
       prevTimes: Map[String, Double] = Map.empty,
       sfDir: String): String = {
     val qs = results.toSeq.sortBy(_._1)
@@ -313,14 +311,15 @@ object BenchKit {
       prevTimes.get(k).filter(p => p > 0 && v >= 0)
         .map(p => s"${jstr(k)}:${r3f(v / p)}")
     }.mkString("{", ",", "}")
+    val buildJson = builds.map { case (k, v) => s"${jstr(k)}:${r3f(v)}," }.mkString
+    val artErrJson = artifactErrors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
+      .mkString("{", ",", "}")
     val total = results.values.filter(_ >= 0).sum
     val (warn, contended) = classifyBudget(results, t0s, minis)
     val budgetWarn = warn.map(jstr).mkString("[", ",", "]")
     val contendedJson = contended.map(jstr).mkString("[", ",", "]")
     s"""{"metric":"total","value":${r3f(total)},"unit":"sec",""" +
-      s""""ivf_build_sec":${r3f(ivfBuildSec)},"mh_build_sec":${r3f(mhBuildSec)},""" +
-      s""""clf_build_sec":${r3f(clfBuildSec)},"pq_build_sec":${r3f(pqBuildSec)},""" +
-      s""""cur_build_sec":${r3f(curBuildSec)},"tok_build_sec":${r3f(tokBuildSec)},""" +
+      s"""$buildJson"artifact_errors":$artErrJson,""" +
       s""""canary_ms":$canaryJson,"canary_par_ms":$canaryParJson,"canary_mem_ms":$canaryMemJson,""" +
       s""""mini_canary":$miniJson,""" +
       s""""budget_warn":$budgetWarn,"contended":$contendedJson,""" +

@@ -16,8 +16,8 @@ import org.apache.spark.sql.Dataset
   * the postfix [[Caches.CacheOps.graftCache]]); a session owner calls
   * [[Caches.clear]] between logical jobs to unpersist exactly the blocks
   * the library created — their own caches are untouched, unlike the
-  * `clearCache()` sledgehammer. `graft.Bench` and `graft.Verify` call it
-  * between queries; `CachesSpec` pins that a multi-query session ends with
+  * `clearCache()` sledgehammer. [[graft.Harness.clear]] calls it (through
+  * [[clearAll]]) between the query tools' queries; `CachesSpec` pins that a multi-query session ends with
   * zero persistent graft RDDs after a clear.
   */
 object Caches {
@@ -114,8 +114,8 @@ object Caches {
     * logical jobs when no frame obtained before this call will run
     * another action: a localCheckpoint cannot recompute, so a held frame
     * fails with "checkpoint block not found" after this (unlike caches,
-    * which recompute). `graft.Bench` and `graft.Verify` call it between
-    * queries; a long-lived session owner who keeps results across jobs
+    * which recompute). [[graft.Harness.clear]] calls it between queries;
+    * a long-lived session owner who keeps results across jobs
     * should stick to [[clear]]. */
   def clearAll(): Unit = {
     var rdd = rddReg.poll()

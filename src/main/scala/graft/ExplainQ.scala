@@ -1,20 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Print the formatted physical plan of a declared query —
-  * `runMain graft.ExplainQ <name>`. Plan-shape iteration tool (SURVEY §6:
-  * explain until it's the plan you'd want, not the first that passes).
+  * `runMain graft.ExplainQ <name>`. Plan-shape iteration tool: explain
+  * until it's the plan you'd want, not the first that passes.
   */
 object ExplainQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     args.foreach { name =>
       println(s"===== $name =====")
       println(SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(

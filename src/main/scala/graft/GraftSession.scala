@@ -15,9 +15,10 @@ import org.apache.spark.sql.SparkSession
   * lifetime: a long-lived session running many such queries calls
   * `graft.Caches.clear()` between logical jobs — it unpersists exactly the
   * library-registered caches, leaving the owner's own cached relations
-  * alone (plus `getPersistentRDDs.values.foreach(_.unpersist(false))` for
-  * checkpoint blocks) — exactly as `graft.Bench` and `graft.Verify` do
-  * between queries. The operators cannot unpersist for you: their results
+  * alone. The query tools, which own nothing across queries, call
+  * [[graft.Harness.clear]] between queries: it also releases materialized
+  * checkpoints, every SQL-cached relation and any persisted RDD. The
+  * operators cannot unpersist for you: their results
   * are lazy DataFrames, and dropping the blocks before the caller's
   * terminal action would just recompute the pass per branch.
   */

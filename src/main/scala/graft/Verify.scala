@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,15 +9,7 @@ object Verify {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.quietAuditedWindowWarnings()
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     // Per-query health (rows written or the error), INCLUDING the non-oracle
     // queries (CEP/MR/approx) that have no DuckDB compare — so a regression
@@ -36,14 +27,10 @@ object Verify {
         status(name) = (spark.read.parquet(s"$outDir/$name").count(), null)
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        status(name) = (-1L, Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
+        status(name) = (-1L, Harness.message(e))
       }
-      // per-query working-set caches: don't let 64 queries accumulate
-      // (Caches.clearAll = registered caches + materialized blocks; clearCache = any
-      // other SQL relations; unpersist = RDD-level checkpoint blocks)
-      Caches.clearAll()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      // per-query working-set caches: don't let 229 queries accumulate
+      Harness.clear(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -221,12 +221,17 @@ object NFA {
       extends scala.collection.AbstractIterator[O] {
 
     private final class Live(val runner: NfaRunner[T]) {
-      var scheduled: Long = Long.MinValue // latest deadline queued in `due`
+      var scheduled: Long = Long.MinValue // latest deadline queued in `dueAt`
     }
     private val live = mutable.HashMap.empty[K, Live]
     // (deadline, key) in nondecreasing deadline order: a runner's latest
     // deadline grows only when a partial starts, at the current event time.
-    private val due = mutable.Queue.empty[(Long, K)]
+    // Two parallel rings (capacity a power of two), so queueing a deadline
+    // neither boxes it nor builds a tuple.
+    private var dueAt = new Array[Long](16)
+    private var dueKey = new Array[AnyRef](16)
+    private var dueHead = 0
+    private var dueSize = 0
     // An idle runner, fed the events of keys that have none.
     private var spare: NfaRunner[T] = null
     private val out = mutable.Queue.empty[O]
@@ -258,18 +263,40 @@ object NFA {
       val d = l.runner.latestDeadlineMs
       if (d > l.scheduled) {
         l.scheduled = d
-        due.enqueue((d, k))
+        if (dueSize == dueAt.length) growDue()
+        val i = (dueHead + dueSize) & (dueAt.length - 1)
+        dueAt(i) = d
+        dueKey(i) = k.asInstanceOf[AnyRef]
+        dueSize += 1
       }
+    }
+
+    private def growDue(): Unit = {
+      val cap = dueAt.length
+      val at = new Array[Long](cap * 2)
+      val ks = new Array[AnyRef](cap * 2)
+      var j = 0
+      while (j < cap) {
+        val i = (dueHead + j) & (cap - 1)
+        at(j) = dueAt(i)
+        ks(j) = dueKey(i)
+        j += 1
+      }
+      dueAt = at
+      dueKey = ks
+      dueHead = 0
     }
 
     private def step(): Unit =
       if (events.hasNext) {
         val e = events.next()
         val t = tsFn(e)
-        while (due.nonEmpty && due.head._1 <= t) {
-          val dk = due.dequeue()
-          val d = dk._1
-          val k = dk._2
+        while (dueSize > 0 && dueAt(dueHead) <= t) {
+          val d = dueAt(dueHead)
+          val k = dueKey(dueHead).asInstanceOf[K]
+          dueKey(dueHead) = null
+          dueHead = (dueHead + 1) & (dueAt.length - 1)
+          dueSize -= 1
           live.getOrElse(k, null) match {
             case l: Live if l.scheduled == d && !l.runner.hasDeferred =>
               emit(k, l.runner.onWatermark(t))
@@ -297,7 +324,9 @@ object NFA {
       } else {
         live.foreach { case (k, l) => emit(k, l.runner.flush()) }
         live.clear()
-        due.clear()
+        dueAt = null
+        dueKey = null
+        dueSize = 0
         done = true
       }
   }

@@ -7,6 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * detail-JSON shape the driver and judge read. */
 class BenchKitSpec extends AnyFunSuite {
 
+  /** One figure per build key of the artifact table, in table order. */
+  private val builds = Harness.Artifacts.all.flatMap(_.key).distinct
+    .zip(Seq(8.1, 6.0, 1.5, 2.25, 0.5, 3.0))
+
   test("canary trio + mini: positive; divergence is ADVISORY only (a " +
     "wall-clock bound would fail precisely in the contended host windows " +
     "the canaries exist to label — r14 ADVICE)") {
@@ -44,7 +48,7 @@ class BenchKitSpec extends AnyFunSuite {
       canaries = Seq(31.0, 30.5, 95.25),
       canariesPar = Seq(40.0, 41.0, 160.5),
       canariesMem = Seq(50.0, 52.0, 201.0),
-      ivfBuildSec = 8.1, mhBuildSec = 6.0, sfDir = "/data/sf0.1")
+      builds = builds, sfDir = "/data/sf0.1")
     val qs = BenchKit.parseDetailQueries(detail)
     assert(qs == Map("q_a" -> 1.234, "q_b" -> -1.0, "q_c" -> 6.5))
     assert(BenchKit.parseDetailQueries("{\"no_queries\":1}") == Map.empty)
@@ -59,7 +63,7 @@ class BenchKitSpec extends AnyFunSuite {
       canaries = Seq(31.0, 30.5, 95.25),
       canariesPar = Seq(40.0, 41.0, 160.5),
       canariesMem = Seq(50.0, 52.0, 201.0),
-      ivfBuildSec = 8.1, mhBuildSec = 6.0,
+      builds = builds,
       prevTimes = Map("q_a" -> 0.5, "q_b" -> 1.0, "q_d" -> 2.0),
       sfDir = "/data/sf0.1")
     // vs_prev_committed (r15 verdict #4): the per-query ratio against the
@@ -85,6 +89,24 @@ class BenchKitSpec extends AnyFunSuite {
     // a well-formed single JSON object: balanced braces, one line
     assert(!detail.contains("\n"))
     assert(detail.count(_ == '{') == detail.count(_ == '}'))
+  }
+
+  test("detailJson build fields: the six *_build_sec keys in their order, " +
+    "then artifact_errors, empty or naming the failed build") {
+    assert(builds.map(_._1) == Seq("ivf_build_sec", "mh_build_sec",
+      "clf_build_sec", "pq_build_sec", "cur_build_sec", "tok_build_sec"))
+    def detail(artifactErrors: Seq[(String, String)]) = BenchKit.detailJson(
+      results = Map("q_a" -> 1.0), errors = Map.empty[String, String],
+      reruns = Map.empty[String, BenchKit.Rerun],
+      canaries = Seq(1.0), canariesPar = Seq(1.0), canariesMem = Seq(1.0),
+      builds = builds, artifactErrors = artifactErrors, sfDir = "/data/sf0.1")
+    val fields = "\"ivf_build_sec\":8.100,\"mh_build_sec\":6.000," +
+      "\"clf_build_sec\":1.500,\"pq_build_sec\":2.250," +
+      "\"cur_build_sec\":0.500,\"tok_build_sec\":3.000,\"artifact_errors\":"
+    assert(detail(Seq.empty).contains(fields + "{}"))
+    val failed = detail(Seq("pq_codebooks" -> "IllegalStateException: no \"pq\""))
+    assert(failed.contains(fields + "{\"pq_codebooks\":\"IllegalStateException: no \\\"pq\\\"\"}"))
+    assert(failed.count(_ == '{') == failed.count(_ == '}'))
   }
 
   test("contention localization: nearest mini reading per query start " +
@@ -193,7 +215,7 @@ class BenchKitSpec extends AnyFunSuite {
       canaries = Seq(400.0), canariesPar = Seq(410.0), canariesMem = Seq(420.0),
       t0s = Map("q_hot" -> 44.0, "q_slow" -> 2.0),
       minis = minis,
-      ivfBuildSec = 1.0, mhBuildSec = 1.0, sfDir = "/data/sf0.1")
+      builds = builds, sfDir = "/data/sf0.1")
     assert(detail.contains(
       "\"mini_canary\":[{\"t_s\":0.000,\"ms\":50.000,\"mem_ms\":20.000}," +
         "{\"t_s\":45.000,\"ms\":130.000,\"mem_ms\":21.000}]"))
