@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.Caches.CacheOps
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Distributed connected components over an edge table — the cluster-
   * resolution stage of a dedup pipeline: LSH/MinHash emits near-duplicate
@@ -63,8 +64,9 @@ object Components {
     * data volume does; a ≤500k-edge tail is ≤8 MB in the driver and solves
     * in milliseconds). At 100 TB the LSH pair graph starts huge, the star
     * rounds shrink it geometrically, and the last O(log n) rounds — all
-    * latency, no data — collapse into one. Bounded by construction: the
-    * collect fires only when the measured edge count is under the gate. */
+    * latency, no data — collapse into one. Bounded by construction: CC's
+    * collect fires only when its loop's measured edge count is under the
+    * gate, every other operator's tail goes through [[collectAtMost]]. */
   val LocalSolveThreshold = 500000L
 
   /** Materialize a frame NOW and truncate its lineage — the round-loop
@@ -86,6 +88,61 @@ object Components {
     * accumulating until GC in a long-lived session. */
   private def materialize(df: DataFrame): DataFrame =
     graft.Caches.materialize(df)
+
+  /** The driver-tail gate: the rows of a frame of two `LongType` columns
+    * when it holds at most `n` of them, read with ONE bounded collect, so
+    * the driver never holds more than `n + 1` rows whatever the input.
+    * `None` keeps the distributed path: the frame holds more rows, `n` is
+    * 0 (the "always distributed" switch the tests use), or a column is not
+    * 64-bit (exotic key types keep the distributed path so the output
+    * schema never shifts).
+    *
+    * Unit: [[LocalSolveThreshold]] counts DISTINCT UNDIRECTED EDGES, and a
+    * caller passes it times the rows its frame holds per edge — 1 for an
+    * [[undirectedEdges]] list, 2 for a symmetrized list (both directions),
+    * 2 for a label table restricted to edge endpoints, 4 for a per-node
+    * label table that may also label non-endpoints. */
+  private def collectAtMost(df: DataFrame, n: Long): Option[Array[(Long, Long)]] =
+    if (n <= 0 || !df.schema.fields.forall(_.dataType == LongType)) None
+    else {
+      val rows = df.limit(Math.toIntExact(n + 1)).collect()
+      if (rows.length > n) None
+      else Some(rows.map(r => (r.getLong(0), r.getLong(1))))
+    }
+
+  /** Distinct undirected edges `(u, v)` with `u < v` of a two-column pair
+    * table: self-loops dropped, each pair kept once whatever its
+    * orientation or multiplicity. */
+  private def undirectedEdges(pairs: DataFrame): DataFrame = {
+    val (a, b) = (col("a"), col("b"))
+    pairs.toDF("a", "b").filter(a =!= b)
+      .select(least(a, b).as("u"), greatest(a, b).as("v"))
+      .distinct()
+  }
+
+  /** A label table's rows as a driver map, or `None` when a node has two
+    * label rows: those multiply through the distributed joins, which a map
+    * cannot represent, so such inputs keep the distributed path. */
+  private def labelMap(rows: Array[(Long, Long)]): Option[Map[Long, Long]] =
+    Some(rows.toMap).filter(_.size == rows.length)
+
+  /** Driver union-find whose roots are their sets' minimum ids, the roots
+    * [[connectedComponents]] elects: a union attaches the larger root under
+    * the smaller, so no re-rooting sweep is needed. */
+  private final class MinRootUnionFind {
+    private val parent = new java.util.HashMap[Long, Long]()
+    def find(x0: Long): Long = {
+      var x = x0
+      while (parent.getOrDefault(x, x) != x) x = parent.getOrDefault(x, x)
+      var y = x0 // path compression
+      while (y != x) { val p = parent.get(y); parent.put(y, x); y = p }
+      x
+    }
+    def union(a: Long, b: Long): Unit = {
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent.put(rb, ra) else if (rb < ra) parent.put(ra, rb)
+    }
+  }
 
   /** [[connectedComponents]] with a per-round observer: `roundLog(round,
     * workingSetEdges)` after each round — what `ScaleProbe` prints and
@@ -202,24 +259,12 @@ object Components {
     // star-forest edge shape (child → component-min) the distributed fixed
     // point produces, so the closing node→root projection is shared.
     def localSolve(e: DataFrame): DataFrame = {
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x0: Long): Long = {
-        var x = x0
-        while (parent.getOrDefault(x, x) != x) x = parent.getOrDefault(x, x)
-        var y = x0 // path compression
-        while (y != x) { val p = parent.get(y); parent.put(y, x); y = p }
-        x
-      }
+      val uf = new MinRootUnionFind
       val rows = e.select($"u", $"v").collect()
-      rows.foreach { r =>
-        val (ru, rv) = (find(r.getLong(0)), find(r.getLong(1)))
-        // attach the larger root under the smaller: every set's root stays
-        // its minimum, so no re-rooting sweep is needed
-        if (ru < rv) parent.put(rv, ru) else if (rv < ru) parent.put(ru, rv)
-      }
+      rows.foreach(r => uf.union(r.getLong(0), r.getLong(1)))
       val star = rows.iterator
         .flatMap(r => Iterator(r.getLong(0), r.getLong(1)))
-        .map(x => (x, find(x)))
+        .map(x => (x, uf.find(x)))
         .filter { case (x, root) => x != root }
         .toArray.distinct
       s.createDataset(star.toSeq).toDF("u", "v")
@@ -293,8 +338,8 @@ object Components {
     * Three shuffles total (degree count, wedge self-join, closure join),
     * all on edge keys; triangle identity is orientation-independent, so
     * the output is a pure function of the undirected graph. A working set
-    * at or below [[LocalSolveThreshold]] distinct edges instead runs the
-    * identical compact-forward enumeration in the driver (r16 — the
+    * that passes [[collectAtMost]] instead runs the identical compact-
+    * forward enumeration in the driver (r16 — the
     * [[connectedComponents]]/[[labelPropagation]] tail-latency hybrid
     * applied to the remaining multi-shuffle graph diagnostic: the wedge
     * self-join + closure join are 3 shuffle stages of round-trip latency,
@@ -308,17 +353,10 @@ object Components {
       pairs: DataFrame, localSolveThreshold: Long): DataFrame = {
     val s = pairs.sparkSession
     import s.implicits._
-    val e0 = pairs.toDF("u", "v").filter($"u" =!= $"v")
-      .select(least($"u", $"v").as("u"), greatest($"u", $"v").as("v"))
-      .distinct()
-      // the gate count + (distributed path) the degree pass and the
-      // orientation join all read this once
-      .graftCache()
-    val longKeys = e0.schema.fields
-      .forall(_.dataType == org.apache.spark.sql.types.LongType)
-    if (longKeys && localSolveThreshold > 0 &&
-        e0.count() <= localSolveThreshold) {
-      val es = e0.as[(Long, Long)].collect()
+    // the gate + (distributed path) the degree pass and the orientation
+    // join all read this once
+    val e0 = undirectedEdges(pairs).graftCache()
+    collectAtMost(e0, localSolveThreshold).map { es =>
       // identical compact-forward enumeration: orient each edge from its
       // (degree, id)-smaller endpoint, enumerate wedges at the source in
       // that order, close with a hash probe of the oriented edge set
@@ -356,31 +394,32 @@ object Components {
           i += 1
         }
       }
-      return s.createDataset(nTri.toSeq).toDF("node", "n_tri")
+      s.createDataset(nTri.toSeq).toDF("node", "n_tri")
+    }.getOrElse {
+      val deg = e0.select(explode(array($"u", $"v")).as("n"))
+        .groupBy($"n").agg(count(lit(1)).as("d"))
+      // both joins are on edge endpoints against the (node, degree) table —
+      // broadcast-sized only for small graphs, so left as shuffle joins
+      val e = e0
+        .join(deg.select($"n".as("u"), $"d".as("du")), "u")
+        .join(deg.select($"n".as("v"), $"d".as("dv")), "v")
+        .select(
+          when(struct($"du", $"u") < struct($"dv", $"v"),
+            struct($"u".as("s"), $"v".as("t"), $"dv".as("dt")))
+            .otherwise(struct($"v".as("s"), $"u".as("t"), $"du".as("dt"))).as("x"))
+        .select($"x.s".as("s"), $"x.t".as("t"), $"x.dt".as("dt"))
+        .transform(materialize) // 3 plan branches (two wedge sides + the
+      // closure probe) each re-nest the caller's pair lineage otherwise
+      val wedges = e.as("a").join(e.as("b"),
+          col("a.s") === col("b.s") &&
+            struct(col("a.dt"), col("a.t")) < struct(col("b.dt"), col("b.t")))
+        .select(col("a.s").as("va"), col("a.t").as("vb"), col("b.t").as("vc"))
+      // wedge (vb, vc) has vb ≺ vc in orientation order, so the closing edge —
+      // if the undirected edge {vb, vc} exists — is oriented vb → vc
+      val tri = wedges.join(e.select($"s".as("vb"), $"t".as("vc")), Seq("vb", "vc"))
+      tri.select(explode(array($"va", $"vb", $"vc")).as("node"))
+        .groupBy($"node").agg(count(lit(1)).as("n_tri"))
     }
-    val deg = e0.select(explode(array($"u", $"v")).as("n"))
-      .groupBy($"n").agg(count(lit(1)).as("d"))
-    // both joins are on edge endpoints against the (node, degree) table —
-    // broadcast-sized only for small graphs, so left as shuffle joins
-    val e = e0
-      .join(deg.select($"n".as("u"), $"d".as("du")), "u")
-      .join(deg.select($"n".as("v"), $"d".as("dv")), "v")
-      .select(
-        when(struct($"du", $"u") < struct($"dv", $"v"),
-          struct($"u".as("s"), $"v".as("t"), $"dv".as("dt")))
-          .otherwise(struct($"v".as("s"), $"u".as("t"), $"du".as("dt"))).as("x"))
-      .select($"x.s".as("s"), $"x.t".as("t"), $"x.dt".as("dt"))
-      .transform(materialize) // 3 plan branches (two wedge sides + the
-    // closure probe) each re-nest the caller's pair lineage otherwise
-    val wedges = e.as("a").join(e.as("b"),
-        col("a.s") === col("b.s") &&
-          struct(col("a.dt"), col("a.t")) < struct(col("b.dt"), col("b.t")))
-      .select(col("a.s").as("va"), col("a.t").as("vb"), col("b.t").as("vc"))
-    // wedge (vb, vc) has vb ≺ vc in orientation order, so the closing edge —
-    // if the undirected edge {vb, vc} exists — is oriented vb → vc
-    val tri = wedges.join(e.select($"s".as("vb"), $"t".as("vc")), Seq("vb", "vc"))
-    tri.select(explode(array($"va", $"vb", $"vc")).as("node"))
-      .groupBy($"node").agg(count(lit(1)).as("n_tri"))
   }
 
   /** LOCAL CLUSTERING COEFFICIENT per node — cc(v) = 2·tri(v) /
@@ -399,10 +438,7 @@ object Components {
   def clusteringCoefficients(pairs: DataFrame): DataFrame = {
     val s = pairs.sparkSession
     import s.implicits._
-    val e0 = pairs.toDF("u", "v").filter($"u" =!= $"v")
-      .select(least($"u", $"v").as("u"), greatest($"u", $"v").as("v"))
-      .distinct()
-    val deg = e0.select(explode(array($"u", $"v")).as("node"))
+    val deg = undirectedEdges(pairs).select(explode(array($"u", $"v")).as("node"))
       .groupBy($"node").agg(count(lit(1)).as("degree"))
     deg.filter($"degree" >= 2)
       .join(triangleCounts(pairs), Seq("node"), "left")
@@ -438,8 +474,8 @@ object Components {
     * task. Rank mass is unnormalized (no global divide), so no driver-side
     * action at all.
     *
-    * A working set at or below [[LocalSolveThreshold]] edges instead runs
-    * the identical integer power iteration in the driver (r16 — the
+    * A working set that passes [[collectAtMost]] instead runs the
+    * identical integer power iteration in the driver (r16 — the
     * [[connectedComponents]]/[[labelPropagation]] tail-latency hybrid:
     * each round is 2 shuffle stages of round-trip latency; `iters` local
     * sweeps over a ≤8 MB edge list run in milliseconds. Exact in Long
@@ -460,19 +496,15 @@ object Components {
     val s = pairs.sparkSession
     import s.implicits._
     val p = pairs.toDF("a", "b")
-    // cached: deg, ed, AND the rank seed all derive from it — without
+    // cached: the gate, deg, ed AND the rank seed all read it — without
     // this the upstream pair pipeline (LSH candidates→verify for the
     // dedup graph) replays once per consumer
     val edges = p.select($"a".as("u"), $"b".as("v"))
       .union(p.select($"b".as("u"), $"a".as("v")))
       .graftCache()
-    val longKeys = edges.schema.fields
-      .forall(_.dataType == org.apache.spark.sql.types.LongType)
-    if (longKeys && localSolveThreshold > 0 &&
-        edges.count() <= 2L * localSolveThreshold) {
+    collectAtMost(edges, 2L * localSolveThreshold).map { es =>
       // directed rows WITH multiplicity — deg counts rows, and a duplicate
       // input pair must contribute twice, exactly as the distributed join
-      val es = edges.as[(Long, Long)].collect()
       val deg = new scala.collection.mutable.HashMap[Long, Long]()
       es.foreach { case (u, _) => deg.update(u, deg.getOrElse(u, 0L) + 1L) }
       var rank: scala.collection.Map[Long, Long] =
@@ -486,21 +518,22 @@ object Components {
         }
         rank = next.map { case (n, c) => n -> (c + PrBaseMicro) }
       }
-      return s.createDataset(rank.toSeq).toDF("node", "rank_micro")
+      s.createDataset(rank.toSeq).toDF("node", "rank_micro")
+    }.getOrElse {
+      val deg = edges.groupBy($"u").agg(count(lit(1)).as("d"))
+      // iterated `iters` times: materialized (not just cached) so each
+      // round's plan references a constant-size leaf — see [[materialize]]
+      val ed = materialize(edges.join(deg, "u"))
+      var ranks = deg.select($"u".as("node"), lit(1000000L).as("rank"))
+      for (_ <- 1 to iters) {
+        ranks = ed.join(ranks.withColumnRenamed("node", "u"), "u")
+          .select($"v".as("node"),
+            expr(s"(rank * $PrDampPct) div (100 * d)").as("c"))
+          .groupBy($"node")
+          .agg((sum($"c") + lit(PrBaseMicro)).as("rank"))
+      }
+      ranks.select($"node", $"rank".cast("long").as("rank_micro"))
     }
-    val deg = edges.groupBy($"u").agg(count(lit(1)).as("d"))
-    // iterated `iters` times: materialized (not just cached) so each
-    // round's plan references a constant-size leaf — see [[materialize]]
-    val ed = materialize(edges.join(deg, "u"))
-    var ranks = deg.select($"u".as("node"), lit(1000000L).as("rank"))
-    for (_ <- 1 to iters) {
-      ranks = ed.join(ranks.withColumnRenamed("node", "u"), "u")
-        .select($"v".as("node"),
-          expr(s"(rank * $PrDampPct) div (100 * d)").as("c"))
-        .groupBy($"node")
-        .agg((sum($"c") + lit(PrBaseMicro)).as("rank"))
-    }
-    ranks.select($"node", $"rank".cast("long").as("rank_micro"))
   }
 
   /** SYNCHRONOUS LABEL PROPAGATION (Raghavan et al. 2007, made
@@ -525,11 +558,10 @@ object Components {
     * (node, label) count, and ONE combinable argmax `max(struct(cnt,
     * −label))` per node (no per-node window, no sort); a hub's million
     * neighbors collapse in partial aggregation. Round count bounds total
-    * work at `rounds` shuffles of the edge list. A working set at or
-    * below [[LocalSolveThreshold]] edges instead runs the identical
-    * update rule in the driver (r15 — the [[connectedComponents]] hybrid:
-    * the last rounds of any shrinking iterative operator are all latency,
-    * no data).
+    * work at `rounds` shuffles of the edge list. A working set that passes
+    * [[collectAtMost]] instead runs the identical update rule in the
+    * driver (r15 — the [[connectedComponents]] hybrid: the last rounds of
+    * any shrinking iterative operator are all latency, no data).
     *
     * @param pairs two long columns `(src, dst)`, one row per undirected
     *              edge, self-loops/duplicates assumed pre-filtered.
@@ -549,14 +581,7 @@ object Components {
     * edge graph is ≤8 MB in the driver and `rounds` local sweeps run in
     * milliseconds, with the IDENTICAL update rule (most frequent neighbor
     * label, ties to the smallest). At 100 TB the edge list is far over the
-    * gate and the Pregel rounds run distributed, unchanged. The gate fires
-    * on a measured edge COUNT of the already-checkpointed edge list (one
-    * cheap action) — the list is SYMMETRIZED (2 directed rows per
-    * undirected edge), so the comparison is against 2× the threshold to
-    * keep the gate's unit consistent with [[refineOf]]'s distinct-
-    * undirected-edge gate (r15 ADVICE) — and only for 64-bit node ids;
-    * exotic key types keep the distributed path so the output schema
-    * never shifts. */
+    * gate and the Pregel rounds run distributed, unchanged. */
   private[graft] def labelPropagation(
       pairs: DataFrame, rounds: Int, localSolveThreshold: Long): DataFrame = {
     val s = pairs.sparkSession
@@ -568,11 +593,7 @@ object Components {
     val edges = materialize(
       p.select($"a".as("u"), $"b".as("v"))
         .union(p.select($"b".as("u"), $"a".as("v"))))
-    val longKeys = edges.schema.fields
-      .forall(_.dataType == org.apache.spark.sql.types.LongType)
-    if (longKeys && localSolveThreshold > 0 &&
-        edges.count() <= 2L * localSolveThreshold) {
-      val es = edges.as[(Long, Long)].collect()
+    collectAtMost(edges, 2L * localSolveThreshold).map { es =>
       val adj = new scala.collection.mutable.HashMap[
         Long, scala.collection.mutable.ArrayBuffer[Long]]()
       es.foreach { case (u, v) =>
@@ -594,18 +615,19 @@ object Components {
           v -> bestL
         }.toMap
       }
-      return s.createDataset(lab.toSeq).toDF("node", "label")
+      s.createDataset(lab.toSeq).toDF("node", "label")
+    }.getOrElse {
+      var labels = edges.select($"u".as("node")).distinct()
+        .select($"node", $"node".as("label"))
+      for (_ <- 1 to rounds) {
+        labels = edges.join(labels.withColumnRenamed("node", "u"), "u")
+          .groupBy($"v", $"label").agg(count(lit(1)).as("cnt"))
+          .groupBy($"v")
+          .agg(max(struct($"cnt", (-$"label").as("nl"))).as("pick"))
+          .select($"v".as("node"), (-$"pick.nl").as("label"))
+      }
+      labels
     }
-    var labels = edges.select($"u".as("node")).distinct()
-      .select($"node", $"node".as("label"))
-    for (_ <- 1 to rounds) {
-      labels = edges.join(labels.withColumnRenamed("node", "u"), "u")
-        .groupBy($"v", $"label").agg(count(lit(1)).as("cnt"))
-        .groupBy($"v")
-        .agg(max(struct($"cnt", (-$"label").as("nl"))).as("pick"))
-        .select($"v".as("node"), (-$"pick.nl").as("label"))
-    }
-    labels
   }
 
   /** Integer MODULARITY of a community assignment over an undirected pair
@@ -626,10 +648,9 @@ object Components {
     * reduced per node then per community for d_c — every shuffle on a
     * community/node key, the per-community table bounded by community
     * count; the 1-row m aggregate crossJoins onto it (bounded,
-    * allowlisted). Output is ONE summary row. A working set at or below
-    * [[LocalSolveThreshold]] distinct edges (with a node-bounded label
-    * table — every caller passes a per-node assignment over the same
-    * graph) instead runs the identical integer fold in the driver (r16 —
+    * allowlisted). Output is ONE summary row. A working set that passes
+    * [[collectAtMost]] (edges and labels) instead runs the identical
+    * integer fold in the driver (r16 —
     * the [[connectedComponents]]/[[labelPropagation]] tail-latency hybrid
     * applied to the last graph operator without it: the two label joins +
     * degree pass + fold are ~8 shuffle/stage round trips Θ(latency) each,
@@ -648,84 +669,76 @@ object Components {
     val s = pairs.sparkSession
     import s.implicits._
     val dec = "CAST(4 AS DECIMAL(38,0))"
-    val e = pairs.toDF("a", "b").filter($"a" =!= $"b")
-      .select(least($"a", $"b").as("u"), greatest($"a", $"b").as("v"))
-      .distinct().graftCache() // gate + m count + label join + degree pass
+    val e = undirectedEdges(pairs)
+      .graftCache() // gate + m count + label join + degree pass
     val lab = labels.toDF("node", "label").graftCache() // three join sides
-    val longKeys = (e.schema.fields ++ lab.schema.fields)
-      .forall(_.dataType == org.apache.spark.sql.types.LongType)
-    if (longKeys && localSolveThreshold > 0 &&
-        e.count() <= localSolveThreshold &&
-        lab.count() <= 4L * localSolveThreshold) {
-      val es = e.as[(Long, Long)].collect()
-      val labRows = lab.as[(Long, Long)].collect()
-      val lm = labRows.toMap
-      // a node with TWO label rows multiplies through the distributed
-      // joins; a driver map cannot represent that — such (fixture-only)
-      // inputs keep the distributed path
-      if (lm.size == labRows.length) {
-        val m = es.length.toLong
-        val deg = new scala.collection.mutable.HashMap[Long, Long]()
-        es.foreach { case (u, v) =>
-          deg.update(u, deg.getOrElse(u, 0L) + 1L)
-          deg.update(v, deg.getOrElse(v, 0L) + 1L)
-        }
-        // d_c: degrees of LABELED nodes summed per community (the dc inner
-        // join); e_c: edges whose BOTH endpoints carry the same label
-        val dSum = new scala.collection.mutable.HashMap[Long, Long]()
-        deg.foreach { case (n, d) =>
-          lm.get(n).foreach(l => dSum.update(l, dSum.getOrElse(l, 0L) + d))
-        }
-        var eSum = BigInt(0)
-        es.foreach { case (u, v) =>
-          (lm.get(u), lm.get(v)) match {
-            case (Some(lu), Some(lv)) if lu == lv => eSum += 1
-            case _ => ()
-          }
-        }
-        val d2Sum = dSum.valuesIterator
-          .map(d => BigInt(d) * BigInt(d)).foldLeft(BigInt(0))(_ + _)
-        val nComm = dSum.size.toLong
-        val q: Option[Long] =
-          if (m == 0L) Some(0L) // the when(m === 0) arm
-          else if (nComm == 0L) None // empty fold: NULL sums, NULL Q
-          else {
-            val bm = BigInt(m)
-            // shifted numerator ≥ 0 always (Q ≥ −1, d2_sum ≤ 4m²), so
-            // BigInt / == the truncating Decimal div
-            val shifted = (4 * bm * eSum - d2Sum + 4 * bm * bm) * 10000
-            Some((shifted / (4 * bm * bm)).toLong - 10000L)
-          }
-        return s.createDataset(Seq((nComm, m, q)))
-          .toDF("n_communities", "n_edges", "q_modularity_bp")
+    (for {
+      es <- collectAtMost(e, localSolveThreshold)
+      labRows <- collectAtMost(lab, 4L * localSolveThreshold)
+      lm <- labelMap(labRows)
+    } yield {
+      val m = es.length.toLong
+      val deg = new scala.collection.mutable.HashMap[Long, Long]()
+      es.foreach { case (u, v) =>
+        deg.update(u, deg.getOrElse(u, 0L) + 1L)
+        deg.update(v, deg.getOrElse(v, 0L) + 1L)
       }
+      // d_c: degrees of LABELED nodes summed per community (the dc inner
+      // join); e_c: edges whose BOTH endpoints carry the same label
+      val dSum = new scala.collection.mutable.HashMap[Long, Long]()
+      deg.foreach { case (n, d) =>
+        lm.get(n).foreach(l => dSum.update(l, dSum.getOrElse(l, 0L) + d))
+      }
+      var eSum = BigInt(0)
+      es.foreach { case (u, v) =>
+        (lm.get(u), lm.get(v)) match {
+          case (Some(lu), Some(lv)) if lu == lv => eSum += 1
+          case _ => ()
+        }
+      }
+      val d2Sum = dSum.valuesIterator
+        .map(d => BigInt(d) * BigInt(d)).foldLeft(BigInt(0))(_ + _)
+      val nComm = dSum.size.toLong
+      val q: Option[Long] =
+        if (m == 0L) Some(0L) // the when(m === 0) arm
+        else if (nComm == 0L) None // empty fold: NULL sums, NULL Q
+        else {
+          val bm = BigInt(m)
+          // shifted numerator ≥ 0 always (Q ≥ −1, d2_sum ≤ 4m²), so
+          // BigInt / == the truncating Decimal div
+          val shifted = (4 * bm * eSum - d2Sum + 4 * bm * bm) * 10000
+          Some((shifted / (4 * bm * bm)).toLong - 10000L)
+        }
+      s.createDataset(Seq((nComm, m, q)))
+        .toDF("n_communities", "n_edges", "q_modularity_bp")
+    }).getOrElse {
+      val ec = e
+        .join(lab.select($"node".as("u"), $"label".as("lu")), "u")
+        .join(lab.select($"node".as("v"), $"label".as("lv")), "v")
+        .filter($"lu" === $"lv")
+        .groupBy($"lu".as("label")).agg(count(lit(1)).as("e_in"))
+      val dc = e.select(explode(array($"u", $"v")).as("node"))
+        .groupBy($"node").agg(count(lit(1)).as("d"))
+        .join(lab, "node")
+        .groupBy($"label").agg(sum($"d").as("d_sum"))
+      val m = e.agg(count(lit(1)).as("m")) // 1 row (ungrouped: 1 row even empty)
+      // Σ_c (4m·e_c − d_c²) = 4m·Σe_c − Σd_c²: fold the per-community table
+      // with an UNGROUPED aggregate (1 row on ANY input — a groupBy(m) here
+      // returned zero rows on an empty graph while the oracle's ungrouped
+      // aggregate emitted one (0,0,0) row; r11 ADVICE), then join the 1-row m.
+      val folded = dc.join(ec, Seq("label"), "left")
+        .agg(
+          sum(coalesce($"e_in", lit(0L)).cast("decimal(38,0)")).as("e_sum"),
+          sum(expr("CAST(d_sum AS DECIMAL(38,0)) * d_sum")).as("d2_sum"),
+          count(lit(1)).as("n_communities"))
+      folded.crossJoin(broadcast(m))
+        .select($"n_communities",
+          $"m".as("n_edges"),
+          when($"m" === 0L, lit(0L)).otherwise(
+            expr(s"(($dec * m * e_sum - d2_sum + $dec * m * m) * 10000)" +
+              s" div ($dec * m * m)").cast("long") - 10000L)
+            .as("q_modularity_bp"))
     }
-    val ec = e
-      .join(lab.select($"node".as("u"), $"label".as("lu")), "u")
-      .join(lab.select($"node".as("v"), $"label".as("lv")), "v")
-      .filter($"lu" === $"lv")
-      .groupBy($"lu".as("label")).agg(count(lit(1)).as("e_in"))
-    val dc = e.select(explode(array($"u", $"v")).as("node"))
-      .groupBy($"node").agg(count(lit(1)).as("d"))
-      .join(lab, "node")
-      .groupBy($"label").agg(sum($"d").as("d_sum"))
-    val m = e.agg(count(lit(1)).as("m")) // 1 row (ungrouped: 1 row even empty)
-    // Σ_c (4m·e_c − d_c²) = 4m·Σe_c − Σd_c²: fold the per-community table
-    // with an UNGROUPED aggregate (1 row on ANY input — a groupBy(m) here
-    // returned zero rows on an empty graph while the oracle's ungrouped
-    // aggregate emitted one (0,0,0) row; r11 ADVICE), then join the 1-row m.
-    val folded = dc.join(ec, Seq("label"), "left")
-      .agg(
-        sum(coalesce($"e_in", lit(0L)).cast("decimal(38,0)")).as("e_sum"),
-        sum(expr("CAST(d_sum AS DECIMAL(38,0)) * d_sum")).as("d2_sum"),
-        count(lit(1)).as("n_communities"))
-    folded.crossJoin(broadcast(m))
-      .select($"n_communities",
-        $"m".as("n_edges"),
-        when($"m" === 0L, lit(0L)).otherwise(
-          expr(s"(($dec * m * e_sum - d2_sum + $dec * m * m) * 10000)" +
-            s" div ($dec * m * m)").cast("long") - 10000L)
-          .as("q_modularity_bp"))
   }
 
   /** One deterministic LOUVAIN-STYLE REFINEMENT round over a community
@@ -752,9 +765,9 @@ object Components {
     * candidate table is bounded by Σ_i (distinct neighbor communities of
     * i) + 1 ≤ |sym edges| + |nodes|; the 1-row m crossJoins on (bounded,
     * allowlisted). Output one row per node: `(node, label, refined)`. A
-    * working set at or below [[LocalSolveThreshold]] edges runs the
-    * identical score/argmax in the driver instead (r15 — the local-move
-    * ROUND of an iterative algorithm, the same tail-latency hybrid as
+    * working set that passes [[collectAtMost]] runs the identical
+    * score/argmax in the driver instead (r15 — the local-move ROUND of an
+    * iterative algorithm, the same tail-latency hybrid as
     * [[connectedComponents]] and [[labelPropagation]]; exact in Long under
     * the gate: every term is ≤ 4·m·m ≤ 10¹² at 500 k edges). */
   def refineOf(pairs: DataFrame, labels: DataFrame): DataFrame =
@@ -768,24 +781,21 @@ object Components {
     val s = pairs.sparkSession
     import s.implicits._
     val dec = "CAST(4 AS DECIMAL(38,0))"
-    val e = pairs.toDF("a", "b").filter($"a" =!= $"b")
-      .select(least($"a", $"b").as("u"), greatest($"a", $"b").as("v"))
-      .distinct().graftCache() // m count + degree pass + neighbor join
-    val longKeys = (e.schema.fields ++ labels.schema.fields)
-      .forall(_.dataType == org.apache.spark.sql.types.LongType)
-    if (longKeys && localSolveThreshold > 0 &&
-        e.count() <= localSolveThreshold) {
-      val es = e.as[(Long, Long)].collect()
+    val e = undirectedEdges(pairs)
+      .graftCache() // gate + m count + degree pass + neighbor join
+    (for {
+      es <- collectAtMost(e, localSolveThreshold)
       // labels is caller-supplied and may be corpus-wide (refineOf is
       // public API) — semi-join it to the edge endpoints BEFORE collecting
-      // so the driver pull is bounded by the gated edge count, never the
-      // label table (r15 ADVICE). Parity-safe: non-endpoint nodes are
-      // filtered from the output below anyway (`k.contains`), and every
-      // neighbor lookup is an endpoint by construction.
-      val ends = e.select($"u".as("node")).union(e.select($"v".as("node")))
-      val lab = labels.toDF("node", "label")
-        .join(ends, Seq("node"), "left_semi")
-        .as[(Long, Long)].collect().toMap
+      // so the driver pull is bounded by the gate, never the label table
+      // (r15 ADVICE). Parity-safe: non-endpoint nodes are filtered from the
+      // output below anyway (`k.contains`), and every neighbor lookup is
+      // an endpoint by construction.
+      ends = e.select($"u".as("node")).union(e.select($"v".as("node")))
+      labRows <- collectAtMost(labels.toDF("node", "label")
+        .join(ends, Seq("node"), "left_semi"), 2L * localSolveThreshold)
+      lab <- labelMap(labRows)
+    } yield {
       val m = es.length.toLong
       val adj = new scala.collection.mutable.HashMap[
         Long, scala.collection.mutable.ArrayBuffer[Long]]()
@@ -820,34 +830,35 @@ object Components {
           }
           (u, a, bestC)
         }.toSeq
-      return s.createDataset(out).toDF("node", "label", "refined")
+      s.createDataset(out).toDF("node", "label", "refined")
+    }).getOrElse {
+      val lab = labels.toDF("node", "label").graftCache() // four join sides
+      val sym = e.union(e.select($"v".as("u"), $"u".as("v")))
+      val deg = sym.groupBy($"u".as("node")).agg(count(lit(1)).as("k"))
+        .graftCache() // community-degree fold + per-node score join
+      val dc = deg.join(lab, "node")
+        .groupBy($"label").agg(sum($"k").as("d_sum"))
+      // neighbor-community edge counts, plus a zero row for the node's OWN
+      // community so "stay" is always a candidate even with no internal edge
+      val nb = sym.join(lab.select($"node".as("v"), $"label".as("cand")), "v")
+        .groupBy($"u", $"cand").agg(count(lit(1)).as("k_ic"))
+      val ow = lab.select($"node".as("u"), $"label".as("cand"),
+        lit(0L).as("k_ic"))
+      val cd = nb.unionByName(ow)
+        .groupBy($"u", $"cand").agg(sum($"k_ic").as("k_ic"))
+      val m = e.agg(count(lit(1)).as("m")) // 1 row
+      cd
+        .join(deg.select($"node".as("u"), $"k"), "u")
+        .join(lab.select($"node".as("u"), $"label"), "u")
+        .join(dc.select($"label".as("cand"), $"d_sum"), "cand")
+        .crossJoin(broadcast(m))
+        .select($"u", $"label", $"cand",
+          expr(s"$dec * m * k_ic - CAST(2 AS DECIMAL(38,0)) * k * " +
+            "(d_sum - IF(cand = label, k, 0))").as("score"))
+        .groupBy($"u", $"label")
+        .agg(max(struct($"score", (-$"cand").as("nc"))).as("pick"))
+        .select($"u".as("node"), $"label", (-$"pick.nc").as("refined"))
     }
-    val lab = labels.toDF("node", "label").graftCache() // four join sides
-    val sym = e.union(e.select($"v".as("u"), $"u".as("v")))
-    val deg = sym.groupBy($"u".as("node")).agg(count(lit(1)).as("k"))
-      .graftCache() // community-degree fold + per-node score join
-    val dc = deg.join(lab, "node")
-      .groupBy($"label").agg(sum($"k").as("d_sum"))
-    // neighbor-community edge counts, plus a zero row for the node's OWN
-    // community so "stay" is always a candidate even with no internal edge
-    val nb = sym.join(lab.select($"node".as("v"), $"label".as("cand")), "v")
-      .groupBy($"u", $"cand").agg(count(lit(1)).as("k_ic"))
-    val ow = lab.select($"node".as("u"), $"label".as("cand"),
-      lit(0L).as("k_ic"))
-    val cd = nb.unionByName(ow)
-      .groupBy($"u", $"cand").agg(sum($"k_ic").as("k_ic"))
-    val m = e.agg(count(lit(1)).as("m")) // 1 row
-    cd
-      .join(deg.select($"node".as("u"), $"k"), "u")
-      .join(lab.select($"node".as("u"), $"label"), "u")
-      .join(dc.select($"label".as("cand"), $"d_sum"), "cand")
-      .crossJoin(broadcast(m))
-      .select($"u", $"label", $"cand",
-        expr(s"$dec * m * k_ic - CAST(2 AS DECIMAL(38,0)) * k * " +
-          "(d_sum - IF(cand = label, k, 0))").as("score"))
-      .groupBy($"u", $"label")
-      .agg(max(struct($"score", (-$"cand").as("nc"))).as("pick"))
-      .select($"u".as("node"), $"label", (-$"pick.nc").as("refined"))
   }
 
   /** Multi-source BFS hop distances from each component's ROOT (the min-id
@@ -874,12 +885,12 @@ object Components {
 
   /** [[hopsFromRoots]] with the driver-tail gate exposed (0 = always
     * distributed; tests force both paths and pin them equal). A working
-    * set at or below [[LocalSolveThreshold]] edges runs the identical
-    * multi-source BFS in the driver (r16 — the tail-latency hybrid the
-    * other iterative operators already follow; BFS is the WORST of them
-    * under round-trip latency because every round is a join + aggregate +
-    * anti-join + checkpoint + count ACTION, so an O(diameter) loop pays
-    * 4-6 stage round-trips per hop). Union-find gives the same min-id
+    * set that passes [[collectAtMost]] runs the identical multi-source BFS
+    * in the driver (r16 — the tail-latency hybrid the other iterative
+    * operators already follow; BFS is the WORST of them under round-trip
+    * latency because every round is a join + aggregate + anti-join +
+    * checkpoint + count ACTION, so an O(diameter) loop pays 4-6 stage
+    * round-trips per hop). Union-find gives the same min-id
     * roots [[connectedComponents]] elects; first-reach BFS from the roots
     * is the minimum hop count by the same unweighted-BFS argument; nodes
     * deeper than `maxRounds` are dropped exactly like the distributed
@@ -895,22 +906,10 @@ object Components {
       p.select($"a".as("u"), $"b".as("v"))
         .union(p.select($"b".as("u"), $"a".as("v")))
         .distinct())
-    val longKeys = edges.schema.fields
-      .forall(_.dataType == org.apache.spark.sql.types.LongType)
-    if (longKeys && localSolveThreshold > 0 &&
-        edges.count() <= 2L * localSolveThreshold) {
-      val es = edges.as[(Long, Long)].collect()
-      // min-id roots via union-find (attach larger root under smaller:
-      // every set's root stays its minimum — the connectedComponents
-      // contract), then multi-source BFS outward from the roots
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x0: Long): Long = {
-        var x = x0
-        while (parent.getOrDefault(x, x) != x) x = parent.getOrDefault(x, x)
-        var y = x0
-        while (y != x) { val q = parent.get(y); parent.put(y, x); y = q }
-        x
-      }
+    collectAtMost(edges, 2L * localSolveThreshold).map { es =>
+      // min-id roots via union-find, then multi-source BFS outward from
+      // the roots
+      val uf = new MinRootUnionFind
       val adj = new scala.collection.mutable.HashMap[
         Long, scala.collection.mutable.ArrayBuffer[Long]]()
       val nodes = new scala.collection.mutable.LinkedHashSet[Long]()
@@ -919,14 +918,12 @@ object Components {
         if (u != v) {
           adj.getOrElseUpdate(u,
             new scala.collection.mutable.ArrayBuffer[Long]()) += v
-          val (ru, rv) = (find(u), find(v))
-          if (ru < rv) parent.put(rv, ru)
-          else if (rv < ru) parent.put(ru, rv)
+          uf.union(u, v)
         }
       }
       val dist = new scala.collection.mutable.HashMap[Long, Long]()
       val queue = new scala.collection.mutable.Queue[Long]()
-      nodes.foreach { n => if (find(n) == n) { dist.update(n, 0L); queue += n } }
+      nodes.foreach { n => if (uf.find(n) == n) { dist.update(n, 0L); queue += n } }
       while (queue.nonEmpty) {
         val u = queue.dequeue()
         val du = dist(u)
@@ -936,28 +933,29 @@ object Components {
           }
       }
       val out = nodes.iterator.flatMap(n =>
-        dist.get(n).map(h => (n, find(n), h))).toSeq
-      return s.createDataset(out).toDF("node", "root", "hops")
-    }
-    val comp = materialize(connectedComponents(pairs))
-    var dist = materialize(comp.filter($"node" === $"root")
-      .select($"node", lit(0L).as("hops")))
-    var frontier = dist
-    var r = 0
-    var live = true
-    while (live && r < maxRounds) {
-      val cand = edges.join(frontier.withColumnRenamed("node", "u"), "u")
-        .select($"v".as("node"), ($"hops" + 1L).as("hops"))
-        .groupBy($"node").agg(min($"hops").as("hops"))
-      val imp = materialize(
-        cand.join(dist.select($"node"), Seq("node"), "left_anti"))
-      if (imp.count() == 0L) live = false
-      else {
-        dist = materialize(dist.union(imp))
-        frontier = imp
-        r += 1
+        dist.get(n).map(h => (n, uf.find(n), h))).toSeq
+      s.createDataset(out).toDF("node", "root", "hops")
+    }.getOrElse {
+      val comp = materialize(connectedComponents(pairs))
+      var dist = materialize(comp.filter($"node" === $"root")
+        .select($"node", lit(0L).as("hops")))
+      var frontier = dist
+      var r = 0
+      var live = true
+      while (live && r < maxRounds) {
+        val cand = edges.join(frontier.withColumnRenamed("node", "u"), "u")
+          .select($"v".as("node"), ($"hops" + 1L).as("hops"))
+          .groupBy($"node").agg(min($"hops").as("hops"))
+        val imp = materialize(
+          cand.join(dist.select($"node"), Seq("node"), "left_anti"))
+        if (imp.count() == 0L) live = false
+        else {
+          dist = materialize(dist.union(imp))
+          frontier = imp
+          r += 1
+        }
       }
+      comp.join(dist, "node").select($"node", $"root", $"hops")
     }
-    comp.join(dist, "node").select($"node", $"root", $"hops")
   }
 }

@@ -2,6 +2,8 @@ package graft.pipeline
 
 import scala.util.Random
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -35,6 +37,32 @@ class ComponentsSpec extends AnyFunSuite {
       ns.map(_ -> m)
     }
   }
+
+  /** The driver tail served `df`: its plan is the collected rows (a
+    * LocalRelation under the renaming projection), not a distributed plan. */
+  private def driverServed(df: DataFrame): Boolean =
+    df.queryExecution.analyzed match {
+      case Project(_, _: LocalRelation) | _: LocalRelation => true
+      case _ => false
+    }
+
+  /** Gate boundary of a driver-tail operator: with the bound at `exact`, the
+    * gate frame's row count in distinct undirected edges, the driver tail
+    * serves `op`; one below, the distributed path does; both read `want`. */
+  private def checkGateBoundary[T](exact: Long, want: T, clue: String)(
+      op: Long => DataFrame)(read: DataFrame => T): Unit = {
+    val (at, below) = (op(exact), op(exact - 1))
+    assert(driverServed(at), s"$clue: driver tail at bound $exact")
+    assert(!driverServed(below), s"$clue: distributed at bound ${exact - 1}")
+    assert(read(at) == want, s"$clue at bound $exact")
+    assert(read(below) == want, s"$clue at bound ${exact - 1}")
+  }
+
+  private def pairMap(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  private def tripleMap(df: DataFrame): Map[Long, (Long, Long)] =
+    df.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
 
   private def run(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
@@ -277,27 +305,26 @@ class ComponentsSpec extends AnyFunSuite {
       val m = n + rnd.nextInt(2 * n)
       val raw = Seq.fill(m)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
       val df = raw.toDF("a", "b").repartition(4)
-      val triD = Components.triangleCounts(df, localSolveThreshold = 0L)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val triL = Components.triangleCounts(df)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val triD = pairMap(Components.triangleCounts(df, localSolveThreshold = 0L))
+      val triL = pairMap(Components.triangleCounts(df))
       assert(triD == triL, s"triangles trial $trial")
       val clean = raw.filter { case (a, b) => a != b }
         .map { case (a, b) => (a min b, a max b) }.distinct
       if (clean.nonEmpty) {
+        checkGateBoundary(clean.size, triD, s"triangles trial $trial")(
+          Components.triangleCounts(df, _))(pairMap)
         val cdf = clean.toDF("a", "b").repartition(4)
-        val prD = Components.pageRank(cdf, 3, localSolveThreshold = 0L)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val prL = Components.pageRank(cdf, 3)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val prD = pairMap(Components.pageRank(cdf, 3, localSolveThreshold = 0L))
+        val prL = pairMap(Components.pageRank(cdf, 3))
         assert(prD == prL, s"pageRank trial $trial")
-        val hD = Components.hopsFromRoots(cdf, 40, localSolveThreshold = 0L)
-          .collect()
-          .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-        val hL = Components.hopsFromRoots(cdf, 40, Components.LocalSolveThreshold)
-          .collect()
-          .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+        checkGateBoundary(clean.size, prD, s"pageRank trial $trial")(
+          Components.pageRank(cdf, 3, _))(pairMap)
+        val hD = tripleMap(Components.hopsFromRoots(cdf, 40, localSolveThreshold = 0L))
+        val hL = tripleMap(
+          Components.hopsFromRoots(cdf, 40, Components.LocalSolveThreshold))
         assert(hD == hL, s"hops trial $trial")
+        checkGateBoundary(clean.size, hD, s"hops trial $trial")(
+          Components.hopsFromRoots(cdf, 40, _))(tripleMap)
       }
     }
   }
@@ -393,12 +420,12 @@ class ComponentsSpec extends AnyFunSuite {
         .distinct
       if (edges.nonEmpty) {
         val df = edges.toDF("u", "v").repartition(4)
-        val dist = Components.labelPropagation(df, 3, localSolveThreshold = 0L)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val local = Components.labelPropagation(df, 3)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        val dist = pairMap(Components.labelPropagation(df, 3, localSolveThreshold = 0L))
+        val local = pairMap(Components.labelPropagation(df, 3))
         assert(dist == local, s"trial $trial n=$n m=$m")
         assert(local == lpaRef(edges, 3), s"trial $trial n=$n m=$m")
+        checkGateBoundary(edges.size, dist, s"trial $trial n=$n m=$m")(
+          Components.labelPropagation(df, 3, _))(pairMap)
       }
     }
   }
@@ -441,6 +468,10 @@ class ComponentsSpec extends AnyFunSuite {
       val dist = row(Components.modularityOf(df, ldf, localSolveThreshold = 0L))
       val local = row(Components.modularityOf(df, ldf))
       assert(dist == local, s"trial $trial n=$n m=$m")
+      val distinctEdges = edges.filter { case (a, b) => a != b }
+        .map { case (a, b) => (a min b, a max b) }.distinct.size
+      checkGateBoundary(distinctEdges, dist, s"trial $trial n=$n m=$m")(
+        Components.modularityOf(df, ldf, _))(row)
     }
     // empty graph: both paths emit the one (0, 0, 0) summary row
     val empty = Seq.empty[(Long, Long)].toDF("a", "b")
@@ -494,16 +525,26 @@ class ComponentsSpec extends AnyFunSuite {
       if (edges.nonEmpty) {
         val df = edges.toDF("u", "v").repartition(4)
         val lpa = Components.labelPropagation(df, 3)
-        val dist = Components.refineOf(df, lpa, localSolveThreshold = 0L)
-          .collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-        val local = Components.refineOf(df, lpa)
-          .collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+        val dist = refined(Components.refineOf(df, lpa, localSolveThreshold = 0L))
+        val local = refined(Components.refineOf(df, lpa))
         assert(dist == local, s"trial $trial n=$n m=$m")
+        checkGateBoundary(edges.size, dist, s"trial $trial n=$n m=$m")(
+          Components.refineOf(df, lpa, _))(refined)
       }
     }
+    // a node with two label rows multiplies through the distributed joins;
+    // the driver tail cannot represent that, so both entry points must
+    // agree row for row
+    val tri = Seq((0L, 1L), (1L, 2L), (0L, 2L), (2L, 3L)).toDF("a", "b")
+    val twoLabels = Seq((0L, 0L), (0L, 7L), (1L, 0L), (2L, 0L), (3L, 3L))
+      .toDF("node", "label")
+    assert(refined(Components.refineOf(tri, twoLabels)) ==
+      refined(Components.refineOf(tri, twoLabels, localSolveThreshold = 0L)))
   }
+
+  /** [[Components.refineOf]]'s rows as a multiset (sorted). */
+  private def refined(df: DataFrame): Seq[(Long, Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
 
   test("refine: corpus-wide label table (mostly isolated nodes) — local " +
     "solve == distributed; non-endpoint labels never reach the driver " +
