@@ -45,8 +45,8 @@ object GraftSession {
       // Per-batch checkpoint = the CHANGELOG delta, not a full RocksDB
       // snapshot per store per batch (snapshots still happen, on the
       // background maintenance cadence). With many stateful partitions the
-      // per-batch fixed cost is the streaming floor — r9 StreamProbe: the
-      // CEP probe's per-batch commit path dominated at 100k keys.
+      // per-batch fixed cost is the streaming floor — measured in r9:
+      // streaming CEP's per-batch commit path dominated at 100k keys.
       .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
         "true")
       // numRows tracking makes every put pay a hidden get (Spark docs call

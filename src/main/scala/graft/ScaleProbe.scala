@@ -1,40 +1,26 @@
 package graft
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Cep, EventPatterns}
-import graft.pattern.{AfterMatchSkip, Pattern}
-
-/** Scale probe (manual; not part of the driver contract): runs the two
-  * operators whose scale behavior the engine's design leans on hardest —
-  * the CEP NFA and the custom as-of join — over synthetic data 100× the
-  * sf0.1 bench (10M events / 100k keys, 10M⋈1M as-of) generated directly
-  * from `spark.range` (no IO; deterministic via xxhash64). Prints one JSON
-  * line per probe with rows/sec.
+/** Scale probe (manual; not part of the driver contract): runs the
+  * engine's batch operators — the custom as-of join, dedup, retrieval,
+  * graph and forecasting operators — over synthetic data 100× the sf0.1
+  * bench (10M events / 100k keys, 10M⋈1M as-of) generated directly from
+  * `spark.range` (no IO; deterministic via xxhash64). Prints one JSON line
+  * per probe with rows/sec; most probes also assert an at-volume invariant.
+  * It runs no CEP: CEP throughput, layer by layer, is the traced
+  * `cep_batch` run of `perfbench` (`python3 perfbench/run.py --workload
+  * cep_batch --trace 1`).
   *
   *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.ScaleProbe"
   */
 object ScaleProbe {
 
-  final case class Ev(event_id: Long, user_id: Long, ts: Long, kind: Int)
-
   private def time[A](f: => A): (A, Double) = {
     val t0 = System.nanoTime()
     val a = f
     (a, (System.nanoTime() - t0) / 1e9)
-  }
-
-  def syntheticEvents(spark: SparkSession, n: Long, users: Long): DataFrame = {
-    import spark.implicits._
-    spark.range(n).select(
-      $"id".as("event_id"),
-      pmod(xxhash64($"id" * 7 + 1), lit(users)).as("user_id"),
-      (lit(1700000000000000L) +
-        pmod(xxhash64($"id" * 13 + 5), lit(30L * 86400 * 1000000L))).as("ts"),
-      pmod(xxhash64($"id" * 31 + 11), lit(10)).cast("int").as("kind"))
   }
 
   def main(args: Array[String]): Unit = {
@@ -47,161 +33,12 @@ object ScaleProbe {
     val nEvents = args.headOption.map(_.toLong).getOrElse(10000000L)
     val users = 100000L
 
-    // ---- CEP: A(0) B*(1-6) C(7) within 1h, skip past last, per user ----
-    val events = syntheticEvents(spark, nEvents, users).as[Ev]
-    val pattern = Pattern.begin[Ev]("A", AfterMatchSkip.SkipPastLastEvent)
-      .where(_.kind == 0)
-      .next("B").where(e => e.kind >= 1 && e.kind <= 6).oneOrMore.optional
-      .next("C").where(_.kind == 7)
-      .within(3600L * 1000L) // ms; tsFn converts micros->ms
-    val (nMatches, cepSecs) = time {
-      Cep.matchPattern[Long, Ev, (Long, Long)](
-        events, _.user_id, _.ts / 1000L, pattern, Seq($"ts", $"event_id"))(
-        (k, m) => Some((k, m.startTs)),
-        (_, _) => None).count()
-    }
-    println(f"""{"probe":"cep","rows":$nEvents,"keys":$users,"matches":$nMatches,"secs":$cepSecs%.1f,"rows_per_sec":${(nEvents / cepSecs).toLong}}""")
-
-    // ---- CEP under SKEW: one key holds ~30% of 10M events, through the ----
-    // full EventPatterns.detect operator (the reference's entire runtime,
-    // FlinkCEPExample.scala:76). local[32] at sf0.1 never stresses one-hot-
-    // key behavior: the hot key's events all hash to ONE task (a key's
-    // runner is fed sequentially by contract), so this measures (a)
-    // whole-job throughput under a straggler key and (b) that per-key NFA
-    // state stays bounded by the within horizon, not by key volume (§7.4.7).
-    val kindName = array(lit("error"), lit("view"), lit("click"), lit("view"),
-      lit("click"), lit("view"), lit("click"), lit("purchase"),
-      lit("search"), lit("idle"))
-    val skewed = spark.range(nEvents).select(
-      $"id".as("event_id"),
-      (lit(1700000000000000L) +
-        pmod(xxhash64($"id" * 13 + 5), lit(30L * 86400 * 1000000L))).as("ts_us"),
-      when(pmod(xxhash64($"id" * 19 + 3), lit(10L)) < 3, lit(0L))
-        .otherwise(pmod(xxhash64($"id" * 7 + 1), lit(users))).as("user_id"),
-      element_at(kindName,
-        (pmod(xxhash64($"id" * 31 + 11), lit(10)) + 1).cast("int")).as("event_type"))
-      .as[EventPatterns.EventRow]
-    val (skewOut, skewSecs) = time {
-      val out = EventPatterns.detectOf(skewed).cache()
-      val hot = out.filter($"user_id" === 0L).count()
-      (out.count(), hot)
-    }
-    spark.catalog.clearCache()
-    assert(skewOut._2 > 0, "hot key produced no matches/timeouts")
-    println(f"""{"probe":"cep_skew","rows":$nEvents,"hot_share":0.3,"out_rows":${skewOut._1},"hot_out":${skewOut._2},"secs":$skewSecs%.1f,"rows_per_sec":${(nEvents / skewSecs).toLong}}""")
-
-    // Bounded-state evidence for the hot key itself: replay its first 300k
-    // events (time-sorted, exactly what the keyed batch driver feeds its runner)
-    // through an instrumented NfaRunner, sampling live-partial count every
-    // 1000 events. The §7.4.7 contract: state is bounded by the events
-    // inside ONE within-horizon (~1h ≈ nEvents·0.3/720 here), never by the
-    // key's total volume — a linear-growth regression trips the assert.
-    val hotEvents = skewed.filter($"user_id" === 0L)
-      .orderBy($"ts_us", $"event_id").limit(300000)
-      .collect()
-    val runner = new graft.pattern.NfaRunner[EventPatterns.EventRow](
-      EventPatterns.pattern, _.ts_us / 1000L)
-    var maxPartials = 0
-    var fed = 0
-    hotEvents.foreach { e =>
-      runner.onEvent(e)
-      fed += 1
-      if (fed % 1000 == 0)
-        maxPartials = maxPartials.max(runner.snapshot().partials.size)
-    }
-    runner.flush()
-    val horizonEvents = (nEvents * 3 / 10 / 720).toInt // ≈ events per 1h window
-    assert(maxPartials <= horizonEvents,
-      s"hot-key live partials $maxPartials exceed the within-horizon bound $horizonEvents")
-    println(s"""{"probe":"cep_skew_state","hot_events_replayed":${hotEvents.length},"max_live_partials":$maxPartials,"horizon_bound":$horizonEvents}""")
-
-    // ---- CEP `until` at 10M events (r15): S(0) B(kind≥1)* until(7) P(7),
-    // within 1h, skip past last — the worst consumption shape the DSL can
-    // express (the loop accepts EVERY non-signup event, purchases
-    // included, so only the stop condition can halt it; a plain where
-    // cannot). Three reads: whole-job throughput; driver-side brute-scan
-    // parity on one full key (the EventPatternsSpec oracle at volume); and
-    // a hot-key state replay — with until, every attempt resolves at the
-    // key's FIRST kind-7 event, so live partials track the purchase gap
-    // (~10 events at a 10% rate), not the within horizon.
-    val untilPat = Pattern.begin[Ev]("S", AfterMatchSkip.SkipPastLastEvent)
-      .where(_.kind == 0)
-      .followedBy("B").where(_.kind >= 1).oneOrMore.optional.until(_.kind == 7)
-      .followedBy("P").where(_.kind == 7)
-      .within(3600L * 1000L)
-    val ((nUntil, pinKey, pinGot), untilSecs) = time {
-      val out = Cep.matchPattern[Long, Ev, (Long, Long, Long, Int)](
-        events, _.user_id, _.ts / 1000L, untilPat, Seq($"ts", $"event_id"))(
-        (k, m) => m.first("S").zip(m.first("P")).map { case (s, p) =>
-          (k, s.ts, p.ts, m("B").size)
-        },
-        (_, _) => None).cache()
-      val n = out.count()
-      assert(n > 0, "until probe produced no matches at 10M events — " +
-        "either the NFA path regressed or the event count is too small")
-      // parity key: the smallest key that actually MATCHED (a fixed key
-      // would usually have zero matches at these gap statistics — a
-      // vacuous pin)
-      val k = out.map(_._1).reduce(math.min)
-      val got = out.filter(_._1 == k).collect()
-        .map(r => (r._2, r._3, r._4)).sortBy(x => (x._1, x._2)).toSeq
-      (n, k, got)
-    }
-    spark.catalog.clearCache()
-    assert(pinGot.nonEmpty, "parity key must carry matches")
-    // brute scan of the parity key's full event sequence, straight from the
-    // spec's oracle: per signup, the FIRST kind-7 event completes inside
-    // the horizon or kills the attempt; n_between counts the B-taken
-    // (kind≥1) events; SKIP PAST LAST ROW resumes after the purchase
-    val pinEvents = events.filter($"user_id" === pinKey)
-      .orderBy($"ts", $"event_id").collect()
-    val pinWant = {
-      val out = Seq.newBuilder[(Long, Long, Int)]
-      var i = 0
-      while (i < pinEvents.length) {
-        if (pinEvents(i).kind != 0) i += 1
-        else {
-          var j = i + 1
-          while (j < pinEvents.length && pinEvents(j).kind != 7) j += 1
-          if (j < pinEvents.length &&
-              pinEvents(j).ts / 1000L < pinEvents(i).ts / 1000L + 3600000L) {
-            out += ((pinEvents(i).ts, pinEvents(j).ts,
-              (i + 1 until j).count(x => pinEvents(x).kind >= 1)))
-            i = j + 1
-          } else i += 1
-        }
-      }
-      out.result().sortBy(x => (x._1, x._2))
-    }
-    assert(pinGot == pinWant,
-      s"until parity broken on key $pinKey: got ${pinGot.size} matches, " +
-        s"want ${pinWant.size}")
-    // hot-key state replay: the skewed key's first 300k events through the
-    // string-typed untilStreak pattern — live partials must track the
-    // purchase gap, far inside the within-horizon bound the plain B*-loop
-    // needs (the stop condition IS the state-cleaning)
-    val uRunner = new graft.pattern.NfaRunner[EventPatterns.EventRow](
-      EventPatterns.untilPattern, _.ts_us / 1000L)
-    var uMax = 0
-    // the skewed frame's type map has no "signup" — relabel its "search"
-    // slot (10% of events) so the string-typed untilPattern actually
-    // anchors attempts on the hot key
-    hotEvents.foreach { e0 =>
-      val e = if (e0.event_type == "search") e0.copy(event_type = "signup") else e0
-      uRunner.onEvent(e)
-      // per-EVENT high-water mark: until-resolved attempts are short-lived
-      // (gap to the next purchase), so a sampled read misses them entirely
-      uMax = uMax.max(uRunner.snapshot().partials.size)
-    }
-    uRunner.flush()
-    assert(uMax > 0, "hot-key replay anchored no attempts — vacuous probe")
-    assert(uMax <= horizonEvents,
-      s"until live partials $uMax exceed the horizon bound $horizonEvents")
-    println(s"""{"probe":"cep_until","rows":$nEvents,"keys":$users,"matches":$nUntil,"pin_key":$pinKey,"pin_matches":${pinGot.size},"secs":${f"$untilSecs%.1f"},"rows_per_sec":${(nEvents / untilSecs).toLong},"hot_max_live_partials":$uMax,"horizon_bound":$horizonEvents}""")
-
     // ---- custom as-of join: 10M events ⋈ 1M orders on user ----
-    val left = syntheticEvents(spark, nEvents, users)
-      .select($"event_id", $"user_id", $"ts")
+    val left = spark.range(nEvents).select(
+      $"id".as("event_id"),
+      pmod(xxhash64($"id" * 7 + 1), lit(users)).as("user_id"),
+      (lit(1700000000000000L) +
+        pmod(xxhash64($"id" * 13 + 5), lit(30L * 86400 * 1000000L))).as("ts"))
     val right = spark.range(nEvents / 10).select(
       $"id".as("o_id"),
       pmod(xxhash64($"id" * 3 + 2), lit(users)).as("o_user"),
@@ -213,14 +50,7 @@ object ScaleProbe {
     }
     println(f"""{"probe":"asof","left":$nEvents,"right":${nEvents / 10},"joined":$nJoined,"secs":$asofSecs%.1f,"rows_per_sec":${(nEvents / asofSecs).toLong}}""")
 
-    // (the streaming CEP probe lives in [[StreamProbe]] — its own main, so
-    // it always runs in a fresh JVM: heap/GC pressure from the batch probes
-    // above skewed its number by up to 3x when it shared the session)
-
     // ---- MinHash LSH dedup: synthetic docs at 10× the sf0.1 documents ----
-    // (runs LAST: its shuffle/cache footprint would otherwise inflate the
-    // stream probe — the same session-pressure effect the bench harness
-    // clears caches against)
     // ~50 words/doc from a 5000-word vocab, deterministic via xxhash64;
     // every 100th doc is a near-copy of its predecessor (first word
     // changed), so the expected near-dup pair count is ~nDocs/100.

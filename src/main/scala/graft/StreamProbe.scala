@@ -2,265 +2,39 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.EventPatterns
-import graft.pattern.{AfterMatchSkip, Pattern}
-import graft.ScaleProbe.Ev
-
-/** Streaming-CEP throughput probe in its OWN JVM (manual; not part of the
-  * driver contract). The r1-r3 probe ran inside [[ScaleProbe]]'s session,
-  * where heap and GC pressure from the earlier batch probes swung the
-  * number between 20k and 56k events/s run to run; isolated and preceded by
-  * an untimed JIT warm-up pass, it is reproducible within ±15%.
+/** Streaming-operator probe in its own JVM (manual; not part of the driver
+  * contract): three stateful streams on RocksDB state at volume, each
+  * checked against its batch twin or an exact driver recount, and against
+  * a state bound that must not grow with event volume. Prints one JSON
+  * line per stream with rows/sec.
+  *  - `SessionStream`: 10M out-of-order events, one hot key, 16
+  *    micro-batches; sealed sessions ≡ the batch `q_sessionize` rollup.
+  *  - `DqStream`: 4M flagged rows over 20 sources; final basis points ≡ a
+  *    driver recount.
+  *  - `DynamicRuleStream`: 1M rows with mid-stream rule flips; alerts ≡
+  *    the batch window-pass twin.
   *
-  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.StreamProbe [nEvents]"
+  * Streaming CEP (`CepStream`) is measured by the traced `cep_batch` run
+  * of `perfbench` (`python3 perfbench/run.py --workload cep_batch
+  * --trace 1`), not here.
   *
-  * Drives the worst case deliberately: watermark 0 and
-  * `processAllAvailable` after every micro-batch, so EVERY key with live
-  * state round-trips the state store each batch.
+  *   SPARK_GRAFT_CPUS=32 sbt "runMain graft.StreamProbe [nSess] [nDq] [nDyn]"
   */
 object StreamProbe {
 
   def main(args: Array[String]): Unit = {
+    // one state-store partition per core: each partition pays a fixed
+    // per-batch commit cost (RocksDB commit + changelog upload), so one
+    // task wave per batch beats the 2×cores batch sizing
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Stateful-stream partition sizing (r10): each state-store partition
-    // pays a FIXED per-batch commit cost (RocksDB commit + changelog
-    // upload), so shuffle partitions ≈ cores — ONE task wave per batch —
-    // beats the 2×cores batch sizing (64 stores = 64 commits/batch was the
-    // measured ~1.85 s/round floor at 250k-row triggers, r9 verdict #2).
-    // r12 revision for the CEP section: with the feed fixed (see
-    // runEvents) the per-trigger commit fan-out IS the remaining floor at
-    // 250k-row triggers, and cores/2 measures ~20% faster than cores
-    // (220.7k vs 182.4k ev/s quiesced; 280.5k vs 192.0k pipelined) — the
-    // per-key CEP work no longer saturates a full task wave. Partition
-    // count pins per QUERY at its first checkpoint, so the CEP section
-    // sets cores/2 and the bulkier sections keep cores.
-    val parts = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", cpus).toInt
-    val cepParts = sys.env.get("SPARK_GRAFT_STREAM_PARTS")
-      .map(_.toInt).getOrElse(math.max(cpus.toInt / 2, 1))
     val spark: org.apache.spark.sql.SparkSession =
-      GraftSession.builder(s"local[$cpus]", parts).getOrCreate()
+      GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
-    val nStream = args.headOption.map(_.toLong).getOrElse(1000000L)
     val users = 100000L
-    val pattern = Pattern.begin[Ev]("A", AfterMatchSkip.SkipPastLastEvent)
-      .where(_.kind == 0)
-      .next("B").where(e => e.kind >= 1 && e.kind <= 6).oneOrMore.optional
-      .next("C").where(_.kind == 7)
-      .within(3600L * 1000L) // ms; tsFn converts micros->ms
-
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-
-    /** Feed `events` in 4 micro-batches through transformWithState;
-      * returns wall seconds and the match count.
-      *
-      * The feed is a PARQUET FILE-STREAM source, not MemoryStream (r12 —
-      * r11 verdict #5 asked for a profile-then-attack pass; the JFR
-      * profile's answer was that the operator was NOT the floor):
-      * MemoryStream keeps each batch's rows inside the plan, so local-mode
-      * task dispatch JAVA-SERIALIZES the batch into every task and every
-      * task deserializes it back (UnsafeRow.writeExternal/readExternal
-      * under ObjectOutputStream — measured 42% of CEP-window execution
-      * samples, vs 10.5% in the whole CepProcessor/NFA/codec path; RocksDB
-      * ops 4.6%). A file source is what production ingest looks like
-      * anyway: each staged batch directory is moved into the watched dir
-      * (rename, not copy) and read as a columnar parallel scan — the probe
-      * then measures the OPERATOR, not driver-side row shipping.
-      *
-      * Two trigger schedules, reported as separate probes:
-      *  - QUIESCED (`pipelined = false`): one processAllAvailable per
-      *    staged group — identical batch boundaries, watermark sequence,
-      *    late-row drops, and match counts to the r1-r11 MemoryStream
-      *    harness (pinned by the matches field), so the number is
-      *    directly comparable across rounds. Each quiesce costs a
-      *    dedicated empty follow-up trigger for timers (~0.5 s fixed
-      *    per trigger: 8 triggers for 4 batches).
-      *  - PIPELINED (`pipelined = true`): all groups staged up front with
-      *    strictly increasing mtimes + maxFilesPerTrigger = group size,
-      *    ONE processAllAvailable — 4 data triggers back to back, timers
-      *    firing inside the next data trigger, plus one empty-file nudge
-      *    at the end to flush the final group's buffered tail. This is
-      *    the shape continuous production ingest actually runs (streams
-      *    do not quiesce between batches). Match counts differ by exactly
-      *    the BORDERLINE-LATE class, and the mechanism is pinned
-      *    executably in `ScheduleDivergenceSpec` (r12 verdict #5): no
-      *    Spark-side late-row drop exists on this operator (the
-      *    event-time column is projected away, numRowsDroppedByWatermark
-      *    stays 0) — what differs is that the quiesced schedule's empty
-      *    follow-up trigger fires the within-horizon timer sweep BEFORE
-      *    the next group's data is read, while pipelined processes that
-      *    group's borderline-late completions first (input rows before
-      *    expired timers, and `onEvent` advances the NFA clock only to
-      *    the event's own time), so they still find their partials
-      *    alive. Both are valid event-time behavior (timer firing order
-      *    vs late data is schedule-dependent in any engine). */
-    def stageEvents(tag: String, events: Array[Ev]): String = {
-      val root = java.nio.file.Files.createTempDirectory(s"graft-cepstage-$tag").toString
-      events.grouped(events.length / 4 + 1).toSeq.zipWithIndex
-        .foreach { case (b, i) =>
-          spark.createDataset(
-              scala.collection.immutable.ArraySeq.unsafeWrapArray(b))
-            .repartition(32).write.parquet(s"$root/g$i")
-        }
-      // pipelined-mode flush nudges: empty files that advance the trigger
-      // clock after the last data group (the wm lag is one trigger, so two)
-      (0 to 1).foreach(n =>
-        spark.emptyDataset[Ev].coalesce(1).write.parquet(s"$root/nudge$n"))
-      root
-    }
-
-    def runEvents(name: String, staged: String,
-        pipelined: Boolean): (Double, Long) = {
-      val root = java.nio.file.Files.createTempDirectory(s"graft-cep-$name").toString
-      val inDir = s"$root/in"
-      new java.io.File(inDir).mkdirs()
-      // hard-link a staged group into the watched dir (no data copy); the
-      // per-group mtime drives the pipelined mode's oldest-first grouping
-      // (links share the inode, but every rep sets the same stamps)
-      def linkGroup(d: String, i: Int): Unit =
-        new java.io.File(d).listFiles()
-          .filter(_.getName.startsWith("part-")).foreach { f =>
-            val dst = java.nio.file.Paths.get(inDir, s"b$i-${f.getName}")
-            java.nio.file.Files.createLink(dst, f.toPath)
-            java.nio.file.Files.setLastModifiedTime(dst,
-              java.nio.file.attribute.FileTime.fromMillis(1000000L + i * 60000L)): Unit
-          }
-      val filesPerGroup = new java.io.File(s"$staged/g0").listFiles()
-        .count(_.getName.startsWith("part-"))
-      val reader = spark.readStream.schema(spark.emptyDataset[Ev].schema)
-      if (pipelined)
-        reader.option("maxFilesPerTrigger", filesPerGroup.toString): Unit
-      val timed = reader.parquet(inDir)
-        .as[Ev]
-        .withColumn("ets", timestamp_micros($"ts"))
-        .withWatermark("ets", "0 seconds")
-        .drop("ets").as[Ev]
-      val out = graft.streaming.CepStream.matchPattern[Long, Ev, (Long, Long)](
-        timed, _.user_id, _.ts / 1000L, pattern,
-        (k, m) => Some((k, m.startTs)), (_, _) => None)
-      val q = out.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      val t0 = System.nanoTime()
-      if (pipelined) {
-        (0 to 3).foreach(i => linkGroup(s"$staged/g$i", i))
-        q.processAllAvailable()
-        (0 to 1).foreach { n =>
-          linkGroup(s"$staged/nudge$n", 100 + n); q.processAllAvailable()
-        }
-      } else {
-        (0 to 3).foreach { i =>
-          linkGroup(s"$staged/g$i", i); q.processAllAvailable()
-        }
-      }
-      val secs = (System.nanoTime() - t0) / 1e9
-      val nOut = spark.table(name).count()
-      if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-        q.recentProgress.foreach(p => println(s"[dbg] $name ${p.batchId} ${p.durationMs}"))
-      q.stop()
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
-      (secs, nOut)
-    }
-
-    val uniform = ScaleProbe.syntheticEvents(spark, nStream, users).as[Ev].collect()
-    // one key holds ~30% of rows — the streaming analog of the batch skew
-    // probe: that key's state round-trips the store every micro-batch
-    val skewed = ScaleProbe.syntheticEvents(spark, nStream, users)
-      .withColumn("user_id",
-        when(pmod(xxhash64($"event_id" * 19 + 3), lit(10L)) < 3, lit(0L))
-          .otherwise($"user_id"))
-      .as[Ev].collect()
-
-    locally { // untimed: JIT + codegen
-      val wStaged = stageEvents("warmup",
-        uniform.take(math.max(nStream / 10, 10000L).toInt))
-      runEvents("warmup_cep", wStaged, pipelined = false)
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(wStaged))
-    }
-    // Three timed repetitions, MEDIAN reported: a single run still swings
-    // ±40% with GC and RocksDB compaction phasing; the median of three is
-    // stable across JVM invocations.
-    def median3(tag: String, events: Array[Ev], pipelined: Boolean): Unit = {
-      val staged = stageEvents(tag, events)
-      val reps = try (1 to 3).map { i =>
-        System.gc()
-        runEvents(s"${tag}_$i", staged, pipelined)
-      } finally org.apache.commons.io.FileUtils
-        .deleteDirectory(new java.io.File(staged))
-      val (secs, nOut) = reps.sortBy(_._1)(Ordering.Double.TotalOrdering)(1)
-      println(f"""{"probe":"$tag","rows":$nStream,"batches":4,"matches":$nOut,"secs":$secs%.1f,"rows_per_sec":${(nStream / secs).toLong},"reps_secs":[${reps.map(r => f"${r._1}%.1f").mkString(",")}]}""")
-    }
-    spark.conf.set("spark.sql.shuffle.partitions", cepParts.toString)
-
-    // ---- r13 (r12 verdict #6): per-trigger commit fan-out conf matrix ----
-    // The measured residual CEP floor is FIXED per-trigger cost (RocksDB
-    // commit fan-out + offset/commit log + timer sweep; ~1.85 s/round
-    // fitted at r8, cores/2 sizing bought 20% in r12). This section moves
-    // the two state-checkpoint levers that target it and measures each on
-    // the quiesced schedule (where the per-trigger cost is paid 8×):
-    //  - changelog checkpointing OFF → full RocksDB snapshot per commit
-    //    (what the changelog path is worth at this cadence);
-    //  - minDeltasForSnapshot 10 → 100 → background snapshot uploads
-    //    mostly leave the measured window (changelog replay on restore
-    //    pays instead — a durability/latency trade, not a free lunch).
-    // Confs pin at QUERY start; every rep starts a fresh query, so a
-    // session-conf set here is picked up. Run with
-    //   SPARK_GRAFT_STREAM_SECTION=cep_matrix sbt "runMain graft.StreamProbe"
-    // (exits after the matrix — the baseline row is re-measured in the
-    // same window so rows at least share a window).
-    //
-    // MEASURED 2026-08-16, twice (1M events, 100k keys, local[32],
-    // cores/2 partitions, medians of 3), ev/s:
-    //   row                      run1     run2
-    //   baseline                 86.7k    172.3k
-    //   nochangelog              101.0k   102.0k
-    //   mindeltas100             86.8k    91.4k
-    //   nochangelog+mindeltas    173.9k   124.9k
-    // Honest verdict: NO GAIN demonstrable — the between-invocation
-    // variance is ±2× (baseline itself measured 86.7k and 172.3k across
-    // the two runs; per-row reps swing 5.0-25.0 s) and no variant
-    // separates from baseline consistently in sign, let alone ≥1.3×.
-    // Neither state-checkpoint lever reproducibly moves the per-trigger
-    // floor at 250k-row triggers; the residual fixed cost is therefore
-    // NOT dominated by the changelog-vs-snapshot upload choice. The
-    // shipped conf keeps changelog checkpointing ON (its restore/
-    // durability contract is the production reason it exists).
-    if (sys.env.get("SPARK_GRAFT_STREAM_SECTION").contains("cep_matrix")) {
-      val matrix: Seq[(String, Seq[(String, String)])] = Seq(
-        "cep_mx_baseline" -> Nil,
-        "cep_mx_nochangelog" -> Seq(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "false"),
-        "cep_mx_mindeltas100" -> Seq(
-          "spark.sql.streaming.stateStore.rocksdb.minDeltasForSnapshot" -> "100"),
-        "cep_mx_nochangelog_mindeltas100" -> Seq(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "false",
-          "spark.sql.streaming.stateStore.rocksdb.minDeltasForSnapshot" -> "100"))
-      matrix.foreach { case (tag, confs) =>
-        val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-        confs.foreach { case (k, v) => spark.conf.set(k, v) }
-        median3(tag, uniform, pipelined = false)
-        saved.foreach { case (k, o) =>
-          o.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-      }
-      spark.stop()
-      return
-    }
-
-    median3("cep_stream", uniform, pipelined = false)
-    median3("cep_stream_skew", skewed, pipelined = false)
-    // the r11-verdict profile point: same 1M events over 10k keys — ~100
-    // events/key, so per-key fixed costs (state round-trip, timer sweep,
-    // snapshot codec) amortize 10× and the per-EVENT NFA cost shows
-    val uniform10k = ScaleProbe.syntheticEvents(spark, nStream, 10000L)
-      .as[Ev].collect()
-    median3("cep_stream_10k", uniform10k, pipelined = false)
-    // continuous-ingest schedule: back-to-back data triggers, no per-batch
-    // quiesce — the per-trigger fixed cost (~0.5 s: state-store commit
-    // fan-out + offset log) is paid 5× instead of 8×
-    median3("cep_stream_pipelined", uniform, pipelined = true)
-    median3("cep_stream_pipelined_skew", skewed, pipelined = true)
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
 
     // ---- SessionStream at 10M events: heavy out-of-orderness, one hot ----
     // key (~30%), 100k keys. The §7.4.7-style contract under test: state is
@@ -271,7 +45,7 @@ object StreamProbe {
     // arrive by a jittered arrival clock (ts + up to 20 min) in 16
     // micro-batches, so backward extension and session bridging fire
     // constantly while staying inside the 30-min watermark delay.
-    val nSess = args.lift(1).map(_.toLong).getOrElse(10000000L)
+    val nSess = args.lift(0).map(_.toLong).getOrElse(10000000L)
     val baseSec = 1700000000L
     val spanSec = 30L * 86400
     val sessEvents = spark.range(nSess).select(
@@ -347,7 +121,7 @@ object StreamProbe {
     // the operator; the final per-source basis points must equal a
     // driver-computed exact recount (counters add exactly — any slicing).
     import graft.streaming.DqStream
-    val nDq = args.lift(2).map(_.toLong).getOrElse(4000000L)
+    val nDq = args.lift(1).map(_.toLong).getOrElse(4000000L)
     val dqRows = spark.range(nDq).select(
         concat(lit("src"), pmod($"id", lit(20L)).cast("string")).as("src"),
         (pmod(xxhash64($"id" * 7 + 1), lit(100L)) < 99L).as("statusOk"),
@@ -389,7 +163,7 @@ object StreamProbe {
     // 1M), and state stays bounded by KEYS (register + armed timer + the
     // within-delay buffer), never by event volume.
     import graft.streaming.DynamicRuleStream
-    val nDyn = args.lift(3).map(_.toLong).getOrElse(1000000L)
+    val nDyn = args.lift(2).map(_.toLong).getOrElse(1000000L)
     val dynSpan = 4L * 3600 // seconds of event time
     val dynRaw = spark.range(nDyn).select(
         when(pmod(xxhash64($"id" * 37 + 13), lit(5L)) === 0, lit("rule"))

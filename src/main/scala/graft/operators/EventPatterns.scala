@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.pattern.{AfterMatchSkip, Pattern}
+import graft.pattern.{AfterMatchSkip, NFA, Pattern}
 
 /** The reference's CEP query transplanted onto the driver testdata `events`
   * table (FIXTURES.md §B.1): per `user_id`, ordered by `ts`,
@@ -15,8 +15,9 @@ import graft.pattern.{AfterMatchSkip, Pattern}
   *
   * Event time rides through the typed row as EPOCH-MICROS Long, not
   * java.sql.Timestamp: at 10M rows the Timestamp boxing in the object-row
-  * deserializer is a 3.5× slowdown (measured by graft.ScaleProbe, 162k →
-  * 562k events/s). Timestamps reappear only in the tiny output projection.
+  * deserializer was a 3.5× slowdown (162k → 562k events/s, 10M synthetic
+  * events on local[32]). Timestamps reappear only in the tiny output
+  * projection.
   */
 object EventPatterns {
 
@@ -36,33 +37,42 @@ object EventPatterns {
   /** Tagged match/timeout detection (kind = "match" | "timeout");
     * timestamps second-truncated in the output projection only
     * (ns-parquet caveat, FIXTURES.md §B.1). */
-  def detect(spark: SparkSession, sfDir: String): DataFrame = {
+  def detect(spark: SparkSession, sfDir: String): DataFrame =
+    detectOf(eventRows(spark, sfDir))
+
+  /** The `events` table as [[EventRow]]s. */
+  private def eventRows(spark: SparkSession, sfDir: String): Dataset[EventRow] = {
     import spark.implicits._
-    val events = graft.sources.Tables.events(spark, sfDir)
+    graft.sources.Tables.events(spark, sfDir)
       .select($"event_id", unix_micros($"ts").as("ts_us"), $"user_id", $"event_type")
       .as[EventRow]
-    detectOf(events)
   }
 
-  /** [[detect]] over any typed event set — the probe entry point
-    * ([[graft.ScaleProbe]] drives it at 10M events with a 30%-hot key). */
-  def detectOf(events: org.apache.spark.sql.Dataset[EventRow]): DataFrame = {
+  /** `p` per `user_id` in `(ts_us, event_id)` order, through [[Cep.matchPattern]]. */
+  private def matchUsers[O: Encoder](events: Dataset[EventRow], p: Pattern[EventRow])(
+      emitMatch: (Long, NFA.PatternMatch[EventRow]) => Option[O],
+      emitTimeout: (Long, NFA.PatternTimeout[EventRow]) => Option[O] =
+        (_: Long, _: NFA.PatternTimeout[EventRow]) => None): Dataset[O] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val raw = Cep.matchPattern[Long, EventRow, CepRaw](
-      events,
-      keyFn = _.user_id,
-      tsFn = _.ts_us / 1000L,
-      pattern = pattern,
-      sortCols = Seq($"ts_us", $"event_id"))(
-      emitMatch = (uid, m) =>
-        m.first("A").zip(m.first("C")).map { case (a, c) =>
-          CepRaw("match", uid, a.ts_us, c.ts_us)
-        },
-      emitTimeout = (uid, t) =>
-        t.first("A").map(a => CepRaw("timeout", uid, a.ts_us, -1L)))
-    def sec(c: org.apache.spark.sql.Column) =
-      timestamp_micros(c - pmod(c, lit(1000000L)))
+    Cep.matchPattern[Long, EventRow, O](
+      events, _.user_id, _.ts_us / 1000L, p, Seq($"ts_us", $"event_id"))(
+      emitMatch, emitTimeout)
+  }
+
+  /** Epoch micros truncated to the second, as a timestamp. */
+  private def sec(c: Column): Column = timestamp_micros(c - pmod(c, lit(1000000L)))
+
+  /** [[detect]] over any typed event set — the entry point the CEP
+    * benchmark (`perfbench`, workload `cep_batch`) drives directly. */
+  def detectOf(events: Dataset[EventRow]): DataFrame = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    val raw = matchUsers(events, pattern)(
+      (uid, m) => m.first("A").zip(m.first("C")).map { case (a, c) =>
+        CepRaw("match", uid, a.ts_us, c.ts_us)
+      },
+      (uid, t) => t.first("A").map(a => CepRaw("timeout", uid, a.ts_us, -1L)))
     raw.toDF()
       .select($"kind", $"user_id",
         sec($"alarm_us").as("alarm_ts"),
@@ -119,22 +129,8 @@ object EventPatterns {
   /** Negation matches: `(user_id, error_ts, click_ts)`. */
   def noPurchase(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val events = graft.sources.Tables.events(spark, sfDir)
-      .select($"event_id", unix_micros($"ts").as("ts_us"), $"user_id", $"event_type")
-      .as[EventRow]
-    val raw = Cep.matchPattern[Long, EventRow, (Long, Long, Long)](
-      events,
-      keyFn = _.user_id,
-      tsFn = _.ts_us / 1000L,
-      pattern = noPurchasePattern,
-      sortCols = Seq($"ts_us", $"event_id"))(
-      emitMatch = (uid, m) =>
-        m.first("A").zip(m.first("C")).map { case (a, c) =>
-          (uid, a.ts_us, c.ts_us)
-        },
-      emitTimeout = (_, _) => None)
-    def sec(c: org.apache.spark.sql.Column) =
-      timestamp_micros(c - pmod(c, lit(1000000L)))
+    val raw = matchUsers(eventRows(spark, sfDir), noPurchasePattern)((uid, m) =>
+      m.first("A").zip(m.first("C")).map { case (a, c) => (uid, a.ts_us, c.ts_us) })
     raw.toDF("user_id", "error_us", "click_us")
       .select($"user_id", sec($"error_us").as("error_ts"),
         sec($"click_us").as("click_ts"))
@@ -162,22 +158,8 @@ object EventPatterns {
     * `EventPatternsSpec` (no SQL oracle: DuckDB has no MATCH_RECOGNIZE). */
   def untilStreak(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val events = graft.sources.Tables.events(spark, sfDir)
-      .select($"event_id", unix_micros($"ts").as("ts_us"), $"user_id", $"event_type")
-      .as[EventRow]
-    val raw = Cep.matchPattern[Long, EventRow, (Long, Long, Long, Int)](
-      events,
-      keyFn = _.user_id,
-      tsFn = _.ts_us / 1000L,
-      pattern = untilPattern,
-      sortCols = Seq($"ts_us", $"event_id"))(
-      emitMatch = (uid, m) =>
-        m.first("S").zip(m.first("P")).map { case (s, p) =>
-          (uid, s.ts_us, p.ts_us, m("B").size)
-        },
-      emitTimeout = (_, _) => None)
-    def sec(c: org.apache.spark.sql.Column) =
-      timestamp_micros(c - pmod(c, lit(1000000L)))
+    val raw = matchUsers(eventRows(spark, sfDir), untilPattern)((uid, m) =>
+      m.first("S").zip(m.first("P")).map { case (s, p) => (uid, s.ts_us, p.ts_us, m("B").size) })
     raw.toDF("user_id", "signup_us", "purchase_us", "n_between")
       .select($"user_id", sec($"signup_us").as("signup_ts"),
         sec($"purchase_us").as("purchase_ts"), $"n_between")
@@ -187,22 +169,8 @@ object EventPatterns {
   /** Funnel matches: `(user_id, signup_ts, purchase_ts, n_engagement)`. */
   def funnel(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val events = graft.sources.Tables.events(spark, sfDir)
-      .select($"event_id", unix_micros($"ts").as("ts_us"), $"user_id", $"event_type")
-      .as[EventRow]
-    val raw = Cep.matchPattern[Long, EventRow, (Long, Long, Long, Int)](
-      events,
-      keyFn = _.user_id,
-      tsFn = _.ts_us / 1000L,
-      pattern = funnelPattern,
-      sortCols = Seq($"ts_us", $"event_id"))(
-      emitMatch = (uid, m) =>
-        m.first("S").zip(m.first("P")).map { case (s, p) =>
-          (uid, s.ts_us, p.ts_us, m("E").size)
-        },
-      emitTimeout = (_, _) => None)
-    def sec(c: org.apache.spark.sql.Column) =
-      timestamp_micros(c - pmod(c, lit(1000000L)))
+    val raw = matchUsers(eventRows(spark, sfDir), funnelPattern)((uid, m) =>
+      m.first("S").zip(m.first("P")).map { case (s, p) => (uid, s.ts_us, p.ts_us, m("E").size) })
     raw.toDF("user_id", "signup_us", "purchase_us", "n_engagement")
       .select($"user_id", sec($"signup_us").as("signup_ts"),
         sec($"purchase_us").as("purchase_ts"), $"n_engagement")

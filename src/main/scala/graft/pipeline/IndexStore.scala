@@ -76,7 +76,7 @@ private[pipeline] object IndexStore {
     * WARNS instead of degrading silently. */
   def fingerprint(s: SparkSession, dir: String, table: String): String = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-    try fingerprintOrThrow(s, dir, table)
+    try graft.sources.Tables.stamp(s, p.toString)
     catch {
       case e: java.io.IOException =>
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -85,23 +85,6 @@ private[pipeline] object IndexStore {
             "source will keep serving its stale index")
         p.toString
     }
-  }
-
-  /** [[fingerprint]] without the constant-key fallback — for callers where
-    * a wrong fingerprint is worse than an error ([[gc]]: a fallback key
-    * would silently reclassify the live artifact as stale and DELETE it;
-    * for getOrBuild the fallback merely disables staleness detection). */
-  private def fingerprintOrThrow(
-      s: SparkSession, dir: String, table: String): String = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(s"$dir/$table.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(p)
-    def stamp(s: org.apache.hadoop.fs.FileStatus): String =
-      s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}"
-    if (st.isDirectory)
-      fs.listStatus(p).sortBy(_.getPath.getName).map(stamp).mkString(",")
-    else stamp(st)
   }
 
   private val tempDirs =
@@ -287,7 +270,7 @@ private[pipeline] object IndexStore {
     // dir — silently reclassifying the live serving artifact as stale and
     // DELETING it. A gc that cannot see a live table must abort loudly.
     val liveFps = live.map { case (dir, table) =>
-      try fingerprintOrThrow(s, dir, table)
+      try graft.sources.Tables.stamp(s, s"$dir/$table.parquet")
       catch {
         case e: java.io.IOException => throw new java.io.IOException(
           s"IndexRetention.gc aborted: cannot fingerprint live table " +

@@ -94,9 +94,6 @@ object MatchRecognize {
   private val SkipRe =
     ("(?is)AFTER\\s+MATCH\\s+SKIP\\s+" +
       "(PAST\\s+LAST\\s+ROW|TO\\s+NEXT\\s+ROW|TO\\s+FIRST\\s+\\w+|TO\\s+LAST\\s+\\w+)").r
-  // one nesting level inside PATTERN( ... ): alternation groups `(B | C)`
-  private val PatternRe =
-    "(?is)PATTERN\\s*\\(\\s*((?:[^()]|\\([^()]*\\))*?)\\s*\\)".r
   private val WithinRe = "(?is)WITHIN\\s+INTERVAL\\s+'(\\d+)'\\s+(SECOND|MINUTE|HOUR|DAY)".r
   private val DefineRe = "(?is)DEFINE\\s+(.*)$".r
   private val MeasureItemRe =

@@ -38,7 +38,7 @@ object CepStream {
     * Changelog checkpointing: commit the per-batch DELTA instead of a full
     * store snapshot per partition per batch — at large key counts the
     * per-batch snapshot upload is the throughput floor, not the per-key
-    * get/put work (r9 StreamProbe measurement).
+    * get/put work (measured in r9).
     *
     * PARTITION SIZING (r10, revised r12): every state-store partition
     * pays a FIXED per-batch commit cost (RocksDB commit + changelog write
@@ -47,15 +47,16 @@ object CepStream {
     * query (the first checkpoint pins it for the query's lifetime).
     * Measured at 250k-row triggers, 1M events, 100k keys, local[32]
     * (r10, MemoryStream feed): 64 partitions = 68.8k ev/s, 32 = 115.7k,
-    * 16 = 117.7k. r12, with the probe feed fixed so driver-side row
-    * shipping no longer masks the operator (`StreamProbe` Scaladoc;
-    * medians of 3, ±15-20% box noise across probe invocations):
+    * 16 = 117.7k. r12, with a parquet file-stream feed so driver-side
+    * row shipping no longer masks the operator (medians of 3, ±15-20% box
+    * noise across invocations):
     * 32 partitions = 164-187k, 16 = 214-221k quiesced / 228-280k
     * pipelined — once input delivery is off the critical path, the
     * per-trigger commit fan-out is the remaining floor and cores/2 wins
     * ~20%. Rule: partitions = the smallest count whose per-partition row
     * work still saturates a task (≈ cores/2 at these trigger sizes),
-    * never more than cores. */
+    * never more than cores. The streaming layer of `perfbench`'s traced
+    * `cep_batch` run measures this operator today. */
   val rocksConf: Seq[(String, String)] = Seq(
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",

@@ -98,10 +98,10 @@ object NFAAllocationSpec {
     * (892-946) before its per-event garbage was removed. */
   val HotStreamBound = 300.0
 
-  /** `n` events in the `cep_batch` benchmark's shape (the repository's
-    * `cep_skew` scale probe): ten equally likely type slots (10% error,
-    * 30% view, 30% click, 10% purchase, 10% search, 10% idle), 100k users
-    * with user 0 taking 30% of the events, one event every 259.2 ms. */
+  /** `n` events in the `cep_batch` benchmark's shape: ten equally likely
+    * type slots (10% error, 30% view, 30% click, 10% purchase, 10% search,
+    * 10% idle), 100k users with user 0 taking 30% of the events, one event
+    * every 259.2 ms. */
   def benchStream(n: Int): Array[EventRow] = {
     val slots = Array("error", "view", "click", "view", "click", "view", "click",
       "purchase", "search", "idle")

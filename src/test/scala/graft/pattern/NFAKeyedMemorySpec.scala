@@ -4,12 +4,17 @@ import scala.collection.mutable
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.EventPatterns
+import graft.operators.EventPatterns.EventRow
+
 /** The batch CEP memory promise, pinned without Spark: one hot key with
   * millions of events plus 100k cold keys, pulled through a counting
   * iterator straight into [[NFA.runKeyed]]. Output must leave while the
   * input is still being read (no per-key output buffer), and the live
   * runners must stay within the keys that had an event inside the last
-  * `within` horizon (no per-key state beyond the horizon).
+  * `within` horizon (no per-key state beyond the horizon). Within one key,
+  * the hot key of the `cep_batch` stream holds no more live partials than
+  * one horizon's events, for the plain B-loop and for an `until` loop.
   */
 class NFAKeyedMemorySpec extends AnyFunSuite {
 
@@ -92,5 +97,24 @@ class NFAKeyedMemorySpec extends AnyFunSuite {
     assert(maxLive <= maxBound && maxBound <= 251, s"max live $maxLive, max bound $maxBound")
     assert(maxLive >= 2, s"max live $maxLive")
     assert(run.liveRunners == 0)
+
+    // The hot key of 1M `cep_batch` events (30% of them, ~4167 in one 1 h
+    // horizon), replayed in time order through one runner: live partials
+    // are bounded by one horizon's events, never by the key's volume.
+    val hot = NFAAllocationSpec.benchStream(1000000).filter(_.user_id == 0L)
+    val horizonEvents = (EventPatterns.WithinMs * 1000L / 259200L * 3 / 10).toInt
+    def maxPartials(p: Pattern[EventRow], evs: Array[EventRow]): Int = {
+      val r = new NfaRunner[EventRow](p, _.ts_us / 1000L)
+      evs.foldLeft(0) { (m, e) => r.onEvent(e); math.max(m, r.snapshot().partials.size) }
+    }
+    val loopMax = maxPartials(EventPatterns.pattern, hot)
+    // the stream has no "signup": its "search" slot (10%) anchors the
+    // until pattern's attempts instead
+    val untilMax = maxPartials(EventPatterns.untilPattern,
+      hot.map(e => if (e.event_type == "search") e.copy(event_type = "signup") else e))
+    assert(loopMax > 0 && loopMax <= horizonEvents,
+      s"B-loop live partials $loopMax, horizon bound $horizonEvents")
+    assert(untilMax > 0 && untilMax <= horizonEvents,
+      s"until live partials $untilMax, horizon bound $horizonEvents")
   }
 }

@@ -4,19 +4,22 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.ScaleProbe.Ev
 import graft.pattern.{AfterMatchSkip, NFA, NfaRunner, Pattern}
+import ScheduleDivergenceSpec.Ev
 
-/** Spec-scale twin of `StreamProbe`'s quiesced/pipelined schedule pair —
-  * the match-count divergence made EXECUTABLE (r12 verdict #5).
+/** Two trigger schedules over the same staged parquet file-stream feed of
+  * `CepStream` — QUIESCED (one `processAllAvailable` per staged group) and
+  * PIPELINED (all groups staged up front, back-to-back data triggers) —
+  * and the match-count divergence between them made EXECUTABLE (r12
+  * verdict #5).
   *
-  * Measured mechanism (this spec pins it; the first cut of the probe's
-  * comment guessed "late-row filtering", which is wrong in detail): no
-  * Spark-side late-row drop exists on this operator at all — the
-  * event-time column is projected away before `transformWithState`, so
-  * `numRowsDroppedByWatermark` stays 0 and every late row REACHES the
-  * processor (asserted below). What differs is WHEN the within-horizon
-  * retirement runs relative to a borderline-late event's arrival:
+  * Measured mechanism (this spec pins it; a first guess of "late-row
+  * filtering" was wrong in detail): no Spark-side late-row drop exists on
+  * this operator at all — the event-time column is projected away before
+  * `transformWithState`, so `numRowsDroppedByWatermark` stays 0 and every
+  * late row REACHES the processor (asserted below). What differs is WHEN
+  * the within-horizon retirement runs relative to a borderline-late
+  * event's arrival:
   *
   *  - QUIESCED (processAllAvailable per group): each group's batch is
   *    followed by a dedicated empty trigger in which the armed event-time
@@ -36,7 +39,7 @@ import graft.pattern.{AfterMatchSkip, NFA, NfaRunner, Pattern}
   * bindings contain a borderline-late event, and each stream output must
   * equal an `NfaRunner` replay of its schedule's event/watermark
   * interleaving. Any NFA/timer change that shifts semantics now fails
-  * here instead of reading as probe noise.
+  * here instead of reading as benchmark noise.
   */
 class ScheduleDivergenceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -187,4 +190,9 @@ class ScheduleDivergenceSpec extends AnyFunSuite {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(staged))
     }
   }
+}
+
+object ScheduleDivergenceSpec {
+  /** One synthetic event: `ts` in epoch micros, `kind` picks the stage. */
+  final case class Ev(event_id: Long, user_id: Long, ts: Long, kind: Int)
 }
