@@ -38,8 +38,8 @@ object StreamProbe {
 
     // ---- SessionStream at 10M events: heavy out-of-orderness, one hot ----
     // key (~30%), 100k keys. The §7.4.7-style contract under test: state is
-    // per-key OPEN sessions + 3 scalars — bounded by keys and the
-    // out-of-orderness horizon, never by event volume (the hot key's ~3M
+    // per-key OPEN sessions + 2 scalars + the armed timer — bounded by keys
+    // and the out-of-orderness horizon, never by event volume (the hot key's ~3M
     // events accrete into ONE open session struct of 4 longs) — and sealed
     // output must EQUAL the batch q_sessionize rollup row-for-row. Events
     // arrive by a jittered arrival clock (ts + up to 20 min) in 16
@@ -108,7 +108,7 @@ object StreamProbe {
     val nMatch = got.join(expected, joinCols).count()
     assert(nGot == nExp && nMatch == nExp,
       s"session parity broken: streaming $nGot, batch $nExp, matched $nMatch")
-    // state bounded by KEYS (1 ctrl row per key + timer rows), not events;
+    // state bounded by KEYS (1 state row per key + timer rows), not events;
     // > 0 also proves the re-enabled row tracking actually took effect
     assert(maxStateRows > 0L && maxStateRows <= (users + 2) * 3,
       s"state rows $maxStateRows outside (0, ${(users + 2) * 3}]")

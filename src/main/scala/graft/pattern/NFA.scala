@@ -29,9 +29,11 @@ import scala.collection.mutable.{ArrayBuffer, ListBuffer}
   * position lists, where acceptance is reachable) is built once per
   * [[Pattern]] instance as immutable [[NfaStructure]] arrays that every
   * runner of it shares, so a runner costs only its own state. An idle
-  * event, or one that every live partial ignores where it stands,
-  * allocates nothing: the runner reuses its step buffers, dedup table and
-  * predicate context between events.
+  * event, or one that every live partial ignores (where it stands, or into
+  * the waiting position the same move reached on the previous event),
+  * allocates nothing: the runner reuses its step buffers, its two dedup
+  * tables (this event's and the previous event's) and predicate context
+  * between events.
   *
   * State-size contract (100 TB note): live partials per key are bounded by
   * the `within` horizon — every partial older than `within` is retired at the
@@ -92,16 +94,8 @@ object NFA {
       * resident position, the newest consumed (stage, idx) and the start
       * (every partial starts at its oldest consumed event, so equal
       * content means equal start). */
-    private[pattern] def dedupHash: Int = {
-      var h = stage * 0x01000193 ^ taken
-      if (consumed.nonEmpty) {
-        val c = consumed.head
-        h = h * 31 + c.stage
-        h = h * 31 + java.lang.Long.hashCode(c.idx)
-      }
-      h = h * 31 + java.lang.Long.hashCode(startIdx)
-      if (tripped.isEmpty) h else h * 31 + tripped.hashCode
-    }
+    private[pattern] def dedupHash: Int =
+      dedupHashOf(stage, taken, consumed, startIdx, tripped)
 
     /** One NFA state: same resident position, tripped guards and consumed
       * (stage, idx) sequence; ranks, times and the events themselves are
@@ -125,6 +119,19 @@ object NFA {
       }
       true
     }
+  }
+
+  /** [[Partial.dedupHash]] from the parts of a partial not built yet. */
+  private[pattern] def dedupHashOf(stage: Int, taken: Int,
+      consumed: List[Consumed[_]], startIdx: Long, tripped: Set[Int]): Int = {
+    var h = stage * 0x01000193 ^ taken
+    if (consumed.nonEmpty) {
+      val c = consumed.head
+      h = h * 31 + c.stage
+      h = h * 31 + java.lang.Long.hashCode(c.idx)
+    }
+    h = h * 31 + java.lang.Long.hashCode(startIdx)
+    if (tripped.isEmpty) h else h * 31 + tripped.hashCode
   }
 
   /** A partial's consumed (stage, idx) sequence as a hash key. */
@@ -438,9 +445,13 @@ final class NfaRunner[T](val pattern: Pattern[T], tsFn: T => Long) extends Seria
   private var completed: ArrayBuffer[Partial[T]] = null
   private var matched: ListBuffer[PatternMatch[T]] = null
   // Dedup of `next`: open addressing over the partials added this event,
-  // filled from the second add on and emptied after the step.
+  // filled from the second add on. After the step it becomes `prevSlots`,
+  // the index of the partials the next event steps (it may also hold
+  // partials pruned after it was built), and the older table is emptied.
   private var slots: Array[AnyRef] = null
   private var indexed = 0
+  private var prevSlots: Array[AnyRef] = null
+  private var prevIndexed = 0
 
   /** The one predicate context, re-pointed at each partial as it steps;
     * its bindings view is built only if an iterative condition asks. */
@@ -463,6 +474,11 @@ final class NfaRunner[T](val pattern: Pattern[T], tsFn: T => Long) extends Seria
       deferredCands)
 
   def restore(s: Snapshot[T]): Unit = {
+    // event indices restart with the snapshot: forget the previous table
+    if (prevIndexed > 0) {
+      java.util.Arrays.fill(prevSlots, null)
+      prevIndexed = 0
+    }
     partials = ArrayBuffer.from(s.partials)
     minStartIdx = s.minStartIdx
     nextIdx = s.nextIdx
@@ -734,10 +750,12 @@ final class NfaRunner[T](val pattern: Pattern[T], tsFn: T => Long) extends Seria
     var k = 0
     while (k < partials.length) { step(partials(k), e, i); k += 1 }
     stepInitial(e, i, t)
-    if (indexed > 0) {
-      java.util.Arrays.fill(slots, null)
-      indexed = 0
-    }
+    if (prevIndexed > 0) java.util.Arrays.fill(prevSlots, null)
+    val emptied = prevSlots
+    prevSlots = slots
+    prevIndexed = indexed
+    slots = emptied
+    indexed = 0
 
     // 3. Emit completions per the after-match skip strategy.
     if ((completed != null && completed.nonEmpty) || champion.isDefined ||
@@ -832,9 +850,39 @@ final class NfaRunner[T](val pattern: Pattern[T], tsFn: T => Long) extends Seria
     // IGNORE
     if (ignoreAllowed(st, taken, e)) {
       val tr = if (trippedNow.isEmpty) p.tripped else p.tripped ++ trippedNow
-      add(if (s == p.stage && taken == p.taken && tr == p.tripped) p
-          else Partial(s, taken, p.consumed, p.startIdx, p.startTs, tr))
+      if (s == p.stage && taken == p.taken && tr == p.tripped) add(p)
+      else {
+        // a partial that waits past an ignored event made this same move on
+        // the previous event: reuse what it left rather than build a twin
+        val twin = prevTwin(p, s, taken, tr)
+        add(if (twin != null) twin
+            else Partial(s, taken, p.consumed, p.startIdx, p.startTs, tr))
+      }
     }
+  }
+
+  // The partial in the previous event's table that equals `p` moved to
+  // (`s`, `taken`) with guards `tr` and no ranks, or null.
+  private def prevTwin(p: Partial[T], s: Int, taken: Int, tr: Set[Int]): Partial[T] =
+    if (prevIndexed == 0) null
+    else {
+      val mask = prevSlots.length - 1
+      var h = home(dedupHashOf(s, taken, p.consumed, p.startIdx, tr), mask)
+      var q = prevSlots(h)
+      while (q != null) {
+        val c = q.asInstanceOf[Partial[T]]
+        if (c.stage == s && c.taken == taken && c.startIdx == p.startIdx &&
+            c.startTs == p.startTs && c.ranks.isEmpty && c.tripped == tr &&
+            c.sameContent(p)) return c
+        h = (h + 1) & mask
+        q = prevSlots(h)
+      }
+      null
+    }
+
+  private def home(hash: Int, mask: Int): Int = {
+    val h0 = hash * 0x9E3779B9
+    (h0 ^ (h0 >>> 16)) & mask
   }
 
   /** The implicit initial state's moves on `e`: a take into each initial
@@ -883,8 +931,7 @@ final class NfaRunner[T](val pattern: Pattern[T], tsFn: T => Long) extends Seria
       if (old != null) old.foreach(q => if (q != null) index(q.asInstanceOf[Partial[T]]))
     }
     val mask = slots.length - 1
-    val h0 = p.dedupHash * 0x9E3779B9
-    var h = (h0 ^ (h0 >>> 16)) & mask
+    var h = home(p.dedupHash, mask)
     var q = slots(h)
     while (q != null) {
       if (q.asInstanceOf[Partial[T]].sameState(p)) return false

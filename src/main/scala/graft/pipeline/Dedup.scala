@@ -206,24 +206,16 @@ object Dedup {
     Tables.parquet(s, new org.apache.hadoop.fs.Path(
       corpusScoredPairsPath(s, dir), "hot").toString)
 
-  /** Memoized EMPTINESS of the persisted hot-bucket table, keyed on the
-    * artifact path (r16, guide §1 — the plan-time `limit(1).isEmpty` gate
-    * in [[minhashPairsSubset]] ran a small Spark job per consumer CALL;
-    * four pipeline queries pay it once per bench run each). Sound because
-    * the key embeds the corpus fingerprint: durable artifact dirs are
-    * `variant-fp<hash>` and published immutably (marker written last),
-    * session-temp dirs are built exactly once per (fingerprint, variant)
-    * — a mutated corpus resolves to a DIFFERENT path and re-probes.
-    * METADATA memoization only, same class as the `Tables.parquet` schema
-    * memo. */
-  private val hotEmptyMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
+  /** EMPTINESS of the persisted hot-bucket table, memoized in the
+    * [[Tables.memoAt]] metadata memo on (path, file stamp) (r16, guide §1 —
+    * the plan-time `limit(1).isEmpty` gate in [[minhashPairsSubset]] ran a
+    * small Spark job per consumer CALL; four pipeline queries pay it once
+    * per bench run each). A rewritten artifact dir stamps differently and
+    * re-probes. */
   private def corpusHotBucketsEmpty(s: SparkSession, dir: String): Boolean = {
     val path = new org.apache.hadoop.fs.Path(
       corpusScoredPairsPath(s, dir), "hot").toString
-    hotEmptyMemo.computeIfAbsent(path,
-      p => Boolean.box(Tables.parquet(s, p).limit(1).isEmpty)).booleanValue()
+    Tables.memoAt(s, "empty", path)(Tables.parquet(s, path).limit(1).isEmpty)
   }
 
   /** [[minhashPairs]] served from the [[corpusScoredPairs]] artifact —

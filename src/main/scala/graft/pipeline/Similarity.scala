@@ -408,22 +408,17 @@ object Similarity {
     arr
   }
 
-  /** [[centroidArrayOf]] of a PERSISTED index's frozen model, memoized per
-    * artifact path (r16, guide §1 — the K-row collect is a plan-time Spark
-    * job that every literal-model consumer re-ran per query; knn join /
-    * hard negatives / assign / refresh / the two frontier Ks each paid
-    * it). Sound because the model is immutable at its path by the artifact
-    * contract (BUILD and COMPACT write `centroids`, MERGE copies it, never
-    * mutated; durable roots are fingerprint-suffixed and published
-    * immutably) — the [[Dedup]] hot-gate memo / `Tables.parquet` schema
-    * memo class: METADATA memoization, never query results. */
-  private val centroidArrayMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Long, Seq[Long], Long)]]()
-
+  /** [[centroidArrayOf]] of a PERSISTED index's frozen model, memoized in
+    * the [[Tables.memoAt]] metadata memo on (path, file stamp) (r16, guide
+    * §1 — the K-row collect is a plan-time Spark job that every
+    * literal-model consumer re-ran per query; knn join / hard negatives /
+    * assign / refresh / the two frontier Ks each paid it). A model
+    * rewritten at the same path stamps differently and is re-collected. */
   private[graft] def centroidArrayAt(
-      s: SparkSession, indexPath: String): Seq[(Long, Seq[Long], Long)] =
-    centroidArrayMemo.computeIfAbsent(indexPath,
-      p => centroidArrayOf(Tables.parquet(s, s"$p/centroids")))
+      s: SparkSession, indexPath: String): Seq[(Long, Seq[Long], Long)] = {
+    val path = s"$indexPath/centroids"
+    Tables.memoAt(s, "centroids", path)(centroidArrayOf(Tables.parquet(s, path)))
+  }
 
   /** FROZEN-CENTROID IVF cell assignment as a stateless transform — the
     * serving half of the index for live ingest: fit offline ([[ivfModel]] /

@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming._
 
 /** DYNAMIC-RULE streaming operator — the broadcast-state idiom (Flink's
   * `BroadcastProcessFunction`) the reference's deployments would need to
@@ -37,8 +36,10 @@ import org.apache.spark.sql.streaming._
   * `foreachBatch`, re-read per epoch (the stateless alternative when
   * rules live in an external store).
   *
-  * Scale: state per key = one long (the register) + rows buffered within
-  * the watermark delay — bounded, RocksDB-backed like every stateful
+  * State contract at scale: one [[KeyedFold.eventTime]] fold per key;
+  * its one state value holds the rule register and the rows above the
+  * watermark (bounded by the watermark delay), beside the one armed timer
+  * at the earliest buffered row — RocksDB-backed like every stateful
   * operator here ([[CepStream.rocksConf]]).
   */
 object DynamicRuleStream {
@@ -60,17 +61,34 @@ object DynamicRuleStream {
       key: String, ts: Timestamp,
       balanceBefore: Long, balanceAfter: Long, threshold: Long)
 
-  /** Streaming detection: rules applied mid-stream without restart. */
+  /** One key's fold state: `thr` = the rule register, `buf` = the rows
+    * the watermark has not passed yet. */
+  final case class RuleState(thr: Long, buf: Seq[RuleOrEvent])
+
+  /** Streaming detection: rules applied mid-stream without restart.
+    * Watermark-ready rows fold in (ts, rule-before-data) order — the
+    * determinism contract; the fold wakes at the earliest buffered row so
+    * buffered rows drain when the watermark advances even if the key
+    * receives no further input. */
   def detect(
       rows: Dataset[RuleOrEvent],
       watermarkDelay: String = "6 minutes"): Dataset[ThresholdAlert] = {
     val spark = rows.sparkSession
     import spark.implicits._
-    rows.withWatermark("ts", watermarkDelay)
-      .as[RuleOrEvent]
-      .groupByKey(_.key)
-      .transformWithState(
-        new DynamicRuleProcessor, TimeMode.EventTime(), OutputMode.Append())
+    KeyedFold.eventTime(rows.withWatermark("ts", watermarkDelay).as[RuleOrEvent])(
+        _.key, "rules", Encoders.product[RuleState],
+        RuleState(DefaultThreshold, Nil)) { (key, st, in, wm) =>
+      val (ready, later) = (st.buf ++ in).partition(_.ts.getTime <= wm)
+      var cur = st.thr
+      val out = ready.sortBy(r => (r.ts.getTime, if (r.kind == "rule") 0 else 1))
+        .flatMap { r =>
+          if (r.kind == "rule") { cur = r.threshold; None }
+          else if (r.balanceBefore >= cur && r.balanceAfter < cur)
+            Some(ThresholdAlert(key, r.ts, r.balanceBefore, r.balanceAfter, cur))
+          else None
+        }
+      (RuleState(cur, later), out.iterator, later.map(_.ts.getTime).minOption)
+    }
   }
 
   /** Batch twin over the SAME tagged rows: the threshold in effect at any
@@ -91,69 +109,5 @@ object DynamicRuleStream {
       .select($"key", $"ts", $"balanceBefore", $"balanceAfter",
         $"thr".as("threshold"))
       .as[ThresholdAlert]
-  }
-}
-
-/** Per-key processor: `thr` = the rule register (ValueState, initialized
-  * lazily to [[DynamicRuleStream.DefaultThreshold]]), `buf` = rows newer
-  * than the watermark (ListState), `armed` = the pending event-time timer
-  * so buffered rows drain when the watermark advances even if the key
-  * receives no further input. Watermark-ready rows fold in
-  * (ts, rule-before-data) order — the determinism contract. */
-final class DynamicRuleProcessor(
-    implicit re: Encoder[DynamicRuleStream.RuleOrEvent])
-  extends StatefulProcessor[
-    String, DynamicRuleStream.RuleOrEvent, DynamicRuleStream.ThresholdAlert] {
-
-  import DynamicRuleStream._
-
-  @transient private var buf: ListState[RuleOrEvent] = _
-  @transient private var thr: ValueState[Long] = _
-  @transient private var armed: ValueState[Long] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    buf = getHandle.getListState[RuleOrEvent]("buf", re, TTLConfig.NONE)
-    thr = getHandle.getValueState[Long]("thr", Encoders.scalaLong, TTLConfig.NONE)
-    armed = getHandle.getValueState[Long]("armed", Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  private def drain(
-      key: String, wm: Long, newRows: Seq[RuleOrEvent]): Iterator[ThresholdAlert] = {
-    val all = buf.get().toVector ++ newRows
-    val (ready, later) = all.partition(_.ts.getTime <= wm)
-    val out = Vector.newBuilder[ThresholdAlert]
-    val cur0 = if (thr.exists()) thr.get() else DefaultThreshold
-    var cur = cur0
-    ready.sortBy(r => (r.ts.getTime, if (r.kind == "rule") 0 else 1))
-      .foreach { r =>
-        if (r.kind == "rule") cur = r.threshold
-        else if (r.balanceBefore >= cur && r.balanceAfter < cur)
-          out += ThresholdAlert(key, r.ts, r.balanceBefore, r.balanceAfter, cur)
-      }
-    if (cur != cur0 || !thr.exists()) thr.update(cur)
-    buf.clear()
-    if (later.nonEmpty) buf.appendList(later.toArray)
-    // one armed timer per key, at the earliest buffered row
-    val prev = if (armed.exists()) armed.get() else Long.MinValue
-    val next =
-      if (later.nonEmpty) later.iterator.map(_.ts.getTime).min else Long.MinValue
-    if (next != prev) {
-      if (prev != Long.MinValue) getHandle.deleteTimer(prev)
-      if (next != Long.MinValue) { getHandle.registerTimer(next); armed.update(next) }
-      else armed.clear()
-    }
-    out.result().iterator
-  }
-
-  override def handleInputRows(
-      key: String, rows: Iterator[RuleOrEvent],
-      timerValues: TimerValues): Iterator[ThresholdAlert] =
-    drain(key, timerValues.getCurrentWatermarkInMs(), rows.toVector)
-
-  override def handleExpiredTimer(
-      key: String, timerValues: TimerValues,
-      expired: ExpiredTimerInfo): Iterator[ThresholdAlert] = {
-    if (armed.exists() && armed.get() == expired.getExpiryTimeInMs()) armed.clear()
-    drain(key, timerValues.getCurrentWatermarkInMs(), Nil)
   }
 }

@@ -1,18 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.{DataFrame, Dataset}
 
 import graft.relational.TimeSeries
 
 /** Streaming HOLT–WINTERS forecasting — the live twin of the batch
   * `q_ts_holt_winters` (`TimeSeries.holtWinters`): per user, event-time
   * DAY buckets seal as the watermark passes their end (the
-  * [[TimeSeriesStream]] sealing machinery), each sealed day's
+  * [[TimeSeriesStream.bucketFold]] sealer), each sealed day's
   * purchase-cents total — zero for interior gap days, exactly as the
   * batch grid materializes them — folds through the identical
-  * shift-floored α = β = γ = 1/2 recursion, and every drain that seals
+  * shift-floored α = β = γ = 1/2 recursion, and every call that seals
   * at least one day emits the user's REFRESHED
   * (level, trend, next-day seasonal, 1-day forecast) row. Live
   * forecasting is the point of the streaming form: the projection
@@ -24,37 +22,34 @@ import graft.relational.TimeSeries
   * once every observed day has sealed, the LAST emission per user is
   * bit-identical to the batch fold over the same events.
   *
-  * State contract at scale: per key ONE small ctrl value (next day to
-  * seal, armed timer, day count, the 9-long [l, b, s₁..s₇] register)
-  * plus a map of OPEN days above the watermark — bounded by
-  * horizon/day, never by stream length; late rows below a sealed day
-  * are dropped (the standard contract) — by the WATERMARK before the
-  * processor, counted in the query's numRowsDroppedByWatermark metric
-  * (sealing never runs ahead of the watermark, so a row under a sealed
-  * day is always under the watermark too; the in-handler `b >= next`
-  * guard is the defensive second line — `HoltStreamSpec` pins emissions
-  * unchanged and the drop counted). Parallelism is the user-key
-  * hash partitioning, Flink's keyed scope.
+  * State contract at scale: one [[KeyedFold.eventTime]] fold per user;
+  * its one state value holds the next day to seal, the OPEN days above
+  * the watermark (at most horizon/day + 1, never stream length), the day
+  * count and the 9-long [l, b, s₁..s₇] register, beside the one armed
+  * timer. Late rows below a sealed day are dropped by the WATERMARK
+  * before the fold, counted in the query's numRowsDroppedByWatermark
+  * metric (sealing never runs ahead of the watermark, so a row under a
+  * sealed day is always under the watermark too; the sealer's
+  * `b >= next` guard is the defensive second line — `HoltStreamSpec`
+  * pins emissions unchanged and the drop counted). Parallelism is the
+  * user-key hash partitioning, Flink's keyed scope.
   */
 object HoltStream {
 
   val DayMs: Long = 86400000L
 
-  case class HwPoint(user_id: Long, event_ts: java.sql.Timestamp, vc: Long)
   case class HwRow(user_id: Long, n_days: Long, level_micro: Long,
       trend_micro: Long, season_next_micro: Long, forecast1_micro: Long)
-  /** `next` = next day INDEX to seal (NoVal before the first event);
-    * `timer` = armed event-time timer ms (NoVal if none); `nDays` = days
-    * folded so far; `st` = the [l, b, s₁..s₇] register (empty until the
-    * first seal). */
-  case class HwCtrl(next: Long, timer: Long, nDays: Long, st: Array[Long])
+  /** `nDays` = days folded so far; `st` = the [l, b, s₁..s₇] register
+    * (empty until the first seal). */
+  case class HwState(nDays: Long, st: Array[Long])
 
   /** `events`: (user_id, ts, event_type, value) streaming or batch frame —
     * the driver events shape. `delay` is the out-of-orderness bound. */
   def forecasts(events: DataFrame, delay: String = "30 minutes"): Dataset[HwRow] = {
     val s = events.sparkSession
     import s.implicits._
-    // The processor buckets days by UTC epoch-day arithmetic
+    // The sealer buckets days by UTC epoch-day arithmetic
     // (floorDiv(ts, DayMs) — timers must align with epoch-day boundaries),
     // while the batch twin buckets via session-timezone to_date: the
     // documented streaming ≡ batch bit-identity holds only under UTC, so
@@ -63,20 +58,20 @@ object HoltStream {
       "HoltStream.forecasts requires spark.sql.session.timeZone=UTC: day " +
         "buckets and sealing timers are epoch-day aligned, and the batch " +
         "twin (TimeSeries.holtWinters) buckets via session-timezone to_date")
-    events
-      .filter($"event_type" === "purchase")
-      .select($"user_id", date_trunc("second", $"ts").as("event_ts"),
-        floor($"value" * 100).cast("long").as("vc"))
-      .withWatermark("event_ts", delay)
-      .as[HwPoint]
-      .groupByKey(_.user_id)
-      .transformWithState(new HoltWintersProcessor,
-        TimeMode.EventTime(), OutputMode.Append())
+    TimeSeriesStream.bucketFold(events, delay, DayMs,
+        HwState(0L, Array.emptyLongArray)) { (key, hw, closed) =>
+      val st = closed.foldLeft(hw.st) { case (st, (_, cents)) =>
+        if (st.isEmpty) seed(cents) else step(st, cents)
+      }
+      val n = hw.nDays + closed.size
+      (HwState(n, st),
+        Iterator.single(HwRow(key, n, st(0), st(1), st(2), st(0) + st(1) + st(2))))
+    }
   }
 
-  /** One fold step of the batch recursion (shared with the processor so
-    * the twin can never drift): `st` must be the 9-long register. */
-  private[streaming] def step(st: Array[Long], yCents: Long): Array[Long] = {
+  /** One fold step of the batch recursion: `st` must be the 9-long
+    * register. */
+  private def step(st: Array[Long], yCents: Long): Array[Long] = {
     val S = TimeSeries.EwmaScale
     val y = yCents * S
     val l2 = (y - st(2) + st(0) + st(1)) >> 1
@@ -89,97 +84,9 @@ object HoltStream {
     out
   }
 
-  private[streaming] def seed(yCents: Long): Array[Long] = {
+  private def seed(yCents: Long): Array[Long] = {
     val out = new Array[Long](9)
     out(0) = yCents * TimeSeries.EwmaScale
     out
-  }
-}
-
-/** Per-user processor. State: "open" MapState dayIdx→cents (days the
-  * watermark hasn't sealed), "ctrl" ValueState [[HoltStream.HwCtrl]].
-  */
-final class HoltWintersProcessor
-  extends StatefulProcessor[Long, HoltStream.HwPoint, HoltStream.HwRow] {
-  import HoltStream._
-
-  private val NoVal = Long.MinValue
-
-  @transient private var open: MapState[java.lang.Long, Long] = _
-  @transient private var ctrl: ValueState[HwCtrl] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    open = getHandle.getMapState[java.lang.Long, Long]("open",
-      Encoders.LONG, Encoders.scalaLong, TTLConfig.NONE)
-    ctrl = getHandle.getValueState[HwCtrl]("ctrl",
-      Encoders.product[HwCtrl], TTLConfig.NONE)
-  }
-
-  private def readCtrl(): HwCtrl =
-    if (ctrl.exists()) ctrl.get() else HwCtrl(NoVal, NoVal, 0L, Array.emptyLongArray)
-
-  /** Seal every day the watermark has passed, up to the last observed
-    * one; fold each into the register; emit the refreshed row iff at
-    * least one day sealed; re-arm the timer iff open days remain. */
-  private def drain(key: Long, wm: Long, c0: HwCtrl): Iterator[HwRow] = {
-    var st = c0.st
-    var nDays = c0.nDays
-    var maxOpen = NoVal
-    var minOpen = java.lang.Long.MAX_VALUE
-    val it = open.keys()
-    while (it.hasNext) {
-      val k = it.next().longValue()
-      if (k > maxOpen) maxOpen = k
-      if (k < minOpen) minOpen = k
-    }
-    // span pins at the first seal (st empty ⟺ nothing sealed yet)
-    var next = if (st.isEmpty) minOpen else c0.next
-    if (maxOpen == NoVal && st.isEmpty) {
-      ctrl.update(HwCtrl(NoVal, c0.timer, nDays, st)); return Iterator.empty
-    }
-    var sealedAny = false
-    while (maxOpen != NoVal && next <= maxOpen && (next + 1) * DayMs <= wm) {
-      val boxed = java.lang.Long.valueOf(next)
-      val cents = if (open.containsKey(boxed)) open.getValue(boxed) else 0L
-      if (open.containsKey(boxed)) open.removeKey(boxed)
-      st = if (st.isEmpty) seed(cents) else step(st, cents)
-      nDays += 1
-      sealedAny = true
-      next += 1
-    }
-    val newTimer =
-      if (maxOpen != NoVal && next <= maxOpen) (next + 1) * DayMs else NoVal
-    if (newTimer != c0.timer) {
-      if (c0.timer != NoVal) getHandle.deleteTimer(c0.timer)
-      if (newTimer != NoVal) getHandle.registerTimer(newTimer)
-    }
-    ctrl.update(HwCtrl(next, newTimer, nDays, st))
-    if (sealedAny)
-      Iterator.single(HwRow(key, nDays, st(0), st(1), st(2),
-        st(0) + st(1) + st(2)))
-    else Iterator.empty
-  }
-
-  override def handleInputRows(key: Long, rows: Iterator[HwPoint],
-      timerValues: TimerValues): Iterator[HwRow] = {
-    val c0 = readCtrl()
-    rows.foreach { p =>
-      val b = Math.floorDiv(p.event_ts.getTime, DayMs)
-      // once sealing started, a day below `next` is sealed = late row
-      if (c0.st.isEmpty || b >= c0.next) {
-        val boxed = java.lang.Long.valueOf(b)
-        val cur = if (open.containsKey(boxed)) open.getValue(boxed) else 0L
-        open.updateValue(boxed, cur + p.vc)
-      }
-    }
-    drain(key, timerValues.getCurrentWatermarkInMs(), c0)
-  }
-
-  override def handleExpiredTimer(key: Long, timerValues: TimerValues,
-      expired: ExpiredTimerInfo): Iterator[HwRow] = {
-    val c0 = readCtrl()
-    val c1 =
-      if (c0.timer == expired.getExpiryTimeInMs()) c0.copy(timer = NoVal) else c0
-    drain(key, timerValues.getCurrentWatermarkInMs(), c1)
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming._
 
 /** A per-key running fold over a stream — the reference's third solution,
@@ -21,7 +21,8 @@ import org.apache.spark.sql.streaming._
   * that starts from its first event: Spark calls the processor only for
   * keys with at least one row, so such a fold always returns a state. No
   * timers and no TTL: state is whatever `fold` keeps, O(1) in stream
-  * length for every fold above.
+  * length for every fold above. The event-time form with one timer per
+  * key is [[KeyedFold.eventTime]].
   *
   * Ordering contract: ACROSS micro-batches, arrival order; WITHIN a
   * micro-batch, `order` when given — Spark's shuffle does not preserve
@@ -67,4 +68,72 @@ object KeyedFold {
     in.groupByKey(key).transformWithState(
       new KeyedFold(stateName, stateEncoder, zero, order, fold),
       TimeMode.None(), OutputMode.Append())
+
+  /** The event-time form — keyed state plus ONE event-time timer per key,
+    * the reference's `onTimer` shape (FlinkProcessFunctionExample.scala:
+    * 44-111) that [[TimeSeriesStream]], [[HoltStream]], [[SessionStream]]
+    * and [[DynamicRuleStream]] instantiate. `in` must carry a watermark.
+    *
+    * `fold` also sees the current watermark (ms) and returns the instant
+    * it next wants to be called, or None: `(key, state, rows, wm) =>
+    * (state, outputs, wakeAt)`. The processor keeps the armed instant
+    * beside the fold state in the key's one ValueState `(state, armed)`, so
+    * each call is one get and one put; it re-arms exactly (delete the old
+    * timer, register the new one) only when the instant changes, and when
+    * the timer fires it calls `fold` with NO rows. A key with no wake is
+    * called again only when it has rows. Rows below the watermark are
+    * dropped by the framework before `fold` (counted in the query's
+    * numRowsDroppedByWatermark); `order` sorts each batch slice as in
+    * [[KeyedFold]]. */
+  def eventTime[K: Encoder, In, S, Out: Encoder](in: Dataset[In])(key: In => K,
+      stateName: String, stateEncoder: Encoder[S], zero: S,
+      order: Option[Ordering[In]] = None)(
+      fold: (K, S, Iterator[In], Long) => (S, Iterator[Out], Option[Long])): Dataset[Out] =
+    in.groupByKey(key).transformWithState(
+      new Timed(stateName, stateEncoder, zero, order, fold),
+      TimeMode.EventTime(), OutputMode.Append())
+
+  private val NoWake = Long.MinValue
+
+  /** The processor of [[eventTime]]. */
+  private final class Timed[K, In, S, Out](
+      stateName: String,
+      stateEncoder: Encoder[S],
+      zero: S,
+      order: Option[Ordering[In]],
+      fold: (K, S, Iterator[In], Long) => (S, Iterator[Out], Option[Long]))
+    extends StatefulProcessor[K, In, Out] {
+
+    @transient private var state: ValueState[(S, Long)] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      state = getHandle.getValueState[(S, Long)](stateName,
+        Encoders.tuple(stateEncoder, Encoders.scalaLong), TTLConfig.NONE)
+
+    override def handleInputRows(key: K, rows: Iterator[In],
+        timerValues: TimerValues): Iterator[Out] =
+      call(key, order.fold(rows)(o => rows.toVector.sorted(o).iterator),
+        timerValues, NoWake)
+
+    override def handleExpiredTimer(key: K, timerValues: TimerValues,
+        expired: ExpiredTimerInfo): Iterator[Out] =
+      call(key, Iterator.empty, timerValues, expired.getExpiryTimeInMs())
+
+    /** One fold call; `fired` is the timer that just expired (it is no
+      * longer registered) or NoWake. */
+    private def call(key: K, rows: Iterator[In], timerValues: TimerValues,
+        fired: Long): Iterator[Out] = {
+      val (s0, stored) = if (state.exists()) state.get() else (zero, NoWake)
+      val armed = if (stored == fired) NoWake else stored
+      val (s1, out, wake) =
+        fold(key, s0, rows, timerValues.getCurrentWatermarkInMs())
+      val next = wake.getOrElse(NoWake)
+      if (next != armed) {
+        if (armed != NoWake) getHandle.deleteTimer(armed)
+        if (next != NoWake) getHandle.registerTimer(next)
+      }
+      state.update((s1, next))
+      out
+    }
+  }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming._
 
 import graft.relational.Paths
 
@@ -22,12 +21,13 @@ import graft.relational.Paths
   * later event, watermark parked) stay open — the streaming contract; a
   * watermark-advancing later event seals them lazily.
   *
-  * State contract at scale: per key a Seq of OPEN sessions — bounded by
-  * (out-of-orderness horizon)/gap, never by stream length — plus three
-  * scalars (next id, armed timer, sealed frontier) and ONE armed
-  * event-time timer (the earliest open session's seal instant). Late
-  * events behind the sealed frontier are dropped (the standard
-  * late-data contract). */
+  * State contract at scale: one [[KeyedFold.eventTime]] fold per user,
+  * sorted by (ts_sec, event_id) within a batch; its one state value holds
+  * the OPEN sessions — bounded by (out-of-orderness horizon)/gap, never by
+  * stream length — plus two scalars (next id, sealed frontier), beside
+  * the one armed timer (the earliest open session's seal instant). Late
+  * events behind the sealed frontier are dropped (the standard late-data
+  * contract). */
 object SessionStream {
 
   val GapS: Long = Paths.TransitionGapMin * 60L
@@ -36,15 +36,17 @@ object SessionStream {
   case class SessRow(user_id: Long, session_id: Long, start_sec: Long,
       end_sec: Long, n_events: Long, n_purchases: Long, duration_s: Long)
   case class Open(start: Long, last: Long, n: Long, np: Long)
-  /** `timer`/`frontier` use [[SessionProcessor.NoVal]] when unset. */
-  case class SessCtrl(nextId: Long, timer: Long, frontier: Long, opens: Seq[Open])
+  /** `frontier` is [[NoVal]] until the first seal. */
+  case class SessCtrl(nextId: Long, frontier: Long, opens: Seq[Open])
+
+  val NoVal: Long = Long.MinValue
 
   /** `events`: (user_id, ts, event_type, event_id) streaming or batch
     * frame — the driver events shape. `delay` bounds out-of-orderness. */
   def sessions(events: DataFrame, delay: String = "30 minutes"): Dataset[SessRow] = {
     val s = events.sparkSession
     import s.implicits._
-    events
+    val ev = events
       .select($"user_id", date_trunc("second", $"ts").as("event_ts"),
         $"event_id",
         when($"event_type" === "purchase", 1L).otherwise(0L).as("purch"))
@@ -52,26 +54,27 @@ object SessionStream {
       .select($"user_id", (unix_timestamp($"event_ts")).as("ts_sec"),
         $"event_id", $"purch")
       .as[SEvent]
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionProcessor,
-        TimeMode.EventTime(), OutputMode.Append())
+    KeyedFold.eventTime(ev)(_.user_id, "sess", Encoders.product[SessCtrl],
+        SessCtrl(1L, NoVal, Vector.empty),
+        Some(Ordering.by((e: SEvent) => (e.ts_sec, e.event_id)))) { (key, c0, rows, wmMs) =>
+      // behind the sealed frontier = the session it belonged to already
+      // emitted: dropped (late-data contract)
+      val opens = rows.foldLeft(c0.opens.toVector) { (opens, e) =>
+        if (c0.frontier == NoVal || e.ts_sec > c0.frontier + GapS) insert(opens, e)
+        else opens
+      }
+      // seal every open session whose gap horizon the watermark passed
+      val (closed, open) = opens.partition(o => (o.last + GapS + 1L) * 1000L <= wmMs)
+      val out = closed.zipWithIndex.map { case (o, i) =>
+        SessRow(key, c0.nextId + i, o.start, o.last, o.n, o.np, o.last - o.start)
+      }
+      val frontier =
+        if (closed.isEmpty) c0.frontier
+        else math.max(c0.frontier, closed.map(_.last).max)
+      (SessCtrl(c0.nextId + closed.size, frontier, open), out.iterator,
+        open.map(_.last).minOption.map(l => (l + GapS + 1L) * 1000L))
+    }
   }
-}
-
-final class SessionProcessor
-  extends StatefulProcessor[Long, SessionStream.SEvent, SessionStream.SessRow] {
-  import SessionStream._
-
-  val NoVal: Long = Long.MinValue
-
-  @transient private var ctrl: ValueState[SessCtrl] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    ctrl = getHandle.getValueState[SessCtrl]("sess",
-      Encoders.product[SessCtrl], TTLConfig.NONE)
-
-  private def readCtrl(): SessCtrl =
-    if (ctrl.exists()) ctrl.get() else SessCtrl(1L, NoVal, NoVal, Vector.empty)
 
   /** Insert one event into the sorted open-session list, merging any
     * sessions it bridges. */
@@ -87,51 +90,5 @@ final class SessionProcessor
         touched.map(_.n).sum + 1L,
         touched.map(_.np).sum + e.purch)
     (rest :+ merged).sortBy(_.start)
-  }
-
-  /** Seal every open session whose gap horizon the watermark passed;
-    * re-arm the timer for the earliest survivor. */
-  private def drain(key: Long, wmMs: Long, c0: SessCtrl): Iterator[SessRow] = {
-    val sealIf = (o: Open) => (o.last + GapS + 1L) * 1000L <= wmMs
-    val (closed, open) = c0.opens.toVector.partition(sealIf)
-    val out = closed.sortBy(_.start).zipWithIndex.map { case (o, i) =>
-      SessRow(key, c0.nextId + i, o.start, o.last, o.n, o.np, o.last - o.start)
-    }
-    val frontier =
-      if (closed.isEmpty) c0.frontier
-      else math.max(c0.frontier, closed.map(_.last).max)
-    val newTimer =
-      if (open.isEmpty) NoVal
-      else (open.map(_.last).min + GapS + 1L) * 1000L
-    if (newTimer != c0.timer) {
-      if (c0.timer != NoVal) getHandle.deleteTimer(c0.timer)
-      if (newTimer != NoVal) getHandle.registerTimer(newTimer)
-    }
-    ctrl.update(SessCtrl(c0.nextId + closed.size, newTimer, frontier, open))
-    out.iterator
-  }
-
-  override def handleInputRows(key: Long, rows: Iterator[SEvent],
-      timerValues: TimerValues): Iterator[SessRow] = {
-    // ctrl is THREADED through the loop (not captured once): the frontier
-    // check always reads the latest state, so a future refactor that
-    // interleaves sealing with insertion cannot re-admit a behind-frontier
-    // event into an already-sealed range
-    var c = readCtrl()
-    rows.toVector.sortBy(e => (e.ts_sec, e.event_id)).foreach { e =>
-      // behind the sealed frontier = the session it belonged to already
-      // emitted: dropped (late-data contract)
-      if (c.frontier == NoVal || e.ts_sec > c.frontier + GapS)
-        c = c.copy(opens = insert(c.opens.toVector, e))
-    }
-    drain(key, timerValues.getCurrentWatermarkInMs(), c)
-  }
-
-  override def handleExpiredTimer(key: Long, timerValues: TimerValues,
-      expired: ExpiredTimerInfo): Iterator[SessRow] = {
-    val c0 = readCtrl()
-    val c1 =
-      if (c0.timer == expired.getExpiryTimeInMs()) c0.copy(timer = NoVal) else c0
-    drain(key, timerValues.getCurrentWatermarkInMs(), c1)
   }
 }

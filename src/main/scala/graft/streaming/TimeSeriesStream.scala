@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming._
 
 import graft.relational.TimeSeries
 
@@ -25,12 +26,14 @@ import graft.relational.TimeSeries
   * first closes the interior zeros lazily, which is also why idle keys arm
   * no timers).
   *
-  * State contract at scale: per key ONE small ctrl value (next bucket to
-  * close, armed timer, trailing ring of ≤ [[TimeSeries.TrailN]] sums) plus
-  * a map of OPEN buckets (above the watermark) — bounded by
-  * horizon/bucket, never by stream length; rows below the watermark whose
-  * bucket already closed are dropped (the standard late-data contract).
-  * Parallelism is the user-key hash partitioning, Flink's keyed scope.
+  * State contract at scale: one [[KeyedFold.eventTime]] fold per user over
+  * the shared bucket sealer ([[bucketFold]]); its one state value holds the
+  * next bucket to close, the OPEN buckets (above the watermark — at most
+  * horizon/bucket + 1, never stream length) and the trailing ring of
+  * ≤ [[TimeSeries.TrailN]] sums, beside the one armed timer. Rows below the
+  * watermark are dropped by the framework (the standard late-data
+  * contract). Parallelism is the user-key hash partitioning, Flink's keyed
+  * scope.
   */
 object TimeSeriesStream {
 
@@ -40,114 +43,92 @@ object TimeSeriesStream {
 
   case class TsPoint(user_id: Long, event_ts: java.sql.Timestamp, vc: Long)
   case class TsFlag(user_id: Long, bstart_ms: Long, cents: Long, tsum: Long)
-  /** `next` = next bucket INDEX to close (NoVal before the first event);
-    * `timer` = armed event-time timer ms (NoVal if none); `ring` =
-    * oldest-first closed-bucket sums, ≤ TrailN entries. */
-  case class TsCtrl(next: Long, timer: Long, ring: Array[Long])
+
+  /** One key's open buckets: `next` = the next bucket INDEX to seal
+    * (`NoSeal` until the first seal — until then the grid's start floats
+    * with out-of-order arrivals); `idx`/`cents` = the buckets above the
+    * watermark and their purchase cents, ascending by index. */
+  case class Buckets(next: Long, idx: Array[Long], cents: Array[Long])
+
+  private val NoSeal = Long.MinValue
 
   /** `events`: (user_id, ts, event_type, value) streaming or batch frame —
     * the driver events shape. `delay` is the out-of-orderness bound. */
   def anomaly(events: DataFrame, delay: String = "30 minutes"): Dataset[TsFlag] = {
     val s = events.sparkSession
     import s.implicits._
-    events
+    bucketFold(events, delay, BucketMs, Array.emptyLongArray) { (key, ring0, closed) =>
+      // `ring` = oldest-first sums of the last ≤ TrailN sealed buckets
+      var ring = ring0
+      val flags = closed.flatMap { case (b, cents) =>
+        val tsum = ring.sum
+        val full = ring.length == TimeSeries.TrailN
+        ring = (if (full) ring.tail else ring) :+ cents
+        if (full && cents > 0 && cents * TimeSeries.TrailN > TimeSeries.SpikeMult * tsum)
+          Some(TsFlag(key, b * BucketMs, cents, tsum))
+        else None
+      }
+      (ring, flags.iterator)
+    }
+  }
+
+  /** The event-time bucket sealer, shared with [[HoltStream]]: per user,
+    * purchase cents of `events` in epoch-aligned buckets of `widthMs`; a
+    * bucket seals once the watermark passes its end, and only up to the
+    * user's last observed bucket (interior gaps seal as zero). Every call
+    * that seals hands `onSeal` the sealed (bucket index, cents) pairs in
+    * index order with the user's accumulator; the fold wakes at the end of
+    * the next bucket that can seal. */
+  private[streaming] def bucketFold[A: Encoder, Out: Encoder](events: DataFrame,
+      delay: String, widthMs: Long, zero: A)(
+      onSeal: (Long, A, Vector[(Long, Long)]) => (A, Iterator[Out])): Dataset[Out] = {
+    val s = events.sparkSession
+    import s.implicits._
+    val points = events
       .filter($"event_type" === "purchase")
       .select($"user_id", date_trunc("second", $"ts").as("event_ts"),
         floor($"value" * 100).cast("long").as("vc"))
       .withWatermark("event_ts", delay)
       .as[TsPoint]
-      .groupByKey(_.user_id)
-      .transformWithState(new TsAnomalyProcessor,
-        TimeMode.EventTime(), OutputMode.Append())
-  }
-}
-
-/** Per-user processor. State: "open" MapState bucketIdx→cents (buckets the
-  * watermark hasn't sealed), "ctrl" ValueState [[TimeSeriesStream.TsCtrl]].
-  */
-final class TsAnomalyProcessor
-  extends StatefulProcessor[Long, TimeSeriesStream.TsPoint, TimeSeriesStream.TsFlag] {
-  import TimeSeriesStream._
-
-  private val NoVal = Long.MinValue
-
-  @transient private var open: MapState[java.lang.Long, Long] = _
-  @transient private var ctrl: ValueState[TsCtrl] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    open = getHandle.getMapState[java.lang.Long, Long]("open",
-      Encoders.LONG, Encoders.scalaLong, TTLConfig.NONE)
-    ctrl = getHandle.getValueState[TsCtrl]("ctrl",
-      Encoders.product[TsCtrl], TTLConfig.NONE)
+    KeyedFold.eventTime(points)(_.user_id, "buckets",
+        Encoders.tuple(Encoders.product[Buckets], implicitly[Encoder[A]]),
+        (Buckets(NoSeal, Array.emptyLongArray, Array.emptyLongArray), zero)) {
+      case (key, (open0, acc), rows, wm) =>
+        val (open1, closed, wake) = seal(widthMs, open0, rows, wm)
+        val (acc1, out) =
+          if (closed.isEmpty) (acc, Iterator.empty) else onSeal(key, acc, closed)
+        ((open1, acc1), out, wake)
+    }
   }
 
-  private def readCtrl(): TsCtrl =
-    if (ctrl.exists()) ctrl.get() else TsCtrl(NoVal, NoVal, Array.emptyLongArray)
-
-  /** Seal every bucket the watermark has passed, up to the last observed
-    * one; emit flags; re-arm the timer iff open buckets remain. */
-  private def drain(key: Long, wm: Long, c0: TsCtrl): Iterator[TsFlag] = {
-    var ring = c0.ring
-    var maxOpen = NoVal
-    var minOpen = java.lang.Long.MAX_VALUE
-    val it = open.keys()
-    while (it.hasNext) {
-      val k = it.next().longValue()
-      if (k > maxOpen) maxOpen = k
-      if (k < minOpen) minOpen = k
-    }
-    // The span start is the MIN observed bucket (the batch `min(b)` span
-    // semantics). It pins only at the FIRST seal (ring empty ⟺ nothing
-    // sealed yet): until then, out-of-order arrivals above the watermark
-    // may still extend the grid downward.
-    var next = if (ring.isEmpty) minOpen else c0.next
-    if (maxOpen == NoVal && ring.isEmpty) {
-      ctrl.update(TsCtrl(NoVal, c0.timer, ring)); return Iterator.empty
-    }
-    val out = Vector.newBuilder[TsFlag]
-    while (maxOpen != NoVal && next <= maxOpen && (next + 1) * BucketMs <= wm) {
-      val boxed = java.lang.Long.valueOf(next)
-      val cents = if (open.containsKey(boxed)) open.getValue(boxed) else 0L
-      if (open.containsKey(boxed)) open.removeKey(boxed)
-      if (ring.length == TimeSeries.TrailN && cents > 0 &&
-          cents * TimeSeries.TrailN > TimeSeries.SpikeMult * ring.sum)
-        out += TsFlag(key, next * BucketMs, cents, ring.sum)
-      ring = (if (ring.length == TimeSeries.TrailN) ring.tail else ring) :+ cents
-      next += 1
-    }
-    // timer: the earliest instant the next sealable bucket can close —
-    // only while data is actually open (idle keys park with no timer)
-    val newTimer =
-      if (maxOpen != NoVal && next <= maxOpen) (next + 1) * BucketMs else NoVal
-    if (newTimer != c0.timer) {
-      if (c0.timer != NoVal) getHandle.deleteTimer(c0.timer)
-      if (newTimer != NoVal) getHandle.registerTimer(newTimer)
-    }
-    ctrl.update(TsCtrl(next, newTimer, ring))
-    out.result().iterator
-  }
-
-  override def handleInputRows(key: Long, rows: Iterator[TsPoint],
-      timerValues: TimerValues): Iterator[TsFlag] = {
-    val c0 = readCtrl()
+  /** Adds `rows` to the open buckets `b`, then seals every bucket the
+    * watermark `wm` has passed, up to the last open one: (open buckets,
+    * the sealed (index, cents) pairs in order, the end of the next bucket
+    * that can seal). */
+  private def seal(widthMs: Long, b: Buckets, rows: Iterator[TsPoint], wm: Long)
+      : (Buckets, Vector[(Long, Long)], Option[Long]) = {
+    val open = mutable.TreeMap.from(b.idx.iterator.zip(b.cents.iterator))
     rows.foreach { p =>
-      val b = Math.floorDiv(p.event_ts.getTime, BucketMs)
-      // once sealing started (ring non-empty), a bucket below `next` is a
-      // sealed bucket = late row, dropped; before that the span floats
-      if (c0.ring.isEmpty || b >= c0.next) {
-        val boxed = java.lang.Long.valueOf(b)
-        val cur = if (open.containsKey(boxed)) open.getValue(boxed) else 0L
-        open.updateValue(boxed, cur + p.vc)
-      }
+      val i = Math.floorDiv(p.event_ts.getTime, widthMs)
+      // once sealing started, a bucket below `next` is sealed = late row,
+      // dropped; before that the span floats
+      if (b.next == NoSeal || i >= b.next) open(i) = open.getOrElse(i, 0L) + p.vc
     }
-    drain(key, timerValues.getCurrentWatermarkInMs(), c0)
-  }
-
-  override def handleExpiredTimer(key: Long, timerValues: TimerValues,
-      expired: ExpiredTimerInfo): Iterator[TsFlag] = {
-    val c0 = readCtrl()
-    val c1 =
-      if (c0.timer == expired.getExpiryTimeInMs()) c0.copy(timer = NoVal) else c0
-    drain(key, timerValues.getCurrentWatermarkInMs(), c1)
+    if (open.isEmpty) (b, Vector.empty, None)
+    else {
+      // The span start is the MIN observed bucket (the batch `min(b)` span
+      // semantics); it pins at the first seal
+      var next = if (b.next == NoSeal) open.firstKey else b.next
+      val last = open.lastKey
+      val closed = Vector.newBuilder[(Long, Long)]
+      while (next <= last && (next + 1) * widthMs <= wm) {
+        closed += next -> open.remove(next).getOrElse(0L)
+        next += 1
+      }
+      val done = closed.result()
+      (Buckets(if (done.isEmpty) b.next else next,
+          open.keysIterator.toArray, open.valuesIterator.toArray),
+        done, if (next <= last) Some((next + 1) * widthMs) else None)
+    }
   }
 }

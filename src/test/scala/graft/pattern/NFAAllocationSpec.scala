@@ -58,11 +58,18 @@ class NFAAllocationSpec extends AnyFunSuite {
 
   test("an event that changes no state allocates nothing") {
     // a partial waiting across a relaxed gap, and one inside a loop with
-    // relaxed repetitions: both ignore 'x' and stay as they are
+    // relaxed repetitions: both ignore 'x' and stay as they are; in the
+    // funnel shape the B-loop partial also moves on every 'x' to wait at C
+    // again, and the waiting partial the previous 'x' left is reused
     val waiting = Pattern.begin[Ev]("A", AfterMatchSkip.SkipPastLastEvent).where(_.kind == 'a')
       .followedBy("B").where(_.kind == 'b')
       .within(1000L)
-    for ((name, p, prefix) <- Seq(("relaxed gap", waiting, "a"), ("relaxed loop", strictLoop, "ab"))) {
+    val funnel = Pattern.begin[Ev]("A", AfterMatchSkip.SkipPastLastEvent).where(_.kind == 'a')
+      .followedBy("B").where(_.kind == 'b').oneOrMore
+      .followedBy("C").where(_.kind == 'c')
+      .within(1000L)
+    for ((name, p, prefix) <- Seq(("relaxed gap", waiting, "a"), ("relaxed loop", strictLoop, "ab"),
+        ("relaxed loop before a relaxed stage", funnel, "ab"))) {
       val r = new NfaRunner[Ev](p, _.ts)
       // the first ignored event settles the resident position
       (prefix + "x").foreach(c => r.onEvent(Ev(0L, c)))

@@ -8,7 +8,8 @@ import graft.TestSpark
   * answered from the parquet-persisted model must be bit-identical to one
   * answered from the inline model (same centroids, same cells, same
   * deterministic tie rules) — and the persisted path's lineage is two
-  * parquet scans, never a k-means replay.
+  * parquet scans, never a k-means replay; the memoized model array follows
+  * a model rewritten at the same path.
   */
 class IvfIndexSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -32,6 +33,15 @@ class IvfIndexSpec extends AnyFunSuite {
       assert(!plan.contains("posexplode"), s"k-means replay in:\n$plan")
       val scans = plan.split("\n").count(_.contains("Relation"))
       assert(scans >= 2, s"expected parquet scans in:\n$plan")
+      // the memoized centroid array follows a model rewritten in place
+      val path = s"$dir/centroids"
+      val before = Similarity.centroidArrayAt(spark, dir)
+      val model = spark.read.parquet(path)
+      val kept = model.collect().filter(_.getAs[Long]("cid") != before.head._1)
+      spark.createDataFrame(java.util.Arrays.asList(kept: _*), model.schema)
+        .write.mode("overwrite").parquet(path)
+      assert(Similarity.centroidArrayAt(spark, dir).map(_._1).toSet ==
+        before.map(_._1).toSet - before.head._1)
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,7 +15,9 @@ import graft.relational.TimeSeries
   * the stream diverges from its batch twin — WITHIN a batch rows are
   * sorted, so any in-batch shuffle gives the batch result; and the state a
   * sorted fold carries (CUSUM's calibration buffer) survives a checkpoint
-  * restart.
+  * restart. The event-time form's timer contract is pinned on the
+  * skeleton itself: a requested wake is exactly one no-row call once the
+  * watermark passes it, and no wake means no further call.
   */
 class KeyedFoldSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -131,5 +133,38 @@ class KeyedFoldSpec extends AnyFunSuite {
     // which came back from the checkpoint
     assert(fin(1L)._2 == 1000L && fin(2L)._2 == 1000L)
     assert(fin(1L)._4 > 0L && fin(2L)._4 == 0L)
+  }
+
+  test("event-time form: a requested wake is one no-row call once the watermark passes it") {
+    import spark.implicits._
+    val wakeAt = ts("2024-01-01 10:30:00").getTime
+    val mem = MemoryStream[(String, Timestamp)]
+    val in = mem.toDF().toDF("k", "ts").withWatermark("ts", "0 seconds")
+      .as[(String, Timestamp)]
+    // every call emits (key, rows seen, watermark); only key "a" asks to
+    // wake, and only on a call with rows
+    val calls = KeyedFold.eventTime(in)(_._1, "calls", Encoders.scalaLong, 0L) {
+      (k, n, rows, wm) =>
+        val seen = rows.size
+        (n + 1L, Iterator.single((k, seen, wm)),
+          if (k == "a" && seen > 0) Some(wakeAt) else None)
+    }
+    val q = calls.writeStream.format("memory").queryName("kf_timer")
+      .outputMode("append").start()
+    try {
+      // batch 1 arms a's wake; key c's rows then move the watermark past it
+      Seq(Seq(("a", ts("2024-01-01 10:00:00")), ("b", ts("2024-01-01 10:00:00"))),
+        Seq(("c", ts("2024-01-01 12:00:00"))),
+        Seq(("c", ts("2024-01-01 13:00:00"))))
+        .foreach { c => mem.addData(c: _*); q.processAllAvailable() }
+      val got = spark.table("kf_timer").as[(String, Int, Long)].collect().toSeq
+      val a = got.filter(_._1 == "a").sortBy(_._3)
+      assert(a.map(_._2) == Seq(1, 0), got)
+      assert(a(1)._3 >= wakeAt, got)
+      assert(got.filter(_._1 == "b").map(_._2) == Seq(1), got)
+    } finally {
+      q.stop()
+      spark.sql("DROP TABLE IF EXISTS kf_timer")
+    }
   }
 }
