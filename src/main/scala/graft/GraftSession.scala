@@ -52,8 +52,9 @@ object GraftSession {
       // numRows tracking makes every put pay a hidden get (Spark docs call
       // this out as the put-path tax on write-heavy stateful queries).
       // Cost: `numRowsTotal` reads 0 in streaming progress — a state-size
-      // probe that needs the metric re-enables it per query (StreamProbe's
-      // SessionStream section does). Correctness loses nothing.
+      // check that needs the metric re-enables it per query (the state-bound
+      // tests of `SessionStreamSpec` and `DynamicRuleStreamSpec` do).
+      // Correctness loses nothing.
       .config("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
         "false")
       // MATCH_RECOGNIZE in spark.sql(...)

@@ -19,7 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * under merge `(a,a)` → `[aa, a]` — and merges apply in list order. This
   * equals the classic reference implementation's per-word loop, and equals
   * a chain of literal string `replace` calls over the padded-symbol
-  * spelling (`Tokenizer.bpeApplyHof`), which is how the DuckDB oracle
+  * spelling (the specs' `ReferenceSpellings.bpeApplyHof`), which is how the DuckDB oracle
   * applies the same list.
   *
   * One fused loop per word, no per-merge string re-splits; at a production

@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Fused winnowing selection (Schleimer et al. 2003): over a gram-hash
   * array, the distinct per-window minima at window width `w`, ties to the
   * RIGHTMOST position — semantically identical to
-  * [[graft.pipeline.Winnowing.selectExprOf]]'s built-in spelling, which
+  * the built-in spelling `ReferenceSpellings.selectExprOf` in the specs, which
   * re-reads the whole window per output (an interpreted `aggregate` lambda
   * inside a `transform`, O(len·w) interpreted steps and a struct
   * allocation per window). This expression runs ONE monotonic-deque sweep:
@@ -74,7 +74,7 @@ object WinnowSelect {
     // monotonic deque of 0-based indices with strictly increasing values;
     // a push pops every tail with value >= the newcomer, so the FRONT of
     // a full window is its minimum with the RIGHTMOST tie (the paper's
-    // rule, and exactly selectExprOf's `<=` left fold)
+    // rule, and exactly the built-in spelling's `<=` left fold)
     val dq = new Array[Int](len)
     var head = 0
     var tail = 0 // exclusive

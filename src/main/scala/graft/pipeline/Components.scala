@@ -145,8 +145,8 @@ object Components {
   }
 
   /** [[connectedComponents]] with a per-round observer: `roundLog(round,
-    * workingSetEdges)` after each round — what `ScaleProbe` prints and
-    * `ComponentsSpec` asserts shrinks. `splitThreshold` overrides the
+    * workingSetEdges)` after each round — what `ComponentsSpec` asserts
+    * shrinks. `splitThreshold` overrides the
     * [[SplitThreshold]] gate (0 = always split); `localSolveThreshold`
     * overrides the [[LocalSolveThreshold]] gate (0 = never leave the
     * distributed loop); tests use both. */

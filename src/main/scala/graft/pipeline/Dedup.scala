@@ -120,8 +120,8 @@ object Dedup {
     minhashPairsIndexed(s, dir).orderBy($"doc_a", $"doc_b")
   }
 
-  /** [[minhash]] over any `(doc_id, text)` table — the probe / library
-    * entry point ([[graft.ScaleProbe]] drives it at 10× bench scale). */
+  /** [[minhash]] over any `(doc_id, text)` table — the library entry
+    * point. */
   def minhashOf(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
     minhashPairs(s, docs).orderBy($"doc_a", $"doc_b")
@@ -386,8 +386,7 @@ object Dedup {
 
   /** The merge HALF of [[clusterMergeOf]] given an already-FROZEN map `m`
     * (`(node, root)` over the corpus subgraph) — what production actually
-    * runs, and what [[graft.ScaleProbe]] times: delta build + delta
-    * closure cost ∝ arrivals, plus two columnar scans of the frozen map
+    * runs: delta build + delta closure cost ∝ arrivals, plus two columnar scans of the frozen map
     * (the relabel join and the final re-root join — never a corpus
     * re-closure).
     *
@@ -437,8 +436,7 @@ object Dedup {
     * re-closure. `ComponentsSpec` pins the CHAIN: two sequential batches
     * folded through the intermediate map ≡ one closure over the 3-way
     * union, including a batch-2 pair that welds two clusters batch 1
-    * created; [[graft.ScaleProbe]] times the chained fold at a 1M-node
-    * map. Same stale-weld caveat as [[clusterMergeWithMap]]. */
+    * created. Same stale-weld caveat as [[clusterMergeWithMap]]. */
   private[graft] def mergeComponentMap(m: DataFrame, newPairs: DataFrame): DataFrame = {
     val s = m.sparkSession
     import s.implicits._

@@ -71,19 +71,6 @@ object HeavyHitters {
       .orderBy($"cnt".desc, $"sh")
   }
 
-  /** The exact plan (full vocabulary shuffle) — the reference
-    * `HeavyHittersSpec` compares against, and the fallback below the scale
-    * where a sketch pays for itself. */
-  private[pipeline] def heavyHittersExact(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    docs.select(explode(shingles3(tokens(lower($"text")))).as("sh"))
-      .groupBy($"sh")
-      .agg(count(lit(1)).as("cnt"))
-      .filter($"cnt" >= HeavyT)
-      .orderBy($"cnt".desc, $"sh")
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_text_heavyhitters" -> heavyHitters _,
   )

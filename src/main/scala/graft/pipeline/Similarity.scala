@@ -43,22 +43,10 @@ object Similarity {
   val QueryVecs = 5 // vec_id < 5 act as the query set
 
   /** LSH bucket id (0 .. 2^planes-1) for a quantized vector column —
-    * native one-pass [[graft.functions.LshBucket]]; the HOF spelling below
-    * is the oracle-shaped cross-implementation check. */
+    * native one-pass [[graft.functions.LshBucket]]; `LshBucketSpec` pins
+    * it against the oracle-shaped built-in-only spelling. */
   def bucket(q: Column, planes: Int = Planes): Column =
     graft.functions.LshBucket(q, planes)
-
-  /** Built-in-only bucket (one interpreted vector walk PER PLANE). */
-  def bucketHof(q: Column, planes: Int = Planes): Column =
-    (0 until planes).map { p =>
-      when(
-        aggregate(
-          zip_with(q, sequence(lit(0), size(q) - 1),
-            (x, d) => x * (shiftright(d.cast("long") * 1103515245L + lit(12345L * p), 16)
-              .bitwiseAND(1) * 2 - 1)),
-          lit(0L), (s, v) => s + v) > 0,
-        lit(1L << p)).otherwise(lit(0L))
-    }.reduce(_ + _)
 
   /** Top-k same-or-near-bucket neighbors per query vector by exact
     * quantized dot product. `probeRadius` 0 = single-bucket (r1 behavior),
@@ -241,8 +229,8 @@ object Similarity {
 
   /** [[knnJoin]] over any `(cid, cq, cn2)` centroid table + `(vec_id, q,
     * n2, cell)` assignment with an explicit cell cap — the adversarial-
-    * fixture and [[graft.ScaleProbe]] entry point (`SimilaritySpec` plants
-    * a degenerate cell over the cap; the probe grows it to 10^6 vectors). */
+    * fixture entry point (`SimilaritySpec` plants a degenerate cell over the
+    * cap, by hand and out of a k-means collapse). */
   private[graft] def knnJoinOf(
       s: SparkSession, centsDf: DataFrame, cellsRaw: DataFrame,
       maxCell: Int, nprobe: Int = KnnNprobe): DataFrame =
@@ -259,8 +247,8 @@ object Similarity {
     // index parquet ([[ivfModel]]) — re-scanning it twice is cheaper than a
     // MEMORY_AND_DISK copy a library caller in a long-lived session would
     // have to remember to clearCache (the r8 "already cached" warnings).
-    // Callers feeding a COMPUTED assignment (fixtures, [[graft.ScaleProbe]])
-    // own its materialization.
+    // Callers feeding a COMPUTED assignment (the spec fixtures) own its
+    // materialization.
     val cells = cellsRaw
     // over-cap cells reduce to a tiny (cell) list via map-side-combinable
     // count, broadcast, and anti-join — the corpus side never shuffles for
@@ -680,9 +668,9 @@ object Similarity {
     ivfModel(s, dir, k): Unit
 
   /** [[ivfModel]] over any `(vec_id, q)` quantized-vector table with K
-    * cells — the probe entry point ([[graft.ScaleProbe]] drives it at 50×
-    * the bench vectors with K grown 32×: at 100 TB, K grows with the corpus
-    * so per-cell width stays bounded). */
+    * cells — the fixture entry point (`SemanticDedupSpec` and
+    * `SimilaritySpec` plant copies and a k-means collapse through it; at
+    * 100 TB, K grows with the corpus so per-cell width stays bounded). */
   private[graft] def ivfModelOf(
       s: SparkSession, eIn: DataFrame, k: Int): (DataFrame, DataFrame) = {
     import s.implicits._

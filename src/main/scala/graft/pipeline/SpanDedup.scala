@@ -56,8 +56,8 @@ object SpanDedup {
   def spans(s: SparkSession, dir: String): DataFrame =
     spansOf(s, Tables.table(s, dir, "documents"))
 
-  /** [[spans]] over any `(doc_id, text)` table — the probe / library entry
-    * point ([[graft.ScaleProbe]] drives it at 10× bench scale). */
+  /** [[spans]] over any `(doc_id, text)` table — the library entry point
+    * (`SpanDedupSpec` drives it with a planted near-copy corpus). */
   def spansOf(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
     // Two plan branches (per-doc totals + the explode) read the span-hash
@@ -131,19 +131,6 @@ object SpanDedup {
       .select($"doc_id", explode(shingleMd5(tokens($"text"), SpanK)).as("h"))
       .join(corpusSpans, "h")
       .groupBy($"doc_id").agg(count(lit(1)).as("n_hits"))
-  }
-
-  /** [[incremental]] without the Bloom prefilter — the reference plan the
-    * spec compares against (and the fallback if the batch outgrows the
-    * Bloom budget). */
-  private[pipeline] def incrementalExact(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val spans0 = Tables.table(s, dir, "documents")
-      .select($"doc_id", explode(shingleMd5(tokens($"text"), SpanK)).as("h"))
-    spans0.filter($"doc_id" % 2 === 1)
-      .join(spans0.filter($"doc_id" % 2 === 0).select($"h").distinct(), "h")
-      .groupBy($"doc_id").agg(count(lit(1)).as("n_hits"))
-      .orderBy($"doc_id")
   }
 
   /** `bloom_filter_agg` over a long column (Spark's sketch aggregate — the

@@ -282,15 +282,9 @@ object TextAnalysis {
     * collocations / repetition were still on the interpreted HOF spelling
     * that [[Hashing.shingles3]] left behind in r8 — same fused loop, same
     * ~10× per-row win; `ShingleStringsSpec` pins native ≡ HOF at both
-    * shipped n). [[gramsHof]] stays as the cross-implementation check. */
+    * shipped n). */
   private def grams(w: Column, n: Int): Column =
     graft.functions.ShingleStrings(w, n)
-
-  /** Built-in-only spelling of [[grams]] — the oracle-shaped reference. */
-  private[pipeline] def gramsHof(w: Column, n: Int): Column =
-    when(size(w) >= n,
-      transform(sequence(lit(1), size(w) - (n - 1)), i => concat_ws(" ", slice(w, i, lit(n)))))
-      .otherwise(array().cast("array<string>"))
 
   /** Within-document repetition metrics — the Gopher-style quality signals
     * (Rae et al. 2021 §A1.1) that catch boilerplate and degenerate
@@ -524,29 +518,10 @@ object TextAnalysis {
     *
     * Native fused form ([[graft.functions.ClfGramBuckets]] — one pass over
     * the marked token's bytes, zero per-gram allocation; the HOF spelling
-    * below cost a measured +1.2 s each on fit/eval at sf0.1 and is kept as
-    * the cross-implementation check, `ClassifierFitSpec` pins native ≡
-    * HOF on the real corpus). */
+    * cost a measured +1.2 s each on fit/eval at sf0.1, and
+    * `ClassifierFitSpec` pins native ≡ HOF on the real corpus). */
   private def clfFeatureBuckets(t: Column): Column =
     graft.functions.ClfGramBuckets(t, ClfBuckets)
-
-  /** Built-in-only spelling of [[clfFeatureBuckets]] — the marked token
-    * `g` binds as a LAMBDA VARIABLE (transform over a 1-element array;
-    * HOF Columns are CSE-exempt, so a plain reuse would re-evaluate the
-    * concat per gram — the r11 LineClean lesson). The 4-gram arm guards
-    * `length ≥ 4`: Spark's `sequence(1, 0)` DESCENDS ([1, 0]) where
-    * DuckDB's `generate_series(1, 0)` is empty — unguarded, a 1-char
-    * token would diverge the engines AND hash a bogus gram. */
-  private[pipeline] def clfFeatureBucketsHof(t: Column): Column =
-    element_at(transform(array(concat(lit("<"), t, lit(">"))), g =>
-      concat(
-        array(charFoldHash(t) % ClfBuckets),
-        transform(sequence(lit(1), length(g) - 2), i =>
-          charFoldHash(g.substr(i, lit(3))) % ClfBuckets),
-        when(length(g) >= 4,
-          transform(sequence(lit(1), length(g) - 3), i =>
-            charFoldHash(g.substr(i, lit(4))) % ClfBuckets))
-          .otherwise(typedLit(Seq.empty[Long])))), 1)
 
   /** ONE-PASS QUALITY-CLASSIFIER TRAINING (r10 verdict #3 — the loop
     * [[classifier]] serves but nothing trained): a closed-form

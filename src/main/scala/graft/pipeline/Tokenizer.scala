@@ -252,23 +252,6 @@ object Tokenizer {
       .orderBy($"doc_id")
   }
 
-  /** Built-in-only apply: the merge chain as literal string `replace`s over
-    * the padded-symbol spelling — the oracle-shaped cross-check for
-    * [[graft.functions.BpeApply]] (`BpeSpec` pins equality). Every symbol
-    * is wrapped in its OWN leading+trailing space (`"abc"` →
-    * `" a  b  c "`), so adjacent merge sites never share a boundary space
-    * and non-overlapping left-to-right `replace` equals the greedy array
-    * rewrite — with a SHARED single-space separator, `replace` consumes
-    * the boundary and misses every immediately-adjacent second site. */
-  private[graft] def bpeApplyHof(
-      word: Column, merges: Seq[(String, String)]): Column = {
-    val seg0 = regexp_replace(word, "(.)", " $1 ")
-    val segN = merges.foldLeft(seg0) { case (sg, (a, b)) =>
-      replace(sg, lit(s" $a  $b "), lit(s" $a$b "))
-    }
-    split(trim(segN), "  ")
-  }
-
   /** DuckDB: vocabulary + padded-symbol segmentation CTEs (`v`, `w0`). */
   private def duckVocabCtes: String =
     s"""v AS MATERIALIZED (SELECT word, count(*) AS wcnt FROM
@@ -341,7 +324,8 @@ object Tokenizer {
   // everywhere floats would make two engines disagree (integer micro-rank
   // PageRank, basis-point modularity). Segmentation is a fixed chain of
   // non-overlapping left-to-right `replace` passes over the padded-symbol
-  // spelling ([[bpeApplyHof]]'s trick generalized to n-char pieces), so
+  // spelling (the padded-symbol `replace` trick of the BPE reference
+  // spelling generalized to n-char pieces), so
   // the DuckDB oracle replays training AND encoding exactly.
   //
   // At-scale shape: identical to BPE — ONE corpus→vocab collapse, the
@@ -375,7 +359,7 @@ object Tokenizer {
 
   /** `"abc"` → `" a  b  c "` — each code point wrapped in its own spaces,
     * the padded-symbol spelling whose double-space boundaries make chained
-    * `replace`s equal greedy left-to-right claiming (see [[bpeApplyHof]]). */
+    * `replace`s equal greedy left-to-right claiming. */
   private def paddedPiece(p: String): String =
     codePoints(p).map(c => s" $c ").mkString
 

@@ -58,24 +58,13 @@ object Winnowing {
 
   /** The window-argmin selection over a gram-hash array column named `hs`
     * at window width `w` — native one-deque-sweep
-    * [[graft.functions.WinnowSelect]] (r16: the HOF spelling below re-read
+    * [[graft.functions.WinnowSelect]] (r16: the HOF spelling re-read
     * every window per output through interpreted lambdas — O(len·w) steps
     * per row — and the winnow family spent most of its time there; the
     * fused sweep is O(len)). 1-based positions, ties rightmost. Shared
     * with the video frame-sequence fingerprints ([[Multimodal]], r11). */
   private[graft] def selectOf(w: Int): org.apache.spark.sql.Column =
     graft.functions.WinnowSelect(col("hs"), w)
-
-  /** Built-in-only selection — kept as the cross-implementation check for
-    * the native form (`WinnowSelectSpec` pins native ≡ HOF): window j
-    * covers grams j .. j+w−1; argmin seeded at j and folded left→right
-    * with `<=` so ties land rightmost (the paper's rule). */
-  private[graft] def selectExprOf(w: Int) = expr(
-    s"""array_distinct(transform(sequence(1, size(hs) - ${w - 1}), j ->
-       |  aggregate(sequence(j + 1, j + ${w - 1}),
-       |    named_struct('pos', j, 'fp', element_at(hs, j)),
-       |    (acc, i) -> IF(element_at(hs, i) <= acc.fp,
-       |      named_struct('pos', i, 'fp', element_at(hs, i)), acc))))""".stripMargin)
 
   /** The unsorted `(doc_id[, extra...], pos, fp)` fingerprint table
     * ([[winnowPairs]] feeds it straight into a shuffle, where the sort

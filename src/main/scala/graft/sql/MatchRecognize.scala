@@ -4,8 +4,10 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, IntegerType,
-  LongType, ShortType, StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType,
+  IntegerType, LongType, ShortType, StringType, StructField, StructType,
+  TimestampNTZType, TimestampType}
 
 import graft.pattern.{AfterMatchSkip, Contiguity, NFA, Pattern, Stage}
 
@@ -311,7 +313,7 @@ object MatchRecognize {
     * over the partial match's rows bound to V, including the current row
     * when it is the variable being defined (SQL running semantics). */
   private final case class AggRef(
-      fn: String, refVar: String, refCol: String, op: String, lit: Double)
+      fn: String, refVar: String, refCol: String, op: String, lit: String)
 
   private val AggRefRe =
     ("(?i)\\b(COUNT|SUM|AVG|MIN|MAX)\\s*\\(\\s*(\\w+)\\.(\\w+|\\*)\\s*\\)\\s*" +
@@ -320,7 +322,7 @@ object MatchRecognize {
   private def splitAggRefs(cond: String): (String, Seq[AggRef]) = {
     val refs = AggRefRe.findAllMatchIn(cond).map(m =>
       AggRef(m.group(1).toUpperCase, m.group(2), m.group(3), m.group(4),
-        m.group(5).toDouble)).toSeq
+        m.group(5))).toSeq
     (AggRefRe.replaceAllIn(cond, "TRUE"), refs)
   }
 
@@ -373,6 +375,58 @@ object MatchRecognize {
     case d: java.sql.Date => d.getTime.toDouble
     case other =>
       throw new IllegalArgumentException(s"non-numeric navigation comparison: $other")
+  }
+
+  private def isIntegral(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType => true
+    case _ => false
+  }
+
+  private def asBigDecimal(v: Any): java.math.BigDecimal = v match {
+    case d: java.math.BigDecimal => d
+    case n: java.lang.Number => java.math.BigDecimal.valueOf(n.longValue())
+  }
+
+  private def micros(v: Any): Long = v match {
+    case t: Timestamp => DateTimeUtils.fromJavaTimestamp(t)
+    case t: java.time.Instant => DateTimeUtils.instantToMicros(t)
+    case t: java.time.LocalDateTime => DateTimeUtils.localDateTimeToMicros(t)
+  }
+
+  private def days(v: Any): Int = v match {
+    case d: java.sql.Date => DateTimeUtils.fromJavaDate(d)
+    case d: java.time.LocalDate => DateTimeUtils.localDateToDays(d)
+  }
+
+  /** Orders two non-null operands of columns typed `l` and `r` in their own
+    * types: integral as Long, decimal (or decimal against integral) as
+    * BigDecimal, timestamps in microseconds, dates in days. Any other pair
+    * compares as Double, with -0.0 equal to 0.0. */
+  private def operandOrder(l: DataType, r: DataType): (Any, Any) => Int =
+    (l, r) match {
+      case _ if isIntegral(l) && isIntegral(r) =>
+        (a, b) => java.lang.Long.compare(
+          a.asInstanceOf[Number].longValue(), b.asInstanceOf[Number].longValue())
+      case _ if (isIntegral(l) || l.isInstanceOf[DecimalType]) &&
+          (isIntegral(r) || r.isInstanceOf[DecimalType]) =>
+        (a, b) => asBigDecimal(a).compareTo(asBigDecimal(b))
+      case (TimestampType, TimestampType) | (TimestampNTZType, TimestampNTZType) =>
+        (a, b) => java.lang.Long.compare(micros(a), micros(b))
+      case (DateType, DateType) =>
+        (a, b) => Integer.compare(days(a), days(b))
+      case _ => (a, b) => compareDoubles(asComparable(a), asComparable(b))
+    }
+
+  private def compareDoubles(x: Double, y: Double): Int =
+    if (x == y) 0 else java.lang.Double.compare(x, y)
+
+  private def holds(op: String, c: Int): Boolean = op match {
+    case "<" => c < 0
+    case "<=" => c <= 0
+    case ">" => c > 0
+    case ">=" => c >= 0
+    case "=" => c == 0
+    case "<>" => c != 0
   }
 
   // ------------------------------------------------------------- lowering
@@ -487,14 +541,13 @@ object MatchRecognize {
       case other => throw new IllegalArgumentException(s"unsupported ORDER BY type: $other")
     }
 
-    def cmp(op: String, l: Double, rv: Double): Boolean = op match {
-      case "<" => l < rv
-      case "<=" => l <= rv
-      case ">" => l > rv
-      case ">=" => l >= rv
-      case "=" => l == rv
-      case "<>" => l != rv
-    }
+    def typeOf(i: Int): DataType = schema.fields(i).dataType
+    val colOrder: Int => (Any, Any) => Int =
+      schema.fields.map(f => operandOrder(f.dataType, f.dataType)).toIndexedSeq
+    /** The least (`sign` -1) or greatest (`sign` 1) of non-null values of
+      * column `ci`, the first on ties. */
+    def extreme(ci: Int, sign: Int)(xs: Seq[Any]): Option[Any] =
+      xs.reduceOption((a, b) => if (colOrder(ci)(a, b) * sign >= 0) a else b)
 
     /** The full per-row predicate for variable `v`: its DEFINE boolean
       * column AND its iterative (navigation / aggregate / streaming-PREV)
@@ -509,12 +562,13 @@ object MatchRecognize {
       val navPreds = low._2.map { ref =>
         val ci = idx(ref.col)
         val refCi = idx(ref.refCol)
+        val order = operandOrder(typeOf(ci), typeOf(refCi))
         (r: Row, ctx: graft.pattern.PatternContext[Row]) => {
           val all = ctx(ref.refVar)
           val bound =
             if (ref.fn == "FIRST") all.lift(ref.offset)
             else all.lift(all.size - 1 - ref.offset)
-          bound.exists(b => cmp(ref.op, asComparable(r.get(ci)), asComparable(b.get(refCi))))
+          bound.exists(b => holds(ref.op, order(r.get(ci), b.get(refCi))))
         }
       }
       // RUNNING aggregate terms: rows bound to refVar so far, plus the
@@ -522,20 +576,28 @@ object MatchRecognize {
       // the candidate row is tentatively mapped before the test).
       val aggPreds = low._3.map { ref =>
         val ci = if (ref.refCol == "*") -1 else idx(ref.refCol)
+        val lit = new java.math.BigDecimal(ref.lit)
+        // COUNT, MIN and MAX compare with the literal in the column's own
+        // type; SUM and AVG compare as Double
+        val litOrder = operandOrder(
+          if (ci < 0) LongType else typeOf(ci), DecimalType.SYSTEM_DEFAULT)
         (r: Row, ctx: graft.pattern.PatternContext[Row]) => {
           val bound = ctx(ref.refVar) ++ (if (ref.refVar == v) Seq(r) else Nil)
           val vals =
             if (ci < 0) Vector.empty
-            else bound.iterator.filterNot(_.isNullAt(ci))
-              .map(x => asComparable(x.get(ci))).toVector
-          val value: Option[Double] = ref.fn match {
-            case "COUNT" => Some(if (ci < 0) bound.size.toDouble else vals.size.toDouble)
-            case "SUM" => if (vals.isEmpty) None else Some(vals.sum)
-            case "AVG" => if (vals.isEmpty) None else Some(vals.sum / vals.size)
-            case "MIN" => vals.minOption
-            case "MAX" => vals.maxOption
+            else bound.iterator.filterNot(_.isNullAt(ci)).map(_.get(ci)).toVector
+          ref.fn match {
+            case "COUNT" =>
+              val n = if (ci < 0) bound.size else vals.size
+              holds(ref.op, java.math.BigDecimal.valueOf(n.toLong).compareTo(lit))
+            case "MIN" => extreme(ci, -1)(vals).exists(m => holds(ref.op, litOrder(m, lit)))
+            case "MAX" => extreme(ci, 1)(vals).exists(m => holds(ref.op, litOrder(m, lit)))
+            case fn => vals.nonEmpty && {
+              val sum = vals.map(asComparable).sum
+              val x = if (fn == "SUM") sum else sum / vals.size
+              holds(ref.op, compareDoubles(x, lit.doubleValue()))
+            }
           }
-          value.exists(cmp(ref.op, _, ref.lit))
         }
       }
       // Streaming PREV: physical predecessor via the runner's history ring;
@@ -544,10 +606,11 @@ object MatchRecognize {
       val prevPreds = low._5.map { ref =>
         val ci = idx(ref.col)
         val refCi = idx(ref.refCol)
+        val order = operandOrder(typeOf(ci), typeOf(refCi))
         (r: Row, ctx: graft.pattern.PatternContext[Row]) =>
           ctx.recent(ref.n).exists { p =>
             !p.isNullAt(refCi) && !r.isNullAt(ci) &&
-              cmp(ref.op, asComparable(r.get(ci)), asComparable(p.get(refCi)))
+              holds(ref.op, order(r.get(ci), p.get(refCi)))
           }
       }
       val iterPreds = navPreds ++ aggPreds ++ prevPreds
@@ -589,10 +652,6 @@ object MatchRecognize {
 
     // Input columns without the appended __def_* helper columns (ALL ROWS mode).
     val inputWidth = df.schema.length
-    def isIntegral(dt: DataType): Boolean = dt match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
     // Output type per measure form: COUNT/MATCH_NUMBER → bigint; SUM/AVG →
     // bigint ALWAYS (fractional inputs micro-quantized, AVG = floor of the
     // quantized mean — no floating-point output, per the engine's
@@ -645,12 +704,8 @@ object MatchRecognize {
                 else nonNull.iterator.map(r => math.round(asComparable(r.get(ci)) * 1e6)).sum
               java.lang.Math.floorDiv(micros, nonNull.size.toLong)
             }
-          case "MIN" =>
-            if (nonNull.isEmpty) null
-            else nonNull.minBy(r => asComparable(r.get(ci))).get(ci)
-          case "MAX" =>
-            if (nonNull.isEmpty) null
-            else nonNull.maxBy(r => asComparable(r.get(ci))).get(ci)
+          case "MIN" => extreme(ci, -1)(nonNull.map(_.get(ci))).orNull
+          case "MAX" => extreme(ci, 1)(nonNull.map(_.get(ci))).orNull
           case "FIRST" => bound.lift(meas.offset).map(_.get(ci)).orNull
           // plain V.c ≡ LAST(V.c), per SQL row-pattern semantics
           case _ => bound.lift(bound.size - 1 - meas.offset).map(_.get(ci)).orNull
@@ -674,8 +729,8 @@ object MatchRecognize {
         // values are O(1) per output row, not a prefix re-scan.
         final class Acc {
           var nAll = 0L; var n = 0L; var sumL = 0L; var sumMicros = 0L
-          var minV: Any = null; var minC = 0.0
-          var maxV: Any = null; var maxC = 0.0
+          var minV: Any = null
+          var maxV: Any = null
           // non-null values seen so far, for FIRST/LAST/plain (with offsets)
           var vals: Vector[Any] = Vector.empty
         }
@@ -698,11 +753,9 @@ object MatchRecognize {
                       a.sumL += lv; a.sumMicros += lv * 1000000L
                     } else a.sumMicros += math.round(asComparable(raw) * 1e6)
                   case "MIN" =>
-                    val c = asComparable(raw)
-                    if (a.minV == null || c < a.minC) { a.minV = raw; a.minC = c }
+                    if (a.minV == null || colOrder(ci)(raw, a.minV) < 0) a.minV = raw
                   case "MAX" =>
-                    val c = asComparable(raw)
-                    if (a.maxV == null || c > a.maxC) { a.maxV = raw; a.maxC = c }
+                    if (a.maxV == null || colOrder(ci)(raw, a.maxV) > 0) a.maxV = raw
                   case _ => ()
                 }
                 a.vals :+= raw

@@ -17,4 +17,14 @@ object TestSpark {
     // MATCH_RECOGNIZE parser extension
     .config("spark.sql.extensions", "graft.sql.GraftSqlExtensions")
     .getOrCreate()
+
+  /** Runs `start` (a streaming query's `start()`) with RocksDB row tracking
+    * on, so that query's progress reports its state size in
+    * `numRowsTotal`: a query copies the session conf when it starts. */
+  def withRowTracking[A](start: => A): A = {
+    val key = "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    try start finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

@@ -16,7 +16,7 @@ class CharFoldHashSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = graft.sources.Tables.table(spark, "/root/testdata/sf0.001", "documents")
     val diff = docs.select(
-        graft.pipeline.Hashing.charFoldHashHof($"text").as("hof"),
+        graft.pipeline.ReferenceSpellings.charFoldHashHof($"text").as("hof"),
         CharFoldHash($"text").as("native"))
       .filter($"hof" =!= $"native")
       .count()

@@ -3,7 +3,7 @@ package graft.functions
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.pipeline.{Hashing, Similarity}
+import graft.pipeline.{Hashing, ReferenceSpellings}
 
 /** The native one-pass LSH bucket must agree exactly with the per-plane
   * aggregate-fold spelling it replaces (mirrored by the DuckDB oracles) on
@@ -17,7 +17,7 @@ class LshBucketSpec extends AnyFunSuite {
       .select(Hashing.quantize($"embedding").as("q"))
     for (planes <- Seq(4, 8)) {
       val diff = e.select(
-          Similarity.bucketHof($"q", planes).as("hof"),
+          ReferenceSpellings.bucketHof($"q", planes).as("hof"),
           LshBucket($"q", planes).as("native"))
         .filter(!($"hof" <=> $"native"))
         .count()
@@ -31,7 +31,7 @@ class LshBucketSpec extends AnyFunSuite {
       Tuple1(Seq.empty[java.lang.Long]),
       Tuple1(Seq[java.lang.Long](5L, null, 9L))).toDF("q")
     val out = df.select(
-      Similarity.bucketHof($"q", 4).as("hof"), LshBucket($"q", 4).as("native")).collect()
+      ReferenceSpellings.bucketHof($"q", 4).as("hof"), LshBucket($"q", 4).as("native")).collect()
     out.foreach { r => assert(r.getLong(1) == 0L && r.getLong(0) == r.getLong(1)) }
   }
 }

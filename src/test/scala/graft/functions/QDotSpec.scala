@@ -4,11 +4,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.pipeline.Hashing
+import graft.pipeline.{Hashing, ReferenceSpellings}
 
 /** The native fused-loop QDot must agree exactly with the zip_with/aggregate
-  * higher-order spelling it replaces (Hashing.qdotHof, mirrored by the DuckDB
-  * oracle) on real quantized embeddings, including the null-producing edges
+  * higher-order spelling it replaces (ReferenceSpellings.qdotHof, mirrored
+  * by the DuckDB oracle) on real quantized embeddings, including the null-producing edges
   * (length mismatch, null element).
   */
 class QDotSpec extends AnyFunSuite {
@@ -21,7 +21,7 @@ class QDotSpec extends AnyFunSuite {
     val pairs = e.as("a").join(e.as("b"),
       col("a.vec_id") % 7 === col("b.vec_id") % 7 && col("a.vec_id") < col("b.vec_id"))
     val diff = pairs.select(
-        Hashing.qdotHof(col("a.q"), col("b.q")).as("hof"),
+        ReferenceSpellings.qdotHof(col("a.q"), col("b.q")).as("hof"),
         QDot(col("a.q"), col("b.q")).as("native"))
       .filter(!($"hof" <=> $"native"))
       .count()
@@ -37,7 +37,7 @@ class QDotSpec extends AnyFunSuite {
         (Seq.empty[java.lang.Long], Seq.empty[java.lang.Long])        // empty -> 0
       ).toDF("a", "b")
     val rows = df.select(
-        Hashing.qdotHof($"a", $"b").as("hof"),
+        ReferenceSpellings.qdotHof($"a", $"b").as("hof"),
         QDot($"a", $"b").as("native"))
       .collect()
     assert(rows(0).getLong(1) == 11L)

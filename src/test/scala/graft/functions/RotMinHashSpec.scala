@@ -4,12 +4,12 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.pipeline.Hashing
+import graft.pipeline.{Hashing, ReferenceSpellings}
 
 /** The native one-pass RotMinHash must agree exactly with the
   * substring/concat higher-order spelling it replaces
-  * (Hashing.minhashSigRotHof, mirrored by the DuckDB oracle) on the real
-  * document corpus, and handle the empty/null edge cases the HOF form
+  * (ReferenceSpellings.minhashSigRotHof, mirrored by the DuckDB oracle) on
+  * the real document corpus, and handle the empty/null edge cases the HOF form
   * produces.
   */
 class RotMinHashSpec extends AnyFunSuite {
@@ -21,7 +21,7 @@ class RotMinHashSpec extends AnyFunSuite {
     val base = docs.select(
       Hashing.minhashBase(Hashing.shingles3(Hashing.tokens($"text"))).as("bh"))
     val diff = base.select(
-        Hashing.minhashSigRotHof($"bh", 8).as("hof"),
+        ReferenceSpellings.minhashSigRotHof($"bh", 8).as("hof"),
         RotMinHash($"bh", 8).as("native"))
       .filter(!($"hof" <=> $"native"))
       .count()
@@ -31,7 +31,7 @@ class RotMinHashSpec extends AnyFunSuite {
   test("empty input yields k nulls, like array_min over empty") {
     import spark.implicits._
     val df = Seq(Seq.empty[String]).toDF("bh")
-    val hof = df.select(Hashing.minhashSigRotHof($"bh", 4)).head().getSeq[String](0)
+    val hof = df.select(ReferenceSpellings.minhashSigRotHof($"bh", 4)).head().getSeq[String](0)
     val nat = df.select(RotMinHash($"bh", 4)).head().getSeq[String](0)
     assert(hof == Seq(null, null, null, null))
     assert(nat == hof)

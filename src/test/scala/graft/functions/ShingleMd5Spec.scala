@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.pipeline.Hashing
+import graft.pipeline.{Hashing, ReferenceSpellings}
 
 /** The fused tokens→shingle→md5 expression must agree exactly with the
   * built-in spelling it replaces (`minhashBase(shingles3(tokens))`, mirrored
@@ -17,7 +17,7 @@ class ShingleMd5Spec extends AnyFunSuite {
     import spark.implicits._
     val docs = graft.sources.Tables.table(spark, "/root/testdata/sf0.001", "documents")
     val diff = docs.select(
-        Hashing.minhashBase(Hashing.shingles3Hof(Hashing.tokens($"text"))).as("hof"),
+        Hashing.minhashBase(ReferenceSpellings.shingles3Hof(Hashing.tokens($"text"))).as("hof"),
         ShingleMd5(Hashing.tokens($"text"), 3).as("native"))
       .filter(!($"hof" <=> $"native"))
       .count()

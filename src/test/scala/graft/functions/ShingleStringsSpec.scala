@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.TestSpark
-import graft.pipeline.Hashing
+import graft.pipeline.{Hashing, ReferenceSpellings}
 
 /** The fused word-n-gram expression must agree exactly with the built-in
   * HOF spelling it replaces (`transform∘sequence∘slice∘concat_ws` — the
@@ -21,7 +21,7 @@ class ShingleStringsSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = graft.sources.Tables.table(spark, "/root/testdata/sf0.001", "documents")
     val diff = docs.select(
-        Hashing.shingles3Hof(Hashing.tokens($"text")).as("hof"),
+        ReferenceSpellings.shingles3Hof(Hashing.tokens($"text")).as("hof"),
         ShingleStrings(Hashing.tokens($"text"), 3).as("native"))
       .filter(!($"hof" <=> $"native"))
       .count()
@@ -35,7 +35,7 @@ class ShingleStringsSpec extends AnyFunSuite {
     val rows = gen.apply(Gen.Parameters.default, Seed(42L)).get
     val df = rows.map(Tuple1(_)).toDF("w")
     val diff = df.select(
-        Hashing.shingles3Hof($"w").as("hof"),
+        ReferenceSpellings.shingles3Hof($"w").as("hof"),
         ShingleStrings($"w", 3).as("native"))
       .filter(!($"hof" <=> $"native")).count()
     assert(diff == 0)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.pipeline.Hashing
+import graft.pipeline.{Hashing, ReferenceSpellings}
 
 /** The native one-pass SimHash must agree exactly with the per-bit
   * aggregate-fold spelling it replaces (mirrored by the DuckDB oracle) on
@@ -19,7 +19,7 @@ class SimHashBitsSpec extends AnyFunSuite {
     val hs = docs.select(
       transform(Hashing.tokens($"text"), t => Hashing.charFoldHash(t)).as("hs"))
     val diff = hs.select(
-        Hashing.simhashHof($"hs", 32).as("hof"),
+        ReferenceSpellings.simhashHof($"hs", 32).as("hof"),
         SimHashBits($"hs", 32).as("native"))
       .filter(!($"hof" <=> $"native"))
       .count()
@@ -32,7 +32,7 @@ class SimHashBitsSpec extends AnyFunSuite {
       Tuple1(Seq.empty[java.lang.Long]),
       Tuple1(Seq[java.lang.Long](5L, null, 9L))).toDF("hs")
     val out = df.select(
-      Hashing.simhashHof($"hs", 8).as("hof"), SimHashBits($"hs", 8).as("native"))
+      ReferenceSpellings.simhashHof($"hs", 8).as("hof"), SimHashBits($"hs", 8).as("native"))
       .collect()
     out.foreach { r => assert(r.getLong(1) == 0L && r.getLong(0) == r.getLong(1)) }
   }

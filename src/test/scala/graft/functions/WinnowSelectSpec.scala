@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** Native winnow selection ≡ the built-in-only HOF spelling
-  * ([[graft.pipeline.Winnowing.selectExprOf]]) — the cross-implementation
-  * pin every native expression here carries (the ShingleStringsSpec
+  * ([[graft.pipeline.ReferenceSpellings.selectExprOf]]) — the
+  * cross-implementation pin every native expression here carries (the ShingleStringsSpec
   * convention): randomized hash arrays with deliberate tie density, both
   * window widths the engine ships (text W=4, video SeqW), plus the
   * boundary cases (exactly-w, under-w, all-equal).
@@ -24,7 +24,7 @@ class WinnowSelectSpec extends AnyFunSuite {
       .select($"id", $"s.pos", $"s.fp")
       .collect().map(_.toString).toSeq.sorted
     val hof = df.filter(size($"hs") >= w)
-      .select($"id", explode(graft.pipeline.Winnowing.selectExprOf(w)).as("s"))
+      .select($"id", explode(graft.pipeline.ReferenceSpellings.selectExprOf(w)).as("s"))
       .select($"id", $"s.pos", $"s.fp")
       .collect().map(_.toString).toSeq.sorted
     assert(native == hof, s"native ≠ HOF at w=$w for $arrs")

@@ -126,14 +126,14 @@ class ClassifierFitSpec extends AnyFunSuite {
       .select(explode(graft.pipeline.Hashing.tokens(lower($"text"))).as("t"))
     val diff = toks.select(
         graft.functions.ClfGramBuckets($"t", TextAnalysis.ClfBuckets).as("a"),
-        TextAnalysis.clfFeatureBucketsHof($"t").as("b"))
+        ReferenceSpellings.clfFeatureBucketsHof($"t").as("b"))
       .filter($"a" =!= $"b")
       .count()
     assert(diff == 0L, s"$diff tokens diverge between native and HOF features")
     // multibyte: windows advance per code point, folds run over UTF-8 bytes
     val mb = Seq("caf\u00e9", "\u00fcber", "a\u00e9").toDF("t").select(
         graft.functions.ClfGramBuckets($"t", TextAnalysis.ClfBuckets).as("a"),
-        TextAnalysis.clfFeatureBucketsHof($"t").as("b"))
+        ReferenceSpellings.clfFeatureBucketsHof($"t").as("b"))
       .collect()
     mb.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1), r.toString))
   }

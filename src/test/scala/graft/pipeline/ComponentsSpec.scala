@@ -207,6 +207,16 @@ class ComponentsSpec extends AnyFunSuite {
     val got = runTriangles(k5 ++ hub ++ noise)
     assert((0L until 5L).forall(n => got(n) == 6L), got.toString)
     assert(!got.contains(99L) && !got.contains(10L))
+    // 4 6-cliques (C(6,3) = 20 triangles each) and a hub 5000 whose 30
+    // spokes are chained (29 hub triangles)
+    val cliques = for {
+      c <- 0L until 4L; i <- 0L until 6L; j <- (i + 1) until 6L
+    } yield (c * 100 + i, c * 100 + j)
+    val spokes = (1L to 30L).map(i => (5000L, 5000L + i))
+    val chain = (1L until 30L).map(i => (5000L + i, 5001L + i))
+    val got2 = runTriangles(cliques ++ spokes ++ chain)
+    assert(got2.values.sum == 3L * (4 * 20 + 29))
+    assert(got2(5000L) == 29L)
   }
 
   /** In-memory reference of [[Components.pageRank]]'s exact integer
@@ -442,6 +452,42 @@ class ComponentsSpec extends AnyFunSuite {
     val right = Set(10L, 11L, 12L).map(lpa)
     assert(left.size == 1 && right.size == 1 && left != right,
       s"communities not separated: $lpa")
+    // two 20-cliques bridged by one edge: exactly two communities, labelled
+    // by the clique minima
+    def clique(off: Long) =
+      for { i <- 0L until 20L; j <- (i + 1) until 20L } yield (i + off, j + off)
+    val dense = runLpa(clique(0L) ++ clique(1000L) :+ ((0L, 1000L)), 4)
+    assert(dense.groupBy(_._2).view.mapValues(_.size).toMap ==
+      Map(0L -> 20, 1000L -> 20), dense.toString)
+  }
+
+  /** The adversarial graph shapes, shrunk: 20 chains of 20 nodes (ids
+    * 0..399), one hub 1000 with 50 leaves 1001..1050, and 30 disjoint pairs
+    * from 2000 up (every edge `a < b`, each once). */
+  private val plantedGraph: Seq[(Long, Long)] =
+    (0L until 400L).filter(_ % 20 != 19).map(i => (i, i + 1)) ++
+      (1L to 50L).map(i => (1000L, 1000L + i)) ++
+      (0L until 30L).map(i => (2000L + 2 * i, 2001L + 2 * i))
+
+  test("planted chains, hub and pairs: component count and the hub " +
+    "component; PageRank fixpoints and hub maximum; LPA 2-cycles") {
+    val g = plantedGraph
+    val sizes = run(g).groupBy(_._2).values.map(_.size)
+    assert(sizes.size == 20 + 1 + 30)
+    assert(sizes.max == 51)
+    val pr = runPageRank(g, 5)
+    assert(pr.size == 400 + 51 + 60)
+    // every pair node is 1-regular: the integer recurrence keeps exactly
+    // 1e6 through every round
+    assert(pr.filter(_._1 >= 2000L).values.sum == 60L * 1000000L)
+    assert(pr(1000L) == pr.values.max)
+    // sync LPA 2-cycles on bipartite shapes: after an even round each pair
+    // node is back at its own label, every leaf holds the least leaf id and
+    // the hub its own
+    val lpa = runLpa(g, 4)
+    assert(lpa.count { case (n, l) => n >= 2000L && n == l } == 60)
+    assert((1001L to 1050L).map(lpa).toSet == Set(1001L))
+    assert(lpa(1000L) == 1000L)
   }
 
   test("modularity: distributed (local solve off) == driver tail solve on " +

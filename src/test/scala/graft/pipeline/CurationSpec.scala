@@ -210,4 +210,44 @@ class CurationSpec extends AnyFunSuite {
       inline.as[String].collect().sorted.toSeq)
     assert(served.count() > 0)
   }
+
+  test("planted drop classes: the waterfall fills all seven stages, counts " +
+    "the planted short docs exactly and accounts every token") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val n = 3000L
+    val dir = java.nio.file.Files.createTempDirectory("curation_planted").toString
+    try {
+      // 30-word near-copy corpus (PlantedDocs); on top: docs with
+      // id % 97 == 3 cut to 10 tokens (short), id % 101 == 5 from the eval
+      // source, and an 8-token run appended to the eval docs and to
+      // id % 200 == 7 (contaminated)
+      val ws = PlantedDocs(spark, n, words = 30)
+        .select($"doc_id", split($"text", " ").as("w"))
+      val toks = when(pmod($"doc_id", lit(97L)) === 3, slice($"w", 1, 10))
+        .otherwise($"w")
+      val run = array((0 until 8).map(i => lit(s"c$i")): _*)
+      val evalDoc = pmod($"doc_id", lit(101L)) === 5
+      ws.select($"doc_id",
+          when(evalDoc, lit(Curation.EvalSource))
+            .otherwise(concat(lit("src"), pmod($"doc_id", lit(4L)) + 1)).as("source"),
+          concat_ws(" ",
+            when(pmod($"doc_id", lit(200L)) === 7 || evalDoc, concat(toks, run))
+              .otherwise(toks)).as("text"))
+        .write.parquet(s"$dir/documents.parquet")
+      val kept = Curation.pipelineFull(spark, dir).count()
+      val wf = Curation.pipelineWaterfall(spark, dir).collect()
+        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+      assert(wf.keySet == Set("1_gate_short", "2_line_gate", "3_eval_excluded",
+        "4_contaminated", "5_near_dup", "6_not_sampled", "7_kept"), wf.toString)
+      assert(wf.values.map(_._1).sum == n)
+      assert(wf("1_gate_short")._1 == (n - 1 - 3) / 97 + 1, wf.toString)
+      assert(wf("7_kept")._1 == kept, s"waterfall ${wf("7_kept")} vs full $kept")
+      val tokens = spark.read.parquet(s"$dir/documents.parquet")
+        .agg(sum(size(Hashing.tokens($"text"))).cast("long")).as[Long].head()
+      assert(wf.values.map(_._2).sum == tokens, wf.toString)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
+  }
 }

@@ -15,7 +15,7 @@ class HeavyHittersSpec extends AnyFunSuite {
 
   test("sketch plan ≡ exact plan on the test corpus") {
     val sketch = HeavyHitters.heavyHitters(spark, "/root/testdata/sf0.001").collect()
-    val exact = HeavyHitters
+    val exact = ReferenceSpellings
       .heavyHittersExact(
         graft.sources.Tables.table(spark, "/root/testdata/sf0.001", "documents"))
       .collect()
@@ -31,7 +31,7 @@ class HeavyHittersSpec extends AnyFunSuite {
       Seq.tabulate(400)(i => s"u${i}a u${i}b u${i}c u${i}d")
     ).zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     val sketch = HeavyHitters.heavyHittersOf(docs).collect()
-    val exact = HeavyHitters.heavyHittersExact(docs).collect()
+    val exact = ReferenceSpellings.heavyHittersExact(docs).collect()
     assert(sketch.toSeq === exact.toSeq)
     // the 4 shingles of the repeated doc, 30× each
     assert(sketch.length === 4)

@@ -102,4 +102,29 @@ class LineCleanSpec extends AnyFunSuite {
     val want = LineClean.cleanLinesOf(docs(rows: _*)).collect().map(_.toSeq).toSet
     assert(got == want)
   }
+
+  test("random lined documents: one report row each, per-reason counts " +
+    "sum to n_lines, verdicts mixed") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    // 500 documents of 12..71 words over a 32-word vocabulary, split into
+    // lines by the engine's synthetic line breaker
+    val n = 500L
+    val vocab = array((0 until 32).map(i => lit(s"w$i")): _*)
+    val raw = spark.range(n).select($"id".as("doc_id"),
+      concat_ws(" ", transform(
+        sequence(lit(1), (lit(12) + pmod(xxhash64($"id" * 7 + 1), lit(60L))).cast("int")),
+        i => element_at(vocab,
+          (pmod(xxhash64($"id" * 31 + i.cast("long") * 13 + 11), lit(32L)) + 1)
+            .cast("int")))).as("text"))
+    val (rows, broken, kept) = LineClean.cleanLinesOf(
+        raw.select($"doc_id", LineClean.synthLinedText($"doc_id", $"text").as("text")))
+      .agg(count(lit(1)),
+        sum(when($"n_kept" + $"n_dup" + $"n_bullet" + $"n_ellipsis" +
+          $"n_nopunct" + $"n_short" =!= $"n_lines", 1L).otherwise(0L)),
+        sum(when($"verdict" === "keep", 1L).otherwise(0L)))
+      .as[(Long, Long, Long)].head()
+    assert(rows == n && broken == 0L, s"accounting broke: $rows rows, $broken off")
+    assert(kept > 0L && kept < n, s"degenerate verdicts: $kept of $n kept")
+  }
 }

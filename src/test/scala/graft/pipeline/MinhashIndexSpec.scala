@@ -387,4 +387,39 @@ class MinhashIndexSpec extends AnyFunSuite {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(data))
     }
   }
+
+  test("planted near-copies: the index rejects the copies; a fresh batch is " +
+    "admitted before the merge and rejected after it") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("mh_planted").toString
+    try {
+      // 4000 docs: the even half is the corpus, the odd half arrives; the
+      // 40 near-copies (Jaccard ≈ 0.9 to their even source) all arrive
+      val docs = PlantedDocs(spark, 4000L)
+      Dedup.writeMinhashIndexOf(docs.filter($"doc_id" % 2 === 0), s"$root/ix")
+      val (s0, b0) = Dedup.openMinhashIndex(spark, s"$root/ix")
+      val (arrivals, rejects) = Dedup
+        .assignOf(docs.filter($"doc_id" % 2 === 1), s0, b0)
+        .agg(count(lit(1)), sum(when($"verdict" === "reject_dup", 1L).otherwise(0L)))
+        .as[(Long, Long)].head()
+      assert(arrivals == 2000L)
+      // the 4/8-agreement banding recovers nearly all 40 planted copies, and
+      // random pairs do not flood the verdicts
+      assert(rejects >= 32L && rejects <= 60L, s"$rejects rejects, 40 planted")
+      // a batch from a vocabulary the corpus never used
+      val batch = spark.range(4001L, 4200L, 2).select($"id".as("doc_id"),
+        concat_ws(" ", (0 until 50).map(j =>
+          concat(lit("m"), pmod(xxhash64($"id" * 59 + j), lit(5000L)))): _*)
+          .as("text"))
+      def verdicts(ix: String, v: String) = {
+        val (sg, bd) = Dedup.openMinhashIndex(spark, ix)
+        Dedup.assignOf(batch, sg, bd).filter($"verdict" === v).count()
+      }
+      assert(verdicts(s"$root/ix", "admit") == 100L)
+      Dedup.mergeMinhashIndex(batch, s"$root/ix", s"$root/ix2")
+      assert(verdicts(s"$root/ix2", "reject_dup") == 100L)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+    }
+  }
 }

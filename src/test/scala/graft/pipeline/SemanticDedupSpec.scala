@@ -60,4 +60,22 @@ class SemanticDedupSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet
     assert(ungated == Set(1L, 2L, 3L, 4L, 5L, 11L))
   }
+
+  test("planted exact copies meet in one k-means cell and are all flagged") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    // 2000 64-dim quantized vectors, K = 16; every vector with
+    // vec_id % 100 == 1 copies its predecessor: cosine 1, and identical
+    // vectors take the same cell under the deterministic (d, cid) argmin, so
+    // all 20 copies are flagged whatever random near-dups the cells hold
+    val n = 2000L
+    val base = when(pmod($"id", lit(100L)) === 1L, $"id" - 1).otherwise($"id")
+    val emb = spark.range(n).select($"id".as("vec_id"),
+      transform(sequence(lit(0), lit(63)),
+        d => pmod(xxhash64(base * 67 + d.cast("long") * 13 + 3), lit(2000001L))
+          - 1000000L).as("q"))
+    val (_, cells) = Similarity.ivfModelOf(spark, emb, 16)
+    val out = Dedup.semanticOf(spark, cells, maxCell = n.toInt)
+    assert(out.filter(pmod($"vec_id", lit(100L)) === 1L).count() == n / 100)
+  }
 }

@@ -162,4 +162,29 @@ class SimilaritySpec extends AnyFunSuite {
     assert(real.forall(_.getString(5) == "keep"),
       real.map(r => (r.getString(0), r.getLong(4))).mkString(", "))
   }
+
+  test("knnJoin on a k-means collapse: the near-zero mass forms one hot " +
+    "cell, no hot member is a candidate, every vector is a query") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    // 1800 of 2000 16-dim vectors are near-zero (components in {-1, 0, 1}):
+    // they all take the min-norm cell, far over the cap of 100; the 200
+    // diverse vectors spread over the other cells of K = 8
+    val (n, cold) = (2000L, 200L)
+    val emb = spark.range(n).select($"id".as("vec_id"),
+      when($"id" < cold,
+        transform(sequence(lit(0), lit(15)),
+          d => pmod(xxhash64($"id" * 67 + d.cast("long") * 13 + 3),
+            lit(2000001L)) - 1000000L))
+        .otherwise(transform(sequence(lit(0), lit(15)),
+          d => pmod(xxhash64($"id" * 71 + d.cast("long") * 17 + 7), lit(3L)) - 1L))
+        .as("q"))
+    val (cents, cells) = Similarity.ivfModelOf(spark, emb, 8)
+    val hotCell = cells.groupBy($"cell").count().agg(max($"count")).head().getLong(0)
+    assert(hotCell >= n - cold, s"degenerate cell did not form: max cell $hotCell")
+    val r = Similarity.knnJoinOf(spark, cents, cells, maxCell = 100)
+      .agg(countDistinct($"query_id"), max($"vec_id")).head()
+    assert(r.getLong(1) < cold, s"hot-cell member leaked into candidates: ${r.getLong(1)}")
+    assert(r.getLong(0) == n, s"queries missing from the guarded join: ${r.getLong(0)}")
+  }
 }

@@ -36,7 +36,7 @@ class SpanDedupSpec extends AnyFunSuite {
 
   test("incremental: bloom-prefiltered plan ≡ exact plan (bloom never changes the answer)") {
     val withBloom = SpanDedup.incremental(spark, sf).collect().toSeq
-    val exact = SpanDedup.incrementalExact(spark, sf).collect().toSeq
+    val exact = ReferenceSpellings.incrementalExact(spark, sf).collect().toSeq
     assert(withBloom.map(r => (r.getLong(0), r.getLong(1))) ==
       exact.map(r => (r.getLong(0), r.getLong(1))))
   }
@@ -47,5 +47,24 @@ class SpanDedupSpec extends AnyFunSuite {
     assert(txt.contains("bloom_filter_agg") || txt.contains("BloomFilter"),
       s"expected a bloom filter in the plan, got:\n$txt")
     assert(txt.contains("might_contain"), "expected might_contain probe")
+  }
+
+  test("planted near-copies: exactly the copy pairs share spans, and the " +
+    "incremental plan flags exactly the copies") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    // 20 copy pairs in 2000 docs of 50 words, each pair differing only in
+    // word 1: a pair shares exactly the 45 5-word spans that start at words
+    // 2..46 (a random 5-gram collision over a 5000-word vocabulary is
+    // vanishingly rare)
+    val docs = PlantedDocs(spark, 2000L)
+    val r = SpanDedup.spansOf(spark, docs).filter($"n_dup" > 0)
+      .agg(count(lit(1)), max($"n_dup")).head()
+    assert((r.getLong(0), r.getLong(1)) == ((40L, 45L)))
+    // copies are odd and sources even: the incremental plan (odd arrivals
+    // against the even corpus) flags exactly the 20 copies, 45 spans each
+    val flagged = SpanDedup.incrementalOf(spark, docs).as[(Long, Long)].collect()
+    assert(flagged.toSet == (1L until 2000L by 100).map(_ -> 45L).toSet,
+      flagged.toSeq.toString)
   }
 }

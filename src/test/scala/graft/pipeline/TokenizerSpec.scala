@@ -70,7 +70,7 @@ class TokenizerSpec extends AnyFunSuite {
     val both = words.select(
       $"word",
       graft.functions.BpeApply($"word", model).as("native"),
-      Tokenizer.bpeApplyHof($"word", model).as("hof"))
+      ReferenceSpellings.bpeApplyHof($"word", model).as("hof"))
     assert(both.filter(not($"native" <=> $"hof")).count() == 0)
     // and the distributed apply agrees with the driver-side trainer's own
     // final segmentation on every trained word

@@ -312,4 +312,28 @@ class TimeSeriesSpec extends AnyFunSuite {
       r.getLong(3) == e(1) && r.getLong(4) == e(2), r.toString)
   }
 
+  test("holt-winters on random events: one row per key, the day span within " +
+    "the window, forecast = level + trend + next seasonal") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    // 4000 purchases of 50 users over a 30-day window
+    val users = 50L
+    val events = spark.range(4000L).select(
+      pmod(xxhash64($"id" * 7 + 1), lit(users)).as("user_id"),
+      timestamp_micros(lit(1700000000000000L) +
+        pmod(xxhash64($"id" * 13 + 5), lit(30L * 86400 * 1000000L))).as("ts"),
+      lit("purchase").as("event_type"),
+      (pmod(xxhash64($"id" * 31 + 11), lit(10000L)).cast("double") / 100.0)
+        .as("value"))
+    val (keys, longSpans, offIdentity) = TimeSeries.holtWintersOf(events)
+      .agg(count(lit(1)),
+        sum(when($"n_days" > 31, 1L).otherwise(0L)),
+        sum(when($"forecast1_micro" =!=
+          $"level_micro" + $"trend_micro" + $"season_next_micro", 1L)
+          .otherwise(0L)))
+      .as[(Long, Long, Long)].head()
+    assert(keys == users, s"holt-winters lost keys: $keys")
+    assert(longSpans == 0L, s"$longSpans keys span more days than the window")
+    assert(offIdentity == 0L, s"$offIdentity forecasts off the identity")
+  }
 }

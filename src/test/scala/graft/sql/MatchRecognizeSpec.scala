@@ -107,6 +107,27 @@ class MatchRecognizeSpec extends AnyFunSuite {
     assert(q("C.balanceAfter > LAST(B.balanceAfter, 1)").length == 1)
     assert(q("C.balanceAfter < LAST(B.balanceAfter, 1)").isEmpty)
     assert(q("C.balanceAfter > FIRST(B.balanceAfter, 9)").isEmpty) // out of range → false
+    // BIGINT operands compare as Long: 2^53 < 2^53 + 1, which a Double
+    // comparison reads as equal
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    Seq((1L, 9007199254740993L), (2L, 9007199254740992L)).toDF("t", "v")
+      .select(lit(1).as("k"), $"t", $"v", timestamp_seconds($"t").as("ts"))
+      .createOrReplaceTempView("big_nav")
+    for (nav <- Seq("FIRST", "LAST")) {
+      val got = MatchRecognize.sql(spark,
+        s"""SELECT * FROM big_nav MATCH_RECOGNIZE (
+           |  PARTITION BY k
+           |  ORDER BY ts
+           |  MEASURES A.t AS a_t, B.t AS b_t
+           |  ONE ROW PER MATCH
+           |  AFTER MATCH SKIP PAST LAST ROW
+           |  PATTERN (A B)
+           |  DEFINE B AS B.v < $nav(A.v)
+           |)""".stripMargin).collect()
+        .map(r => (r.getAs[Long]("a_t"), r.getAs[Long]("b_t"))).toSeq
+      assert(got == Seq((1L, 2L)), s"$nav: $got")
+    }
   }
 
   test("malformed clauses fail with clear errors, not silent misparses") {

@@ -126,6 +126,35 @@ class MatchRecognizeStreamSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("streaming PREV compares BIGINT as Long beyond 2^53") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    // 2^53 < 2^53 + 1, which a Double comparison reads as equal
+    val input = MemoryStream[(Long, Long)]
+    input.toDS().toDF("tick", "v")
+      .withColumn("ts", to_timestamp(from_unixtime($"tick" * 60)))
+      .withWatermark("ts", "5 minutes")
+      .createOrReplaceTempView("big_prev_stream")
+    val q = MatchRecognize.sql(spark,
+      """SELECT * FROM big_prev_stream MATCH_RECOGNIZE (
+        |  ORDER BY ts
+        |  MEASURES FIRST(D.tick) AS d_tick
+        |  ONE ROW PER MATCH
+        |  AFTER MATCH SKIP PAST LAST ROW
+        |  PATTERN (D) WITHIN INTERVAL '1' HOUR
+        |  DEFINE D AS D.v < PREV(D.v)
+        |)""".stripMargin)
+      .writeStream.format("memory").queryName("big_prev_out")
+      .outputMode("append").start()
+    try {
+      input.addData(Seq((1L, 9007199254740993L), (2L, 9007199254740992L),
+        (30L, 9007199254740992L))) // watermark pusher, matches nothing
+      q.processAllAvailable()
+      val got = spark.table("big_prev_out").collect().map(_.getLong(0)).toSeq
+      assert(got == Seq(2L), got.toString)
+    } finally q.stop()
+  }
+
   test("(B | C) alternation works over a stream with per-member counts") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

@@ -155,4 +155,49 @@ class DynamicRuleStreamSpec extends AnyFunSuite {
         s"restored rule must govern post-restart data: ${got.asScala.toSeq}")
     } finally q2.stop()
   }
+
+  test("state stays bounded by keys plus one batch of buffer while rules " +
+    "flip mid-stream; alerts ≡ the batch twin") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    // 2000 rows of 50 keys over 4 hours, ~20% of them rule rows, in 4
+    // in-order micro-batches
+    val (users, n, baseSec, span) = (50L, 2000L, 1700000000L, 4L * 3600)
+    val raw = spark.range(n).select(
+        when(pmod(xxhash64($"id" * 37 + 13), lit(5L)) === 0, lit("rule"))
+          .otherwise(lit("data")).as("kind"),
+        concat(lit("k"), pmod(xxhash64($"id" * 7 + 1), lit(users)).cast("string"))
+          .as("key"),
+        timestamp_millis(lit(baseSec * 1000) +
+          pmod(xxhash64($"id" * 13 + 5), lit(span * 1000))).as("ts"),
+        pmod(xxhash64($"id" * 11 + 3), lit(100L)).as("balanceBefore"),
+        pmod(xxhash64($"id" * 29 + 17), lit(100L)).as("balanceAfter"),
+        (lit(10L) + pmod(xxhash64($"id" * 41 + 19), lit(9L)) * 10L).as("threshold"))
+      .as[RuleOrEvent].collect().sortBy(_.ts.getTime)
+    // at most one rule per (key, ts), so the fold order is well defined
+    val seen = scala.collection.mutable.HashSet.empty[(String, Long)]
+    val rows = raw.filter(r => r.kind != "rule" || seen.add((r.key, r.ts.getTime))).toSeq
+    val input = MemoryStream[RuleOrEvent]
+    val q = TestSpark.withRowTracking(startQuery(input, "dyn_rule_bound"))
+    var maxRows = 0L
+    try {
+      // the batches, then two far-future readings (balance 0: no alert)
+      // that move the watermark past every buffered row
+      val flush = (1 to 2).map(k => Seq(RuleOrEvent("data", "zzz",
+        new Timestamp((baseSec + span * 10 * k) * 1000), 0L, 0L, 0L)))
+      (rows.grouped(rows.length / 4 + 1).toSeq ++ flush).foreach { b =>
+        input.addData(b)
+        q.processAllAvailable()
+        Option(q.lastProgress).foreach(_.stateOperators.foreach(so =>
+          maxRows = maxRows.max(so.numRowsTotal)))
+      }
+      val streamed = collectAlerts("dyn_rule_bound").sorted
+      assert(streamed.nonEmpty, "no alerts: thresholds dead")
+      assert(streamed == batchAlerts(rows).sorted)
+      // a register and an armed timer per key, plus at most one
+      // micro-batch of rows buffered within the delay
+      assert(maxRows > 0L && maxRows <= 2 * users + n / 4,
+        s"state rows $maxRows exceed the keys+buffer bound ${2 * users + n / 4}")
+    } finally q.stop()
+  }
 }

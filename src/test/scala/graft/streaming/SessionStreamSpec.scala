@@ -36,13 +36,16 @@ class SessionStreamSpec extends AnyFunSuite {
     Seq(Seq((99L, 99L, ts("2024-02-01 00:00:00"), "view")),
       Seq((100L, 99L, ts("2024-03-01 00:00:00"), "view")))
 
-  private def batchExpected: Set[SessRow] = {
+  /** The batch q_sessionize rollup of `evs`. */
+  private def rollup(evs: Seq[(Long, Long, Timestamp, String)]): Set[SessRow] = {
     import spark.implicits._
     graft.relational.Paths.sessionizeOf(
-        events.toDF("event_id", "user_id", "ts", "event_type"))
+        evs.toDF("event_id", "user_id", "ts", "event_type"))
       .as[(Long, Long, Long, Long, Long, Long, Long)].collect()
       .map(r => SessRow(r._1, r._2, r._3, r._4, r._5, r._6, r._7)).toSet
   }
+
+  private def batchExpected: Set[SessRow] = rollup(events)
 
   private def run(chunks: Seq[Seq[(Long, Long, Timestamp, String)]],
       delay: String = "0 seconds"): Set[SessRow] = {
@@ -128,11 +131,7 @@ class SessionStreamSpec extends AnyFunSuite {
         val kind = if (rnd.nextInt(4) == 0) "purchase" else "view"
         (i.toLong, uid, t, kind)
       }
-      import spark.implicits._
-      val expect = graft.relational.Paths.sessionizeOf(
-          evs.toDF("event_id", "user_id", "ts", "event_type"))
-        .as[(Long, Long, Long, Long, Long, Long, Long)].collect()
-        .map(r => SessRow(r._1, r._2, r._3, r._4, r._5, r._6, r._7)).toSet
+      val expect = rollup(evs)
       // event-time-ordered ingest in random-sized chunks
       val ordered = evs.sortBy(e => (e._3.getTime, e._1))
       val chunks = ordered.grouped(1 + rnd.nextInt(7)).toSeq
@@ -152,5 +151,55 @@ class SessionStreamSpec extends AnyFunSuite {
     def sec(s: String) = ts(s).getTime / 1000L
     assert(got == Set(SessRow(5L, 1L,
       sec("2024-01-01 10:00:00"), sec("2024-01-01 10:50:00"), 3L, 1L, 3000L)))
+  }
+
+  test("state stays bounded by keys under out-of-order arrival; sealed " +
+    "sessions == batch rollup") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    // 3000 events of 20 users over 2 days, 30% on user 0, arriving by a
+    // clock up to 20 min past event time in 4 micro-batches: late events
+    // extend and bridge open sessions inside the 30-min delay
+    val (users, baseSec, spanSec) = (20L, 1700000000L, 2L * 86400)
+    val evs = spark.range(3000L).select(
+        $"id".as("event_id"),
+        when(pmod(xxhash64($"id" * 19 + 3), lit(10L)) < 3, lit(0L))
+          .otherwise(pmod(xxhash64($"id" * 7 + 1), lit(users))).as("user_id"),
+        (lit(baseSec) + pmod(xxhash64($"id" * 13 + 5), lit(spanSec))).as("ts_sec"),
+        when(pmod(xxhash64($"id" * 31 + 11), lit(10L)) === 7, lit("purchase"))
+          .otherwise(lit("view")).as("event_type"),
+        pmod(xxhash64($"id" * 23 + 9), lit(1200L)).as("lag_sec"))
+      .select($"event_id", $"user_id", timestamp_seconds($"ts_sec").as("ts"),
+        $"event_type", ($"ts_sec" + $"lag_sec").as("arr_sec"))
+      .as[(Long, Long, Timestamp, String, Long)].collect().toSeq
+    val sliceW = (spanSec + 1200L) / 4 + 1L
+    val chunks = (0 until 4).map { i =>
+      evs.filter(e => e._5 >= baseSec + i * sliceW && e._5 < baseSec + (i + 1) * sliceW)
+        .map(e => (e._1, e._2, e._3, e._4))
+    }
+    val expect = rollup(evs.map(e => (e._1, e._2, e._3, e._4)))
+    val mem = MemoryStream[(Long, Long, Timestamp, String)]
+    val q = TestSpark.withRowTracking(SessionStream.sessions(
+        mem.toDF().toDF("event_id", "user_id", "ts", "event_type"), "30 minutes")
+      .writeStream.format("memory").queryName("sess_bound").outputMode("append").start())
+    var maxRows = 0L
+    try {
+      (chunks ++ flush).foreach { c =>
+        mem.addData(c: _*)
+        q.processAllAvailable()
+        Option(q.lastProgress).foreach(_.stateOperators.foreach(so =>
+          maxRows = maxRows.max(so.numRowsTotal)))
+      }
+      val got = spark.table("sess_bound").as[SessRow].collect()
+        .filter(_.user_id != 99L).toSet
+      assert(got == expect, s"${(got -- expect).take(5)} / ${(expect -- got).take(5)}")
+      // state is bounded by keys (the 20 users and the sentinel: its open
+      // sessions, scalars and timer), never by the 3000 events
+      assert(maxRows > 0L && maxRows <= (users + 1) * 3,
+        s"state rows $maxRows outside (0, ${(users + 1) * 3}]")
+    } finally {
+      q.stop()
+      spark.sql("DROP TABLE IF EXISTS sess_bound")
+    }
   }
 }
