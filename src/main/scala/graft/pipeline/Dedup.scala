@@ -120,16 +120,9 @@ object Dedup {
     minhashPairsIndexed(s, dir).orderBy($"doc_a", $"doc_b")
   }
 
-  /** [[minhash]] over any `(doc_id, text)` table — the library entry
-    * point. */
-  def minhashOf(s: SparkSession, docs: DataFrame): DataFrame = {
-    import s.implicits._
-    minhashPairs(s, docs).orderBy($"doc_a", $"doc_b")
-  }
-
   /** Unsorted MinHash near-dup pairs — the composable form: [[cluster]]
     * feeds these straight into a shuffle, where a sort would be dead work. */
-  private[pipeline] def minhashPairs(s: SparkSession, docs: DataFrame): DataFrame =
+  private[graft] def minhashPairs(s: SparkSession, docs: DataFrame): DataFrame =
     // cached: the tokenize→shingle→minhash signature pass feeds the band
     // candidate generation AND both verify-join sides — uncached it
     // replays 3× (the r8 cache-placement sweep; MEMORY_AND_DISK). Block

@@ -578,9 +578,11 @@ object MatchRecognize {
         val ci = if (ref.refCol == "*") -1 else idx(ref.refCol)
         val lit = new java.math.BigDecimal(ref.lit)
         // COUNT, MIN and MAX compare with the literal in the column's own
-        // type; SUM and AVG compare as Double
+        // type; SUM and AVG sum integral and decimal columns exactly (AVG
+        // compares the sum with lit × n), other columns as Double
         val litOrder = operandOrder(
           if (ci < 0) LongType else typeOf(ci), DecimalType.SYSTEM_DEFAULT)
+        val exact = ci >= 0 && (isIntegral(typeOf(ci)) || typeOf(ci).isInstanceOf[DecimalType])
         (r: Row, ctx: graft.pattern.PatternContext[Row]) => {
           val bound = ctx(ref.refVar) ++ (if (ref.refVar == v) Seq(r) else Nil)
           val vals =
@@ -592,6 +594,13 @@ object MatchRecognize {
               holds(ref.op, java.math.BigDecimal.valueOf(n.toLong).compareTo(lit))
             case "MIN" => extreme(ci, -1)(vals).exists(m => holds(ref.op, litOrder(m, lit)))
             case "MAX" => extreme(ci, 1)(vals).exists(m => holds(ref.op, litOrder(m, lit)))
+            case fn if exact => vals.nonEmpty && {
+              val sum = vals.iterator.map(asBigDecimal).reduce(_ add _)
+              val rhs =
+                if (fn == "SUM") lit
+                else lit.multiply(java.math.BigDecimal.valueOf(vals.size.toLong))
+              holds(ref.op, sum.compareTo(rhs))
+            }
             case fn => vals.nonEmpty && {
               val sum = vals.map(asComparable).sum
               val x = if (fn == "SUM") sum else sum / vals.size
@@ -693,14 +702,17 @@ object MatchRecognize {
           case "SUM" =>
             if (nonNull.isEmpty) null
             else if (isIntegral(schema(ci).dataType))
-              nonNull.iterator.map(_.get(ci).asInstanceOf[Number].longValue).sum
+              nonNull.iterator.map(_.get(ci).asInstanceOf[Number].longValue)
+                .foldLeft(0L)(Math.addExact)
             else nonNull.iterator.map(r => math.round(asComparable(r.get(ci)) * 1e6)).sum
           case "AVG" =>
             if (nonNull.isEmpty) null
             else {
               val micros =
                 if (isIntegral(schema(ci).dataType))
-                  nonNull.iterator.map(_.get(ci).asInstanceOf[Number].longValue * 1000000L).sum
+                  nonNull.iterator
+                    .map(r => Math.multiplyExact(r.get(ci).asInstanceOf[Number].longValue, 1000000L))
+                    .foldLeft(0L)(Math.addExact)
                 else nonNull.iterator.map(r => math.round(asComparable(r.get(ci)) * 1e6)).sum
               java.lang.Math.floorDiv(micros, nonNull.size.toLong)
             }
@@ -749,8 +761,11 @@ object MatchRecognize {
                 meas.fn match {
                   case "SUM" | "AVG" =>
                     if (isIntegral(schema(ci).dataType)) {
+                      // overflow raises, as ANSI sum does
                       val lv = raw.asInstanceOf[Number].longValue
-                      a.sumL += lv; a.sumMicros += lv * 1000000L
+                      if (meas.fn == "SUM") a.sumL = Math.addExact(a.sumL, lv)
+                      else a.sumMicros =
+                        Math.addExact(a.sumMicros, Math.multiplyExact(lv, 1000000L))
                     } else a.sumMicros += math.round(asComparable(raw) * 1e6)
                   case "MIN" =>
                     if (a.minV == null || colOrder(ci)(raw, a.minV) < 0) a.minV = raw

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.streaming._
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 
 import graft.pattern.{NFA, NfaRunner, Pattern}
 
@@ -11,26 +10,29 @@ import graft.pattern.{NFA, NfaRunner, Pattern}
   * `FlinkCEPAbsenceOfEventExample.scala:78-106`,
   * `FlinkProcessFunctionExample.scala:44-87`).
   *
-  * Implementation: `transformWithState` (Spark 4.x) in EventTime mode with a
-  * per-key [[graft.streaming.CepProcessor]]:
-  *   - out-of-order events buffer in `ListState` until the watermark passes
-  *     them (the reference buffers in the CEP operator until watermark,
-  *     SURVEY.md §2.2 item 8); rows later than the watermark are dropped by
-  *     the framework, matching Flink's late-event drop;
-  *   - events at or before the watermark are sorted and fed to the
-  *     incremental [[NfaRunner]], whose state snapshots into `ValueState`
-  *     between micro-batches;
-  *   - `registerTimer` fires on watermark advance for (a) buffered events
-  *     that became ready and (b) `within` deadlines, so ABSENCE timeouts
-  *     emit even when a key receives no further events — real per-key
-  *     event-time timers, like Flink's, not the single-timeout
-  *     `flatMapGroupsWithState` fallback (SURVEY.md §7.4 item 4);
-  *   - matches and timeouts emit into ONE output stream as a tagged ADT
-  *     (no side outputs in Spark — split downstream by `kind`).
+  * Implementation: one [[KeyedFold.eventTime]] fold per key, the same
+  * keyed state and event-time timer the other event-time streams use.
+  * The key's one state value ([[CepStream.CepState]]) holds three things:
+  *   - the events still ahead of the watermark, encoded through the
+  *     dataset's own Encoder in arrival order (the reference buffers in
+  *     the CEP operator until watermark, SURVEY.md §2.2 item 8); rows
+  *     later than the watermark are dropped by the framework, matching
+  *     Flink's late-event drop;
+  *   - the incremental [[NfaRunner]]'s snapshot ([[SnapshotCodec]] bytes),
+  *     fed every event at or before the watermark in timestamp order;
+  *   - the lifetime match counter (SQL `MATCH_NUMBER()`).
+  * The fold wakes at the earlier of the earliest buffered event and the
+  * runner's earliest `within` deadline, so ABSENCE timeouts emit even when
+  * a key receives no further events — real per-key event-time timers, like
+  * Flink's, not the single-timeout `flatMapGroupsWithState` fallback
+  * (SURVEY.md §7.4 item 4). Matches and timeouts emit into ONE output
+  * stream as a tagged ADT (no side outputs in Spark — split downstream by
+  * `kind`).
   *
   * Scale: state per key = live partials (bounded by the `within` horizon) +
-  * events buffered within the watermark delay. Use the RocksDB state store
-  * provider (see [[CepStream.rocksConf]]) for large keyspaces.
+  * events buffered within the watermark delay; an idle key with no match
+  * keeps no state row. Use the RocksDB state store provider (see
+  * [[CepStream.rocksConf]]) for large keyspaces.
   */
 object CepStream {
 
@@ -78,11 +80,34 @@ object CepStream {
     matchPatternNumbered(ds, keyFn, tsFn, pattern,
       (k: K, m: NFA.PatternMatch[T], _: Long) => emitMatch(k, m), emitTimeout)
 
+  /** The fold state of one key. `nfa` is the runner's [[SnapshotCodec]]
+    * snapshot (empty when the runner holds nothing) and `deadline` its
+    * earliest `within` deadline; `buf` is the events ahead of the
+    * watermark ([[SnapshotCodec.encodeEvents]], arrival order) and
+    * `minBuf` the earliest of their times; `matched` is the lifetime match
+    * count. An absent instant is `Long.MaxValue`. */
+  private[streaming] final case class CepState(nfa: Array[Byte], deadline: Long,
+      buf: Array[Byte], minBuf: Long, matched: Long)
+
+  private val Never = Long.MaxValue
+  private val Idle = CepState(Array.emptyByteArray, Never, Array.emptyByteArray, Never, 0L)
+
   /** Like [[matchPattern]], but `emitMatch` also receives the 1-based
-    * per-key LIFETIME match number (SQL `MATCH_NUMBER()`), maintained in a
-    * per-key `ValueState` counter that survives across micro-batches —
-    * numbering matches what a batch run over the same ordered input yields.
-    */
+    * per-key LIFETIME match number (SQL `MATCH_NUMBER()`), kept in the
+    * key's fold state across micro-batches — numbering matches what a
+    * batch run over the same ordered input yields.
+    *
+    * Per call, only what the watermark has passed is decoded: with
+    * nothing due (no arriving or buffered event behind the watermark, no
+    * deadline passed) the new events' bytes are appended to the buffer and
+    * the snapshot stays encoded. Otherwise the ready events — buffered
+    * before new, stably sorted by time, so equal timestamps keep arrival
+    * order — feed the restored runner, the watermark advances it, and the
+    * snapshot is kept while it has live state or events stay buffered
+    * (the runner's event index must stay continuous). The fold's state is
+    * named "ctrl", the name the packed control blob of the hand-written
+    * processor had: a checkpoint of that layout fails the restart with a
+    * schema error instead of restoring as empty state. */
   def matchPatternNumbered[K, T, O](
       ds: Dataset[T],
       keyFn: T => K,
@@ -91,201 +116,49 @@ object CepStream {
       emitMatch: (K, NFA.PatternMatch[T], Long) => IterableOnce[O],
       emitTimeout: (K, NFA.PatternTimeout[T]) => IterableOnce[O])(
       implicit ke: Encoder[K], te: Encoder[T], oe: Encoder[O],
-      ct: scala.reflect.ClassTag[T]): Dataset[O] =
-    ds.groupByKey(keyFn)
-      .transformWithState(
-        new CepProcessor[K, T, O](pattern, tsFn, emitMatch, emitTimeout),
-        TimeMode.EventTime(),
-        OutputMode.Append())
-}
-
-/** Per-key stateful CEP processor. State:
-  *  - "buf": events newer than the watermark, unordered (ListState);
-  *  - "ctrl": ONE packed ValueState blob `[timer: i64][minBuf: i64][nfa
-  *    snapshot bytes]` — the armed-timer expiry, the earliest buffered
-  *    event time, and the [[NFA.Snapshot]] via [[SnapshotCodec]]. Packing
-  *    the three into a single value halves the per-key state-store
-  *    round-trips (RocksDB get/put are the dominant cost when every key
-  *    appears in every micro-batch): the idle path is 1 get + 1 put, the
-  *    drain path 1 get + 1 put plus the buf list ops. The NFA bytes are
-  *    decoded lazily — a key with no watermark-ready work reads `minBuf`
-  *    from the fixed header and never touches the snapshot;
-  *  - "matchSeq": per-key lifetime match counter (MATCH_NUMBER), touched
-  *    only when a match emits.
-  */
-final class CepProcessor[K, T, O](
-    pattern: Pattern[T],
-    tsFn: T => Long,
-    emitMatch: (K, NFA.PatternMatch[T], Long) => IterableOnce[O],
-    emitTimeout: (K, NFA.PatternTimeout[T]) => IterableOnce[O])(
-    implicit te: Encoder[T], ct: scala.reflect.ClassTag[T])
-  extends StatefulProcessor[K, T, O] {
-
-  @transient private var buf: ListState[T] = _
-  @transient private var ctrl: ValueState[Array[Byte]] = _
-  @transient private var matchSeq: ValueState[Long] = _
-
-  // Compact snapshot codec (events through the dataset's own Encoder, deduped
-  // by NFA index) — replaces r1's Java serialization, whose reflective graph
-  // walk dominated the per-key state round-trip cost.
-  private val codec = new SnapshotCodec[T](te)
-
-  private val NoVal = Long.MinValue
-  private val Empty = Array.emptyByteArray
-
-  /** Unpacked "ctrl" blob. `timer`/`minBuf` = [[NoVal]] when absent. */
-  private final case class Ctrl(timer: Long, minBuf: Long, nfa: Array[Byte])
-
-  private def readCtrl(): Ctrl =
-    if (!ctrl.exists()) Ctrl(NoVal, NoVal, Empty)
-    else {
-      val bb = java.nio.ByteBuffer.wrap(ctrl.get())
-      val timer = bb.getLong
-      val minBuf = bb.getLong
-      val nfa = if (bb.remaining() == 0) Empty else {
-        val r = new Array[Byte](bb.remaining()); bb.get(r); r
-      }
-      Ctrl(timer, minBuf, nfa)
-    }
-
-  private def writeCtrl(c: Ctrl): Unit =
-    if (c.timer == NoVal && c.minBuf == NoVal && c.nfa.isEmpty) ctrl.clear()
-    else {
-      val bb = java.nio.ByteBuffer.allocate(16 + c.nfa.length)
-      bb.putLong(c.timer).putLong(c.minBuf).put(c.nfa)
-      ctrl.update(bb.array())
-    }
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    buf = getHandle.getListState[T]("buf", te, TTLConfig.NONE)
-    ctrl = getHandle.getValueState[Array[Byte]]("ctrl", Encoders.BINARY, TTLConfig.NONE)
-    matchSeq = getHandle.getValueState[Long]("matchSeq", Encoders.scalaLong, TTLConfig.NONE)
-  }
-
-  /** Feed every watermark-ready event (buffered and/or newly arrived) to the
-    * NFA in timestamp order, advance the watermark, and write back ONLY what
-    * changed (r9 — the per-key state-store round-trips were the measured
-    * streaming-throughput floor):
-    *  - the buffered-event list is READ (and rewritten) only when the packed
-    *    header says something buffered is ready (`minBuf <= watermark`); a
-    *    drain triggered by a timer or by ready input alone never touches it;
-    *  - `readyIn` (new events already at or before the watermark) feed the
-    *    NFA directly and never pay the list put/get at all;
-    *  - the timer re-arms LAZILY: an armed timer EARLIER than the new
-    *    deadline is kept — its spurious fire is one cheap drain that re-arms
-    *    precisely — instead of paying delete+register on every drain as
-    *    deadlines drift later. Invariant: the armed timer is always at or
-    *    before the true next deadline, so nothing ever fires late;
-    *  - the packed ctrl blob is rewritten only when its bytes changed.
-    */
-  private def drain(key: K, watermarkMs: Long, c0: Ctrl,
-      readyIn: Seq[T], laterIn: Seq[T]): Iterator[O] = {
-    val readBuf = c0.minBuf != NoVal && c0.minBuf <= watermarkMs
-    val (bufReady, bufLater) =
-      if (readBuf) buf.get().toVector.partition(e => tsFn(e) <= watermarkMs)
-      else (Vector.empty[T], Vector.empty[T])
-    // stable sort + buffered-before-new keeps equal-ts arrival order
-    // identical to the old append-then-partition spelling
-    val ready = if (readyIn.isEmpty) bufReady else bufReady ++ readyIn
-    val runner = new NfaRunner[T](pattern, tsFn)
-    if (c0.nfa.nonEmpty) runner.restore(codec.decode(c0.nfa))
-    val out = Vector.newBuilder[O]
-
-    // Per-key lifetime match counter (MATCH_NUMBER): loaded lazily so keys
-    // emitting no match this drain skip the extra state round-trip.
-    var seq = -1L
-    def numbered(m: NFA.PatternMatch[T]): Unit = {
-      if (seq < 0) seq = if (matchSeq.exists()) matchSeq.get() else 0L
-      seq += 1
-      out ++= emitMatch(key, m, seq)
-    }
-    ready.sortBy(tsFn).foreach { e =>
-      val res = runner.onEvent(e)
-      res._2.foreach(t => out ++= emitTimeout(key, t))
-      res._1.foreach(numbered)
-    }
-    val (wmMatches, wmTimeouts) = runner.onWatermark(watermarkMs)
-    wmMatches.foreach(numbered)
-    wmTimeouts.foreach(t => out ++= emitTimeout(key, t))
-    if (seq >= 0) matchSeq.update(seq)
-
-    // buffered remnant: one rewrite if the list was read; append-only if not
-    val newMinBuf =
-      if (readBuf) {
-        buf.clear()
-        val keep = bufLater ++ laterIn
-        if (keep.nonEmpty) buf.appendList(keep.toArray)
-        if (keep.nonEmpty) keep.iterator.map(tsFn).min else NoVal
-      } else {
-        if (laterIn.nonEmpty) buf.appendList(laterIn.toArray)
-        val mIn = if (laterIn.nonEmpty) laterIn.iterator.map(tsFn).min else NoVal
-        if (c0.minBuf == NoVal) mIn
-        else if (mIn == NoVal) c0.minBuf
-        else math.min(c0.minBuf, mIn)
-      }
-    // keep the snapshot while buffered events remain even with no live
-    // partials: the runner's event-index counter must stay continuous
-    val nfaBytes =
-      if (runner.hasLiveState || newMinBuf != NoVal) codec.encode(runner.snapshot())
-      else Empty
-
-    // One armed timer per key: at or before the earliest instant anything
-    // can happen next (lazy re-arm — see the method Scaladoc).
-    val nextAt =
-      ((if (newMinBuf != NoVal) Some(newMinBuf) else None) ++
-        runner.earliestDeadline).minOption
-    val armed = (c0.timer, nextAt) match {
-      case (NoVal, None)    => NoVal
-      case (NoVal, Some(n)) => getHandle.registerTimer(n); n
-      case (t, None)        => getHandle.deleteTimer(t); NoVal
-      case (t, Some(n)) if n < t =>
-        getHandle.deleteTimer(t); getHandle.registerTimer(n); n
-      case (t, Some(_)) => t // earlier armed timer already covers the deadline
-    }
-    val c1 = Ctrl(armed, newMinBuf, nfaBytes)
-    if (c1.timer != c0.timer || c1.minBuf != c0.minBuf ||
-        !java.util.Arrays.equals(c1.nfa, c0.nfa)) writeCtrl(c1)
-    out.result().iterator
-  }
-
-  override def handleInputRows(
-      key: K, rows: Iterator[T], timerValues: TimerValues): Iterator[O] = {
-    val c0 = readCtrl()
-    val wm = timerValues.getCurrentWatermarkInMs()
-    val arr = rows.toArray
-    if (arr.isEmpty) return drain(key, wm, c0, Nil, Nil)
-    val (readyIn, laterIn) = arr.partition(e => tsFn(e) <= wm)
-    if (readyIn.nonEmpty || (c0.minBuf != NoVal && c0.minBuf <= wm))
-      drain(key, wm, c0, scala.collection.immutable.ArraySeq.unsafeWrapArray(readyIn),
-        scala.collection.immutable.ArraySeq.unsafeWrapArray(laterIn))
-    else {
-      // Nothing is ready: append-only buffer write, no NFA decode (the
-      // header read is enough); extend the timer only if the new earliest
-      // buffered event precedes the armed one (which, by the lazy-re-arm
-      // invariant, is already at or before every NFA deadline).
-      buf.appendList(laterIn)
-      val newMin = {
-        val m = laterIn.iterator.map(tsFn).min
-        if (c0.minBuf != NoVal) math.min(c0.minBuf, m) else m
-      }
-      val armed =
-        if (c0.timer != NoVal && c0.timer <= newMin) c0.timer
+      ct: scala.reflect.ClassTag[T]): Dataset[O] = {
+    val codec = new SnapshotCodec[T](te)
+    def earliest(es: Iterable[T]): Long = es.iterator.map(tsFn).minOption.getOrElse(Never)
+    KeyedFold.eventTime(ds)(keyFn, "ctrl", Encoders.product[CepState], null) {
+        (key, s, rows, wm) =>
+      val st = if (s == null) Idle else s
+      val (readyIn, laterIn) = rows.toVector.partition(tsFn(_) <= wm)
+      // the buffer is decoded only when one of its events is due
+      val (bufReady, kept, keptMin) =
+        if (st.minBuf > wm) (Vector.empty[T], st.buf, st.minBuf)
         else {
-          if (c0.timer != NoVal) getHandle.deleteTimer(c0.timer)
-          getHandle.registerTimer(newMin)
-          newMin
+          val (r, l) = codec.decodeEvents(st.buf).partition(tsFn(_) <= wm)
+          (r, codec.encodeEvents(l), earliest(l))
         }
-      if (armed != c0.timer || newMin != c0.minBuf)
-        writeCtrl(Ctrl(armed, newMin, c0.nfa))
-      Iterator.empty
+      val buf = if (laterIn.isEmpty) kept else kept ++ codec.encodeEvents(laterIn)
+      val minBuf = math.min(keptMin, earliest(laterIn))
+      val (s1, out) =
+        if (bufReady.isEmpty && readyIn.isEmpty && st.deadline > wm)
+          (st.copy(buf = buf, minBuf = minBuf), Iterator.empty)
+        else {
+          val runner = new NfaRunner[T](pattern, tsFn)
+          if (st.nfa.nonEmpty) runner.restore(codec.decode(st.nfa))
+          val out = Vector.newBuilder[O]
+          var seq = st.matched
+          def matched(ms: List[NFA.PatternMatch[T]]): Unit =
+            ms.foreach { m => seq += 1; out ++= emitMatch(key, m, seq) }
+          (bufReady ++ readyIn).sortBy(tsFn).foreach { e =>
+            val (ms, ts) = runner.onEvent(e)
+            ts.foreach(t => out ++= emitTimeout(key, t))
+            matched(ms)
+          }
+          val (wmMatches, wmTimeouts) = runner.onWatermark(wm)
+          matched(wmMatches)
+          wmTimeouts.foreach(t => out ++= emitTimeout(key, t))
+          val nfa =
+            if (runner.hasLiveState || minBuf != Never) codec.encode(runner.snapshot())
+            else Array.emptyByteArray
+          (CepState(nfa, runner.earliestDeadline.getOrElse(Never), buf, minBuf, seq),
+            out.result().iterator)
+        }
+      val wake = math.min(s1.minBuf, s1.deadline)
+      if (s1.nfa.isEmpty && s1.buf.isEmpty && s1.matched == 0L) (null, out, None)
+      else (s1, out, if (wake == Never) None else Some(wake))
     }
-  }
-
-  override def handleExpiredTimer(
-      key: K, timerValues: TimerValues, expired: ExpiredTimerInfo): Iterator[O] = {
-    val c0 = readCtrl()
-    val c1 =
-      if (c0.timer == expired.getExpiryTimeInMs()) c0.copy(timer = NoVal) else c0
-    drain(key, timerValues.getCurrentWatermarkInMs(), c1, Nil, Nil)
   }
 }

@@ -71,8 +71,9 @@ object KeyedFold {
 
   /** The event-time form — keyed state plus ONE event-time timer per key,
     * the reference's `onTimer` shape (FlinkProcessFunctionExample.scala:
-    * 44-111) that [[TimeSeriesStream]], [[HoltStream]], [[SessionStream]]
-    * and [[DynamicRuleStream]] instantiate. `in` must carry a watermark.
+    * 44-111) that [[TimeSeriesStream]], [[HoltStream]], [[SessionStream]],
+    * [[DynamicRuleStream]] and [[CepStream]] instantiate. `in` must carry a
+    * watermark.
     *
     * `fold` also sees the current watermark (ms) and returns the instant
     * it next wants to be called, or None: `(key, state, rows, wm) =>
@@ -81,10 +82,14 @@ object KeyedFold {
     * each call is one get and one put; it re-arms exactly (delete the old
     * timer, register the new one) only when the instant changes, and when
     * the timer fires it calls `fold` with NO rows. A key with no wake is
-    * called again only when it has rows. Rows below the watermark are
-    * dropped by the framework before `fold` (counted in the query's
-    * numRowsDroppedByWatermark); `order` sorts each batch slice as in
-    * [[KeyedFold]]. */
+    * called again only when it has rows. A fold that returns a null state
+    * and no wake clears the key's row, so an idle key costs no storage
+    * (the next call starts from `zero`). Everything else a stream keeps
+    * lives in its state: [[CepStream]]'s buffered events, runner snapshot
+    * and match counter are fields of its one value. Rows below the
+    * watermark are dropped by the framework before `fold` (counted in the
+    * query's numRowsDroppedByWatermark); `order` sorts each batch slice as
+    * in [[KeyedFold]]. */
   def eventTime[K: Encoder, In, S, Out: Encoder](in: Dataset[In])(key: In => K,
       stateName: String, stateEncoder: Encoder[S], zero: S,
       order: Option[Ordering[In]] = None)(
@@ -123,7 +128,8 @@ object KeyedFold {
       * longer registered) or NoWake. */
     private def call(key: K, rows: Iterator[In], timerValues: TimerValues,
         fired: Long): Iterator[Out] = {
-      val (s0, stored) = if (state.exists()) state.get() else (zero, NoWake)
+      val row = state.get() // null when the key has no row: one get
+      val (s0, stored) = if (row == null) (zero, NoWake) else row
       val armed = if (stored == fired) NoWake else stored
       val (s1, out, wake) =
         fold(key, s0, rows, timerValues.getCurrentWatermarkInMs())
@@ -132,7 +138,8 @@ object KeyedFold {
         if (armed != NoWake) getHandle.deleteTimer(armed)
         if (next != NoWake) getHandle.registerTimer(next)
       }
-      state.update((s1, next))
+      if (s1 != null || next != NoWake) state.update((s1, next))
+      else if (row != null) state.clear()
       out
     }
   }

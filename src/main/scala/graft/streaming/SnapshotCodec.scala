@@ -131,6 +131,34 @@ final class SnapshotCodec[T](te: Encoder[T]) extends Serializable {
     bos.toByteArray
   }
 
+  /** `events` as length-prefixed encoded rows, in order. The format has no
+    * header, so the concatenation of two encodings encodes the
+    * concatenated sequence: appending to an encoded buffer needs no
+    * decode. */
+  def encodeEvents(events: Iterable[T]): Array[Byte] = {
+    val bos = new ByteArrayOutputStream(64 * events.size)
+    val out = new DataOutputStream(bos)
+    events.foreach { ev =>
+      val b = eventBytes(ev)
+      out.writeInt(b.length)
+      out.write(b)
+    }
+    out.flush()
+    bos.toByteArray
+  }
+
+  /** The events of [[encodeEvents]], in order. */
+  def decodeEvents(bytes: Array[Byte]): Vector[T] = {
+    val in = new DataInputStream(new ByteArrayInputStream(bytes))
+    val events = Vector.newBuilder[T]
+    while (in.available() > 0) {
+      val b = new Array[Byte](in.readInt())
+      in.readFully(b)
+      events += eventFromBytes(b)
+    }
+    events.result()
+  }
+
   def decode(bytes: Array[Byte]): Snapshot[T] = {
     val in = new DataInputStream(new ByteArrayInputStream(bytes))
     val ver = in.readByte()

@@ -125,7 +125,7 @@ class PlanSpec extends AnyFunSuite {
     // plan), so the guard pin moves to the pipeline that BUILDS the
     // artifact: the inline pair path over the raw documents table.
     import spark.implicits._
-    val df = graft.pipeline.Dedup.minhashOf(spark,
+    val df = graft.pipeline.Dedup.minhashPairs(spark,
       graft.sources.Tables.table(spark, sf, "documents")
         .select($"doc_id", $"text"))
     df.collect()

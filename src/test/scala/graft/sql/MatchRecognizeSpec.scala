@@ -194,6 +194,26 @@ class MatchRecognizeSpec extends AnyFunSuite {
     assert(r.getLong(r.fieldIndex("max_b")) == 4L)
     assert(r.getString(r.fieldIndex("cls")) == "C")
     assert(r.getLong(r.fieldIndex("mno")) == 1L)
+
+    // an integral AVG whose micro-quantized sum leaves BIGINT raises, as
+    // ANSI sum does, instead of wrapping
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    Seq(("1", "2020-05-01 10:00:00", 10000000000000L))
+      .toDF("id", "datetime", "x")
+      .withColumn("user_action_time", to_timestamp($"datetime"))
+      .createOrReplaceTempView("avg_overflow_in")
+    val err = intercept[Exception](MatchRecognize.sql(spark,
+      """SELECT * FROM avg_overflow_in MATCH_RECOGNIZE (
+        |  PARTITION BY id
+        |  ORDER BY user_action_time
+        |  MEASURES AVG(B.x) AS avg_x
+        |  ONE ROW PER MATCH
+        |  PATTERN (B)
+        |  DEFINE B AS B.x > 0
+        |)""".stripMargin).collect())
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ArithmeticException]), err)
   }
 
   test("MATCH_NUMBER() numbers matches sequentially within a partition") {
@@ -465,6 +485,29 @@ class MatchRecognizeSpec extends AnyFunSuite {
     assert(avg.length == 1 && avg.head.getLong(avg.head.fieldIndex("n_b")) == 2L)
     val cnt = q("COUNT(B.*) <= 1")
     assert(cnt.isEmpty)
+
+    // BIGINT sums are exact: 2^53 + 1 > 2^53, where the Double sum rounds
+    // back to 2^53
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    Seq(("1", "2020-05-01 10:00:00", 9007199254740992L),
+      ("1", "2020-05-01 10:01:00", 1L),
+      ("1", "2020-05-01 10:02:00", 0L))
+      .toDF("id", "datetime", "v")
+      .withColumn("user_action_time", to_timestamp($"datetime"))
+      .createOrReplaceTempView("sum_exact_in")
+    val exact = MatchRecognize.sql(spark,
+      """SELECT * FROM sum_exact_in MATCH_RECOGNIZE (
+        |  PARTITION BY id
+        |  ORDER BY user_action_time
+        |  MEASURES COUNT(B.*) AS n_b
+        |  ONE ROW PER MATCH
+        |  PATTERN (B+ C)
+        |  DEFINE
+        |    B AS B.v > 0,
+        |    C AS C.v = 0 AND SUM(B.v) > 9007199254740992
+        |)""".stripMargin).collect()
+    assert(exact.length == 1 && exact.head.getLong(exact.head.fieldIndex("n_b")) == 2L)
   }
 
   test("aggregate-in-DEFINE matches the DSL whereContext equivalent") {

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.streaming._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -128,6 +129,42 @@ class CepStreamSpec extends AnyFunSuite {
     } finally q2.stop()
   }
 
+  test("a checkpoint of the hand-written processor's state layout fails " +
+    "the restart with a schema error before any batch commits") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val ckpt = java.nio.file.Files.createTempDirectory("cep_layout_ckpt").toFile
+    val input = MemoryStream[BillingEvent]
+    val got = new java.util.concurrent.atomic.AtomicLong()
+    def start(out: org.apache.spark.sql.Dataset[AlertOutput]) = out.writeStream
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[AlertOutput], _: Long) =>
+        got.addAndGet(b.count()); (): Unit
+      }
+      .option("checkpointLocation", ckpt.toString).outputMode("append").start()
+    val timed = input.toDS()
+      .withColumn("event_ts", to_timestamp($"datetime", "yyyy-MM-dd HH:mm:ss"))
+      .withWatermark("event_ts", "6 minutes")
+      .as[BillingAlertsStream.TimedBilling]
+    val q1 = start(timed.groupByKey(_.id).transformWithState(
+      new CepStreamSpec.PriorLayout, TimeMode.EventTime(), OutputMode.Append()))
+    try {
+      input.addData(golden.take(3))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    def commits = new java.io.File(ckpt, "commits").list().count(!_.startsWith("."))
+    val committed = commits
+    assert(committed > 0)
+
+    val q2 = start(BillingAlertsStream.detect(input.toDS()))
+    val err = try {
+      input.addData(golden.drop(3) :+ lateTick)
+      intercept[StreamingQueryException](q2.processAllAvailable())
+    } finally q2.stop()
+    assert(err.getMessage.contains("STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"),
+      err.getMessage)
+    assert(commits == committed && got.get == 0L)
+  }
+
   test("until (loop stop) in streaming: micro-batched CepStream ≡ the " +
     "declared q_cep_until batch query on the real sf0.001 events") {
     import spark.implicits._
@@ -173,6 +210,57 @@ class CepStreamSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  /** The fixed input of the state-traffic pin: three keys over four
+    * batches, out-of-order rows inside each key, two matches (keys 2 and
+    * 3), and two `within` timeouts that only the last batch's watermark
+    * (13:24) fires. */
+  private val trafficBatches = Seq(
+    Seq(BillingEvent("1", "2020-05-01 11:00:00", 13, 9),
+      BillingEvent("2", "2020-05-01 11:15:00", 6, 4),
+      BillingEvent("2", "2020-05-01 11:00:00", 11, 6),
+      BillingEvent("3", "2020-05-01 11:05:00", 20, 8)),
+    Seq(BillingEvent("2", "2020-05-01 11:30:00", 4, 3),
+      BillingEvent("3", "2020-05-01 11:12:00", 8, 15),
+      BillingEvent("1", "2020-05-01 11:45:00", 9, 5),
+      BillingEvent("3", "2020-05-01 11:10:00", 8, 7)),
+    Seq(BillingEvent("2", "2020-05-01 11:40:00", 3, 23),
+      BillingEvent("3", "2020-05-01 11:50:00", 15, 5),
+      BillingEvent("3", "2020-05-01 11:42:00", 30, 15)),
+    Seq(lateTick))
+
+  test("state traffic per micro-batch: RocksDB gets and puts, timer " +
+    "registers, deletes and expiries are pinned") {
+    import spark.implicits._
+    val input = MemoryStream[BillingEvent]
+    val q = startQuery(input, "cep_traffic")
+    try {
+      trafficBatches.foreach { b => input.addData(b); q.processAllAvailable() }
+      assert(rows("cep_traffic") == Seq(
+        ("match", "2", "2020-05-01 11:00:00", "2020-05-01 11:40:00"),
+        ("match", "3", "2020-05-01 11:05:00", "2020-05-01 11:12:00"),
+        ("timeout", "1", "2020-05-01 11:00:00", ""),
+        ("timeout", "3", "2020-05-01 11:50:00", "")))
+      val names = Seq("rocksdbGetCount", "rocksdbPutCount", "numRegisteredTimers",
+        "numDeletedTimers", "numExpiredTimers")
+      // idle progress reports (no batch ran) carry no addBatch time
+      val perBatch = q.recentProgress.toSeq.filter(_.durationMs.containsKey("addBatch")).map { p =>
+        names.map(n => p.stateOperators.iterator.map(o =>
+          Option(o.customMetrics.get(n)).fold(0L)(_.longValue)).sum)
+      }
+      // (gets, puts, registered, deleted, expired) per micro-batch, the
+      // no-data batches that fire timers included
+      assert(perBatch == Seq(
+        Seq(15, 9, 3, 0, 0), Seq(24, 15, 3, 3, 3), Seq(18, 11, 2, 2, 0),
+        Seq(13, 8, 1, 2, 2), Seq(13, 8, 2, 1, 0), Seq(13, 8, 1, 2, 2),
+        Seq(2, 1, 0, 0, 0), Seq(13, 8, 1, 2, 2)).map(_.map(_.toLong)),
+        perBatch)
+      // the hand-written processor with its own list, packed control blob
+      // and counter, which this fold replaced, made 199 gets and 110 puts
+      // on this input, with the same timer counts
+      assert(perBatch.map(b => b(0) + b(1)).sum <= 199 + 110)
+    } finally q.stop()
+  }
+
   test("batch and streaming agree on the golden input") {
     import spark.implicits._
     val batchOut = graft.operators.BillingAlerts
@@ -186,5 +274,36 @@ class CepStreamSpec extends AnyFunSuite {
       q.processAllAvailable()
       assert(rows("cep_vs_batch") == batchOut)
     } finally q.stop()
+  }
+}
+
+object CepStreamSpec {
+  import BillingAlertsStream.TimedBilling
+
+  /** The state layout `CepStream` had before it became a
+    * [[KeyedFold.eventTime]] fold: an event list "buf", a packed binary
+    * control blob "ctrl" (`[timer][minBuf][snapshot]`) and a match counter
+    * "matchSeq". It buffers every row and arms nothing. */
+  final class PriorLayout extends StatefulProcessor[String, TimedBilling, AlertOutput] {
+    @transient private var buf: ListState[TimedBilling] = _
+    @transient private var ctrl: ValueState[Array[Byte]] = _
+    @transient private var matchSeq: ValueState[Long] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+      buf = getHandle.getListState[TimedBilling]("buf", Encoders.product[TimedBilling],
+        TTLConfig.NONE)
+      ctrl = getHandle.getValueState[Array[Byte]]("ctrl", Encoders.BINARY, TTLConfig.NONE)
+      matchSeq = getHandle.getValueState[Long]("matchSeq", Encoders.scalaLong, TTLConfig.NONE)
+    }
+
+    override def handleInputRows(key: String, rows: Iterator[TimedBilling],
+        timerValues: TimerValues): Iterator[AlertOutput] = {
+      val in = rows.toArray
+      buf.appendList(in)
+      ctrl.update(java.nio.ByteBuffer.allocate(16).putLong(Long.MinValue)
+        .putLong(in.map(_.event_ts.getTime).min).array())
+      matchSeq.update(0L)
+      Iterator.empty
+    }
   }
 }

@@ -65,10 +65,10 @@ class CurationStreamSpec extends AnyFunSuite {
     import spark.implicits._
     // an odd-odd near-dup pair from the operator's own pair plan — both
     // endpoints are IN the arrival stream
-    val pairs = Dedup.minhashOf(spark,
+    val pairs = Dedup.minhashPairs(spark,
         graft.sources.Tables.table(spark, sf, "documents")
           .filter($"doc_id" % 2 === 1))
-      .select($"doc_a", $"doc_b").as[(Long, Long)].collect()
+      .select($"doc_a", $"doc_b").orderBy($"doc_a", $"doc_b").as[(Long, Long)].collect()
     assert(pairs.nonEmpty,
       "vacuous: no near-dup pair within the arrival stream at this SF")
     val (a, b) = (math.min(pairs.head._1, pairs.head._2),

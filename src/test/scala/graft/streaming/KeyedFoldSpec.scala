@@ -17,7 +17,8 @@ import graft.relational.TimeSeries
   * sorted fold carries (CUSUM's calibration buffer) survives a checkpoint
   * restart. The event-time form's timer contract is pinned on the
   * skeleton itself: a requested wake is exactly one no-row call once the
-  * watermark passes it, and no wake means no further call.
+  * watermark passes it, no wake means no further call, and a null state
+  * with no wake leaves the key no row.
   */
 class KeyedFoldSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -165,6 +166,36 @@ class KeyedFoldSpec extends AnyFunSuite {
     } finally {
       q.stop()
       spark.sql("DROP TABLE IF EXISTS kf_timer")
+    }
+  }
+
+  test("event-time form: a null state with no wake clears the key's row") {
+    import spark.implicits._
+    val mem = MemoryStream[(String, Timestamp)]
+    val in = mem.toDF().toDF("k", "ts").withWatermark("ts", "0 seconds")
+      .as[(String, Timestamp)]
+    // key "a" keeps a running count; key "b" returns a null state after
+    // every call; each call emits the state it started from
+    val calls = KeyedFold.eventTime(in)(_._1, "seen", Encoders.STRING, null: String) {
+      (k, s, rows, _) =>
+        val n = rows.size
+        val next = if (k == "a") Option(s).fold(n)(_.toInt + n).toString else null
+        (next, Iterator.single((k, Option(s).getOrElse("none"))), None)
+    }
+    val q = TestSpark.withRowTracking(calls.writeStream.format("memory")
+      .queryName("kf_clear").outputMode("append").start())
+    try {
+      Seq(Seq(("a", ts("2024-01-01 10:00:00")), ("b", ts("2024-01-01 10:00:00"))),
+        Seq(("a", ts("2024-01-01 10:05:00")), ("b", ts("2024-01-01 10:05:00"))))
+        .foreach { c => mem.addData(c: _*); q.processAllAvailable() }
+      val got = spark.table("kf_clear").as[(String, String)].collect().toSeq.sorted
+      assert(got == Seq(("a", "1"), ("a", "none"), ("b", "none"), ("b", "none")), got)
+      val rowsTotal = q.recentProgress.filter(_.durationMs.containsKey("addBatch"))
+        .last.stateOperators.map(_.numRowsTotal).sum
+      assert(rowsTotal == 1L, s"state rows: $rowsTotal")
+    } finally {
+      q.stop()
+      spark.sql("DROP TABLE IF EXISTS kf_clear")
     }
   }
 }
