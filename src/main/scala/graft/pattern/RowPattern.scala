@@ -3,11 +3,11 @@ package graft.pattern
 import scala.collection.mutable.{ArrayBuffer, ListBuffer}
 
 /** Recursive row-pattern parser and Glushkov NFA-graph compiler for the
-  * MATCH_RECOGNIZE `PATTERN` clause — the machinery behind sequence
-  * alternation `(A B | C D)`, quantified groups `(A B)+`, and
-  * `PERMUTE(A, B, C)` (SQL:2016 row-pattern constructs beyond the
-  * reference's grammar, whose anchor is the flat pattern of
-  * `/root/reference/src/main/scala/kosmag/FlinkSqlMatchRecognizeExample.scala:62`).
+  * MATCH_RECOGNIZE `PATTERN` clause — the one lowering of every pattern,
+  * from the reference's flat `A B* C`
+  * (`kosmag/FlinkSqlMatchRecognizeExample.scala:62`)
+  * to the SQL:2016 constructs beyond its grammar: alternation
+  * `(A B | C D)`, quantified groups `(A B)+` and `PERMUTE(A, B, C)`.
   *
   * Grammar:
   * {{{
@@ -232,10 +232,9 @@ object RowPattern {
       case AVar(nm, mn, mx, g) =>
         // Graph-mode preference ranks encode greedy (continue-before-leave)
         // ordering; a reluctant leaf would need divergence-stage attribution
-        // the rank vector cannot recover. Flat patterns with reluctant
-        // quantifiers take the legacy linear lowering instead.
+        // the rank vector cannot recover.
         if (!g) throw new IllegalArgumentException(
-          s"reluctant quantifier on $nm is not supported inside group/PERMUTE patterns")
+          s"reluctant quantifier on $nm is not supported (row-pattern quantifiers are greedy)")
         leaves += Leaf(nm, mn, mx, g, excl)
         NLeaf(leaves.size - 1)
       case ASeq(items) => NSeq(items.map(norm(_, excl)))
@@ -247,7 +246,7 @@ object RowPattern {
         NAlt(items.permutations.map(p => NSeq(p.map(norm(_, excl)))).toList)
       case AQuant(b, mn, mx, greedy) =>
         if (!greedy) throw new IllegalArgumentException(
-          "reluctant group quantifiers are not supported (use a reluctant variable quantifier)")
+          "reluctant group quantifiers are not supported (row-pattern quantifiers are greedy)")
         (mn, mx) match {
           case (0, 1) => NOpt(norm(b, excl))
           case (1, Int.MaxValue) => NLoop(norm(b, excl), canSkip = false)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, DecimalType,
   IntegerType, LongType, ShortType, StringType, StructField, StructType,
   TimestampNTZType, TimestampType}
 
-import graft.pattern.{AfterMatchSkip, Contiguity, NFA, Pattern, Stage}
+import graft.pattern.{AfterMatchSkip, Contiguity, NFA, Pattern, RowPattern, Stage}
 
 /** SQL-standard row-pattern recognition (`MATCH_RECOGNIZE`) for Spark — the
   * front-end the reference exposes through Flink SQL
@@ -26,11 +26,13 @@ import graft.pattern.{AfterMatchSkip, Contiguity, NFA, Pattern, Stage}
   * `ONE ROW PER MATCH` / `ALL ROWS PER MATCH`,
   * `AFTER MATCH SKIP {PAST LAST ROW | TO NEXT ROW | TO FIRST V | TO LAST V}`,
   * `PATTERN (V1 V2* V3 ...)` with `* + ?` and bounded `{n} {n,} {n,m}`
-  * quantifiers, `(B | C)` single-position alternation (leftmost matching
-  * member wins, per SQL preference order; members keep their own DEFINEs,
-  * bindings, and CLASSIFIER identity — beyond Flink, which rejects `|`),
-  * and `{- V -}` exclusion (excluded variables match rows but their rows
-  * are omitted from ALL ROWS output, per SQL),
+  * quantifiers, all greedy (per SQL:2016 and Flink's MATCH_RECOGNIZE docs;
+  * a reluctant `*?`, `+?`, `??` or `{n,m}?` is rejected), alternation
+  * `(B | C)` and `(A B | C D)` (the leftmost branch is preferred, per SQL;
+  * members keep their own DEFINEs, bindings and CLASSIFIER identity —
+  * beyond Flink, which rejects `|`), quantified groups `(A B)+`,
+  * `PERMUTE(A, B, C)`, and `{- V -}` exclusion (excluded variables match
+  * rows but their rows are omitted from ALL ROWS output, per SQL),
   * `WITHIN INTERVAL 'n' {SECOND|MINUTE|HOUR|DAY}`, `DEFINE V AS cond, ...`.
   * DEFINE conditions may use `PREV|NEXT(V.c[, n])` physical navigation
   * (lowered onto codegen'd `lag`/`lead` window columns — Catalyst evaluates
@@ -45,7 +47,10 @@ import graft.pattern.{AfterMatchSkip, Contiguity, NFA, Pattern, Stage}
   * quantized mean), so MR output can be oracle-gated byte-exact.
   *
   * Lowering strategy (two front-ends, one operator — like the reference):
-  * every `DEFINE` condition is attached to the input as a codegen'd boolean
+  * `PATTERN` has one lowering, in batch and streaming alike —
+  * [[RowPattern.parse]] then [[RowPattern.compile]], one NFA stage per
+  * variable occurrence plus the preference-ordered successor graph; every
+  * `DEFINE` condition is attached to the input as a codegen'd boolean
   * column `__def_V` (Catalyst optimizes and pushes what it can), so the NFA's
   * per-event predicates are plain boolean-column reads; the pattern then runs
   * through the same [[graft.operators.Cep]] execution shape — a hash
@@ -70,19 +75,10 @@ object MatchRecognize {
       orderBy: Seq[String], // head = event time; tail = deterministic tiebreaks
       measures: Seq[Measure],
       skip: AfterMatchSkip,
-      pattern: Seq[(String, String)], // (variable, quantifier "" * + ? {n} {n,} {n,m})
+      pattern: RowPattern.Ast,
       withinMs: Option[Long],
       defines: Map[String, String],
       allRows: Boolean = false,
-      excluded: Set[String] = Set.empty, // {- V -} variables (ALL ROWS only)
-      /** `(B | C)` alternation groups: synthetic stage name → member
-        * variables in preference (lexical) order. */
-      altGroups: Map[String, Seq[String]] = Map.empty,
-      /** Non-flat PATTERN (sequence alternation, quantified groups,
-        * PERMUTE, or alternation members with iterative DEFINEs): the parsed
-        * AST, lowered through [[graft.pattern.RowPattern]]'s graph compiler
-        * instead of the flat stage chain. */
-      ast: Option[graft.pattern.RowPattern.Ast] = None,
       /** SUBSET union variables: name → member variables. Usable in
         * MEASURES (rows of all members, in consumption order). */
       subsets: Map[String, Seq[String]] = Map.empty)
@@ -104,7 +100,6 @@ object MatchRecognize {
     "(?is)^(COUNT|SUM|AVG|MIN|MAX)\\s*\\(\\s*(\\w+)\\.(\\w+|\\*)\\s*\\)\\s+AS\\s+(\\w+)$".r
   private val MeasureNoArgRe =
     "(?is)^(CLASSIFIER|MATCH_NUMBER)\\s*\\(\\s*\\)\\s+AS\\s+(\\w+)$".r
-  private val PatternVarRe = "(\\w+)([*+?]|\\{\\d+(?:,\\d*)?\\})?".r
 
   def parseSpec(body: String): Spec = {
     val partition = PartitionRe.findFirstMatchIn(body)
@@ -160,30 +155,6 @@ object MatchRecognize {
         throw new IllegalArgumentException("MATCH_RECOGNIZE: unbalanced PATTERN parens")
       body.substring(kw.end, i - 1).trim
     }
-    // {- ... -} exclusion: the wrapped variables still MATCH (they appear in
-    // the pattern sequence below — the var regex skips the brace markers);
-    // they are only excluded from ALL ROWS output.
-    val ExcludeRe = "(?s)\\{-\\s*(.*?)\\s*-\\}".r
-    val excludedFlat = ExcludeRe.findAllMatchIn(patternStr)
-      .flatMap(m => PatternVarRe.findAllMatchIn(m.group(1)).map(_.group(1)))
-      .toSet
-    // (B | C) alternation: the group collapses to ONE synthetic stage whose
-    // per-row winner is the leftmost member whose DEFINE holds (SQL
-    // preference order) — each member keeps its own DEFINE and bindings.
-    // quantifier must be ADJACENT to the group's `)` — a `\s*` here would
-    // swallow the separator before the next variable
-    val AltGroupRe =
-      "\\(\\s*(\\w+(?:\\s*\\|\\s*\\w+)+)\\s*\\)([*+?]|\\{\\d+(?:,\\d*)?\\})?".r
-    var altGroups = Map.empty[String, Seq[String]]
-    val patternStr2 = AltGroupRe.replaceAllIn(patternStr, m => {
-      val members = m.group(1).split("\\|").map(_.trim).toSeq
-      val name = s"__alt${altGroups.size}"
-      altGroups += name -> members
-      scala.util.matching.Regex.quoteReplacement(
-        name + Option(m.group(2)).getOrElse(""))
-    })
-    val pattern = PatternVarRe.findAllMatchIn(patternStr2)
-      .map(m => (m.group(1), Option(m.group(2)).getOrElse(""))).toSeq
     val withinMs = WithinRe.findFirstMatchIn(body).map { m =>
       val n = m.group(1).toLong
       m.group(2).toUpperCase match {
@@ -214,38 +185,15 @@ object MatchRecognize {
             .map(m => m.group(1) -> m.group(2).split(",").map(_.trim).toSeq)
         }.toMap
 
-    // Non-flat patterns (sequence alternation, quantified groups, PERMUTE —
-    // parens survive the single-variable-alternation rewrite) and flat
-    // alternations whose members carry iterative DEFINEs lower through the
-    // graph compiler: members become real stages there, so navigation and
-    // aggregate terms work per member.
-    def iterative(cond: String): Boolean =
-      NavRefRe.findFirstIn(cond).isDefined || AggRefRe.findFirstIn(cond).isDefined ||
-        PrevNextRe.findFirstIn(cond).isDefined
-    val needsGraph = patternStr2.contains("(") ||
-      altGroups.valuesIterator.flatten.exists(v => defines.get(v).exists(iterative))
-
-    val (specPattern, specAlt, specExcluded, specAst) =
-      if (needsGraph) {
-        val ast = graft.pattern.RowPattern.parse(patternStr)
-        graft.pattern.RowPattern.compile(ast) // surface structural errors now
-        val vars = graft.pattern.RowPattern.varNames(ast)
-        (vars.map((_, "")), Map.empty[String, Seq[String]],
-          graft.pattern.RowPattern.excludedNames(ast), Some(ast))
-      } else (pattern, altGroups, excludedFlat, None)
-
-    if (specExcluded.nonEmpty && !allRows)
+    val pattern = RowPattern.parse(patternStr)
+    RowPattern.compile(pattern) // surface structural errors now
+    if (RowPattern.excludedNames(pattern).nonEmpty && !allRows)
       throw new IllegalArgumentException(
         "{- ... -} exclusion requires ALL ROWS PER MATCH (SQL:2016 row-pattern rules)")
 
     // A variable referenced anywhere must exist in PATTERN — silent
     // misspellings would otherwise define dead conditions or null measures.
-    val plainVars = specPattern.map(_._1).filterNot(specAlt.contains).toSet
-    val memberVars = specAlt.valuesIterator.flatten.toSet
-    val clash = plainVars.intersect(memberVars)
-    if (clash.nonEmpty) throw new IllegalArgumentException(
-      s"alternation members also appear as plain pattern variables: ${clash.mkString(", ")}")
-    val varSet = plainVars ++ memberVars
+    val varSet = RowPattern.varNames(pattern).toSet
     val badDefs = defines.keys.filterNot(varSet)
     if (badDefs.nonEmpty) throw new IllegalArgumentException(
       s"DEFINE references variables not in PATTERN: ${badDefs.mkString(", ")}")
@@ -268,20 +216,13 @@ object MatchRecognize {
     if (badMeas.nonEmpty) throw new IllegalArgumentException(
       s"MEASURES references variables not in PATTERN: ${badMeas.mkString(", ")}")
     skip match {
-      case AfterMatchSkip.SkipToFirst(v) if memberVars(v) =>
-        throw new IllegalArgumentException(
-          s"AFTER MATCH SKIP TO FIRST $v: cannot target an alternation member")
-      case AfterMatchSkip.SkipToLast(v) if memberVars(v) =>
-        throw new IllegalArgumentException(
-          s"AFTER MATCH SKIP TO LAST $v: cannot target an alternation member")
       case AfterMatchSkip.SkipToFirst(v) if !varSet(v) =>
         throw new IllegalArgumentException(s"AFTER MATCH SKIP TO FIRST $v: no such variable")
       case AfterMatchSkip.SkipToLast(v) if !varSet(v) =>
         throw new IllegalArgumentException(s"AFTER MATCH SKIP TO LAST $v: no such variable")
       case _ => ()
     }
-    Spec(partition, order, measures, skip, specPattern, withinMs, defines, allRows,
-      specExcluded, specAlt, specAst, subsets)
+    Spec(partition, order, measures, skip, pattern, withinMs, defines, allRows, subsets)
   }
 
   /** Rewrite `V.col` variable-prefixed references to plain column refs (the
@@ -435,7 +376,9 @@ object MatchRecognize {
 
   def apply(df: DataFrame, spec: Spec): DataFrame = {
     val spark = df.sparkSession
-    val vars = spec.pattern.map(_._1)
+    val compiled = RowPattern.compile(spec.pattern)
+    val vars = RowPattern.varNames(spec.pattern)
+    val excluded = RowPattern.excludedNames(spec.pattern)
 
     // DEFINE conditions, lowered in three layers:
     //  - PREV/NEXT physical navigation → lag/lead window columns (codegen'd,
@@ -443,14 +386,7 @@ object MatchRecognize {
     //  - FIRST/LAST logical navigation and RUNNING aggregate terms →
     //    iterative (whereContext) predicates over the partial match;
     //  - the per-row residual → a codegen'd boolean column on the scan side.
-    // Alternation bookkeeping: members get their own DEFINE columns; the
-    // synthetic group stage's column is the OR of its members'.
-    val memberOf: Map[String, String] =
-      spec.altGroups.iterator.flatMap { case (g, ms) => ms.map(_ -> g) }.toMap
-    val defVars = vars.filterNot(spec.altGroups.contains) ++
-      spec.altGroups.valuesIterator.flatten.toSeq
-
-    val lowered = defVars.map { v =>
+    val lowered = vars.map { v =>
       val base = spec.defines.getOrElse(v, "TRUE")
       // streaming: comparison-shaped PREV terms peel off onto the runner's
       // physical-history ring BEFORE the window-column rewrite sees them
@@ -463,11 +399,6 @@ object MatchRecognize {
             "(NEXT and non-comparison PREV forms need lag/lead window columns)")
       val (c2, aggs) = splitAggRefs(c1)
       val (residual, navs) = splitNavRefs(c2)
-      if (memberOf.contains(v) &&
-          (navs.nonEmpty || aggs.nonEmpty || navCols.nonEmpty || prevRefs.nonEmpty))
-        throw new IllegalArgumentException(
-          s"alternation member $v: DEFINE must be a simple row predicate " +
-            "(no FIRST/LAST/PREV/NEXT navigation or aggregates)")
       v -> ((residual, navs, aggs, navCols, prevRefs))
     }.toMap
     val allNavCols = lowered.valuesIterator.flatMap(_._4).toSet
@@ -483,15 +414,10 @@ object MatchRecognize {
           val f = if (fn == "PREV") lag(col(c), n) else lead(col(c), n)
           f.over(navWindow).as(navColName(fn, c, n))
       }: _*)
-    val defCols = defVars.map { v =>
-      expr(stripVarPrefixes(lowered(v)._1, defVars)).as(s"__def_$v")
-    }
-    // group columns derive from member columns → a second (collapsible) select
-    val groupDefCols = spec.altGroups.toSeq.map { case (g, ms) =>
-      ms.map(mm => col(s"__def_$mm")).reduce(_ || _).as(s"__def_$g")
+    val defCols = vars.map { v =>
+      expr(stripVarPrefixes(lowered(v)._1, vars)).as(s"__def_$v")
     }
     val prepared = withNav.select(col("*") +: defCols: _*)
-      .select(col("*") +: groupDefCols: _*)
     val schema = prepared.schema
     def idx(name: String): Int =
       schema.fieldNames.indexWhere(_.equalsIgnoreCase(name)) match {
@@ -501,34 +427,14 @@ object MatchRecognize {
 
     val orderIdx = idx(spec.orderBy.head)
     val partIdxs = spec.partitionBy.map(idx)
-    val defIdx = (defVars ++ spec.altGroups.keys).map(v => v -> idx(s"__def_$v")).toMap
-
-    /** Leftmost member whose DEFINE holds on this row (SQL preference order;
-      * total because the group column is the OR of the members'). */
-    def attributedMember(r: Row, group: String): String =
-      spec.altGroups(group).find { mm =>
-        val di = defIdx(mm); !r.isNullAt(di) && r.getBoolean(di)
-      }.get
-
-    /** Classifier of one consumed event (alternation rows resolve to their
-      * attributed member). */
-    def classifierOf(stageName: String, r: Row): String =
-      if (spec.altGroups.contains(stageName)) attributedMember(r, stageName)
-      else stageName
-
-    /** Rows bound to `v`: direct bindings, the attributed slice of an
-      * alternation group, or — for SUBSET union variables — every member's
-      * rows in consumption order. */
+    /** Rows bound to `v`: its direct bindings or, for a SUBSET union
+      * variable, every member's rows in consumption order. */
     def boundOf(m: NFA.PatternMatch[Row], v: String): Vector[Row] =
       spec.subsets.get(v) match {
         case Some(members) =>
           val s = members.toSet
-          m.events.collect { case (nm, r) if s(classifierOf(nm, r)) => r }
-        case None =>
-          memberOf.get(v) match {
-            case Some(g) => m(g).filter(r => attributedMember(r, g) == v)
-            case None => m(v)
-          }
+          m.events.collect { case (nm, r) if s(nm) => r }
+        case None => m(v)
       }
 
     def tsOf(r: Row): Long = r.get(orderIdx) match {
@@ -551,14 +457,10 @@ object MatchRecognize {
 
     /** The full per-row predicate for variable `v`: its DEFINE boolean
       * column AND its iterative (navigation / aggregate / streaming-PREV)
-      * terms. Shared by the flat chain and every graph occurrence of `v`. */
+      * terms. Shared by every stage occurrence of `v`. */
     def stagePred(v: String): (Row, graft.pattern.PatternContext[Row]) => Boolean = {
-      val di = defIdx(v)
-      // synthetic group stages have no entry in `lowered` (their column is
-      // derived from the members'), hence no iterative parts
-      val low = lowered.getOrElse(v,
-        ("TRUE", Seq.empty[NavRef], Seq.empty[AggRef],
-          Set.empty[(String, String, Int)], Seq.empty[PrevRef]))
+      val di = idx(s"__def_$v")
+      val low = lowered(v)
       val navPreds = low._2.map { ref =>
         val ci = idx(ref.col)
         val refCi = idx(ref.refCol)
@@ -626,37 +528,17 @@ object MatchRecognize {
       if (iterPreds.isEmpty) (r, _) => !r.isNullAt(di) && r.getBoolean(di)
       else (r, ctx) => !r.isNullAt(di) && r.getBoolean(di) && iterPreds.forall(_(r, ctx))
     }
-    val preds: Map[String, (Row, graft.pattern.PatternContext[Row]) => Boolean] =
-      (defVars ++ spec.altGroups.keys).map(v => v -> stagePred(v)).toMap
+    val preds = vars.map(v => v -> stagePred(v)).toMap
 
-    // SQL row-pattern semantics: strict contiguity, strict loop internals.
-    // Flat patterns lower to the linear stage chain; group/PERMUTE patterns
-    // lower through the Glushkov graph compiler — one stage per variable
-    // OCCURRENCE plus a preference-ordered successor graph.
-    val BoundedRe = "\\{(\\d+)(?:,(\\d*))?\\}".r
-    val (stages, nfaGraph) = spec.ast match {
-      case Some(ast) =>
-        val compiled = graft.pattern.RowPattern.compile(ast)
-        (compiled.leaves.map { lf =>
-          Stage[Row](lf.name, preds(lf.name), lf.min, lf.max,
-            Contiguity.Strict, Contiguity.Strict, lf.greedy)
-        }, Some(compiled.graph))
-      case None =>
-        (spec.pattern.map { case (v, q) =>
-          val (mn, mx) = q match {
-            case "*" => (0, Int.MaxValue)
-            case "+" => (1, Int.MaxValue)
-            case "?" => (0, 1)
-            case BoundedRe(n, null) => (n.toInt, n.toInt) // {n}
-            case BoundedRe(n, "") => (n.toInt, Int.MaxValue) // {n,}
-            case BoundedRe(n, m) => (n.toInt, m.toInt) // {n,m}
-            case _ => (1, 1)
-          }
-          Stage[Row](v, preds(v), mn, mx, Contiguity.Strict, Contiguity.Strict)
-        }.toVector, None)
+    // SQL row-pattern semantics: strict contiguity, strict loop internals,
+    // one stage per variable OCCURRENCE plus the compiler's
+    // preference-ordered successor graph.
+    val stages = compiled.leaves.map { lf =>
+      Stage[Row](lf.name, preds(lf.name), lf.min, lf.max,
+        Contiguity.Strict, Contiguity.Strict, lf.greedy)
     }
     val maxPrev = lowered.valuesIterator.flatMap(_._5).map(_.n).maxOption.getOrElse(0)
-    val pattern = Pattern(stages, spec.withinMs, spec.skip, graph = nfaGraph)
+    val pattern = Pattern(stages, spec.withinMs, spec.skip, graph = Some(compiled.graph))
       .withHistory(maxPrev)
 
     // Input columns without the appended __def_* helper columns (ALL ROWS mode).
@@ -694,8 +576,7 @@ object MatchRecognize {
         meas.fn match {
           case "CLASSIFIER" =>
             // ONE ROW semantics: classifier of the match's LAST row
-            // (resolved through alternation attribution).
-            m.events.lastOption.map { case (nm, r) => classifierOf(nm, r) }.orNull
+            m.events.lastOption.map(_._1).orNull
           case "MATCH_NUMBER" => matchNo
           case "COUNT" =>
             if (meas.column == "*") bound.size.toLong else nonNull.size.toLong
@@ -729,13 +610,9 @@ object MatchRecognize {
         // ONE row per consumed input row, with CLASSIFIER (the matched
         // variable) and per-row measure values: RUNNING by default (the
         // value over the match prefix up to and including the current row —
-        // SQL ALL ROWS semantics), whole-match value under FINAL.
-        // alternation rows carry their ATTRIBUTED member name — it drives
-        // both the classifier column and which measures accumulate; the
-        // match's events are already in consumption order (for flat strict
-        // patterns that equals variable order; for graph patterns — PERMUTE,
-        // group loops — only consumption order is right)
-        val seqRows = m.events.map { case (nm, r) => classifierOf(nm, r) -> r }
+        // SQL ALL ROWS semantics), whole-match value under FINAL. The
+        // match's events come in consumption order, each with the variable
+        // it bound (PERMUTE and group loops interleave variables).
         lazy val finals = measureVals(m, matchNo)
         // Per-measure running accumulators, updated row by row: RUNNING
         // values are O(1) per output row, not a prefix re-scan.
@@ -747,7 +624,7 @@ object MatchRecognize {
           var vals: Vector[Any] = Vector.empty
         }
         val accs = measureIdx.map(_ => new Acc)
-        seqRows.iterator.flatMap { case (v, r) =>
+        m.events.iterator.flatMap { case (v, r) =>
           // accumulators update for EVERY consumed row — {- excluded -}
           // variables still contribute to measures, they just don't emit
           measureIdx.zip(accs).foreach { case ((meas, ci), a) =>
@@ -777,7 +654,7 @@ object MatchRecognize {
               }
             }
           }
-          if (spec.excluded(v)) None
+          if (excluded(v)) None
           else Some {
           val vals = measureIdx.zip(accs).zipWithIndex.map { case (((meas, ci), a), mi) =>
             val running = meas.mode != "FINAL"

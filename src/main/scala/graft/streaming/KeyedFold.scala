@@ -51,7 +51,8 @@ final class KeyedFold[K, In, S, Out](
   override def handleInputRows(key: K, rows: Iterator[In],
       timerValues: TimerValues): Iterator[Out] = {
     val in = order.fold(rows)(o => rows.toVector.sorted(o).iterator)
-    val (next, out) = fold(key, if (state.exists()) state.get() else zero, in)
+    val row = state.get() // null when the key has no row: one get
+    val (next, out) = fold(key, if (row == null) zero else row, in)
     state.update(next)
     out
   }

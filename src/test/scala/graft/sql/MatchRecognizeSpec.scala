@@ -3,6 +3,8 @@ package graft.sql
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.pattern.RowPattern
+import graft.pattern.RowPattern.{AAlt, AQuant, ASeq, AVar}
 
 /** The reference's SQL MATCH_RECOGNIZE query (FlinkSqlMatchRecognizeExample
   * .scala:50-68) runs verbatim (modulo rowtime-attribute naming) through our
@@ -157,6 +159,19 @@ class MatchRecognizeSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { // exclusion needs ALL ROWS
       MatchRecognize.parseSpec(
         "ORDER BY ts ONE ROW PER MATCH PATTERN (A {- B -} C) DEFINE A AS x > 1")
+    }
+    // reluctant quantifiers are rejected, in batch and in streaming, rather
+    // than run greedy
+    import spark.implicits._
+    val batchIn = Seq((1L, 1)).toDF("ts", "x")
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val streamIn = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, Int)].toDF().toDF("ts", "x")
+    for (q <- Seq("B*?", "B+?", "B{1,3}?"); in <- Seq(batchIn, streamIn)) {
+      val err = intercept[IllegalArgumentException] {
+        MatchRecognize(in, s"ORDER BY ts PATTERN (A $q C) DEFINE A AS x > 1")
+      }
+      assert(err.getMessage.contains("reluctant"), s"$q: ${err.getMessage}")
     }
   }
 
@@ -580,8 +595,9 @@ class MatchRecognizeSpec extends AnyFunSuite {
       .createOrReplaceTempView("alt_ticks")
     val spec = MatchRecognize.parseSpec(
       "ORDER BY ts PATTERN (A (B | C)+ D) DEFINE A AS c = 0")
-    assert(spec.pattern == Seq(("A", ""), ("__alt0", "+"), ("D", "")))
-    assert(spec.altGroups == Map("__alt0" -> Seq("B", "C")))
+    assert(spec.pattern == RowPattern.parse("A (B | C)+ D"))
+    assert(spec.pattern == ASeq(List(AVar("A"),
+      AQuant(AAlt(List(AVar("B"), AVar("C"))), 1, Int.MaxValue, greedy = true), AVar("D"))))
     val one = MatchRecognize.sql(spark,
       """SELECT * FROM alt_ticks MATCH_RECOGNIZE (
         |  ORDER BY ts
@@ -681,9 +697,8 @@ class MatchRecognizeSpec extends AnyFunSuite {
 
   test("alternation members MAY carry iterative DEFINEs (graph lowering)") {
     prepareView()
-    // r3 rejected aggregate DEFINEs on alternation members (the synthetic
-    // OR-column stage had nowhere to hang them); the graph lowering gives
-    // each member its own stage, so the condition attaches per member.
+    // every alternation member is its own stage, so an aggregate
+    // condition attaches per member
     val out = MatchRecognize.sql(spark,
       """SELECT * FROM billing MATCH_RECOGNIZE (
         |  PARTITION BY id ORDER BY user_action_time
@@ -693,21 +708,49 @@ class MatchRecognizeSpec extends AnyFunSuite {
         |         C AS C.balanceAfter > 0
         |)""".stripMargin).collect()
     assert(out.nonEmpty)
-    // the spec routed through the graph path
     val spec = MatchRecognize.parseSpec(
       "ORDER BY ts PATTERN (A (B | C)) DEFINE B AS SUM(B.x) < 8")
-    assert(spec.ast.isDefined)
+    assert(spec.pattern == RowPattern.parse("A (B | C)"))
   }
 
-  test("alternation member restrictions produce clear errors") {
-    intercept[IllegalArgumentException] { // member also a plain variable
-      MatchRecognize.parseSpec(
-        "ORDER BY ts PATTERN (B (B | C)) DEFINE B AS x > 1")
-    }
-    intercept[IllegalArgumentException] { // SKIP TO an alternation member
-      MatchRecognize.parseSpec(
-        "ORDER BY ts AFTER MATCH SKIP TO FIRST B PATTERN (A (B | C) D) DEFINE A AS x > 1")
-    }
+  test("alternation members may be plain variables and SKIP TO targets") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    def view(name: String, cs: Int*): Unit =
+      cs.zipWithIndex.map { case (c, i) => (i.toLong + 1, c) }.toDF("tick", "c")
+        .withColumn("ts", to_timestamp(from_unixtime($"tick" * 60)))
+        .createOrReplaceTempView(name)
+    // B both plain and a member: rows 1-2 bind B B (B preferred over C),
+    // row 3 starts nothing, rows 4-5 bind B C, row 6 nothing, row 7's B
+    // has no successor
+    view("alt_member_plain", 1, 1, 2, 1, 2, 9, 1)
+    val plain = MatchRecognize.sql(spark,
+      """SELECT * FROM alt_member_plain MATCH_RECOGNIZE (
+        |  ORDER BY ts
+        |  MEASURES FIRST(B.tick) AS b0, COUNT(B.*) AS n_b, COUNT(C.*) AS n_c,
+        |           CLASSIFIER() AS cls
+        |  ONE ROW PER MATCH
+        |  PATTERN (B (B | C))
+        |  DEFINE B AS B.c = 1, C AS C.c = 2
+        |)""".stripMargin).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).sortBy(_._1).toSeq
+    assert(plain == Seq((1L, 2L, 0L, "B"), (4L, 1L, 1L, "C")))
+    // SKIP TO FIRST B, B a member: the match A=1 (B|C)+=2,3,4 D=5 resumes
+    // at row 2, where A=2 (B|C)+=3,4 D=5 matches again; it resumes at row
+    // 4, whose successor is D, not B or C
+    view("alt_member_skip", 0, 1, 2, 1, 3)
+    def skipped(skip: String) = MatchRecognize.sql(spark,
+      s"""SELECT * FROM alt_member_skip MATCH_RECOGNIZE (
+         |  ORDER BY ts
+         |  MEASURES FIRST(A.tick) AS a0, COUNT(B.*) AS n_b, COUNT(C.*) AS n_c
+         |  ONE ROW PER MATCH
+         |  AFTER MATCH SKIP $skip
+         |  PATTERN (A (B | C)+ D)
+         |  DEFINE A AS A.c <= 1, B AS B.c = 1, C AS C.c = 2, D AS D.c = 3
+         |)""".stripMargin).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
+    assert(skipped("TO FIRST B") == Seq((1L, 2L, 1L), (2L, 1L, 1L)))
+    assert(skipped("PAST LAST ROW") == Seq((1L, 2L, 1L)))
   }
 
   test("AFTER MATCH SKIP TO FIRST/LAST variable parses to the DSL strategy") {
@@ -730,15 +773,40 @@ class MatchRecognizeSpec extends AnyFunSuite {
         |PATTERN (A B+ C?) WITHIN INTERVAL '30' MINUTE
         |DEFINE A AS balanceBefore >= 10""".stripMargin)
     assert(spec.skip == graft.pattern.AfterMatchSkip.SkipToNext)
-    assert(spec.pattern == Seq(("A", ""), ("B", "+"), ("C", "?")))
+    assert(spec.pattern == RowPattern.parse("A B+ C?"))
+    assert(spec.pattern == ASeq(List(AVar("A"), AVar("B", 1, Int.MaxValue), AVar("C", 0, 1))))
     assert(spec.withinMs.contains(1800000L))
+    // quantifiers are greedy, per SQL:2016 — the example of Flink's
+    // MATCH_RECOGNIZE docs: B* takes 12, 13 and 14, so C binds 16 and the
+    // one match is 11 12 13 14 16, with or without a group around it
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    Seq(10L, 11L, 12L, 13L, 14L, 16L).zipWithIndex
+      .map { case (p, i) => (i.toLong + 1, p) }.toDF("tick", "price")
+      .withColumn("ts", to_timestamp(from_unixtime($"tick" * 60)))
+      .createOrReplaceTempView("flink_greedy")
+    for (pat <- Seq("A B* C", "(A B* C)")) {
+      val got = MatchRecognize.sql(spark,
+        s"""SELECT * FROM flink_greedy MATCH_RECOGNIZE (
+           |  ORDER BY ts
+           |  MEASURES FIRST(A.price) AS startPrice, LAST(C.price) AS lastPrice
+           |  ONE ROW PER MATCH
+           |  AFTER MATCH SKIP PAST LAST ROW
+           |  PATTERN ($pat)
+           |  DEFINE A AS A.price > 10, B AS B.price < 15, C AS C.price > 12
+           |)""".stripMargin).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(got == Seq((11L, 16L)), s"$pat: $got")
+    }
   }
 
   test("bounded {n}/{n,}/{n,m} quantifiers parse and enforce repetition counts") {
     prepareView()
     val spec = MatchRecognize.parseSpec(
       "ORDER BY ts PATTERN (A B{2} C{1,3} D{2,}) DEFINE A AS x > 1")
-    assert(spec.pattern == Seq(("A", ""), ("B", "{2}"), ("C", "{1,3}"), ("D", "{2,}")))
+    assert(spec.pattern == RowPattern.parse("A B{2} C{1,3} D{2,}"))
+    assert(spec.pattern == ASeq(List(AVar("A"), AVar("B", 2, 2), AVar("C", 1, 3),
+      AVar("D", 2, Int.MaxValue))))
     // golden key-2 run has exactly TWO B rows between A and C
     def q(pat: String) = MatchRecognize.sql(spark,
       s"""SELECT * FROM billing MATCH_RECOGNIZE (

@@ -15,10 +15,11 @@ import graft.relational.TimeSeries
   * the stream diverges from its batch twin — WITHIN a batch rows are
   * sorted, so any in-batch shuffle gives the batch result; and the state a
   * sorted fold carries (CUSUM's calibration buffer) survives a checkpoint
-  * restart. The event-time form's timer contract is pinned on the
-  * skeleton itself: a requested wake is exactly one no-row call once the
-  * watermark passes it, no wake means no further call, and a null state
-  * with no wake leaves the key no row.
+  * restart; a key with rows costs one state read per batch. The
+  * event-time form's timer contract is pinned on the skeleton itself: a
+  * requested wake is exactly one no-row call once the watermark passes
+  * it, no wake means no further call, and a null state with no wake
+  * leaves the key no row.
   */
 class KeyedFoldSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -87,6 +88,39 @@ class KeyedFoldSpec extends AnyFunSuite {
     assert(expect(1L) == ewmaFold(1L, events.filter(_._2 == 1L)))
     assert(ewmaStream(Seq(events.reverse)) == expect)
     assert(ewmaStream(Seq(new scala.util.Random(7).shuffle(events))) == expect)
+  }
+
+  test("arrival-order form: one state get per key and batch, from zero on a Long state") {
+    import spark.implicits._
+    val mem = MemoryStream[String]
+    // a Long state, as PackStream keeps: a new key reads null and starts at 0
+    val counts = KeyedFold.run(mem.toDS())(identity, "n", Encoders.scalaLong, 0L) {
+      (k, n, rows) =>
+        val next = n + rows.size
+        (next, Iterator.single((k, next)))
+    }
+    val q = counts.writeStream.format("memory").queryName("kf_gets")
+      .outputMode("append").start()
+    try {
+      Seq(Seq("a", "b"), Seq("a", "c", "c"), Seq("a", "b", "c"))
+        .foreach { c => mem.addData(c: _*); q.processAllAvailable() }
+      val got = spark.table("kf_gets").as[(String, Long)].collect().toSeq.sorted
+      assert(got == Seq(("a", 1L), ("a", 2L), ("a", 3L), ("b", 1L), ("b", 2L),
+        ("c", 2L), ("c", 3L)), got)
+      // (gets, puts) per micro-batch. Per key with rows: the fold's one
+      // read, and one put, which the store's row count precedes with a get
+      // of its own. A read through exists() then get() makes (4,2) (5,2)
+      // (9,3).
+      val perBatch = q.recentProgress.toSeq
+        .filter(_.durationMs.containsKey("addBatch")).map { p =>
+          Seq("rocksdbGetCount", "rocksdbPutCount").map(n => p.stateOperators.iterator
+            .map(o => Option(o.customMetrics.get(n)).fold(0L)(_.longValue)).sum)
+        }
+      assert(perBatch == Seq(Seq(4L, 2L), Seq(4L, 2L), Seq(6L, 3L)), perBatch)
+    } finally {
+      q.stop()
+      spark.sql("DROP TABLE IF EXISTS kf_gets")
+    }
   }
 
   test("CUSUM restarted mid-calibration restores its buffer from the checkpoint") {
